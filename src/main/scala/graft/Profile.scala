@@ -86,7 +86,8 @@ object Profile {
       jobs = 0; stages = 0; tasks = 0; taskMs = 0L
       val t0 = System.nanoTime()
       try Queries.all(name)(spark, sfDir).queryExecution.toRdd.count()
-      finally saved.foreach {
+      // reverse: a key overridden twice must end at its FIRST saved value
+      finally saved.reverse.foreach {
         case (k, Some(prev)) => spark.conf.set(k, prev)
         case (k, None) => spark.conf.unset(k)
       }

@@ -65,12 +65,7 @@ object IndexMaintainer {
     *                routes through it.
     */
   def merge(index: DataFrame, batch: DataFrame, defn: IndexDef,
-            boundedBatch: Boolean = true): DataFrame = {
-    val effective =
-      if (defn.retainDeletedXattr)
-        batch.withColumn("opcode", lit(Opcode.Mutation))
-      else batch
-
+            boundedBatch: Boolean = true): DataFrame =
     // The per-docid batch aggregate feeds BOTH the upsert projection and
     // the touched-docid delete set. LAZY local checkpoint: the aggregate
     // computes once (persisted partitions shared by both consumers) the
@@ -80,7 +75,27 @@ object IndexMaintainer {
     // batch; plain sharing without the barrier re-executes the batch scan
     // and shuffle per consumer — AQE plans each branch's exchange as its
     // own query stage and does not reuse them.)
-    val latest = graft.plans.LazyCheckpoint.shared(latestPerDocid(effective))
+    mergeCollapsed(index,
+      graft.plans.LazyCheckpoint.shared(latestPerDocid(batch)), defn,
+      boundedBatch)
+
+  /** [[merge]] over a batch ALREADY collapsed by [[latestPerDocid]]: the
+    * form for callers that collapse one batch once and merge it into
+    * several indexes. `collapsed` is read twice (upserts and the touched
+    * set), so it should be materialized or lazily checkpointed. Extra
+    * columns are ignored. Exact because the collapse commutes with both
+    * per-index steps: the `retainDeletedXattr` opcode rewrite (it keeps
+    * seqno, so the same row wins) and a seqno floor
+    * (`latestPerDocid(b.filter(seqno > f)) ==
+    * latestPerDocid(b).filter(seqno > f)`: a docid's winner is its max
+    * seqno, which clears the floor iff any of its rows does).
+    */
+  def mergeCollapsed(index: DataFrame, collapsed: DataFrame, defn: IndexDef,
+                     boundedBatch: Boolean = true): DataFrame = {
+    val latest =
+      if (defn.retainDeletedXattr)
+        collapsed.withColumn("opcode", lit(Opcode.Mutation))
+      else collapsed
 
     val mutations = latest.filter(col("opcode") === Opcode.Mutation)
     val surviving = defn.whereExpr.fold(mutations)(w => mutations.filter(expr(w)))

@@ -24,23 +24,27 @@ package graft.plans
 object Overlap {
 
   def par[A, B](a: => A, b: => B): (A, B) = {
-    val r = run(Seq(() => a, () => b))
+    val r = all(Seq(() => a, () => b))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
 
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val r = run(Seq(() => a, () => b, () => c))
+    val r = all(Seq(() => a, () => b, () => c))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
   }
 
   def par4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
-    val r = run(Seq(() => a, () => b, () => c, () => d))
+    val r = all(Seq(() => a, () => b, () => c, () => d))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
       r(3).asInstanceOf[D])
   }
 
-  private def run(thunks: Seq[() => Any]): IndexedSeq[Any] = {
+  /** Any number of legs, results in input order. A leg that must not
+    * fail its siblings' caller catches its own failure and returns it.
+    */
+  def all[A](thunks: Seq[() => A]): IndexedSeq[A] = {
     val n = thunks.length
+    if (n == 0) return IndexedSeq.empty
     val results = new Array[Any](n)
     val errors = new Array[Throwable](n)
     val threads = (1 until n).map { i =>
@@ -56,6 +60,6 @@ object Overlap {
     catch { case e: Throwable => errors(0) = e }
     threads.foreach(_.join())
     errors.find(_ != null).foreach(e => throw e)
-    results.toIndexedSeq
+    results.toIndexedSeq.map(_.asInstanceOf[A])
   }
 }

@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model.{ChangeEvent, IndexDef, Opcode}
 import graft.operators.IndexMaintainer
@@ -16,9 +20,10 @@ import graft.operators.IndexMaintainer
   *
   * Two idiomatic forms:
   *
-  *  - [[maintain]]: `foreachBatch` merge into a docid-hash-partitioned,
-  *    versioned parquet index — a batch rewrites ONLY the partitions its
-  *    docids hash to (write volume ∝ batch spread, not index size), and
+  *  - [[maintain]]/[[maintainAll]]: `foreachBatch` merge into
+  *    docid-hash-partitioned, versioned parquet indexes — a batch
+  *    rewrites ONLY the partitions its docids hash to (write volume ∝
+  *    batch spread, not index size), and
   *    the reader resolves each partition to its latest committed version.
   *    Exactly-once across restarts because the write is idempotent per
   *    `batchId` (retry of batch N rewrites `v=N`, never appends — the
@@ -88,40 +93,54 @@ object StreamingIndex {
     * Exactly-once across restarts because the write is idempotent per
     * `batchId` (retry of batch N rewrites `v=N` wholesale and reads state
     * strictly below N, never appends — SURVEY §7.4.4).
+    *
+    * The one-index case of [[maintainAllFrom]]: same per-batch pipeline.
     */
   def maintain(changes: DataFrame, defn: IndexDef, indexDir: String,
                checkpointDir: String,
                trigger: Trigger = Trigger.AvailableNow(),
-               nPartitions: Int = DefaultIndexPartitions): StreamingQuery = {
-    pinLayout(indexDir, nPartitions)
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // cache: the batch source is scanned by both the touched-partition
-        // probe and the merge itself
-        batch.persist()
-        try mergeBatch(batch, batchId, defn, indexDir, nPartitions)
-        finally batch.unpersist()
-      }
-      .start()
-  }
+               nPartitions: Int = DefaultIndexPartitions): StreamingQuery =
+    maintainAllFrom(changes, Seq((defn, indexDir, Long.MinValue)),
+      checkpointDir, trigger, nPartitions)
 
-  /** One micro-batch of partitioned incremental maintenance: read ONLY the
-    * partitions containing the batch's docids (at their respective latest
-    * versions), merge, write only those partitions under `v=<batchId>`.
+  /** Column tagging a collapsed batch row with its docid-hash partition. */
+  private val PartCol = "__part"
+
+  /** Per touched partition, the max seqno of the collapsed batch's rows
+    * in it (a null seqno counts as `Long.MinValue`). One job, no shuffle:
+    * each task reduces its rows to a ≤ nPartitions map, the driver merges.
     */
-  private def mergeBatch(batch: DataFrame, batchId: Long, defn: IndexDef,
-                         indexDir: String, nPartitions: Int): Unit = {
-    val spark = batch.sparkSession
-    // touched partition ids: bounded by nPartitions — a control-plane
-    // collect, not a data collect
-    val touched = batch.select(partExpr(nPartitions).as("part")).distinct()
-      .collect().map(_.getInt(0)).toSet
+  private def maxSeqnoPerPart(collapsed: DataFrame): Map[Int, Long] =
+    collapsed.select(col(PartCol), col("seqno").cast("long")).rdd
+      .mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap.empty[Int, Long]
+        rows.foreach { r =>
+          val s = if (r.isNullAt(1)) Long.MinValue else r.getLong(1)
+          m.update(r.getInt(0), m.get(r.getInt(0)).fold(s)(math.max(_, s)))
+        }
+        m.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(math.max)
+
+  /** One index's leg of a micro-batch: read ONLY the partitions its share
+    * of the batch touches (each at its latest version below `batchId`),
+    * merge, write only those partitions under `v=<batchId>`. `collapsed`
+    * is the whole batch collapsed per docid; `fromSeqno` scopes it to this
+    * index (`Long.MinValue` = everything).
+    */
+  private def mergeLeg(collapsed: DataFrame, maxSeqno: Map[Int, Long],
+                       batchId: Long, defn: IndexDef, indexDir: String,
+                       fromSeqno: Long, nPartitions: Int): Unit = {
+    val unfloored = fromSeqno == Long.MinValue
+    val touched = maxSeqno
+      .collect { case (p, s) if unfloored || s > fromSeqno => p }.toSet
     if (touched.nonEmpty) {
-      val current = readParts(spark, indexDir, touched, batchId, defn,
-        Some(batch.limit(0)))
-      IndexMaintainer.merge(current, batch, defn)
+      val scoped =
+        if (unfloored) collapsed
+        else collapsed.filter(col("seqno") > fromSeqno)
+      val current = readParts(collapsed.sparkSession, indexDir, touched,
+        batchId, defn, Some(collapsed.limit(0)))
+      IndexMaintainer.mergeCollapsed(current, scoped, defn)
         .withColumn("part", partExpr(nPartitions))
         .repartition(col("part")) // one task → one file per partition
         .write.mode("overwrite").partitionBy("part")
@@ -139,7 +158,7 @@ object StreamingIndex {
       // GC failure must never fail the already-committed batch.
       try pruneShadowed(indexDir)
       catch { case e: Exception =>
-        System.err.println(s"[mergeBatch] GC skipped: ${e.getMessage}")
+        System.err.println(s"[maintainAll] GC skipped: ${e.getMessage}")
       }
     }
   }
@@ -163,10 +182,20 @@ object StreamingIndex {
   /** Maintain MANY indexes from ONE stream pass — the reference's topic
     * topology (one projector feed drives an evaluator ENGINE MAP, one entry
     * per index instance, reference `projector.go:787-813`; instances are
-    * added/removed per topic, `:641-717`). The micro-batch is cached once
-    * and each index definition merges from it; a failure in one index does
-    * not poison the others (per-index isolation, like the reference's
-    * per-engine error handling).
+    * added/removed per topic, `:641-717`). Each micro-batch is collapsed to
+    * its last state per docid ONCE, tagged with its docid-hash partition
+    * and materialized by one eager local checkpoint; one shuffle-free job
+    * then gathers each touched partition's max seqno, from which every
+    * index derives its touched set. The per-index legs (read touched
+    * partitions → merge → write `v=<batchId>` → manifest → GC) run
+    * concurrently ([[graft.plans.Overlap]]; its per-call threads inherit
+    * the stream's query/batch job properties). Job budget: 3 shared
+    * (the collapse's shuffle and checkpoint, the max-seqno pass) plus 3
+    * per index (touched-set broadcast, partition shuffle, write) — 12 for
+    * three indexes, ≈ 6 on the critical path; reading a version runs none
+    * (its schema comes from a parquet footer on the driver). A failure in
+    * one index does not poison the others (per-index isolation, like the
+    * reference's per-engine error handling).
     */
   def maintainAll(changes: DataFrame, defns: Seq[(IndexDef, String)],
                   checkpointDir: String,
@@ -181,7 +210,10 @@ object StreamingIndex {
     * snapshot watermark (`fromSeqno`), while long-running instances apply
     * everything — the MAINT/CATCHUP stream separation of the reference
     * (per-stream endpoints `kv_sender.go:1225-1243`, instance addition to a
-    * live topic `projector.go:641-717`).
+    * live topic `projector.go:641-717`). The floor applies to the shared
+    * collapsed batch, which is exact
+    * ([[IndexMaintainer.mergeCollapsed]]): a partition is in an index's
+    * touched set iff its max seqno clears the index's floor.
     */
   def maintainAllFrom(changes: DataFrame, defns: Seq[(IndexDef, String, Long)],
                       checkpointDir: String,
@@ -192,25 +224,29 @@ object StreamingIndex {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
+        // eager: materialized before any leg starts, so concurrent legs
+        // only read its blocks (no lazy-checkpoint race across them); the
+        // blocks go with the RDD, as every local checkpoint's do
+        val collapsed = IndexMaintainer.latestPerDocid(batch)
+          .withColumn(PartCol, partExpr(nPartitions))
+          .localCheckpoint()
         // Attempt every index (one bad index doesn't stop the others'
         // writes) but FAIL the batch if any failed: the checkpoint must not
         // commit a batch an index hasn't applied, or that index silently
         // loses the batch forever. Retry is safe — writes are idempotent
         // per (indexDir, batchId).
-        val failures = try defns.flatMap { case (defn, indexDir, fromSeqno) =>
-          try {
-            val scoped =
-              if (fromSeqno == Long.MinValue) batch
-              else batch.filter(col("seqno") > fromSeqno)
-            mergeBatch(scoped, batchId, defn, indexDir, nPartitions)
-            None
-          } catch { case e: Throwable =>
-            System.err.println(s"[maintainAll] ${defn.name}: ${e.getMessage}")
-            Some(defn.name -> e)
-          }
-        } finally batch.unpersist()
+        val maxSeqno = maxSeqnoPerPart(collapsed)
+        val failures = graft.plans.Overlap.all(defns.map {
+          case (defn, indexDir, fromSeqno) => () =>
+            try {
+              mergeLeg(collapsed, maxSeqno, batchId, defn, indexDir,
+                fromSeqno, nPartitions)
+              None
+            } catch { case e: Throwable =>
+              System.err.println(s"[maintainAll] ${defn.name}: ${e.getMessage}")
+              Some(defn.name -> e)
+            }
+        }).flatten
         failures.headOption.foreach { case (name, e) =>
           throw new RuntimeException(
             s"batch $batchId failed for ${failures.map(_._1).mkString(", ")}", e)
@@ -288,12 +324,47 @@ object StreamingIndex {
     val paths = partVersions.toSeq.sorted
       .map { case (p, v) => s"$indexDir/v=$v/part=$p" }
       .filter(p => Files.isDirectory(Paths.get(p)))
-    if (paths.nonEmpty) spark.read.parquet(paths: _*)
+    if (paths.nonEmpty)
+      footerSchema(spark, paths)
+        .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
     // empty index: derive the key schema from the batch when available
     // (its payload columns are what the key expressions reference —
     // ChangeEvent is only the default feed shape)
     else proto.fold(emptyIndex(spark, defn))(p => emptyFrom(p, defn))
   }
+
+  /** The data schema `spark.read.parquet(paths: _*)` infers, without the
+    * Spark job that inference runs: Spark's row schema from the footer of
+    * the file its non-merging inference picks — the first data file in
+    * path order (the store's writers leave no summary files). Passed to
+    * `spark.read.schema`, it reads as the inferred one does (both come out
+    * nullable). None when schema merging is on or that footer lacks
+    * Spark's schema key; the caller then lets Spark infer.
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  paths: Seq[String]): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val files = paths.flatMap { p =>
+        val dir = new Path(p)
+        dir.getFileSystem(conf).listStatus(dir).filter { st =>
+          val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }
+      }
+      files.sortBy(_.getPath.toString).headOption.flatMap { first =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+        val json =
+          try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkRowSchemaKey))
+          finally reader.close()
+        json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+          .collect { case s: StructType => s }
+      }
+    }
+
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Zero-row index frame with `defn`'s key schema, resolved against a
     * zero-row source with the feed's real payload columns.

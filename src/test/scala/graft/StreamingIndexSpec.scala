@@ -450,4 +450,105 @@ class StreamingIndexSpec extends SparkSpec {
       "the poisoned doc must be skipped, the rest indexed")
     assert(deltas.forall(_.op == 1))
   }
+
+  test("maintainAllFrom: indexes on different seqno floors each equal a " +
+      "from-scratch rebuild") {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[ChangeEvent]
+    val root = tmp("gfloor"); val ckpt = tmp("gfloorck")
+    val defnB = defn.copy(name = "B", whereExpr = None)
+    // primary + retain-deleted: deleted docids stay, so the opcode rewrite
+    // runs on the collapsed batch the three indexes share
+    val defnC = IndexDef("C", "ch", "docid", isPrimary = true,
+      retainDeletedXattr = true)
+
+    val batch1 = Seq(
+      ev(Opcode.Mutation, 1L, 5.0, 1L), ev(Opcode.Mutation, 2L, 3.0, 2L),
+      ev(Opcode.Mutation, 3L, -1.0, 3L))
+    stream.addData(batch1: _*)
+    StreamingIndex.maintainAll(stream.toDF(), Seq(defn -> s"$root/A"), ckpt)
+      .awaitTermination()
+
+    // batch 2 straddles C's floor (5): docid 1 has rows on both sides of
+    // it, docid 4 only at or below it, docids 2, 3 and 5 only above it
+    val batch2 = Seq(
+      ev(Opcode.Mutation, 1L, 9.0, 4L), ev(Opcode.Mutation, 4L, 2.0, 5L),
+      ev(Opcode.Deletion, 2L, null, 6L), ev(Opcode.Mutation, 1L, 8.0, 7L),
+      ev(Opcode.Mutation, 5L, 6.0, 8L), ev(Opcode.Mutation, 3L, -4.0, 9L))
+    val events = batch1 ++ batch2
+    def stateAt(w: Long) =
+      IndexMaintainer.latestPerDocid(events.filter(_.seqno <= w).toDF())
+    // B joins after batch 1 (watermark 3), C in the middle of batch 2 (5)
+    StreamingIndex.backfill(
+      stateAt(3L).filter(col("opcode") === Opcode.Mutation), defnB, s"$root/B")
+    StreamingIndex.backfill(stateAt(5L), defnC, s"$root/C")
+
+    stream.addData(batch2: _*)
+    StreamingIndex.maintainAllFrom(stream.toDF(),
+      Seq((defn, s"$root/A", Long.MinValue), (defnB, s"$root/B", 3L),
+        (defnC, s"$root/C", 5L)), ckpt).awaitTermination()
+
+    def keyed(dir: String, d: IndexDef) =
+      StreamingIndex.currentIndex(spark, dir, d)
+        .select("key", "docid").as[(Double, Long)].collect().toSet
+    val emptyKeyed = spark.range(0)
+      .select(col("id").cast("double").as("key"), col("id").as("docid"))
+    def rebuiltKeyed(d: IndexDef) =
+      IndexMaintainer.merge(emptyKeyed, events.toDF(), d)
+        .select("key", "docid").as[(Double, Long)].collect().toSet
+    assert(keyed(s"$root/A", defn) == rebuiltKeyed(defn))
+    assert(keyed(s"$root/A", defn) == Set((8.0, 1L), (2.0, 4L), (6.0, 5L)))
+    assert(keyed(s"$root/B", defnB) == rebuiltKeyed(defnB))
+    assert(keyed(s"$root/B", defnB) ==
+      Set((8.0, 1L), (2.0, 4L), (6.0, 5L), (-4.0, 3L)))
+
+    val primary = StreamingIndex.currentIndex(spark, s"$root/C", defnC)
+      .select("docid").as[Long].collect().toSet
+    val rebuiltPrimary = IndexMaintainer.merge(
+        spark.range(0).select(col("id").as("docid")), events.toDF(), defnC)
+      .select("docid").as[Long].collect().toSet
+    assert(primary == rebuiltPrimary)
+    assert(primary == Set(1L, 2L, 3L, 4L, 5L))
+  }
+
+  test("a store backfilled with a key type unlike the feed's reads and " +
+      "merges as with Spark's inferred schema") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmp("gktype"); val ckpt = tmp("gktypeck")
+    val n = 2
+    val partOf = spark.range(1, 20)
+      .select(col("id"), pmod(hash(col("id")), lit(n)))
+      .as[(Long, Int)].collect().toMap
+    val a = partOf.collect { case (d, 0) => d }.min
+    val b = partOf.collect { case (d, 1) => d }.min
+    // backfilled keys are INT; the feed's `value` payload is DOUBLE
+    StreamingIndex.backfill(Seq((a, 5), (b, 3)).toDF("docid", "value"),
+      defn, dir, nPartitions = n)
+
+    val stream = MemoryStream[ChangeEvent]
+    stream.addData(ev(Opcode.Mutation, a, 9.5, 1L))
+    StreamingIndex.maintain(stream.toDF(), defn, dir, ckpt, nPartitions = n)
+      .awaitTermination()
+    // mixed store: part 1 still INT at v=-1, part 0 DOUBLE at v=0
+    val mixed = Seq(s"$dir/v=-1/part=1", s"$dir/v=0/part=0")
+    val inferredMixed = spark.read.parquet(mixed: _*).schema
+    Seq(mixed, mixed.reverse).foreach { paths =>
+      val footer = StreamingIndex.footerSchema(spark, paths)
+      assert(footer.nonEmpty)
+      assert(spark.read.schema(footer.get).parquet(paths: _*).schema ==
+        inferredMixed)
+    }
+
+    stream.addData(ev(Opcode.Mutation, b, 4.5, 2L))
+    StreamingIndex.maintain(stream.toDF(), defn, dir, ckpt, nPartitions = n)
+      .awaitTermination()
+    val latest = Seq(s"$dir/v=0/part=0", s"$dir/v=1/part=1")
+    val inferred = spark.read.parquet(latest: _*)
+    val current = StreamingIndex.currentIndex(spark, dir, defn)
+    assert(current.schema == inferred.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("key", "docid").as[(Double, Long)].collect().toSet
+    assert(rows(current) == rows(inferred))
+    assert(rows(current) == Set((9.5, a), (4.5, b)))
+  }
 }
