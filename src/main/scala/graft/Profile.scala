@@ -46,7 +46,6 @@ object Profile {
       case "nowiden" => Some(Seq("spark.graft.scaleout.widen" -> "false"))
       case "spcores" => Some(Seq("spark.graft.stream.statePartitions" ->
         spark.sparkContext.defaultParallelism.toString))
-      case "noprobelocal" => Some(Seq("spark.graft.ann.probeLocal" -> "false"))
       // RocksDB state store + join stateFormatVersion 3 (virtual column
       // families: ONE store per partition instead of 4 for a
       // stream-stream join) — the A/B for the loadedProviders lock toll

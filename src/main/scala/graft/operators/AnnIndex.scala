@@ -7,9 +7,13 @@ import scala.jdk.CollectionConverters._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, Literal, SortOrder}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, MapType, StructField, StructType}
 
 import graft.functions.{VectorOps, VersionedSlots}
 
@@ -64,7 +68,8 @@ import graft.functions.{VectorOps, VersionedSlots}
   * probes against the previous index.
   *
   * Exact re-rank still needs true vectors for shortlist rows; [[probe]]
-  * takes the corpus frame for that one join, same as the in-memory form.
+  * takes the corpus frame for that one scan, filtered to the shortlist
+  * ids.
   */
 object AnnIndex {
 
@@ -107,6 +112,15 @@ object AnnIndex {
   private def modelPath(dir: String, v: Int) =
     versionPath(dir, v).resolve("model.json")
   private def codesRoot(dir: String, v: Int) = s"$dir/v$v/codes"
+
+  /** The given committed batches of a version's codes table, `b`/`c_id`
+    * as partition columns, schema from a footer instead of a Spark job
+    * ([[graft.plans.StoreReads]]).
+    */
+  private def readCodes(spark: SparkSession, dir: String, v: Int,
+                        batches: Seq[Long]): DataFrame =
+    graft.plans.StoreReads.parquet(spark,
+      batches.map(b => s"${codesRoot(dir, v)}/b=$b"), Some(codesRoot(dir, v)))
 
   /** Versions present in the store, ascending. A version EXISTS only
     * once its `model.json` does — the model is published LAST (and
@@ -508,11 +522,10 @@ object AnnIndex {
   def compact(spark: SparkSession, dir: String, version: Int = -1,
               idCol: String = "vec_id"): Int = {
     val v = resolveVersion(dir, version)
-    val dirs = committedBatches(dir, v).map(b => s"${codesRoot(dir, v)}/b=$b")
-    require(dirs.nonEmpty, s"version $v has no committed codes batches")
-    val folded = latestWins(
-      spark.read.option("basePath", codesRoot(dir, v)).parquet(dirs: _*),
-      idCol, dirs.length)
+    val batches = committedBatches(dir, v)
+    require(batches.nonEmpty, s"version $v has no committed codes batches")
+    val folded = latestWins(readCodes(spark, dir, v, batches),
+      idCol, batches.length)
       .select(col(idCol), col("c_id"), col("codes"), col("nrm"))
     val nv = VersionedSlots.claimDir(dir, n => s"v$n",
       VersionedSlots.versions(dir, parseVersion).lastOption.getOrElse(0) + 1)
@@ -575,11 +588,10 @@ object AnnIndex {
     val v = resolveVersion(dir, version)
     val src = loadModel(dir, v)
     def inherit(arg: Int, fromModel: Int) = if (arg > 0) arg else fromModel
-    val dirs = committedBatches(dir, v).map(b => s"${codesRoot(dir, v)}/b=$b")
-    require(dirs.nonEmpty, s"version $v has no committed codes batches")
-    val live = latestWins(
-      spark.read.option("basePath", codesRoot(dir, v)).parquet(dirs: _*),
-      idCol, dirs.length).select(col(idCol))
+    val batches = committedBatches(dir, v)
+    require(batches.nonEmpty, s"version $v has no committed codes batches")
+    val live = latestWins(readCodes(spark, dir, v, batches),
+      idCol, batches.length).select(col(idCol))
     // shared lazy checkpoint ([[stats]]/[[probe]] discipline): the
     // latest-wins window over EVERY codes batch + the semi-join feed
     // the uniqueness aggregate, every k-means iteration, the PQ
@@ -642,9 +654,7 @@ object AnnIndex {
     val v = resolveVersion(dir, version)
     val batches = committedBatches(dir, v)
     require(batches.nonEmpty, s"version $v has no committed codes batches")
-    val dirs = batches.map(b => s"${codesRoot(dir, v)}/b=$b")
-    val all = spark.read.option("basePath", codesRoot(dir, v))
-      .parquet(dirs: _*)
+    val all = readCodes(spark, dir, v, batches)
     // the SHARED winners resolver ([[winnersOf]] — the exact view
     // probes resolve); latestWins drops tombstone winners, stats counts
     // them from the same view. Lazily checkpointed: the live aggregate
@@ -698,27 +708,36 @@ object AnnIndex {
     VectorOps.nearestCentroids(vecC, model.fineArr, model.coarseArr,
       model.members, kk, model.coarseProbes)
 
+
   /** Probe the persisted index: top-k cosine neighbors per query, same
-    * output contract as [[Similarity.ivfPqTopK]] and the same scoring
-    * code ([[Similarity.pqScore]]). `version` pins the artifact
-    * (default -1 = newest visible). The routed query frame is lazily
-    * checkpointed and materialized ONCE — the collected probed-cluster
-    * set and the scoring join consume the SAME routed rows, so a
-    * non-deterministic `queries` frame (a sample, a shuffle-dependent
-    * order) cannot route outside the collected partition filter. The
-    * probed cluster set is resolved driver-side (nprobe × |queries| ints
-    * — probe batches are control-plane-sized by nature) and applied as a
-    * literal partition filter, so the codes scan is statically pruned to
-    * the probed `c_id=` directories across every committed ingest batch.
-    * `corpus` supplies true vectors for the exact re-rank of shortlist
-    * rows only.
+    * output contract as [[Similarity.ivfPqTopK]] — (q_id, neighbor_id,
+    * sim, rank) — and the same scoring expressions as
+    * [[Similarity.pqScore]]. `version` pins the artifact (default -1 =
+    * newest visible). The probed cluster set is resolved driver-side
+    * from the routed queries and applied as a literal partition filter,
+    * so the codes scan is statically pruned to the probed `c_id=`
+    * directories (+ the tombstone partition) across every committed
+    * ingest batch. `corpus` supplies true vectors for the exact re-rank
+    * of shortlist rows only.
+    *
+    * '''Interactive probes''' (`broadcastQ = true`, the default; queries
+    * are control-plane-sized by premise) are EAGER: [[routeQueries]]
+    * routes the query batch once on the driver, [[probeRouted]] runs
+    * the scan and returns the answer as a driver-local frame. Job
+    * budget, with a driver-local query frame: 2 Spark jobs on a
+    * single-batch version (the ADC shortlist scan, the re-rank scan), 3
+    * on a multi-batch one (+ the latest-wins shuffle); an `allowed` /
+    * `excluded` frame adds its own jobs. No job infers the codes schema
+    * ([[graft.plans.StoreReads]]). Driver memory: the routed queries
+    * (LUT + vector each) plus at most partitions × |queries| × k·rerank
+    * shortlist rows.
     *
     * '''Filtered search''' (`allowed`): the metadata-constrained vector
     * query every production ANN service answers ("nearest neighbors
     * among documents WHERE <predicate>") — pass the predicate's id set
     * as a one-column frame and the probe returns top-k among THOSE ids
     * only. This is a PRE-filter, not a post-filter: the candidate codes
-    * semi-join the allowed set BEFORE the ADC shortlist window, so the
+    * semi-join the allowed set BEFORE the ADC shortlist, so the
     * shortlist holds k·rerank ALLOWED candidates and selective filters
     * cannot starve the result (the post-filter failure mode). Cost
     * shape is unchanged — the scan still reads only probed cluster
@@ -730,16 +749,19 @@ object AnnIndex {
     * corpus-scale (a whole ingest batch probing the store, e.g.
     * [[graft.operators.Dedup.semanticIncrementalStore]]), the probed
     * cluster set collapses to ≤ nCentroids ids (still control-plane
-    * bounded — it is collected DISTINCT), but broadcasting the query
-    * frame or the shortlist would ship corpus-sized state to every
-    * task. `false` routes both through ordinary shuffle joins keyed on
-    * `c_id` / `neighbor_id`; the static partition pruning of the codes
-    * scan is identical in both modes.
+    * bounded — it is collected DISTINCT from a shared lazy checkpoint of
+    * the routed queries, so a non-deterministic `queries` frame cannot
+    * route outside the collected filter), but collecting the queries or
+    * the shortlist would ship corpus-sized state through the driver.
+    * `false` returns a lazy frame scored by [[Similarity.pqScore]]
+    * through ordinary shuffle joins keyed on `c_id` / `neighbor_id`; the
+    * static partition pruning of the codes scan is identical in both
+    * modes, and so are the answers.
     *
     * `excluded` is the anti-join analog of `allowed`: ids in the frame
     * can never answer, gated with the same pre-filter semantics (before
-    * the shortlist window, so excluded rows cannot occupy shortlist
-    * slots). Its load-bearing use is streaming dedup ingest
+    * the shortlist, so excluded rows cannot occupy shortlist slots). Its
+    * load-bearing use is streaming dedup ingest
     * ([[graft.streaming.StreamingDedup.semanticIngestStore]]): a batch
     * that probes the store and then ingests ITSELF excludes its own
     * ids, so a foreachBatch retry that re-probes AFTER its ingest
@@ -772,26 +794,9 @@ object AnnIndex {
             excluded: Option[DataFrame] = None,
             asOfBatch: Long = Long.MaxValue): DataFrame = {
     val v = resolveVersion(dir, version)
-    // Route-once discipline, two cost shapes:
-    //  - broadcastQ (interactive probe; queries are control-plane-sized
-    //    by premise): the driver must see the routed rows anyway to
-    //    resolve the partition filter, so collect them ONCE and re-enter
-    //    them as a local relation — one job, versus the former
-    //    checkpoint-materialize + distinct-collect pair, and the same
-    //    no-reroute guarantee (a non-deterministic queries frame cannot
-    //    route outside the collected filter: the plan consumes the very
-    //    rows the filter was derived from). [[routeQueries]] +
-    //    [[probeRouted]] factor the two halves so a caller probing
-    //    several same-model versions (a fold-equivalence gate over a
-    //    version and its [[compact]] fold) pays ONE routing job.
-    //  - batch probes (corpus-scale queries): collecting is forbidden —
-    //    keep the shared lazy checkpoint + distinct collect.
-    // A/B + operational kill-switch for the local-relation fast path
-    val localOk = spark.conf.getOption("spark.graft.ann.probeLocal")
-      .forall(_.toBoolean)
-    if (broadcastQ && localOk)
-      probeRouted(spark, dir, routeQueries(spark, dir, queries, nprobe, v),
-        corpus, k, rerank, idCol, vecCol, v, allowed, excluded, asOfBatch)
+    if (broadcastQ)
+      scoreRouted(spark, dir, v, routeQueries(spark, dir, queries, nprobe, v),
+        corpus, k, rerank, idCol, vecCol, allowed, excluded, asOfBatch)
     else {
       val model = loadModel(dir, v)
       val routedPlan = queries.select(col("q_id"), col("q_vec"),
@@ -801,49 +806,80 @@ object AnnIndex {
       val ck = graft.plans.LazyCheckpoint.shared(routedPlan)
       val probed = ck.select("c_id").distinct()
         .collect().map(_.getInt(0)).sorted.toSeq
-      scoreProbed(spark, dir, v, ck, probed, corpus, k, rerank,
-        idCol, vecCol, allowed, excluded, asOfBatch, broadcastQ = false)
+      // residual models: the exact q·c(v) bias per probed cluster — a
+      // deterministic function of the materialized (q_vec, c_id), so it
+      // composes AFTER the route-once point without breaking it
+      val queryA =
+        if (model.isResidual) ck.withColumn("__bias",
+          VectorOps.dot(col("q_vec"),
+            element_at(typedlit(model.fine), col("c_id") + 1)))
+        else ck
+      val corpusCodes = probedCodes(spark, dir, v, probed, idCol, allowed,
+          excluded, asOfBatch)
+        .select(col(idCol), col("c_id"), col("codes").as("__codes"),
+          col("nrm").as("__n"))
+      val vecs = corpus.select(col(idCol).as("neighbor_id"),
+        col(vecCol).as("__v"), VectorOps.norm(col(vecCol)).as("__vn"))
+      Similarity.pqScore(corpusCodes, vecs, queryA, k, rerank, idCol,
+        biasCol = if (model.isResidual) Some("__bias") else None,
+        broadcastQ = false)
     }
   }
 
-  /** The routed, driver-resolved query batch of an interactive
-    * (`broadcastQ`) probe: one LOCAL row per query (q_id, q_vec, __qn,
-    * __lut, __routes — the nprobe nearest cluster ids) plus the distinct
-    * probed cluster set. Collected PRE-explode, so each query's LUT and
-    * vector live once in driver memory, not once per probed cluster.
+  /** The routed, driver-resolved query batch of an interactive probe:
+    * one row per query (q_id, q_vec, __qn, __lut, __routes — the nprobe
+    * nearest cluster ids — and, for residual models, __bias — the exact
+    * `q·c` per route), the distinct probed cluster set, and the `Model`
+    * the batch was routed with plus a fingerprint of its JSON. Held
+    * PRE-explode, so each query's LUT and vector live once in driver
+    * memory, not once per probed cluster.
     *
     * Resolved ONCE and shareable by several [[probeRouted]] calls whose
     * versions carry the SAME model — the [[compact]] contract (the model
     * JSON is copied verbatim), which lets a fold-equivalence gate
-    * (multi-batch version vs its compacted fold) pay ONE routing job for
-    * both arms. Sharing across versions with DIFFERENT models would
-    * route against the wrong centroids — callers own that invariant.
+    * (multi-batch version vs its compacted fold) pay ONE routing pass
+    * for both arms. [[probeRouted]] checks the fingerprint and throws
+    * on a version with a different model instead of scoring against the
+    * wrong centroids.
     */
-  final case class Routed(rows: Array[org.apache.spark.sql.Row],
-                          schema: org.apache.spark.sql.types.StructType,
-                          probed: Seq[Int], nprobe: Int)
+  final case class Routed(rows: Array[Row], schema: StructType,
+                          probed: Seq[Int], nprobe: Int,
+                          model: Model, modelFingerprint: String,
+                          version: Int)
 
+  /** Route `queries` against version `version`'s model on the driver:
+    * one model read, one collect of the routed projection (no Spark job
+    * when `queries` is a driver-local frame — the projection folds into
+    * the local rows). Driver memory is ∝ |queries| × (LUT + vector).
+    */
   def routeQueries(spark: SparkSession, dir: String, queries: DataFrame,
                    nprobe: Int, version: Int = -1): Routed = {
     val v = resolveVersion(dir, version)
-    val model = loadModel(dir, v)
-    val plan = queries.select(col("q_id"), col("q_vec"),
+    val json = Files.readString(modelPath(dir, v))
+    val model = Serialization.read[Model](json)
+    val routedQ = queries.select(col("q_id"), col("q_vec"),
       VectorOps.norm(col("q_vec")).as("__qn"),
       VectorOps.pqLut(col("q_vec"), model.codebookArr).as("__lut"),
       route(model)(col("q_vec"), nprobe).as("__routes"))
+    val plan =
+      if (model.isResidual) routedQ.withColumn("__bias",
+        transform(col("__routes"), c => VectorOps.dot(col("q_vec"),
+          element_at(typedlit(model.fine), c + 1))))
+      else routedQ
     val rows = plan.collect()
     val rIdx = plan.schema.fieldIndex("__routes")
     val probed = rows.iterator.flatMap(_.getSeq[Int](rIdx))
       .toArray.distinct.sorted.toSeq
-    Routed(rows, plan.schema, probed, nprobe)
+    Routed(rows, plan.schema, probed, nprobe, model, fingerprint(json), v)
   }
 
   /** [[probe]] from a pre-resolved [[Routed]] batch — the second half of
-    * the broadcastQ local path, exposed so independent probe arms of one
-    * lifecycle invariant can share a single routing job (and run their
-    * result actions concurrently; the store reads are immutable
-    * per-version directories). `version` must carry the SAME model the
-    * batch was routed with ([[routeQueries]] contract).
+    * the interactive path, exposed so independent probe arms of one
+    * lifecycle invariant can share a single routing pass (and run
+    * concurrently; the store reads are immutable per-version
+    * directories). Eager, with [[probe]]'s job budget; returns a
+    * driver-local frame. Throws when `version`'s model JSON differs from
+    * the one the batch was routed with.
     */
   def probeRouted(spark: SparkSession, dir: String, routed: Routed,
                   corpus: DataFrame, k: Int, rerank: Int = 16,
@@ -853,59 +889,184 @@ object AnnIndex {
                   excluded: Option[DataFrame] = None,
                   asOfBatch: Long = Long.MaxValue): DataFrame = {
     val v = resolveVersion(dir, version)
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(routed.rows: _*), routed.schema)
-    val queryBase = local.select(col("q_id"), col("q_vec"), col("__qn"),
-      col("__lut"), explode(col("__routes")).as("c_id"))
-    scoreProbed(spark, dir, v, queryBase, routed.probed, corpus, k, rerank,
-      idCol, vecCol, allowed, excluded, asOfBatch, broadcastQ = true)
+    require(fingerprint(Files.readString(modelPath(dir, v))) ==
+      routed.modelFingerprint,
+      s"queries routed against v${routed.version} cannot probe v$v under " +
+        s"$dir: v$v carries a different model (route them against v$v)")
+    scoreRouted(spark, dir, v, routed, corpus, k, rerank, idCol, vecCol,
+      allowed, excluded, asOfBatch)
   }
 
-  /** The scoring half shared by both probe shapes: static partition
-    * pruning to the probed clusters (+ tombstones), allowed/excluded
-    * gates, latest-batch-wins resolution, ADC + exact re-rank.
+  private def fingerprint(json: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  /** A version's codes rows for one probe: the committed batches
+    * `<= asOfBatch`, statically pruned to the probed clusters PLUS the
+    * reserved tombstone partition (deletions must shadow data rows
+    * wherever the data row's cluster is; its volume is ∝ live deletions,
+    * absent entirely on the compacted path), `allowed`/`excluded`
+    * gated, resolved latest-batch-wins.
     */
-  private def scoreProbed(spark: SparkSession, dir: String, v: Int,
-                          queryBase: DataFrame, probed: Seq[Int],
-                          corpus: DataFrame, k: Int, rerank: Int,
-                          idCol: String, vecCol: String,
+  private def probedCodes(spark: SparkSession, dir: String, v: Int,
+                          probed: Seq[Int], idCol: String,
                           allowed: Option[DataFrame],
                           excluded: Option[DataFrame],
-                          asOfBatch: Long,
-                          broadcastQ: Boolean): DataFrame = {
-    val model = loadModel(dir, v)
-    // residual models: the exact q·c(v) bias per probed cluster — a
-    // deterministic function of the materialized (q_vec, c_id), so it
-    // composes AFTER the route-once point without breaking it
-    val queryA =
-      if (model.isResidual) queryBase.withColumn("__bias",
-        VectorOps.dot(col("q_vec"),
-          element_at(typedlit(model.fine), col("c_id") + 1)))
-      else queryBase
-    val batchDirs = committedBatches(dir, v)
-      .filter(_ <= asOfBatch)
-      .map(b => s"${codesRoot(dir, v)}/b=$b")
-    require(batchDirs.nonEmpty, s"version $v has no committed codes batches")
-    // probed clusters PLUS the reserved tombstone partition: deletions
-    // must shadow data rows wherever the data row's cluster is, so the
-    // static filter always admits c_id=-1 (its volume is ∝ live
-    // deletions; absent entirely on the compacted path)
+                          asOfBatch: Long): DataFrame = {
+    val batches = committedBatches(dir, v).filter(_ <= asOfBatch)
+    require(batches.nonEmpty, s"version $v has no committed codes batches")
     val scanned = (probed :+ TombstoneCluster).map(Integer.valueOf)
-    val rawCodes = spark.read
-      .option("basePath", codesRoot(dir, v))
-      .parquet(batchDirs: _*)
+    val rawCodes = readCodes(spark, dir, v, batches)
       .filter(col("c_id").isin(scanned.toIndexedSeq: _*))
     val admitted = allowed.fold(rawCodes)(ids =>
       rawCodes.join(ids.select(col(idCol)), Seq(idCol), "left_semi"))
     val gated = excluded.fold(admitted)(ids =>
       admitted.join(ids.select(col(idCol)), Seq(idCol), "left_anti"))
-    val corpusCodes = latestWins(gated, idCol, batchDirs.length)
-      .select(col(idCol), col("c_id"), col("codes").as("__codes"),
-        col("nrm").as("__n"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("__v"), VectorOps.norm(col(vecCol)).as("__vn"))
-    Similarity.pqScore(corpusCodes, vecs, queryA, k, rerank, idCol,
-      biasCol = if (model.isResidual) Some("__bias") else None,
-      broadcastQ = broadcastQ)
+    latestWins(gated, idCol, batches.length)
+  }
+
+  /** The interactive scoring half: ADC over the probed codes with the
+    * routed queries entering the plan as literals (a `c_id →
+    * [(query, group, bias)]` map exploded per code row; LUT, norm and
+    * q_id looked up by query index), per-partition top-`k·rerank` per
+    * query, a driver merge, then ONE corpus scan filtered to the
+    * shortlist ids for the exact re-rank — each id scored against the
+    * queries that shortlisted it only, so the scan computes at most
+    * |q| × k·rerank sims — with a per-partition and a driver top-k.
+    *
+    * Every ranking uses Spark's own ordering on (sim DESC, neighbor_id
+    * ASC) — the order [[Similarity.pqScore]]'s `row_number` windows use,
+    * NaN, −0.0 and every id type included — so the answers equal the
+    * batch path's row for row. Queries sharing a `q_id` rank as one
+    * group, as they do in those windows. Driver memory: at most
+    * partitions × |q| × k·rerank shortlist rows.
+    */
+  private def scoreRouted(spark: SparkSession, dir: String, v: Int,
+                          routed: Routed, corpus: DataFrame, k: Int,
+                          rerank: Int, idCol: String, vecCol: String,
+                          allowed: Option[DataFrame],
+                          excluded: Option[DataFrame],
+                          asOfBatch: Long): DataFrame = {
+    val rows = routed.rows
+    val sch = routed.schema
+    val qIdField = sch("q_id")
+    val corpusId = corpus.schema(idCol)
+    val outSchema = StructType(Seq(qIdField,
+      StructField("neighbor_id", corpusId.dataType, corpusId.nullable),
+      StructField("sim", DoubleType), StructField("rank", LongType, false)))
+    val depth = math.min(k.toLong * rerank, Int.MaxValue).toInt
+    if (rows.isEmpty || depth <= 0)
+      return spark.createDataFrame(java.util.List.of[Row](), outSchema)
+    def field(name: String) = rows.map(_.get(sch.fieldIndex(name))).toSeq
+    def arrayLit(name: String) = GraftBridge.column(
+      Literal.create(field(name), ArrayType(sch(name).dataType)))
+    val qIds = field("q_id")
+    // one ranking group per distinct q_id: its first query's index
+    val firstOf = scala.collection.mutable.HashMap.empty[Any, Int]
+    val group = qIds.zipWithIndex
+      .map { case (q, i) => firstOf.getOrElseUpdate(q, i) }
+    val routes = rows.map(_.getSeq[Int](sch.fieldIndex("__routes")))
+    val biases = if (routed.model.isResidual)
+      Some(rows.map(_.getSeq[Double](sch.fieldIndex("__bias")))) else None
+
+    // ADC shortlist: (group, query, neighbor_id, sim_adc)
+    val entries = routes.indices.flatMap(qi => routes(qi).indices.map(j =>
+      routes(qi)(j) -> (qi, group(qi), biases.fold(0.0)(_(qi)(j)))))
+    val e = col("__e")
+    val (qi, grp) = (e.getField("_1"), e.getField("_2"))
+    val adcDot = VectorOps.pqAdcDot(col("codes"),
+      element_at(arrayLit("__lut"), qi + 1))
+    val approxDot =
+      if (biases.isDefined) e.getField("_3") + adcDot else adcDot
+    val codes = probedCodes(spark, dir, v, routed.probed, idCol, allowed,
+      excluded, asOfBatch)
+    val adc = codes
+      .select(col(idCol), col("codes"), col("nrm"),
+        explode(element_at(typedlit(entries.groupMap(_._1)(_._2)),
+          col("c_id"))).as("__e"))
+      .filter(col(idCol) =!= element_at(arrayLit("q_id"), qi + 1))
+      .select(grp, qi, col(idCol),
+        (approxDot / (col("nrm") * element_at(arrayLit("__qn"), qi + 1)))
+          .as("sim_adc"))
+    val codesId = codes.schema(idCol).dataType
+    val adcOrd = simOrdering(codesId)
+    val shortlist = rankPerGroup(topInternal(adc, depth, adcOrd),
+      depth, adcOrd)
+    if (shortlist.isEmpty)
+      return spark.createDataFrame(java.util.List.of[Row](), outSchema)
+
+    // exact re-rank: one corpus scan filtered to the shortlist ids, each
+    // row exploded to the queries that shortlisted it (an id → [query]
+    // literal map) and scored against those only
+    val toScalaId = CatalystTypeConverters.createToScalaConverter(codesId)
+    val wanted = shortlist.iterator.flatMap(_._2).toSeq
+      .groupMap(r => toScalaId(r.get(2, codesId)))(_.getInt(1))
+    val q = col("__q")
+    val scored = corpus
+      .filter(col(idCol).isin(wanted.keys.toSeq: _*))
+      .select(col(idCol), col(vecCol).as("__v"),
+        VectorOps.norm(col(vecCol)).as("__vn"),
+        explode(element_at(GraftBridge.column(Literal.create(wanted,
+          MapType(codesId, ArrayType(IntegerType)))),
+          col(idCol).cast(codesId))).as("__q"))
+      .select(element_at(typedlit(group), q + 1), q, col(idCol),
+        (VectorOps.dot(col("__v"), element_at(arrayLit("q_vec"), q + 1)) /
+          (col("__vn") * element_at(arrayLit("__qn"), q + 1))).as("sim"))
+    val nid = corpusId.dataType
+    val simOrd = simOrdering(nid)
+    val toScala = CatalystTypeConverters.createToScalaConverter(nid)
+    val out = rankPerGroup(topInternal(scored, k, simOrd), k, simOrd)
+      .flatMap { case (g, ranked) => ranked.zipWithIndex.map { case (r, i) =>
+        Row(qIds(g), toScala(r.get(2, nid)),
+          if (r.isNullAt(3)) null else r.getDouble(3), i + 1L)
+      }
+    }
+    spark.createDataFrame(out.asJava, outSchema)
+  }
+
+  /** Spark's ordering for (sim DESC, neighbor_id ASC) over rows shaped
+    * (group, query, neighbor_id, sim) — the sort the `row_number`
+    * windows of [[Similarity.pqScore]] use.
+    */
+  private def simOrdering(idType: DataType): Ordering[InternalRow] =
+    new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(3, DoubleType, nullable = true), Descending),
+      SortOrder(BoundReference(2, idType, nullable = true), Ascending)))
+
+  /** The best `n` rows of each group (column 0) under `ord`: one bounded
+    * heap per group, rows copied as kept (scan rows are reused buffers).
+    */
+  private def topPerGroup(rows: Iterator[InternalRow], n: Int,
+                          ord: Ordering[InternalRow]): Iterator[InternalRow] = {
+    val heaps = scala.collection.mutable.HashMap
+      .empty[Int, java.util.PriorityQueue[InternalRow]]
+    rows.foreach { r =>
+      val h = heaps.getOrElseUpdate(r.getInt(0),
+        new java.util.PriorityQueue[InternalRow](ord.reverse))
+      if (h.size < n) h.add(r.copy())
+      else if (ord.lt(r, h.peek)) { h.poll(); h.add(r.copy()) }
+    }
+    heaps.valuesIterator.flatMap(_.iterator.asScala)
+  }
+
+  /** The driver merge of [[topInternal]]'s per-partition tops: each
+    * group's best `n`, sorted, by ascending group.
+    */
+  private def rankPerGroup(rows: Array[InternalRow], n: Int,
+                           ord: Ordering[InternalRow])
+      : Seq[(Int, Seq[InternalRow])] =
+    rows.toSeq.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (g, rs) => g -> rs.sorted(ord).take(n) }
+
+  /** Execute `df` as one SQL execution (listeners and the UI see its
+    * plan, like any action) and collect the best `n` rows of each group
+    * under `ord`, kept per partition on the executors.
+    */
+  private def topInternal(df: DataFrame, n: Int,
+                          ord: Ordering[InternalRow]): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.toRdd.mapPartitions(topPerGroup(_, n, ord)).collect())
   }
 }

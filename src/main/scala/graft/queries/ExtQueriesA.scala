@@ -263,10 +263,6 @@ private[graft] trait ExtQueriesA extends IndexQueries {
       .filter(col("vec_id") % 10 =!= 0).unionByName(reEmb)
     val queries = updated.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    // the recall gate runs on the production path: pruned multi-batch
-    // probe, latest-wins window over the probed subset
-    val multi = graft.operators.AnnIndex.probe(s, dir, queries, updated,
-      k = 5, nprobe = 10, version = version)
     // the fold-equivalence gate probes with nprobe = nCentroids: with
     // EVERY cluster probed, both paths see the full committed candidate
     // set, so multi-batch latest-wins ≡ compacted fold must hold exactly
@@ -274,31 +270,29 @@ private[graft] trait ExtQueriesA extends IndexQueries {
     // re-embedded id can linger as a stale candidate in the multi-batch
     // path when only its OLD cluster is probed, AnnIndex.ingest docs),
     // and must not read as engine breakage on a different corpus.
-    // ONE routing job serves both arms (the compacted version carries
+    // ONE routing pass serves both arms (the compacted version carries
     // the SAME model JSON — compaction is a layout fold, the
     // AnnIndex.routeQueries sharing contract)
     val routedFull = graft.operators.AnnIndex.routeQueries(s, dir,
       queries, nprobe = nCentroids, version = version)
-    val multiFull = graft.operators.AnnIndex.probeRouted(s, dir,
-      routedFull, updated, k = 5, version = version)
-    val foldedFull = graft.operators.AnnIndex.probeRouted(s, dir,
-      routedFull, updated, k = 5, version = compacted)
-    // probe results are control-plane-sized (k × |queries| rows):
-    // collect ONCE and compare driver-side — an exceptAll pair would
-    // re-execute each probe plan twice, and the recall gate a fifth time.
-    // The three arms read IMMUTABLE per-version directories and are
-    // independent — overlap their actions (guide §2.6: the recall gate's
-    // exact-baseline job backfills the two equality collects)
+    // probes are eager and return driver-local rows (k × |queries|):
+    // compare driver-side. The three arms read IMMUTABLE per-version
+    // directories and are independent — each probe runs inside its own
+    // overlapped arm (the recall gate's exact-baseline job backfills the
+    // two equality probes). The recall gate runs on the
+    // production path: pruned multi-batch probe, latest-wins over the
+    // probed subset.
     val (recallDf, multiFullRows, foldedFullRows) =
       graft.plans.Overlap.par3(
         {
-          val multiRows = multi.collect()
-          val multiDf = s.createDataFrame(
-            java.util.Arrays.asList(multiRows: _*), multi.schema)
-          annRecallQueryOver(s, updated, (_, _) => multiDf)
+          val multi = graft.operators.AnnIndex.probe(s, dir, queries,
+            updated, k = 5, nprobe = 10, version = version)
+          annRecallQueryOver(s, updated, (_, _) => multi)
         },
-        multiFull.collect(),
-        foldedFull.collect())
+        graft.operators.AnnIndex.probeRouted(s, dir, routedFull, updated,
+          k = 5, version = version).collect(),
+        graft.operators.AnnIndex.probeRouted(s, dir, routedFull, updated,
+          k = 5, version = compacted).collect())
     val sameBoth =
       multiFullRows.map(_.toSeq).sortBy(_.toString).toSeq ==
         foldedFullRows.map(_.toSeq).sortBy(_.toString).toSeq
@@ -331,36 +325,31 @@ private[graft] trait ExtQueriesA extends IndexQueries {
     val survivors = emb.filter(col("vec_id") % 9 =!= 4)
     val queries = survivors.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    // recall probe on the production path (pruned multi-batch, tombstone
-    // partition read alongside probed clusters)
-    val multi = graft.operators.AnnIndex.probe(s, dir, queries, survivors,
-      k = 5, nprobe = 10, version = version)
     // fold-equivalence at nprobe = nCentroids (see sim_ann_upsert);
-    // one routing job serves both arms (same model — compact copies it)
+    // one routing pass serves both arms (same model — compact copies it)
     val routedFull = graft.operators.AnnIndex.routeQueries(s, dir,
       queries, nprobe = nCentroids, version = version)
-    val multiFull = graft.operators.AnnIndex.probeRouted(s, dir,
-      routedFull, survivors, k = 5, version = version)
-    val foldedFull = graft.operators.AnnIndex.probeRouted(s, dir,
-      routedFull, survivors, k = 5, version = compacted)
-    // three independent arms over immutable version directories —
-    // overlap their actions (guide §2.6, the sim_ann_upsert pattern)
+    // three independent arms over immutable version directories, each
+    // probe inside its overlapped arm (the sim_ann_upsert pattern); the
+    // recall probe runs the production path (pruned
+    // multi-batch, tombstone partition read alongside probed clusters)
     val ((multiRows, recallDf), multiFullRows, foldedFullRows) =
       graft.plans.Overlap.par3(
         {
-          val rows = multi.collect()
-          val multiDf = s.createDataFrame(
-            java.util.Arrays.asList(rows: _*), multi.schema)
-          (rows, annRecallQueryOver(s, survivors, (_, _) => multiDf))
+          val multi = graft.operators.AnnIndex.probe(s, dir, queries,
+            survivors, k = 5, nprobe = 10, version = version)
+          (multi.collect(),
+            annRecallQueryOver(s, survivors, (_, _) => multi))
         },
-        multiFull.collect(),
-        foldedFull.collect())
+        graft.operators.AnnIndex.probeRouted(s, dir, routedFull,
+          survivors, k = 5, version = version).collect(),
+        graft.operators.AnnIndex.probeRouted(s, dir, routedFull,
+          survivors, k = 5, version = compacted).collect())
     val sameBoth = multiFullRows.map(_.toSeq).sortBy(_.toString).toSeq ==
       foldedFullRows.map(_.toSeq).sortBy(_.toString).toSeq
     // a deleted id must never answer — on the pruned AND the full probe
-    val nIdx = multi.schema.fieldIndex("neighbor_id")
     val noDeleted = (multiRows.iterator ++ multiFullRows.iterator)
-      .forall(r => r.getLong(nIdx) % 9 != 4)
+      .forall(r => r.getAs[Long]("neighbor_id") % 9 != 4)
     recallDf
       .withColumn("no_deleted_ok", lit(noDeleted))
       .withColumn("compact_ok", lit(sameBoth))
@@ -404,31 +393,24 @@ private[graft] trait ExtQueriesA extends IndexQueries {
     val queries = survivors.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     // recall gate on the production path: pruned probe of the RETRAINED
-    // version
-    val multi = graft.operators.AnnIndex.probe(s, dir, queries, survivors,
-      k = 5, nprobe = 10, version = v2)
-    // answer-preservation in the parity configuration: both versions'
-    // probes are the exact cosine top-5 over the live set, so they must
-    // agree row-for-row even though the layouts share nothing
-    val parityNew = graft.operators.AnnIndex.probe(s, dir, queries,
-      survivors, k = 5, nprobe = nCentroids, rerank = 1 << 20,
-      version = v2)
-    val parityOld = graft.operators.AnnIndex.probe(s, dir, queries,
-      survivors, k = 5, nprobe = nCentroids, rerank = 1 << 20,
-      version = v1)
-    // the two parity arms probe DIFFERENT models (v1 vs the re-fit v2),
+    // version. Answer-preservation in the parity configuration: both
+    // versions' probes are the exact cosine top-5 over the live set, so
+    // they must agree row-for-row even though the layouts share nothing.
+    // The two parity arms probe DIFFERENT models (v1 vs the re-fit v2),
     // so no routing is shared — but all four gate actions read immutable
-    // state and are independent: overlap them (guide §2.6)
+    // state and are independent: each runs inside its own overlapped arm
+    def parity(v: Int) = graft.operators.AnnIndex.probe(s, dir, queries,
+      survivors, k = 5, nprobe = nCentroids, rerank = 1 << 20,
+      version = v).collect()
     val (recallDf, parityNewRows, parityOldRows, freshOk) =
       graft.plans.Overlap.par4(
         {
-          val multiRows = multi.collect()
-          val multiDf = s.createDataFrame(
-            java.util.Arrays.asList(multiRows: _*), multi.schema)
-          annRecallQueryOver(s, survivors, (_, _) => multiDf)
+          val multi = graft.operators.AnnIndex.probe(s, dir, queries,
+            survivors, k = 5, nprobe = 10, version = v2)
+          annRecallQueryOver(s, survivors, (_, _) => multi)
         },
-        parityNew.collect(),
-        parityOld.collect(),
+        parity(v2),
+        parity(v1),
         {
           val st = graft.operators.AnnIndex.stats(s, dir, version = v2)
             .head()
@@ -524,41 +506,33 @@ private[graft] trait ExtQueriesA extends IndexQueries {
         .select(col("vec_id"), reverse(col("embedding")).as("embedding")))
     val queries = updated.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val multi = graft.operators.AnnIndex.probe(s, dir, queries, updated,
-      k = 5, nprobe = 10, version = version)
-    // ONE routing job for all three full-candidate arms: the reference
+    // ONE routing pass for all three full-candidate arms: the reference
     // store's model is a byte copy (copyTree) and the compacted fold
     // copies the model JSON — same model everywhere, the
-    // AnnIndex.routeQueries sharing contract
+    // AnnIndex.routeQueries sharing contract (probeRouted checks it)
     val routedFull = graft.operators.AnnIndex.routeQueries(s, dir,
       queries, nprobe = nCentroids, version = version)
-    val streamFull = graft.operators.AnnIndex.probeRouted(s, dir,
-      routedFull, updated, k = 5, version = version)
-    val refFull = graft.operators.AnnIndex.probeRouted(s, dirRef,
-      routedFull, updated, k = 5, version = vRef)
-    val foldedFull = graft.operators.AnnIndex.probeRouted(s, dir,
-      routedFull, updated, k = 5, version = compacted)
-    // four independent gate arms over immutable version directories —
-    // overlap their actions (guide §2.6, the sim_ann_upsert pattern)
+    def full(store: String, v: Int) = graft.operators.AnnIndex.probeRouted(
+      s, store, routedFull, updated, k = 5, version = v).collect()
+    // four independent gate arms over immutable version directories,
+    // each probe inside its overlapped arm (the sim_ann_upsert pattern)
     val ((multiRows, recallDf), streamFullRows, refFullRows,
         foldedFullRows) =
       graft.plans.Overlap.par4(
         {
-          val rows = multi.collect()
-          val multiDf = s.createDataFrame(
-            java.util.Arrays.asList(rows: _*), multi.schema)
-          (rows, annRecallQueryOver(s, updated, (_, _) => multiDf))
+          val multi = graft.operators.AnnIndex.probe(s, dir, queries,
+            updated, k = 5, nprobe = 10, version = version)
+          (multi.collect(), annRecallQueryOver(s, updated, (_, _) => multi))
         },
-        streamFull.collect(),
-        refFull.collect(),
-        foldedFull.collect())
+        full(dir, version),
+        full(dirRef, vRef),
+        full(dir, compacted))
     def canon(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(_.toSeq).sortBy(_.toString).toSeq
     val streamOk = canon(streamFullRows) == canon(refFullRows)
     val compactOk = canon(streamFullRows) == canon(foldedFullRows)
-    val nIdx = multi.schema.fieldIndex("neighbor_id")
     val noDeleted = (multiRows.iterator ++ streamFullRows.iterator)
-      .forall(r => r.getLong(nIdx) % 9 != 4)
+      .forall(r => r.getAs[Long]("neighbor_id") % 9 != 4)
     recallDf
       .withColumn("no_deleted_ok", lit(noDeleted))
       .withColumn("stream_ok", lit(streamOk))
@@ -607,14 +581,12 @@ private[graft] trait ExtQueriesA extends IndexQueries {
     val survivors = emb.filter(col("vec_id") % 9 =!= 4)
     val queries = survivors.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+    // the probe is eager: its rows are already driver-local
     val probe = graft.operators.AnnIndex.probe(s, dir, queries, survivors,
       k = 5, nprobe = 10, version = nv)
-    val probeRows = probe.collect()
-    val nIdx = probe.schema.fieldIndex("neighbor_id")
-    val noDeleted = probeRows.forall(r => r.getLong(nIdx) % 9 != 4)
-    val probeDf = s.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probe.schema)
-    annRecallQueryOver(s, survivors, (_, _) => probeDf)
+    val noDeleted = probe.collect()
+      .forall(r => r.getAs[Long]("neighbor_id") % 9 != 4)
+    annRecallQueryOver(s, survivors, (_, _) => probe)
       .withColumn("no_deleted_ok", lit(noDeleted))
       .withColumn("wire_ok", lit(wireOk))
   }

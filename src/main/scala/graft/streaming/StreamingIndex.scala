@@ -2,13 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model.{ChangeEvent, IndexDef, Opcode}
 import graft.operators.IndexMaintainer
@@ -324,47 +320,12 @@ object StreamingIndex {
     val paths = partVersions.toSeq.sorted
       .map { case (p, v) => s"$indexDir/v=$v/part=$p" }
       .filter(p => Files.isDirectory(Paths.get(p)))
-    if (paths.nonEmpty)
-      footerSchema(spark, paths)
-        .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+    if (paths.nonEmpty) graft.plans.StoreReads.parquet(spark, paths)
     // empty index: derive the key schema from the batch when available
     // (its payload columns are what the key expressions reference —
     // ChangeEvent is only the default feed shape)
     else proto.fold(emptyIndex(spark, defn))(p => emptyFrom(p, defn))
   }
-
-  /** The data schema `spark.read.parquet(paths: _*)` infers, without the
-    * Spark job that inference runs: Spark's row schema from the footer of
-    * the file its non-merging inference picks — the first data file in
-    * path order (the store's writers leave no summary files). Passed to
-    * `spark.read.schema`, it reads as the inferred one does (both come out
-    * nullable). None when schema merging is on or that footer lacks
-    * Spark's schema key; the caller then lets Spark infer.
-    */
-  private[graft] def footerSchema(spark: SparkSession,
-                                  paths: Seq[String]): Option[StructType] =
-    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-    else {
-      val conf = spark.sessionState.newHadoopConf()
-      val files = paths.flatMap { p =>
-        val dir = new Path(p)
-        dir.getFileSystem(conf).listStatus(dir).filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-      }
-      files.sortBy(_.getPath.toString).headOption.flatMap { first =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
-        val json =
-          try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkRowSchemaKey))
-          finally reader.close()
-        json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
-          .collect { case s: StructType => s }
-      }
-    }
-
-  /** Footer key under which Spark's parquet writer stores the row schema. */
-  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Zero-row index frame with `defn`'s key schema, resolved against a
     * zero-row source with the feed's real payload columns.

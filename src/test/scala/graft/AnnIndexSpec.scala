@@ -128,10 +128,10 @@ class AnnIndexSpec extends SparkSpec {
   test("the probe scans ONLY probed clusters' codes, and no vectors") {
     val dir = tmp
     AnnIndex.build(emb, dir, nCentroids = 16)
-    val out = AnnIndex.probe(spark, dir, queries.limit(2), emb,
-      k = 5, nprobe = 2)
-    out.collect()
-    val codeScans = physicalNodes(out).collect {
+    // the probe is eager: read the scan off the plans it executed
+    val codeScans = executedNodes {
+      AnnIndex.probe(spark, dir, queries.limit(2), emb, k = 5, nprobe = 2)
+    }.collect {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains(dir))
         => s
@@ -176,10 +176,10 @@ class AnnIndexSpec extends SparkSpec {
     // shortlist is built AFTER the filter, so selectivity cannot starve
     assert(out.groupBy(_.getLong(0)).forall(_._2.length == 5))
     // production config: pruning unaffected by the filter
-    val prod = AnnIndex.probe(spark, dir, queries.limit(2), emb, k = 5,
-      nprobe = 2, version = v, allowed = Some(allowed))
-    prod.collect()
-    val codeScans = physicalNodes(prod).collect {
+    val codeScans = executedNodes {
+      AnnIndex.probe(spark, dir, queries.limit(2), emb, k = 5,
+        nprobe = 2, version = v, allowed = Some(allowed))
+    }.collect {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains(dir))
         => s
@@ -288,10 +288,9 @@ class AnnIndexSpec extends SparkSpec {
     val dir = tmp
     AnnIndex.build(half, dir, nCentroids = 16)
     AnnIndex.ingest(rest, dir, batchId = 1L)
-    val out = AnnIndex.probe(spark, dir, queries.limit(2), emb,
-      k = 5, nprobe = 2)
-    out.collect()
-    val codeScans = physicalNodes(out).collect {
+    val codeScans = executedNodes {
+      AnnIndex.probe(spark, dir, queries.limit(2), emb, k = 5, nprobe = 2)
+    }.collect {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains(dir))
         => s

@@ -532,10 +532,12 @@ class RetrievalSpec extends SparkSpec {
     // production configuration: the lexical leg reads only the probed
     // postings partitions, the semantic leg only the probed cluster
     // directories (+ the reserved tombstone partition)
-    val prod = Retrieval.hybridSearch(spark, bmDir, annDir, Seq("scan"),
-      qv, emb, k = 5, kLeg = 5, nprobe = 2, annVersion = v)
-    prod.collect()
-    val scans = physicalNodes(prod).collect {
+    // the ANN leg's probe is eager: read both legs' scans off the plans
+    // executed during the call
+    val scans = executedNodes {
+      Retrieval.hybridSearch(spark, bmDir, annDir, Seq("scan"),
+        qv, emb, k = 5, kLeg = 5, nprobe = 2, annVersion = v).collect()
+    }.collect {
       case s: FileSourceScanExec => s
     }
     val postings = scans.filter(_.relation.location.rootPaths.exists(p =>
@@ -575,11 +577,11 @@ class RetrievalSpec extends SparkSpec {
       .join(emb.select(col("vec_id").as("q_id"),
         col("embedding").as("q_vec")), Seq("q_id"))
     val allowed = corpus.filter(col("doc_id") % 3 =!= 0).select("doc_id")
-    val prod = Retrieval.hybridSearchBatch(spark, bmDir, annDir, q, emb,
-      k = 5, kLeg = 5, nprobe = 2, bm25Version = bv, annVersion = av,
-      allowed = Some(allowed))
-    prod.collect()
-    val scans = physicalNodes(prod).collect {
+    val scans = executedNodes {
+      Retrieval.hybridSearchBatch(spark, bmDir, annDir, q, emb,
+        k = 5, kLeg = 5, nprobe = 2, bm25Version = bv, annVersion = av,
+        allowed = Some(allowed)).collect()
+    }.collect {
       case s: FileSourceScanExec => s
     }
     val postings = scans.filter(_.relation.location.rootPaths.exists(p =>

@@ -17,15 +17,40 @@ trait SparkSpec extends AnyFunSuite {
     * AQE has finalized its stages.
     */
   def physicalNodes(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => q +: walk(q.plan)
-      case other => other +: other.children.flatMap(walk)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    graft.plans.ExecutedPlans.nodes(df.queryExecution.executedPlan)
+
+  /** [[physicalNodes]] of every query EXECUTED while `body` runs — for
+    * eager operators (the ANN probe) whose returned frame is
+    * driver-local and no longer carries the scan that produced it.
+    */
+  def executedNodes(body: => Any)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    graft.plans.ExecutedPlans.during(spark)(body)._2
+
+  /** Properties of every Spark job started while `body` runs, tagged
+    * `tag` on the calling thread (and on every thread it starts) — the
+    * job-count pins of control-plane budgets.
+    */
+  def jobsOf(tag: String)(body: => Any): Seq[java.util.Properties] = {
+    val key = "graft.test.jobsTag"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          seen.add(e.properties)
     }
-    walk(df.queryExecution.executedPlan)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc, 10000)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[java.util.Properties]).toSeq
   }
 }
 

@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.model.{ChangeEvent, IndexDef, Opcode}
@@ -19,30 +15,6 @@ import graft.streaming.StreamingIndex
   */
 class StreamingIndexJobsSpec extends SparkSpec {
   import spark.implicits._
-
-  private val Tag = "graft.test.jobsSpec"
-
-  /** Properties of every job started while `body` runs with `Tag` set on
-    * the calling thread (and on every thread it starts).
-    */
-  private def jobsOf(tag: String)(body: => Unit): Seq[java.util.Properties] = {
-    val seen = new ConcurrentLinkedQueue[java.util.Properties]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(Tag) == tag)
-          seen.add(e.properties)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(Tag, tag)
-    try body
-    finally {
-      sc.setLocalProperty(Tag, null)
-      org.apache.spark.sql.GraftBridge.drainListenerBus(sc, 10000)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
-  }
 
   private val byValue = IndexDef("v", "ch", "docid",
     secExprs = Seq("value"), whereExpr = Some("value >= 0"))

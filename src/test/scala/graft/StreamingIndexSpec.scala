@@ -533,7 +533,7 @@ class StreamingIndexSpec extends SparkSpec {
     val mixed = Seq(s"$dir/v=-1/part=1", s"$dir/v=0/part=0")
     val inferredMixed = spark.read.parquet(mixed: _*).schema
     Seq(mixed, mixed.reverse).foreach { paths =>
-      val footer = StreamingIndex.footerSchema(spark, paths)
+      val footer = graft.plans.StoreReads.footerSchema(spark, paths)
       assert(footer.nonEmpty)
       assert(spark.read.schema(footer.get).parquet(paths: _*).schema ==
         inferredMixed)

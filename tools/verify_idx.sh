@@ -1,19 +1,36 @@
 #!/usr/bin/env bash
-# Oracle check of the index-merge path in one command: runs graft.Verify
-# restricted to the five idx_* queries that merge change batches into an
-# index (batch upserts, retain-deleted, consistency scan, streaming
-# maintenance, catchup), then compares them with tools/check_oracle.py.
+# Oracle check of one query set in one command: runs graft.Verify
+# restricted to the set's queries, then compares them with
+# tools/check_oracle.py.
 #
-#   bash tools/verify_idx.sh [sfDir] [outDir]
+#   bash tools/verify_idx.sh [set] [sfDir] [outDir]
+#
+# Sets:
+#   idx (default)  the five idx_* queries that merge change batches into
+#                  an index (batch upserts, retain-deleted, consistency
+#                  scan, streaming maintenance, catchup)
+#   ann            the ANN store and hybrid-retrieval queries (build,
+#                  ingest, upsert, delete, filtered, residual, retrain,
+#                  stats, stream maintenance, SQL lifecycle, hybrid search
+#                  in every form, multimodal pipeline)
 #
 # sfDir defaults to $SPARK_GRAFT_SF_DIR, else $HOME/testdata/sf0.01; outDir
-# to a fresh temporary directory. Exits non-zero unless all five pass.
+# to a fresh temporary directory. Exits non-zero unless every query of the
+# set passes.
 set -euo pipefail
 
 root="$(cd "$(dirname "$0")/.." && pwd)"
+set_name=idx
+if [[ "${1:-}" == idx || "${1:-}" == ann ]]; then
+  set_name="$1"
+  shift
+fi
+case "$set_name" in
+  idx) queries=idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup ;;
+  ann) queries=sim_ann_persisted,sim_ann_ingest,sim_ann_upsert,sim_ann_delete,sim_ann_filtered,sim_ann_residual,sim_ann_retrain,sim_ann_stats,sim_ann_stream_maintain,ann_build_sql,text_hybrid_search,text_hybrid_batch,text_hybrid_filtered,text_hybrid_stream,hybrid_search_sql,hybrid_batch_sql,pipeline_multimodal ;;
+esac
 sf="${1:-${SPARK_GRAFT_SF_DIR:-$HOME/testdata/sf0.01}}"
-out="${2:-$(mktemp -d -t verify_idx.XXXXXX)}"
-queries=idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup
+out="${2:-$(mktemp -d -t "verify_$set_name.XXXXXX")}"
 mkdir -p "$out"
 n=$(tr ',' '\n' <<<"$queries" | wc -l)
 
@@ -37,6 +54,6 @@ grep -F '[verify]' "$out/verify.log" >&2 || true
 report="$(python3 "$root/tools/check_oracle.py" "$sf" "$out")"
 echo "$report"
 if ! grep -qx "== $n pass, 0 fail, $n oracled of $n listed" <<<"$report"; then
-  echo "verify_idx: expected $n of $n idx_* queries to pass" >&2
+  echo "verify_idx: expected $n of $n $set_name queries to pass" >&2
   exit 1
 fi
