@@ -276,7 +276,7 @@ case class PdfTextExpr(child: Expression)
         input.asInstanceOf[Array[Byte]])
       row(r.nPages, UTF8String.fromString(r.text), null)
     } catch {
-      case r: graft.operators.PdfCodec.PdfReject =>
+      case r: graft.codec.Reject =>
         row(null, null, UTF8String.fromString(r.kind))
       case scala.util.control.NonFatal(_) =>
         row(null, null, UTF8String.fromString("malformed"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.Reject
+
 /** ADTS AAC frame walk — the audio-budgeting pass for the OTHER
   * dominant compressed audio kind in crawls ([[Mp3Codec]]'s shape for
   * MPEG-2/4 AAC in the ADTS transport): frame count, sample rate,
@@ -13,7 +15,7 @@ package graft.operators
   * Reference analog: raw schemaless documents in front of the map
   * function (`/root/reference/Projector/indexjs.go:73-191`).
   *
-  * Contract (named rejections via [[AacCodec.AacReject]]):
+  * Contract (named rejections via [[graft.codec.Reject]], codec `aac`):
   *  - an ID3v2 prefix is skipped by its syncsafe size (+footer flag),
   *    as real .aac files carry them exactly like .mp3;
   *  - frames: 12-bit sync `0xFFF`; ID bit (1 = MPEG-2, 0 = MPEG-4);
@@ -41,11 +43,7 @@ package graft.operators
   */
 object AacCodec {
 
-  final class AacReject(val kind: String, detail: String)
-      extends IllegalArgumentException(s"aac: $kind: $detail")
-
-  private def reject(kind: String, detail: String): Nothing =
-    throw new AacReject(kind, detail)
+  private val reject = Reject.in("aac")
 
   /** The ISO sampling_frequency_index table (0..12). */
   val SampleRates: Array[Int] = Array(96000, 88200, 64000, 48000,

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.Reject
+
 import graft.operators.PixelCodec.Image
 
 /** Pure-JVM GIF decoder + fixture encoder (GIF87a/89a, LZW): logical
@@ -18,8 +20,7 @@ import graft.operators.PixelCodec.Image
   */
 object GifCodec {
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(msg)
+  private val fail = Reject.malformed("gif")
 
   /** Decode the FIRST frame to RGB pixels (palette-expanded, the
     * [[PixelCodec.decodePng]] contract shape). Later frames are legal
@@ -28,22 +29,22 @@ object GifCodec {
     */
   def decodeGif(payload: Array[Byte]): Image = {
     def u8(i: Int): Int = {
-      if (i >= payload.length) fail("GIF: truncated")
+      if (i >= payload.length) fail("truncated")
       payload(i) & 0xff
     }
     def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
     if (payload.length < 13 || payload(0) != 'G' || payload(1) != 'I' ||
       payload(2) != 'F' || payload(3) != '8' ||
       (payload(4) != '7' && payload(4) != '9') || payload(5) != 'a')
-      fail("GIF: bad signature")
+      fail("bad signature")
     val screenW = le16(6); val screenH = le16(8)
-    if (screenW <= 0 || screenH <= 0) fail("GIF: bad screen dimensions")
+    if (screenW <= 0 || screenH <= 0) fail("bad screen dimensions")
     val packed = u8(10)
     var globalPal: Array[Byte] = null
     var i = 13
     if ((packed & 0x80) != 0) {
       val n = 1 << ((packed & 0x07) + 1)
-      if (i + 3 * n > payload.length) fail("GIF: truncated color table")
+      if (i + 3 * n > payload.length) fail("truncated color table")
       globalPal = java.util.Arrays.copyOfRange(payload, i, i + 3 * n)
       i += 3 * n
     }
@@ -53,13 +54,13 @@ object GifCodec {
           i += 2
           while (u8(i) != 0) i += 1 + u8(i)
           i += 1
-        case 0x3b => fail("GIF: trailer before any image")
+        case 0x3b => fail("trailer before any image")
         case 0x2c =>
           val left = le16(i + 1); val top = le16(i + 3)
           val w = le16(i + 5); val h = le16(i + 7)
-          if (w <= 0 || h <= 0) fail("GIF: bad frame dimensions")
+          if (w <= 0 || h <= 0) fail("bad frame dimensions")
           if (left != 0 || top != 0 || w != screenW || h != screenH)
-            fail("GIF: first frame must cover the screen")
+            fail("first frame must cover the screen")
           val fp = u8(i + 9)
           val interlaced = (fp & 0x40) != 0
           i += 10
@@ -67,19 +68,19 @@ object GifCodec {
           if ((fp & 0x80) != 0) {
             val n = 1 << ((fp & 0x07) + 1)
             if (i + 3 * n > payload.length)
-              fail("GIF: truncated local color table")
+              fail("truncated local color table")
             pal = java.util.Arrays.copyOfRange(payload, i, i + 3 * n)
             i += 3 * n
           }
-          if (pal == null) fail("GIF: no color table")
+          if (pal == null) fail("no color table")
           val minCode = u8(i)
-          if (minCode < 2 || minCode > 8) fail("GIF: bad LZW min code size")
+          if (minCode < 2 || minCode > 8) fail("bad LZW min code size")
           i += 1
           // gather sub-block data
           val data = new java.io.ByteArrayOutputStream()
           while (u8(i) != 0) {
             val n = u8(i)
-            if (i + 1 + n > payload.length) fail("GIF: truncated sub-block")
+            if (i + 1 + n > payload.length) fail("truncated sub-block")
             data.write(payload, i + 1, n)
             i += 1 + n
           }
@@ -98,7 +99,7 @@ object GifCodec {
             var x = 0
             while (x < w) {
               val idx = indices(sy * w + x) & 0xff
-              if (idx >= nEntries) fail("GIF: index past color table")
+              if (idx >= nEntries) fail("index past color table")
               out((dy * w + x) * 3) = pal(idx * 3)
               out((dy * w + x) * 3 + 1) = pal(idx * 3 + 1)
               out((dy * w + x) * 3 + 2) = pal(idx * 3 + 2)
@@ -107,10 +108,10 @@ object GifCodec {
             sy += 1
           }
           return Image(w, h, 3, out)
-        case other => fail(f"GIF: unexpected block 0x$other%02x")
+        case other => fail(f"unexpected block 0x$other%02x")
       }
     }
-    fail("GIF: unreachable")
+    fail("unreachable")
   }
 
   /** GIF-flavor LZW decode: codes LSB-first, width grows at dictionary
@@ -137,7 +138,7 @@ object GifCodec {
       var c = code
       var n = 0
       while (c >= clear) {
-        if (n >= buf.length) fail("GIF: LZW chain overflow")
+        if (n >= buf.length) fail("LZW chain overflow")
         buf(n) = append(c); n += 1
         c = prefix(c)
       }
@@ -145,7 +146,7 @@ object GifCodec {
       // reversed in place onto out
       var j = n - 1
       while (j >= 0) {
-        if (outAt >= expect) fail("GIF: LZW produced too many pixels")
+        if (outAt >= expect) fail("LZW produced too many pixels")
         out(outAt) = buf(j); outAt += 1
         j -= 1
       }
@@ -154,7 +155,7 @@ object GifCodec {
     }
     while (outAt < expect) {
       while (nbits < width) {
-        if (pos >= data.length) fail("GIF: LZW data exhausted")
+        if (pos >= data.length) fail("LZW data exhausted")
         acc |= (data(pos) & 0xffL) << nbits
         nbits += 8
         pos += 1
@@ -167,19 +168,19 @@ object GifCodec {
         width = minCode + 1
         prev = -1
       } else if (code == eoi) {
-        fail("GIF: EOI before all pixels")
+        fail("EOI before all pixels")
       } else if (prev < 0) {
-        if (code >= clear) fail("GIF: first code must be literal")
-        if (outAt >= expect) fail("GIF: LZW produced too many pixels")
+        if (code >= clear) fail("first code must be literal")
+        if (outAt >= expect) fail("LZW produced too many pixels")
         out(outAt) = code.toByte; outAt += 1
         prev = code
       } else {
         if (code > next || (code == next && prev < 0))
-          fail("GIF: LZW code out of range")
+          fail("LZW code out of range")
         val first =
           if (code == next) { // KwKwK: expand prev then its first byte
             val f = expand(prev)
-            if (outAt >= expect) fail("GIF: LZW produced too many pixels")
+            if (outAt >= expect) fail("LZW produced too many pixels")
             out(outAt) = f.toByte; outAt += 1
             f
           } else expand(code)

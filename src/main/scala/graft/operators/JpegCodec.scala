@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.Reject
+
 import graft.operators.PixelCodec.Image
 
 /** Pure-JVM JPEG codec (ITU-T T.81, 8-bit, Huffman) — BASELINE
@@ -47,8 +49,14 @@ object JpegCodec {
     */
   val Tolerance: Int = 3
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(msg)
+  private val fail = Reject.malformed("jpeg")
+
+  /** Pixel cap, checked at the frame header before any plane is
+    * allocated: a progressive decode holds ~18 bytes per pixel
+    * (coefficients, planes, output), so a hostile 65535² header would
+    * otherwise ask for tens of GiB.
+    */
+  private val maxPixels = 1 << 26
 
   // zigzag index -> natural (row-major) index, T.81 Figure A.6
   private val Zigzag: Array[Int] = Array(
@@ -164,7 +172,7 @@ object JpegCodec {
         code <<= 1
         l += 1
       }
-      if (k != vals.length) fail("JPEG: DHT counts disagree with symbols")
+      if (k != vals.length) fail("DHT counts disagree with symbols")
     }
   }
 
@@ -177,13 +185,13 @@ object JpegCodec {
 
     def nextBit(): Int = {
       if (nbits == 0) {
-        if (pos >= data.length) fail("JPEG: entropy data exhausted")
+        if (pos >= data.length) fail("entropy data exhausted")
         val b = data(pos) & 0xff
         if (b == 0xff) {
-          if (pos + 1 >= data.length) fail("JPEG: entropy data exhausted")
+          if (pos + 1 >= data.length) fail("entropy data exhausted")
           val b2 = data(pos + 1) & 0xff
           if (b2 != 0x00) fail(
-            f"JPEG: unexpected marker 0xff$b2%02x inside entropy data")
+            f"unexpected marker 0xff$b2%02x inside entropy data")
           pos += 2
         } else pos += 1
         acc = b; nbits = 8
@@ -202,7 +210,7 @@ object JpegCodec {
       var code = nextBit()
       var l = 1
       while (code > t.maxCode(l)) {
-        if (l >= 16) fail("JPEG: invalid Huffman code")
+        if (l >= 16) fail("invalid Huffman code")
         code = (code << 1) | nextBit()
         l += 1
       }
@@ -212,10 +220,10 @@ object JpegCodec {
     /** Byte-align and consume the expected RSTn marker. */
     def expectRestart(n: Int): Unit = {
       nbits = 0
-      if (pos + 1 >= data.length) fail("JPEG: truncated at restart")
+      if (pos + 1 >= data.length) fail("truncated at restart")
       if ((data(pos) & 0xff) != 0xff ||
         (data(pos + 1) & 0xff) != (0xd0 + (n & 7)))
-        fail("JPEG: missing restart marker")
+        fail("missing restart marker")
       pos += 2
     }
   }
@@ -250,14 +258,14 @@ object JpegCodec {
     */
   private def sofMarker(payload: Array[Byte]): Int = {
     def u8(i: Int): Int = {
-      if (i >= payload.length) fail("JPEG: truncated")
+      if (i >= payload.length) fail("truncated")
       payload(i) & 0xff
     }
     if (payload.length < 4 || u8(0) != 0xff || u8(1) != 0xd8)
-      fail("JPEG: no SOI")
+      fail("no SOI")
     var i = 2
     while (true) {
-      if (u8(i) != 0xff) fail("JPEG: expected marker")
+      if (u8(i) != 0xff) fail("expected marker")
       // T.81 B.1.1.2: any number of 0xFF FILL bytes may precede a
       // marker code — skip them (the progressive walk and the header
       // sniffer already do; rejecting them here nulled valid crawl
@@ -266,12 +274,12 @@ object JpegCodec {
       val m = u8(i + 1)
       if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
         return m
-      if (m == 0xd9 || m == 0xda) fail("JPEG: no SOF before SOS/EOI")
+      if (m == 0xd9 || m == 0xda) fail("no SOF before SOS/EOI")
       if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i += 2
       else {
         val len = (u8(i + 2) << 8) | u8(i + 3)
         if (len < 2 || i + 2 + len > payload.length)
-          fail("JPEG: truncated segment")
+          fail("truncated segment")
         i += 2 + len
       }
     }
@@ -280,12 +288,12 @@ object JpegCodec {
 
   private def decodeBaseline(payload: Array[Byte]): Image = {
     def u8(i: Int): Int = {
-      if (i >= payload.length) fail("JPEG: truncated")
+      if (i >= payload.length) fail("truncated")
       payload(i) & 0xff
     }
     def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
     if (payload.length < 4 || u8(0) != 0xff || u8(1) != 0xd8)
-      fail("JPEG: no SOI")
+      fail("no SOI")
 
     val qt = new Array[Array[Int]](4) // natural-order, per Tq slot
     val dcT = new Array[HuffTable](4)
@@ -297,25 +305,25 @@ object JpegCodec {
     var scanAt = -1
 
     while (scanAt < 0) {
-      if (u8(i) != 0xff) fail("JPEG: expected marker")
+      if (u8(i) != 0xff) fail("expected marker")
       // T.81 B.1.1.2 fill bytes before the marker code
       while (u8(i + 1) == 0xff) i += 1
       val m = u8(i + 1)
-      if (m == 0xd8) fail("JPEG: duplicate SOI")
-      else if (m == 0xd9) fail("JPEG: EOI before SOS")
+      if (m == 0xd8) fail("duplicate SOI")
+      else if (m == 0xd9) fail("EOI before SOS")
       else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i += 2
       else {
         val len = u16(i + 2)
         if (len < 2 || i + 2 + len > payload.length)
-          fail("JPEG: truncated segment")
+          fail("truncated segment")
         m match {
           case 0xdb => // DQT: one or more tables
             var p = i + 4
             while (p < i + 2 + len) {
               val pq = u8(p) >> 4; val tq = u8(p) & 15
-              if (pq != 0) fail("JPEG: 16-bit quant tables unsupported")
-              if (tq > 3) fail("JPEG: bad quant table id")
-              if (p + 65 > i + 2 + len) fail("JPEG: truncated DQT")
+              if (pq != 0) fail("16-bit quant tables unsupported")
+              if (tq > 3) fail("bad quant table id")
+              if (p + 65 > i + 2 + len) fail("truncated DQT")
               val t = new Array[Int](64)
               var z = 0
               while (z < 64) { t(Zigzag(z)) = u8(p + 1 + z); z += 1 }
@@ -326,56 +334,61 @@ object JpegCodec {
             var p = i + 4
             while (p < i + 2 + len) {
               val tc = u8(p) >> 4; val th = u8(p) & 15
-              if (tc > 1 || th > 3) fail("JPEG: bad Huffman table spec")
+              if (tc > 1 || th > 3) fail("bad Huffman table spec")
               val bits = Array.tabulate(16)(j => u8(p + 1 + j))
               val n = bits.sum
-              if (p + 17 + n > i + 2 + len) fail("JPEG: truncated DHT")
+              if (p + 17 + n > i + 2 + len) fail("truncated DHT")
               val vals = Array.tabulate(n)(j => u8(p + 17 + j))
               val t = new HuffTable(bits, vals)
               if (tc == 0) dcT(th) = t else acT(th) = t
               p += 17 + n
             }
           case 0xc0 | 0xc1 => // SOF0 baseline / SOF1 extended sequential
-            if (comps != null) fail("JPEG: duplicate SOF")
-            if (u8(i + 4) != 8) fail("JPEG: only 8-bit precision")
+            if (comps != null) fail("duplicate SOF")
+            if (u8(i + 4) != 8) fail("only 8-bit precision")
             height = u16(i + 5); width = u16(i + 7)
-            if (width <= 0 || height <= 0) fail("JPEG: bad dimensions")
+            if (width <= 0 || height <= 0) fail("bad dimensions")
+            if (width.toLong * height > maxPixels)
+              fail(s"${width}x$height is past the $maxPixels-pixel cap")
             val nf = u8(i + 9)
-            if (nf != 1 && nf != 3) fail(s"JPEG: unsupported $nf components")
+            if (nf != 1 && nf != 3) fail(s"unsupported $nf components")
             comps = Array.tabulate(nf) { c =>
               val at = i + 10 + c * 3
               val hv = u8(at + 1)
               val comp = Component(u8(at), hv >> 4, hv & 15, u8(at + 2))
               if (comp.h < 1 || comp.h > 2 || comp.v < 1 || comp.v > 2)
-                fail("JPEG: sampling factors beyond 2 unsupported")
+                fail("sampling factors beyond 2 unsupported")
+              if (comp.tq > 3) fail("bad quant table id")
               comp
             }
-          case 0xc2 => fail("JPEG: progressive unsupported")
+          case 0xc2 => fail("progressive unsupported")
           case n if n >= 0xc3 && n <= 0xcf && n != 0xc4 && n != 0xc8 =>
-            fail(f"JPEG: unsupported SOF marker 0xff$n%02x")
+            fail(f"unsupported SOF marker 0xff$n%02x")
           case 0xdd =>
             restartInterval = u16(i + 4)
           case 0xda => // SOS
-            if (comps == null) fail("JPEG: SOS before SOF")
+            if (comps == null) fail("SOS before SOF")
             val ns = u8(i + 4)
             if (ns != comps.length)
-              fail("JPEG: non-interleaved multi-scan unsupported")
+              fail("non-interleaved multi-scan unsupported")
             var c = 0
             while (c < ns) {
               val cs = u8(i + 5 + c * 2)
               val comp = comps.find(_.id == cs).getOrElse(
-                fail(s"JPEG: SOS references unknown component $cs"))
+                fail(s"SOS references unknown component $cs"))
               val tt = u8(i + 6 + c * 2)
+              if ((tt >> 4) > 3 || (tt & 15) > 3)
+                fail("bad Huffman table selector")
               comp.dcTable = dcT(tt >> 4)
               comp.acTable = acT(tt & 15)
               if (comp.dcTable == null || comp.acTable == null)
-                fail("JPEG: SOS references missing Huffman table")
+                fail("SOS references missing Huffman table")
               if (qt(comp.tq) == null)
-                fail("JPEG: component references missing quant table")
+                fail("component references missing quant table")
               c += 1
             }
             if (u8(i + 5 + ns * 2) != 0 || u8(i + 6 + ns * 2) != 63)
-              fail("JPEG: baseline scan must cover coefficients 0..63")
+              fail("baseline scan must cover coefficients 0..63")
             scanAt = i + 2 + len
           case _ => () // APPn / COM / others: skipped
         }
@@ -419,7 +432,7 @@ object JpegCodec {
             java.util.Arrays.fill(coef, 0)
             // DC
             val s = reader.decodeHuff(comp.dcTable)
-            if (s > 11) fail("JPEG: bad DC size category")
+            if (s > 11) fail("bad DC size category")
             comp.pred += extend(reader.receive(s), s)
             coef(0) = comp.pred * q(0)
             // AC
@@ -432,7 +445,7 @@ object JpegCodec {
                 if (r == 15) k += 16 else done = true
               } else {
                 k += r
-                if (k > 63) fail("JPEG: AC run past block end")
+                if (k > 63) fail("AC run past block end")
                 coef(Zigzag(k)) = extend(reader.receive(sz), sz) *
                   q(Zigzag(k))
                 k += 1
@@ -527,12 +540,12 @@ object JpegCodec {
     */
   private def decodeProgressive(payload: Array[Byte]): Image = {
     def u8(i: Int): Int = {
-      if (i >= payload.length) fail("JPEG: truncated")
+      if (i >= payload.length) fail("truncated")
       payload(i) & 0xff
     }
     def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
     if (payload.length < 4 || u8(0) != 0xff || u8(1) != 0xd8)
-      fail("JPEG: no SOI")
+      fail("no SOI")
 
     val qt = new Array[Array[Int]](4)
     val dcT = new Array[HuffTable](4)
@@ -554,43 +567,45 @@ object JpegCodec {
       */
     def decodeScan(segStart: Int): Int = {
       val len = u16(segStart + 2)
-      if (segStart + 2 + len > payload.length) fail("JPEG: truncated SOS")
+      if (segStart + 2 + len > payload.length) fail("truncated SOS")
       val ns = u8(segStart + 4)
-      if (ns < 1 || ns > comps.length) fail("JPEG: bad scan component count")
+      if (ns < 1 || ns > comps.length) fail("bad scan component count")
       val scanComps = Array.tabulate(ns) { c =>
         val cs = u8(segStart + 5 + c * 2)
         val comp = comps.indexWhere(_.id == cs) match {
-          case -1 => fail(s"JPEG: SOS references unknown component $cs")
+          case -1 => fail(s"SOS references unknown component $cs")
           case idx => idx
         }
         val tt = u8(segStart + 6 + c * 2)
+        if ((tt >> 4) > 3 || (tt & 15) > 3)
+          fail("bad Huffman table selector")
         (comp, tt >> 4, tt & 15)
       }
       if (scanComps.map(_._1).distinct.length != ns)
-        fail("JPEG: duplicate component in scan")
+        fail("duplicate component in scan")
       val ss = u8(segStart + 5 + ns * 2)
       val se = u8(segStart + 6 + ns * 2)
       val ahal = u8(segStart + 7 + ns * 2)
       val ah = ahal >> 4; val al = ahal & 15
       if (ss == 0 && se != 0)
-        fail("JPEG: progressive band may not cross DC (Ss=0 needs Se=0)")
+        fail("progressive band may not cross DC (Ss=0 needs Se=0)")
       if (ss > 0 && (ns != 1 || se < ss || se > 63))
-        fail("JPEG: AC scan must be non-interleaved with Ss<=Se<=63")
+        fail("AC scan must be non-interleaved with Ss<=Se<=63")
       if (ah != 0 && ah != al + 1)
-        fail("JPEG: successive approximation must refine one bit")
+        fail("successive approximation must refine one bit")
       scanComps.foreach { case (ci, td, ta) =>
         val comp = comps(ci)
         if (qt(comp.tq) == null)
-          fail("JPEG: component references missing quant table")
+          fail("component references missing quant table")
         if (ss == 0 && ah == 0) {
           comp.dcTable = dcT(td)
           if (comp.dcTable == null)
-            fail("JPEG: SOS references missing Huffman table")
+            fail("SOS references missing Huffman table")
         }
         if (ss > 0) {
           comp.acTable = acT(ta)
           if (comp.acTable == null)
-            fail("JPEG: SOS references missing Huffman table")
+            fail("SOS references missing Huffman table")
         }
       }
       val reader = new BitReader(payload, segStart + 2 + len)
@@ -612,7 +627,7 @@ object JpegCodec {
         val comp = comps(ci)
         if (ah == 0) {
           val s = reader.decodeHuff(comp.dcTable)
-          if (s > 11) fail("JPEG: bad DC size category")
+          if (s > 11) fail("bad DC size category")
           comp.pred += extend(reader.receive(s), s)
           coefs(ci)(base) = comp.pred << al
         } else if (reader.nextBit() == 1)
@@ -678,7 +693,7 @@ object JpegCodec {
                   } else k += 16
                 } else {
                   k += r
-                  if (k > se) fail("JPEG: AC run past band end")
+                  if (k > se) fail("AC run past band end")
                   coefs(ci)(base + Zigzag(k)) =
                     extend(reader.receive(s), s) << al
                   k += 1
@@ -709,7 +724,7 @@ object JpegCodec {
                     r = 64 // rest of this block refines only
                   } // r == 15: skip 16 zero-history coefficients
                 } else {
-                  if (s != 1) fail("JPEG: bad refinement size category")
+                  if (s != 1) fail("bad refinement size category")
                   insert = if (reader.nextBit() == 1) p1 else m1
                 }
                 var advanced = false
@@ -735,31 +750,31 @@ object JpegCodec {
       while (p + 1 < payload.length &&
         !((payload(p) & 0xff) == 0xff && (payload(p + 1) & 0xff) != 0x00))
         p += 1
-      if (p + 1 >= payload.length) fail("JPEG: no marker after scan")
+      if (p + 1 >= payload.length) fail("no marker after scan")
       p
     }
 
     var i = 2
     var eoi = false
     while (!eoi) {
-      if (u8(i) != 0xff) fail("JPEG: expected marker")
+      if (u8(i) != 0xff) fail("expected marker")
       val m = u8(i + 1)
       if (m == 0xd9) eoi = true
-      else if (m == 0xd8) fail("JPEG: duplicate SOI")
+      else if (m == 0xd8) fail("duplicate SOI")
       else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i += 2
       else if (m == 0xff) i += 1 // fill byte
       else {
         val len = u16(i + 2)
         if (len < 2 || i + 2 + len > payload.length)
-          fail("JPEG: truncated segment")
+          fail("truncated segment")
         m match {
           case 0xdb =>
             var p = i + 4
             while (p < i + 2 + len) {
               val pq = u8(p) >> 4; val tq = u8(p) & 15
-              if (pq != 0) fail("JPEG: 16-bit quant tables unsupported")
-              if (tq > 3) fail("JPEG: bad quant table id")
-              if (p + 65 > i + 2 + len) fail("JPEG: truncated DQT")
+              if (pq != 0) fail("16-bit quant tables unsupported")
+              if (tq > 3) fail("bad quant table id")
+              if (p + 65 > i + 2 + len) fail("truncated DQT")
               val t = new Array[Int](64)
               var z = 0
               while (z < 64) { t(Zigzag(z)) = u8(p + 1 + z); z += 1 }
@@ -770,28 +785,31 @@ object JpegCodec {
             var p = i + 4
             while (p < i + 2 + len) {
               val tc = u8(p) >> 4; val th = u8(p) & 15
-              if (tc > 1 || th > 3) fail("JPEG: bad Huffman table spec")
+              if (tc > 1 || th > 3) fail("bad Huffman table spec")
               val bits = Array.tabulate(16)(j => u8(p + 1 + j))
               val n = bits.sum
-              if (p + 17 + n > i + 2 + len) fail("JPEG: truncated DHT")
+              if (p + 17 + n > i + 2 + len) fail("truncated DHT")
               val vals = Array.tabulate(n)(j => u8(p + 17 + j))
               val t = new HuffTable(bits, vals)
               if (tc == 0) dcT(th) = t else acT(th) = t
               p += 17 + n
             }
           case 0xc2 =>
-            if (comps != null) fail("JPEG: duplicate SOF")
-            if (u8(i + 4) != 8) fail("JPEG: only 8-bit precision")
+            if (comps != null) fail("duplicate SOF")
+            if (u8(i + 4) != 8) fail("only 8-bit precision")
             height = u16(i + 5); width = u16(i + 7)
-            if (width <= 0 || height <= 0) fail("JPEG: bad dimensions")
+            if (width <= 0 || height <= 0) fail("bad dimensions")
+            if (width.toLong * height > maxPixels)
+              fail(s"${width}x$height is past the $maxPixels-pixel cap")
             val nf = u8(i + 9)
-            if (nf != 1 && nf != 3) fail(s"JPEG: unsupported $nf components")
+            if (nf != 1 && nf != 3) fail(s"unsupported $nf components")
             comps = Array.tabulate(nf) { c =>
               val at = i + 10 + c * 3
               val hv = u8(at + 1)
               val comp = Component(u8(at), hv >> 4, hv & 15, u8(at + 2))
               if (comp.h < 1 || comp.h > 2 || comp.v < 1 || comp.v > 2)
-                fail("JPEG: sampling factors beyond 2 unsupported")
+                fail("sampling factors beyond 2 unsupported")
+              if (comp.tq > 3) fail("bad quant table id")
               comp
             }
             hMax = comps.map(_.h).max
@@ -806,11 +824,11 @@ object JpegCodec {
             coefs = Array.tabulate(nf)(c =>
               new Array[Int](planeBW(c) * mcusY * comps(c).v * 64))
           case n if n >= 0xc0 && n <= 0xcf && n != 0xc4 && n != 0xc8 =>
-            fail(f"JPEG: unexpected second frame marker 0xff$n%02x")
+            fail(f"unexpected second frame marker 0xff$n%02x")
           case 0xdd =>
             restartInterval = u16(i + 4)
           case 0xda =>
-            if (comps == null) fail("JPEG: SOS before SOF")
+            if (comps == null) fail("SOS before SOF")
             sawScan = true
           case _ => ()
         }
@@ -818,7 +836,7 @@ object JpegCodec {
       }
     }
 
-    if (!sawScan) fail("JPEG: no scan before EOI")
+    if (!sawScan) fail("no scan before EOI")
 
     // dequantize + IDCT every REAL block into the padded planes, then
     // the shared composition
@@ -830,7 +848,7 @@ object JpegCodec {
     var c = 0
     while (c < comps.length) {
       val q = qt(comps(c).tq)
-      if (q == null) fail("JPEG: component references missing quant table")
+      if (q == null) fail("component references missing quant table")
       var br = 0
       while (br < blocksH(c)) {
         var bc = 0

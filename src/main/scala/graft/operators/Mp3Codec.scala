@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.Reject
+
 /** MP3 (MPEG-1/2/2.5 Audio Layer III) frame walk — the metadata pass
   * an audio-corpus ingest runs before any transcoding: frame count,
   * sample rate, channel mode, CBR/VBR discrimination and exact
@@ -14,7 +16,7 @@ package graft.operators
   * Reference analog: raw schemaless documents in front of the map
   * function (`/root/reference/Projector/indexjs.go:73-191`).
   *
-  * Contract (named rejections via [[Mp3Reject]]):
+  * Contract (named rejections via [[graft.codec.Reject]], codec `mp3`):
   *  - an ID3v2 prefix is skipped by its syncsafe size (+footer flag),
   *    an ID3v1 `TAG` trailer by its fixed 128 bytes; both reported;
   *  - frames: 11-bit sync, version (2.5/2/1; reserved rejects
@@ -40,11 +42,7 @@ package graft.operators
   */
 object Mp3Codec {
 
-  final class Mp3Reject(val kind: String, detail: String)
-      extends IllegalArgumentException(s"mp3: $kind: $detail")
-
-  private def reject(kind: String, detail: String): Nothing =
-    throw new Mp3Reject(kind, detail)
+  private val reject = Reject.in("mp3")
 
   final case class Mp3Facts(nFrames: Int, sampleRate: Int,
                             channels: Int, mode: String,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.codec.Reject
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -79,8 +80,7 @@ object Multimodal {
         def be32(i: Int): Int =
           (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
         def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-        def fail(msg: String): Nothing =
-          throw new IllegalArgumentException(msg)
+        val fail = Reject.malformed("headers")
 
         if (payload.length >= 24 && u8(0) == 0x89 && u8(1) == 'P' &&
             u8(2) == 'N' && u8(3) == 'G' && u8(4) == 0x0d && u8(5) == 0x0a &&
@@ -201,8 +201,7 @@ object Multimodal {
           (u8(i + 3).toLong << 24)) & 0xffffffffL
       def cc(i: Int): String =
         new String(payload, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(msg)
+      val fail = Reject.malformed("av")
 
       if (payload.length >= 12 && cc(0) == "RIFF" && cc(8) == "WAVE") {
         // chunk walk: ids + sizes are trusted structure, data need not be
@@ -678,7 +677,7 @@ object Multimodal {
           }
           Row(id, img.width, img.height, img.channels, sum, chk, null)
         } catch {
-          case e: TiffCodec.TiffReject =>
+          case e: Reject =>
             Row(id, null, null, null, null, null, e.kind)
           case scala.util.control.NonFatal(_) =>
             Row(id, null, null, null, null, null, "malformed")
@@ -718,7 +717,7 @@ object Multimodal {
           Row(id, f.nFrames, f.sampleRate, f.channels, f.mode,
             f.kbps, f.durationMs, f.vbrFrames, f.id3v2, f.id3v1, null)
         } catch {
-          case e: Mp3Codec.Mp3Reject =>
+          case e: Reject =>
             Row(id, null, null, null, null, null, null, null, null,
               null, e.kind)
           case scala.util.control.NonFatal(_) =>
@@ -770,7 +769,7 @@ object Multimodal {
           }
           Row(id, f.width, f.height, ySum, yChk, uSum, vSum, null)
         } catch {
-          case e: Vp8Codec.Vp8Reject =>
+          case e: Reject =>
             Row(id, null, null, null, null, null, null, e.kind)
           case scala.util.control.NonFatal(_) =>
             Row(id, null, null, null, null, null, null, "malformed")
@@ -813,7 +812,7 @@ object Multimodal {
             f.mpeg2, f.crc, f.vbr, f.nSamples, f.durationMs, f.id3v2,
             null)
         } catch {
-          case e: AacCodec.AacReject =>
+          case e: Reject =>
             Row(id, null, null, null, null, null, null, null, null,
               null, null, e.kind)
           case scala.util.control.NonFatal(_) =>
@@ -983,8 +982,7 @@ object Multimodal {
       def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
       def cc(i: Int): String =
         new String(payload, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(msg)
+      val fail = Reject.malformed("mp4")
       if (payload.length < 12 || cc(4) != "ftyp") fail("mp4: no ftyp box")
 
       var sizes: Array[Int] = null
@@ -1119,8 +1117,7 @@ object Multimodal {
       def cc(i: Int): String =
         new String(payload, i, 4,
           java.nio.charset.StandardCharsets.US_ASCII)
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(msg)
+      val fail = Reject.malformed("fmp4")
       if (payload.length < 12 || cc(4) != "ftyp") fail("fmp4: no ftyp")
 
       // trex default sample size out of moov/mvex

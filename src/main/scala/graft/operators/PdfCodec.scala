@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.zip.{DataFormatException, Inflater}
+import graft.codec.{Inflate, Reject}
 
 /** PDF → text extraction — after HTML, the next-largest text payload
   * in a real crawl; without this operator every PDF byte in a 100 TB
@@ -28,7 +28,7 @@ import java.util.zip.{DataFormatException, Inflater}
   *  - the document tree: trailer `/Root` → catalog → `/Pages` tree
   *    (nested `Pages` nodes, `/Resources` inheritance) → `Page`;
   *  - content streams stored raw or `/FlateDecode` (RFC 1950 zlib via
-  *    the JVM `Inflater` — the [[PixelCodec]] discipline), `/Length`
+  *    the bounded [[graft.codec.Inflate]] loop), `/Length`
   *    direct or indirect, `/Contents` single or array;
   *  - text operators `BT ET Tf Td TD T* Tm TL Tj TJ ' "` plus the
   *    ignorable state ops (`Tc Tw Tz Ts Tr`, graphics ops): strings
@@ -63,7 +63,7 @@ import java.util.zip.{DataFormatException, Inflater}
   *    every generated real-world PDF uses; a code the CMap does not
   *    map is a named rejection.
   *
-  * REJECTED BY NAME (`PdfReject.kind`):
+  * REJECTED BY NAME ([[graft.codec.Reject]] `kind`, codec `pdf`):
   *  - `encrypted` — `/Encrypt` in the trailer (no offline-verifiable
   *    crypto);
   *  - `filter` — any content/xref filter other than FlateDecode (DCT,
@@ -92,14 +92,15 @@ import java.util.zip.{DataFormatException, Inflater}
   */
 object PdfCodec {
 
-  /** Named rejection: `kind` is the stable machine-checkable name. */
-  final class PdfReject(val kind: String, detail: String)
-      extends IllegalArgumentException(s"pdf: $kind: $detail")
-
-  private def reject(kind: String, detail: String): Nothing =
-    throw new PdfReject(kind, detail)
+  private val reject = Reject.in("pdf")
 
   final case class PdfText(nPages: Int, text: String)
+
+  /** A decimal token that fits an Int / a Long. */
+  private def uint(t: String): Option[Int] =
+    if (t.nonEmpty && t.forall(_.isDigit)) t.toIntOption else None
+  private def ulong(t: String): Option[Long] =
+    if (t.nonEmpty && t.forall(_.isDigit)) t.toLongOption else None
 
   // ------------------------------------------------------------ model
 
@@ -273,7 +274,7 @@ object PdfCodec {
           val c2 = lx.peek
           if (c2 >= '0' && c2 <= '9') {
             val t2 = lx.token()
-            if (t2.forall(_.isDigit)) {
+            if (uint(t2).isDefined) {
               lx.skipWs()
               if (lx.peek == 'R') {
                 val save2 = lx.at
@@ -347,8 +348,7 @@ object PdfCodec {
       val lx = new Lex(b, tailAt + sx)
       lx.expect("startxref")
       val t = lx.token()
-      if (!t.forall(_.isDigit)) reject("malformed", s"bad startxref '$t'")
-      t.toLong
+      ulong(t).getOrElse(reject("malformed", s"bad startxref '$t'"))
     }
     val locs = scala.collection.mutable.HashMap.empty[Int, Loc]
     var trailer: Map[String, Obj] = Map.empty
@@ -410,21 +410,18 @@ object PdfCodec {
       val t = lx.token()
       if (t == "trailer") inSections = false
       else {
-        if (!t.forall(_.isDigit))
-          reject("malformed", s"bad xref subsection '$t'")
-        val start = t.toInt
+        val start = uint(t).getOrElse(
+          reject("malformed", s"bad xref subsection '$t'"))
         val count = {
           val c = lx.token()
-          if (!c.forall(_.isDigit))
-            reject("malformed", s"bad xref count '$c'")
-          c.toInt
+          uint(c).getOrElse(reject("malformed", s"bad xref count '$c'"))
         }
         var i = 0
         while (i < count) {
           val off = lx.token()
           val gen = lx.token()
           val kind = lx.token()
-          if (!off.forall(_.isDigit) || !gen.forall(_.isDigit) ||
+          if (ulong(off).isEmpty || !gen.forall(_.isDigit) ||
             (kind != "n" && kind != "f"))
             reject("malformed", s"bad xref entry '$off $gen $kind'")
           entries += ((start + i,
@@ -901,7 +898,7 @@ object PdfCodec {
   private def buildDecryptor(doc: Doc, encObj: Obj,
                              idObj: Option[Obj]): Decryptor = {
     val enc = (try doc.resolve(encObj) catch {
-      case e: PdfReject if e.kind != "encrypted" =>
+      case e: Reject if e.codec == "pdf" && e.kind != "encrypted" =>
         reject("encrypted", s"unreadable /Encrypt dict (${e.getMessage})")
     }) match {
       case PDict(m) => m
@@ -1085,7 +1082,7 @@ object PdfCodec {
       val lx = new Lex(b, off.toInt)
       val n = lx.token()
       val g = lx.token()
-      if (!n.forall(_.isDigit) || !g.forall(_.isDigit) || n.toInt != num)
+      if (!uint(n).contains(num) || !g.forall(_.isDigit))
         reject("malformed", s"object header mismatch at $off: '$n $g'")
       lx.expect("obj")
       val obj = parseObj(lx)
@@ -1172,9 +1169,10 @@ object PdfCodec {
         val pairs = Array.tabulate(nObjs) { _ =>
           val on = hlx.token()
           val off = hlx.token()
-          if (!on.forall(_.isDigit) || !off.forall(_.isDigit))
-            reject("malformed", s"bad ObjStm header pair '$on $off'")
-          (on.toInt, off.toInt)
+          (uint(on), uint(off)) match {
+            case (Some(o), Some(f)) => (o, f)
+            case _ => reject("malformed", s"bad ObjStm header pair '$on $off'")
+          }
         }
         (pairs, data, first)
       })
@@ -1433,28 +1431,11 @@ object PdfCodec {
   val maxStreamBytes: Int = 1 << 30
 
   private def inflateZlib(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater() // zlib wrapper per RFC 1950
-    try {
-      inf.setInput(data)
-      val buf = new Array[Byte](64 * 1024)
-      val out = new java.io.ByteArrayOutputStream()
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch {
-            case e: DataFormatException =>
-              reject("malformed", s"corrupt flate stream: ${e.getMessage}")
-          }
-        if (n > 0) {
-          if (out.size().toLong + n > maxStreamBytes)
-            reject("malformed",
-              s"flate stream inflates past the $maxStreamBytes-byte cap")
-          out.write(buf, 0, n)
-        } else if (!inf.finished())
-          reject("malformed", "truncated flate stream")
-      }
-      out.toByteArray
-    } finally inf.end()
+    val z = Inflate("pdf", data, 0, data.length, zlib = true,
+      maxStreamBytes,
+      s"flate stream inflates past the $maxStreamBytes-byte cap")
+    if (!z.ended) reject("malformed", "truncated flate stream")
+    z.bytes
   }
 
   // ----------------------------------------------------- text decode
@@ -2096,7 +2077,7 @@ object PdfCodec {
   // ------------------------------------------------------------ api
 
   /** Extract all text. Any unsupported or broken construct throws
-    * [[PdfReject]] with its named kind.
+    * a `pdf` [[graft.codec.Reject]] with its named kind.
     */
   def extractText(bytes: Array[Byte]): PdfText = {
     if (bytes.length < 8 ||

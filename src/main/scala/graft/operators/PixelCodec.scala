@@ -1,11 +1,13 @@
 package graft.operators
 
-import java.util.zip.{CRC32, Deflater, Inflater}
+import graft.codec.{Inflate, Reject}
+import java.util.zip.{CRC32, Deflater}
 
 /** Pixel/sample-level media codecs — pure JVM, deterministic, zero
-  * native-library dependence: PNG pixel decode rides `java.util.zip`'s
-  * Inflater (the JVM's built-in zlib) plus the PNG scanline filter
-  * inversions, and WAV PCM decode is plain little-endian arithmetic.
+  * native-library dependence: PNG pixel decode rides the bounded
+  * [[graft.codec.Inflate]] loop (the JVM's built-in zlib) plus the
+  * PNG scanline filter inversions, and WAV PCM decode is plain
+  * little-endian arithmetic.
   * This closes the "pixel work needs codec libraries" gap left by the
   * header-only tier ([[Multimodal.Decoder.Headers]] /
   * [[Multimodal.AvHeaders]]): the engine genuinely DECOMPRESSES image
@@ -13,7 +15,8 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   *
   * Decode contract mirrors the header tier: structural violations
   * (bad signature, CRC mismatch, unsupported depth, short pixel data,
-  * truncated samples) throw, and the per-partition extraction wrappers
+  * truncated samples) throw a `png`/`wav` [[graft.codec.Reject]], and
+  * the per-partition extraction wrappers
   * ([[Multimodal.extractPixelFeatures]] /
   * [[Multimodal.extractPcmFeatures]]) turn that into null features for
   * the row.
@@ -40,8 +43,13 @@ object PixelCodec {
   final case class Pcm(sampleRate: Int, channels: Int, bits: Int,
                        samples: Array[Int])
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(msg)
+  /** Pixel cap: a header may not claim more (the allocation bound
+    * that keeps every raster size, expanded to 4 channels, an Int).
+    */
+  private val maxPixels = 1 << 28
+
+  private val png = Reject.malformed("png")
+  private val wav = Reject.malformed("wav")
 
   /** Samples per pixel for the supported PNG color types (8-bit depth):
     * 0 grayscale, 2 truecolor, 4 gray+alpha, 6 truecolor+alpha.
@@ -51,7 +59,7 @@ object PixelCodec {
     case 2 => 3
     case 4 => 2
     case 6 => 4
-    case other => fail(s"PNG: unsupported color type $other")
+    case other => png(s"unsupported color type $other")
   }
 
   private def colorTypeOf(channels: Int): Int = channels match {
@@ -59,7 +67,7 @@ object PixelCodec {
     case 2 => 4
     case 3 => 2
     case 4 => 6
-    case other => fail(s"PNG: no color type with $other channels")
+    case other => png(s"no color type with $other channels")
   }
 
   private val PngSig =
@@ -101,7 +109,7 @@ object PixelCodec {
     */
   def decodePng(payload: Array[Byte]): Image = {
     if (payload.length < 8 + 25 || !payload.take(8).sameElements(PngSig))
-      fail("PNG: bad signature")
+      png("bad signature")
     def be32(i: Int): Int =
       ((payload(i) & 0xff) << 24) | ((payload(i + 1) & 0xff) << 16) |
         ((payload(i + 2) & 0xff) << 8) | (payload(i + 3) & 0xff)
@@ -114,84 +122,74 @@ object PixelCodec {
     val idat = new java.io.ByteArrayOutputStream()
     var i = 8
     while (!sawIend) {
-      if (i + 8 > payload.length) fail("PNG: truncated chunk header")
+      if (i + 8 > payload.length) png("truncated chunk header")
       val len = be32(i)
-      if (len < 0 || i + 12 + len > payload.length)
-        fail("PNG: truncated chunk")
+      if (len < 0 || i + 12L + len > payload.length)
+        png("truncated chunk")
       val typ = new String(payload, i + 4, 4,
         java.nio.charset.StandardCharsets.US_ASCII)
       val crc = new CRC32()
       crc.update(payload, i + 4, 4 + len)
       if (crc.getValue != (be32(i + 8 + len) & 0xffffffffL))
-        fail(s"PNG: CRC mismatch in $typ")
+        png(s"CRC mismatch in $typ")
       typ match {
         case "IHDR" =>
-          if (sawIhdr || len != 13) fail("PNG: bad IHDR")
+          if (sawIhdr || len != 13) png("bad IHDR")
           width = be32(i + 8); height = be32(i + 12)
           val depth = payload(i + 16) & 0xff
           colorType = payload(i + 17) & 0xff
           val (compression, filterM, interlace) =
             (payload(i + 18) & 0xff, payload(i + 19) & 0xff,
               payload(i + 20) & 0xff)
-          if (width <= 0 || height <= 0) fail("PNG: bad dimensions")
-          if (depth != 8) fail(s"PNG: unsupported bit depth $depth")
+          if (width <= 0 || height <= 0) png("bad dimensions")
+          if (width.toLong * height > maxPixels)
+            png(s"${width}x$height is past the $maxPixels-pixel cap")
+          if (depth != 8) png(s"unsupported bit depth $depth")
           // palette rasters carry one index byte per pixel; expansion to
           // RGB(A) happens after unfiltering
           channels = if (colorType == 3) 1 else channelsOf(colorType)
-          if (compression != 0 || filterM != 0) fail("PNG: bad methods")
+          if (compression != 0 || filterM != 0) png("bad methods")
           if (interlace != 0 && interlace != 1)
-            fail(s"PNG: bad interlace method $interlace")
+            png(s"bad interlace method $interlace")
           interlaced = interlace == 1
           sawIhdr = true
         case "PLTE" =>
-          if (!sawIhdr) fail("PNG: PLTE before IHDR")
-          if (palette != null) fail("PNG: duplicate PLTE")
-          if (idat.size > 0) fail("PNG: PLTE after IDAT")
-          if (len == 0 || len % 3 != 0 || len > 768) fail("PNG: bad PLTE")
+          if (!sawIhdr) png("PLTE before IHDR")
+          if (palette != null) png("duplicate PLTE")
+          if (idat.size > 0) png("PLTE after IDAT")
+          if (len == 0 || len % 3 != 0 || len > 768) png("bad PLTE")
           palette = java.util.Arrays.copyOfRange(payload, i + 8, i + 8 + len)
         case "tRNS" =>
           if (colorType != 3)
-            fail(s"PNG: tRNS unsupported for color type $colorType")
-          if (palette == null) fail("PNG: tRNS before PLTE")
-          if (len > palette.length / 3) fail("PNG: tRNS longer than palette")
+            png(s"tRNS unsupported for color type $colorType")
+          if (palette == null) png("tRNS before PLTE")
+          if (len > palette.length / 3) png("tRNS longer than palette")
           trns = java.util.Arrays.copyOfRange(payload, i + 8, i + 8 + len)
         case "IDAT" =>
-          if (!sawIhdr) fail("PNG: IDAT before IHDR")
+          if (!sawIhdr) png("IDAT before IHDR")
           idat.write(payload, i + 8, len)
         case "IEND" =>
-          if (len != 0) fail("PNG: IEND with data")
+          if (len != 0) png("IEND with data")
           sawIend = true
         case _ => () // ancillary chunks are legal and skipped
       }
       i += 12 + len
     }
-    if (!sawIhdr) fail("PNG: no IHDR")
-    if (idat.size == 0) fail("PNG: no IDAT")
+    if (!sawIhdr) png("no IHDR")
+    if (idat.size == 0) png("no IDAT")
 
     val stride = width * channels
-    val raw = new Array[Byte](
+    val rasterBytes =
       if (interlaced)
         adam7Passes(width, height).map { case (_, _, _, _, pw, ph) =>
           if (pw > 0 && ph > 0) ph * (1 + pw * channels) else 0
         }.sum
-      else height * (1 + stride))
-    val inflater = new Inflater()
-    inflater.setInput(idat.toByteArray)
-    var off = 0
-    try {
-      while (off < raw.length && !inflater.finished()) {
-        val n = inflater.inflate(raw, off, raw.length - off)
-        if (n == 0 && inflater.needsInput()) fail("PNG: short pixel data")
-        off += n
-      }
-      // a compliant stream ends exactly at the raster boundary
-      if (off < raw.length) fail("PNG: short pixel data")
-      if (!inflater.finished() && inflater.inflate(new Array[Byte](1)) > 0)
-        fail("PNG: excess pixel data")
-    } catch {
-      case e: java.util.zip.DataFormatException =>
-        fail(s"PNG: corrupt deflate stream: ${e.getMessage}")
-    } finally inflater.end()
+      else height * (1 + stride)
+    // a compliant stream ends exactly at the raster boundary; one that
+    // stops right after a full raster (no final block) is accepted
+    val raw = Inflate("png", idat.toByteArray, 0, idat.size, zlib = true,
+      rasterBytes, "excess pixel data").bytes
+    if (raw.length < rasterBytes) png("short pixel data")
 
     // Adam7: the stream is 7 independently-filtered sub-images; unfilter
     // each pass against ITS OWN scanlines (prediction never crosses a
@@ -227,14 +225,14 @@ object PixelCodec {
     if (colorType != 3) return Image(width, height, channels, raster)
 
     // palette expansion: index -> PLTE triple (+ tRNS alpha when present)
-    if (palette == null) fail("PNG: palette image without PLTE")
+    if (palette == null) png("palette image without PLTE")
     val nEntries = palette.length / 3
     val outCh = if (trns != null) 4 else 3
     val out = new Array[Byte](width * height * outCh)
     var p = 0
     while (p < width * height) {
       val idx = raster(p) & 0xff
-      if (idx >= nEntries) fail("PNG: palette index out of range")
+      if (idx >= nEntries) png("palette index out of range")
       out(p * outCh) = palette(idx * 3)
       out(p * outCh + 1) = palette(idx * 3 + 1)
       out(p * outCh + 2) = palette(idx * 3 + 2)
@@ -271,7 +269,7 @@ object PixelCodec {
           case 2 => b
           case 3 => (a + b) / 2
           case 4 => paeth(a, b, c)
-          case other => fail(s"PNG: bad filter type $other")
+          case other => png(s"bad filter type $other")
         }
         out(rowOut + x) = ((raw(rowIn + x) & 0xff) + pred).toByte
         x += 1
@@ -493,7 +491,7 @@ object PixelCodec {
       new String(payload, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
     if (payload.length < 12 || cc(0) != "RIFF" || cc(8) != "WAVE")
-      fail("WAV: bad RIFF/WAVE header")
+      wav("bad RIFF/WAVE header")
     var i = 12L
     var fmt: Option[(Int, Int, Int, Int)] = None // format, ch, rate, bits
     var dataAt = -1L; var dataSize = -1L
@@ -502,26 +500,26 @@ object PixelCodec {
       val id = cc(at)
       val sz = le32(at + 4)
       if (id == "fmt ") {
-        if (sz < 16 || i + 8 + 16 > payload.length) fail("WAV: short fmt")
+        if (sz < 16 || i + 8 + 16 > payload.length) wav("short fmt")
         fmt = Some((le16(at + 8), le16(at + 10), le32(at + 12).toInt,
           le16(at + 22)))
       } else if (id == "data") { dataAt = i + 8; dataSize = sz }
       i += 8L + sz + (sz & 1L)
     }
-    val (format, ch, rate, bits) = fmt.getOrElse(fail("WAV: no fmt chunk"))
+    val (format, ch, rate, bits) = fmt.getOrElse(wav("no fmt chunk"))
     // format 1 = integer PCM; format 7 = G.711 mu-law; format 6 =
     // G.711 A-law (both 8-bit companded storage, decoded here to
     // linear-range samples)
     if (format != 1 && format != 6 && format != 7)
-      fail(s"WAV: unsupported non-PCM format $format")
+      wav(s"unsupported non-PCM format $format")
     if ((format == 6 || format == 7) && bits != 8)
-      fail(s"WAV: G.711 requires 8-bit storage, got $bits")
-    if (bits != 8 && bits != 16) fail(s"WAV: unsupported bit depth $bits")
-    if (ch <= 0 || rate <= 0) fail("WAV: bad fmt values")
-    if (dataAt < 0) fail("WAV: no data chunk")
-    if (dataAt + dataSize > payload.length) fail("WAV: truncated samples")
+      wav(s"G.711 requires 8-bit storage, got $bits")
+    if (bits != 8 && bits != 16) wav(s"unsupported bit depth $bits")
+    if (ch <= 0 || rate <= 0) wav("bad fmt values")
+    if (dataAt < 0) wav("no data chunk")
+    if (dataAt + dataSize > payload.length) wav("truncated samples")
     val bytesPer = bits / 8
-    if (dataSize % (bytesPer * ch) != 0) fail("WAV: ragged data chunk")
+    if (dataSize % (bytesPer * ch) != 0) wav("ragged data chunk")
     val n = (dataSize / bytesPer).toInt
     val samples = new Array[Int](n)
     var s = 0

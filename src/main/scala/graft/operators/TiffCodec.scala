@@ -1,13 +1,15 @@
 package graft.operators
 
+import graft.codec.{Inflate, Reject}
+
 /** TIFF 6.0 raster decode — the container scanned documents actually
   * arrive in: fax archives, library digitizations and OCR pipelines
   * feed multi-strip TIFFs, and a multimodal crawl corpus that nulls
   * them loses the entire scanned-paper population (the same dark-data
   * argument that brought PDFs into round 13). Bounded to the
   * offline-verifiable core of the spec; everything else is a NAMED
-  * rejection ([[TiffReject]]), the codec family's honest-rejection
-  * contract ([[PdfCodec]] discipline).
+  * rejection ([[graft.codec.Reject]], codec `tiff`), the codec
+  * family's honest-rejection contract ([[PdfCodec]] discipline).
   *
   * Reference analog: raw schemaless documents in front of the map
   * function (`/root/reference/Projector/indexjs.go:73-191`)
@@ -42,11 +44,7 @@ package graft.operators
   */
 object TiffCodec {
 
-  final class TiffReject(val kind: String, detail: String)
-      extends IllegalArgumentException(s"tiff: $kind: $detail")
-
-  private def reject(kind: String, detail: String): Nothing =
-    throw new TiffReject(kind, detail)
+  private val reject = Reject.in("tiff")
 
   /** Dimension/allocation caps: a 100 TB ingest must shed hostile
     * headers without allocating for them first.
@@ -130,7 +128,9 @@ object TiffCodec {
       i += 1
     }
     def tag1(t: Int, default: Long = -1L): Long = tags.get(t) match {
-      case Some(e) => values(r, e)(0)
+      case Some(e) =>
+        values(r, e).headOption.getOrElse(
+          reject("malformed", s"tag $t has no values"))
       case None if default >= 0 => default
       case None => reject("malformed", s"required tag $t missing")
     }
@@ -153,6 +153,7 @@ object TiffCodec {
     val spp = tag1(277, default = 1).toInt
     val bpsArr = tags.get(258).map(e => values(r, e))
       .getOrElse(Array(1L))
+    if (bpsArr.isEmpty) reject("malformed", "tag 258 has no values")
     if (bpsArr.exists(_ != bpsArr(0)))
       reject("bps", "heterogeneous BitsPerSample")
     val bps = bpsArr(0).toInt
@@ -212,7 +213,11 @@ object TiffCodec {
             case e: IllegalArgumentException =>
               reject("malformed", s"LZW strip: ${e.getMessage}")
           }
-        case 8 | 32946 => inflateZlib(raw, rowBytes * rows)
+        case 8 | 32946 =>
+          val z = Inflate("tiff", raw, 0, raw.length, zlib = true,
+            maxPixels, "deflate strip inflates past the cap")
+          if (!z.ended) reject("malformed", "deflate strip truncated")
+          z.bytes
         case 32773 => packBits(raw)
       }
       if (data.length != rowBytes * rows)
@@ -271,30 +276,6 @@ object TiffCodec {
         }
         PixelCodec.Image(w, h, 3, px)
     }
-  }
-
-  private def inflateZlib(raw: Array[Byte], expect: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(false)
-    try {
-      inf.setInput(raw)
-      val out = new java.io.ByteArrayOutputStream(expect)
-      val buf = new Array[Byte](64 * 1024)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch {
-            case e: java.util.zip.DataFormatException =>
-              reject("malformed", s"deflate strip: ${e.getMessage}")
-          }
-        if (n > 0) {
-          if (out.size() + n > maxPixels)
-            reject("malformed", "strip inflates past the cap")
-          out.write(buf, 0, n)
-        } else if (!inf.finished() && inf.needsInput())
-          reject("malformed", "deflate strip truncated")
-      }
-      out.toByteArray
-    } finally inf.end()
   }
 
   /** PackBits (TIFF 6.0 §9): n in 0..127 copies n+1 literals, n in

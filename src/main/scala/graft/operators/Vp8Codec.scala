@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.Reject
+
 /** VP8 intra-frame (key-frame) decoder — the LOSSY half of WebP
   * (RFC 6386), until now the image tier's dominant labeled dark data:
   * most real-world WebP is lossy VP8 and [[WebpCodec]] decoded only
@@ -27,8 +29,9 @@ package graft.operators
   * wrong probability, context or rounding desynchronizes the
   * arithmetic decoder and no plane survives.
   *
-  * Named rejections ([[Vp8Reject]]): `interframe` (a non-key frame
-  * needs reference frames and cannot occur in still WebP),
+  * Named rejections ([[graft.codec.Reject]], codec `vp8`):
+  * `interframe` (a non-key frame needs reference frames and cannot
+  * occur in still WebP),
   * `colorspace` (the reserved color-space bit), `malformed`.
   *
   * Output is the YUV 4:2:0 recipe itself, cropped to the frame size —
@@ -41,11 +44,7 @@ package graft.operators
   */
 object Vp8Codec {
 
-  final class Vp8Reject(val kind: String, detail: String)
-      extends IllegalArgumentException(s"vp8: $kind: $detail")
-
-  private def reject(kind: String, detail: String): Nothing =
-    throw new Vp8Reject(kind, detail)
+  private val reject = Reject.in("vp8")
 
   /** Decoded frame: cropped planes, row-major; u/v are
     * ceil(w/2) × ceil(h/2).

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.{LsbBits, PrefixCode, Reject}
+
 /** WebP lossless (VP8L) decode — the remaining major image container of
   * a modern crawl after PNG/JPEG/GIF ([[PixelCodec]], [[JpegCodec]],
   * [[GifCodec]]). Implemented from the public WebP Lossless Bitstream
@@ -15,9 +17,11 @@ package graft.operators
   * by documented policy, [[decodeLossyYuv]] exposes the exact
   * planes).
   *
-  * HONEST-REJECTION boundaries (each throws with a named reason, so
-  * the null rows are auditable, and each is a deliberate subset
-  * decision, not an oversight):
+  * HONEST-REJECTION boundaries (each throws a [[graft.codec.Reject]]
+  * of kind `unsupported`, codec `vp8l`, so the null rows are
+  * auditable, and each is a deliberate subset decision, not an
+  * oversight; a broken container is `webp`/`malformed`, a broken
+  * bitstream `vp8l`/`malformed`):
   *  - the predictor / cross-color / color-indexing transforms and the
   *    meta-prefix (entropy image) feature: each embeds a second
   *    entropy-coded image;
@@ -43,32 +47,12 @@ object WebpCodec {
   final case class Image(width: Int, height: Int, channels: Int,
                          pixels: Array[Byte])
 
+  private val fail = Reject.malformed("webp")
+  private val vp8l = Reject.malformed("vp8l")
+  private val unsupported: String => Nothing =
+    Reject.in("vp8l")("unsupported", _)
+
   // ------------------------------------------------------------ bits
-
-  private final class BitReader(data: Array[Byte], var pos: Int,
-      limit: Int) {
-    private var bitPos = 0
-
-    def readBit(): Int = {
-      // bounded by the CHUNK end, not the payload end: a truncated or
-      // corrupt VP8L bitstream must throw, never silently read the
-      // bytes of a following EXIF/XMP chunk as entropy data
-      if (pos >= limit)
-        throw new IllegalArgumentException("vp8l: bitstream truncated")
-      val b = (data(pos) >> bitPos) & 1
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; pos += 1 }
-      b
-    }
-
-    /** LSB-first n-bit read (spec: values are assembled low bit first). */
-    def readBits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
-  }
 
   private final class BitWriter {
     private val out = new java.io.ByteArrayOutputStream()
@@ -102,72 +86,8 @@ object WebpCodec {
 
   // ------------------------------------------- canonical prefix codes
 
-  /** Canonical decode over code LENGTHS (deflate-style assignment:
-    * codes ordered by (length, symbol), read MSB-accumulating): the
-    * standard first-code/offset walk, one bit per step. A
-    * single-nonzero-length tree is the spec's trivial code — zero bits
-    * per symbol.
-    */
-  private final class PrefixCode(lengths: Array[Int]) {
-    private val maxLen = 15
-    private val countOf = new Array[Int](maxLen + 1)
-    private var trivial = -1
-    private val sorted: Array[Int] = {
-      var nz = 0
-      var only = -1
-      var i = 0
-      while (i < lengths.length) {
-        val l = lengths(i)
-        if (l < 0 || l > maxLen)
-          throw new IllegalArgumentException(s"vp8l: code length $l")
-        if (l > 0) { nz += 1; only = i; countOf(l) += 1 }
-        i += 1
-      }
-      if (nz == 0) throw new IllegalArgumentException("vp8l: empty code")
-      if (nz == 1) { trivial = only; new Array[Int](0) }
-      else {
-        // Kraft must be exactly 1 — an over/under-subscribed code is a
-        // corrupt stream, not a decodable one
-        var kraft = 0L
-        var l = 1
-        while (l <= maxLen) { kraft += countOf(l).toLong << (maxLen - l); l += 1 }
-        if (kraft != (1L << maxLen))
-          throw new IllegalArgumentException("vp8l: invalid prefix code")
-        val arr = new Array[Int](nz)
-        var k = 0
-        l = 1
-        while (l <= maxLen) {
-          i = 0
-          while (i < lengths.length) {
-            if (lengths(i) == l) { arr(k) = i; k += 1 }
-            i += 1
-          }
-          l += 1
-        }
-        arr
-      }
-    }
-
-    def read(br: BitReader): Int = {
-      if (trivial >= 0) return trivial
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= maxLen) {
-        code = (code << 1) | br.readBit()
-        val cnt = countOf(len)
-        if (code - first < cnt) return sorted(index + (code - first))
-        index += cnt
-        first = (first + cnt) << 1
-        len += 1
-      }
-      throw new IllegalArgumentException("vp8l: bad prefix code bits")
-    }
-  }
-
-  /** Canonical code assignment (encoder side of [[PrefixCode]]):
-    * (code, len) per symbol.
+  /** Canonical code assignment (encoder side of
+    * [[graft.codec.PrefixCode]]): (code, len) per symbol.
     */
   private def canonicalCodes(lengths: Array[Int]): Array[(Int, Int)] = {
     val maxLen = lengths.foldLeft(0)(math.max)
@@ -196,7 +116,7 @@ object WebpCodec {
   /** Read one prefix code (simple or normal form) over `alphabetSize`
     * symbols.
     */
-  private def readPrefixCode(br: BitReader, alphabetSize: Int): PrefixCode = {
+  private def readPrefixCode(br: LsbBits, alphabetSize: Int): PrefixCode = {
     val lengths = new Array[Int](alphabetSize)
     if (br.readBit() == 1) {
       // simple: 1 or 2 symbols
@@ -204,26 +124,26 @@ object WebpCodec {
       val firstLen8 = br.readBit() == 1
       val s0 = br.readBits(if (firstLen8) 8 else 1)
       if (s0 >= alphabetSize)
-        throw new IllegalArgumentException("vp8l: simple symbol out of range")
+        vp8l("simple symbol out of range")
       if (numSymbols == 1) lengths(s0) = 1 // trivial — 0 bits on read
       else {
         val s1 = br.readBits(8)
         if (s1 >= alphabetSize || s1 == s0)
-          throw new IllegalArgumentException("vp8l: simple symbols invalid")
+          vp8l("simple symbols invalid")
         lengths(s0) = 1; lengths(s1) = 1
       }
     } else {
       // normal: code-length code, then RLE-coded symbol lengths
       val numCodeLengths = 4 + br.readBits(4)
       if (numCodeLengths > CodeLengthOrder.length)
-        throw new IllegalArgumentException("vp8l: bad num_code_lengths")
+        vp8l("bad num_code_lengths")
       val clLengths = new Array[Int](19)
       var i = 0
       while (i < numCodeLengths) {
         clLengths(CodeLengthOrder(i)) = br.readBits(3)
         i += 1
       }
-      val clCode = new PrefixCode(clLengths)
+      val clCode = new PrefixCode("vp8l", clLengths)
       var maxSymbol =
         if (br.readBit() == 1) {
           val lenNBits = 2 + 2 * br.readBits(3)
@@ -243,12 +163,12 @@ object WebpCodec {
             case 16 => (3 + br.readBits(2), prevLen)
             case 17 => (3 + br.readBits(3), 0)
             case 18 => (11 + br.readBits(7), 0)
-            case _ => throw new IllegalArgumentException("vp8l: bad cl")
+            case _ => vp8l("bad cl")
           }
           var r = 0
           while (r < repeat) {
             if (symbol >= alphabetSize)
-              throw new IllegalArgumentException("vp8l: repeat overflow")
+              vp8l("repeat overflow")
             lengths(symbol) = value
             symbol += 1
             r += 1
@@ -256,13 +176,13 @@ object WebpCodec {
         }
       }
     }
-    new PrefixCode(lengths)
+    new PrefixCode("vp8l", lengths)
   }
 
   /** The length/distance prefix coding (spec §4.2.2): symbols 0..3 are
     * the values 1..4; beyond that each symbol spans `2^extra` values.
     */
-  private def readPrefixedValue(br: BitReader, code: Int): Int =
+  private def readPrefixedValue(br: LsbBits, code: Int): Int =
     if (code < 4) code + 1
     else {
       val extra = (code - 2) >> 1
@@ -291,13 +211,13 @@ object WebpCodec {
 
   private def fourcc(data: Array[Byte], at: Int): String = {
     if (at + 4 > data.length)
-      throw new IllegalArgumentException("webp: truncated fourcc")
+      fail("truncated fourcc")
     new String(data, at, 4, "US-ASCII")
   }
 
   private def le32(data: Array[Byte], at: Int): Int = {
     if (at + 4 > data.length)
-      throw new IllegalArgumentException("webp: truncated size")
+      fail("truncated size")
     (data(at) & 0xff) | ((data(at + 1) & 0xff) << 8) |
       ((data(at + 2) & 0xff) << 16) | ((data(at + 3) & 0xff) << 24)
   }
@@ -314,7 +234,7 @@ object WebpCodec {
   def decodeWebp(payload: Array[Byte]): Image = {
     if (payload.length < 12 || fourcc(payload, 0) != "RIFF" ||
         fourcc(payload, 8) != "WEBP")
-      throw new IllegalArgumentException("webp: not a RIFF/WEBP container")
+      fail("not a RIFF/WEBP container")
     var at = 12
     while (at + 8 <= payload.length) {
       val cc = fourcc(payload, at)
@@ -322,14 +242,14 @@ object WebpCodec {
       // long arithmetic: a huge declared size must hit the overrun
       // rejection, not wrap negative past it
       if (size < 0 || at.toLong + 8 + size > payload.length)
-        throw new IllegalArgumentException("webp: chunk overruns container")
+        fail("chunk overruns container")
       if (cc == "VP8L")
         return decodeVp8l(payload, at + 8, size)
       if (cc == "VP8 ")
         return yuvToRgb(Vp8Codec.decode(payload, at + 8, at + 8 + size))
       at += 8 + size + (size & 1) // chunks are even-padded
     }
-    throw new IllegalArgumentException("webp: no VP8L or VP8 chunk")
+    fail("no VP8L or VP8 chunk")
   }
 
   /** Walk the RIFF container to the `VP8 ` chunk and decode the YUV
@@ -339,18 +259,18 @@ object WebpCodec {
   def decodeLossyYuv(payload: Array[Byte]): Vp8Codec.Yuv = {
     if (payload.length < 12 || fourcc(payload, 0) != "RIFF" ||
         fourcc(payload, 8) != "WEBP")
-      throw new IllegalArgumentException("webp: not a RIFF/WEBP container")
+      fail("not a RIFF/WEBP container")
     var at = 12
     while (at + 8 <= payload.length) {
       val cc = fourcc(payload, at)
       val size = le32(payload, at + 4)
       if (size < 0 || at.toLong + 8 + size > payload.length)
-        throw new IllegalArgumentException("webp: chunk overruns container")
+        fail("chunk overruns container")
       if (cc == "VP8 ")
         return Vp8Codec.decode(payload, at + 8, at + 8 + size)
       at += 8 + size + (size & 1)
     }
-    throw new IllegalArgumentException("webp: no VP8 chunk")
+    fail("no VP8 chunk")
   }
 
   /** The YUV 4:2:0 → RGB policy for [[Image]] consumers: BT.601
@@ -389,23 +309,23 @@ object WebpCodec {
   def sniffDims(payload: Array[Byte]): Option[(Int, Int)] =
     scala.util.Try {
       if (fourcc(payload, 0) != "RIFF" || fourcc(payload, 8) != "WEBP")
-        throw new IllegalArgumentException("not webp")
+        fail("not webp")
       var at = 12
       var dims: Option[(Int, Int)] = None
       while (dims.isEmpty && at + 8 <= payload.length) {
         val cc = fourcc(payload, at)
         val size = le32(payload, at + 4)
         if (size < 0 || at.toLong + 8 + size > payload.length)
-          throw new IllegalArgumentException("truncated")
+          fail("truncated")
         if (cc == "VP8L") {
-          if (size < 5) throw new IllegalArgumentException("short vp8l")
-          val br = new BitReader(payload, at + 8, at + 8 + size)
+          if (size < 5) fail("short vp8l")
+          val br = new LsbBits(payload, at + 8, at + 8 + size, "vp8l")
           if (br.readBits(8) != 0x2f)
-            throw new IllegalArgumentException("bad vp8l signature")
+            fail("bad vp8l signature")
           dims = Some((br.readBits(14) + 1, br.readBits(14) + 1))
         } else at += 8 + size + (size & 1)
       }
-      dims.getOrElse(throw new IllegalArgumentException("no VP8L"))
+      dims.getOrElse(fail("no VP8L"))
     }.toOption
 
   // ------------------------------------------------------------ VP8L
@@ -413,15 +333,15 @@ object WebpCodec {
   private val HashMul = 0x1e35a7bd
 
   private def decodeVp8l(data: Array[Byte], off: Int, len: Int): Image = {
-    if (len < 5) throw new IllegalArgumentException("vp8l: short chunk")
-    val br = new BitReader(data, off, off + len)
+    if (len < 5) vp8l("short chunk")
+    val br = new LsbBits(data, off, off + len, "vp8l")
     if (br.readBits(8) != 0x2f)
-      throw new IllegalArgumentException("vp8l: bad signature byte")
+      vp8l("bad signature byte")
     val width = br.readBits(14) + 1
     val height = br.readBits(14) + 1
     br.readBit() // alpha-is-used hint
     if (br.readBits(3) != 0)
-      throw new IllegalArgumentException("vp8l: unknown version")
+      vp8l("unknown version")
 
     // transforms (applied in reverse order after decode)
     var subtractGreen = false
@@ -429,12 +349,9 @@ object WebpCodec {
     while (more) {
       br.readBits(2) match {
         case 2 => subtractGreen = true
-        case 0 => throw new IllegalArgumentException(
-          "vp8l: predictor transform unsupported (embedded entropy image)")
-        case 1 => throw new IllegalArgumentException(
-          "vp8l: cross-color transform unsupported (embedded entropy image)")
-        case _ => throw new IllegalArgumentException(
-          "vp8l: color-indexing transform unsupported")
+        case 0 => unsupported("predictor transform (embedded entropy image)")
+        case 1 => unsupported("cross-color transform (embedded entropy image)")
+        case _ => unsupported("color-indexing transform")
       }
       more = br.readBit() == 1
     }
@@ -444,7 +361,7 @@ object WebpCodec {
       if (br.readBit() == 1) {
         val b = br.readBits(4)
         if (b < 1 || b > 11)
-          throw new IllegalArgumentException("vp8l: cache bits out of range")
+          vp8l("cache bits out of range")
         b
       } else 0
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
@@ -452,7 +369,7 @@ object WebpCodec {
 
     // meta prefix codes would interleave a second entropy-coded image
     if (br.readBit() == 1)
-      throw new IllegalArgumentException("vp8l: meta prefix codes unsupported")
+      unsupported("meta prefix codes")
 
     val greenCode = readPrefixCode(br, 256 + 24 + cacheSize)
     val redCode = readPrefixCode(br, 256)
@@ -477,14 +394,13 @@ object WebpCodec {
         val length = readPrefixedValue(br, g - 256)
         val planeCode = readPrefixedValue(br, distCode.read(br))
         if (planeCode <= 120)
-          throw new IllegalArgumentException(
-            "vp8l: close-neighborhood distance code (120-entry plane " +
-              "table unverifiable offline; refusing a guessed decode)")
+          unsupported("close-neighborhood distance code (120-entry " +
+            "plane table unverifiable offline; refusing a guessed decode)")
         val dist = planeCode - 120
         if (dist > p)
-          throw new IllegalArgumentException("vp8l: backref before start")
+          vp8l("backref before start")
         if (p + length > nPix)
-          throw new IllegalArgumentException("vp8l: backref overruns image")
+          vp8l("backref overruns image")
         var i = 0
         while (i < length) {
           val px = argb(p - dist)
@@ -496,7 +412,7 @@ object WebpCodec {
       } else {
         val idx = g - 280
         if (cache == null || idx >= cacheSize)
-          throw new IllegalArgumentException("vp8l: cache index without cache")
+          vp8l("cache index without cache")
         val px = cache(idx)
         argb(p) = px
         p += 1

@@ -20,6 +20,13 @@ package graft.plans
   * thread (no thread for the common case's biggest leg); the first
   * failure propagates after all legs finish, so no leg is ever left
   * running against a torn-down fixture.
+  *
+  * A leg overlapped with a stream under
+  * [[graft.streaming.StreamScale.runDrained]] must not depend on the
+  * partition count: `runDrained` holds the session-global
+  * `spark.sql.shuffle.partitions` for the stream's lifetime, so the
+  * other legs plan under whichever value a thread race lets them see
+  * (no `spark_partition_id`, no coalesce-based sampling).
   */
 object Overlap {
 

@@ -54,8 +54,9 @@ object ScaleOut {
   }
 
   /** True when `df` is a leaf scan under narrow per-row operators only
-    * (project/filter/alias/local limits) — the shapes whose RDD
-    * construction cannot trigger stage execution.
+    * (project/filter/alias) — the shapes whose RDD construction cannot
+    * trigger stage execution. Limits are not admitted: a `GlobalLimit`
+    * plans an exchange.
     */
   private def scanRooted(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._

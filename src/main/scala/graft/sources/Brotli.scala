@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.codec.{LsbBits, PrefixCode, Reject}
+
 /** Brotli (RFC 7932) decoder — the third HTTP content coding a real
   * crawl's response population carries in volume (after gzip and
   * deflate): a large share of modern responses are `br`-coded, and
@@ -36,132 +38,14 @@ package graft.sources
   *
   * Scale shape: one call decodes one HTTP body inside the per-record
   * scan task ([[WarcCodec]]) — map-only, bounded by `maxOut`, no
-  * shared state. Prefix symbols decode bit-by-bit (max 15 steps);
+  * shared state. Bits and prefix codes are [[graft.codec]]'s (shared
+  * with WebP lossless); symbols decode bit-by-bit (max 15 steps);
   * honest MB/s-scale throughput, which at 100 TB sits inside the
   * same per-record budget as the gzip member walk.
   */
 object Brotli {
 
-  final class BrotliReject(val kind: String, detail: String)
-      extends IllegalArgumentException(s"brotli: $kind: $detail")
-
-  private def reject(kind: String, detail: String): Nothing =
-    throw new BrotliReject(kind, detail)
-
-  // ----------------------------------------------------------- bit I/O
-
-  private final class BitReader(buf: Array[Byte]) {
-    private var bitPos = 0L
-    private val bitEnd = buf.length.toLong * 8
-
-    def readBit(): Int = {
-      if (bitPos >= bitEnd) reject("malformed", "truncated stream")
-      val b = (buf((bitPos >> 3).toInt) >> (bitPos & 7).toInt) & 1
-      bitPos += 1
-      b
-    }
-
-    def readBits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
-
-    /** Advance to the next byte boundary; `mustBeZero` asserts the
-      * skipped bits are 0 (metadata headers and the stream end — the
-      * RFC's check; uncompressed-block alignment skips are free-form).
-      */
-    def alignByte(mustBeZero: Boolean): Unit = {
-      while ((bitPos & 7) != 0) {
-        val b = readBit()
-        if (mustBeZero && b != 0)
-          reject("malformed", "nonzero padding bits")
-      }
-    }
-
-    def readByteAligned(): Int = {
-      if ((bitPos & 7) != 0) reject("malformed", "unaligned byte read")
-      if (bitPos >= bitEnd) reject("malformed", "truncated stream")
-      val v = buf((bitPos >> 3).toInt) & 0xFF
-      bitPos += 8
-      v
-    }
-
-    def skipBytes(n: Long): Unit = {
-      if ((bitPos & 7) != 0) reject("malformed", "unaligned byte skip")
-      if (bitPos + n * 8 > bitEnd) reject("malformed", "skip past EOF")
-      bitPos += n * 8
-    }
-
-    def atEnd: Boolean = bitPos >= bitEnd
-  }
-
-  // ------------------------------------------------------ prefix codes
-
-  /** A canonical prefix code (RFC 1951 code assignment, as §3.2
-    * specifies): decode walks the code one stream bit at a time —
-    * max 15 steps — against per-length (first code, count, offset)
-    * tables. A code with a single used symbol reads ZERO bits.
-    */
-  private final class Prefix(lengths: Array[Int]) {
-    private val MaxLen = 15
-    val single: Int = {
-      var s = -1; var n = 0; var i = 0
-      while (i < lengths.length) {
-        if (lengths(i) > 0) { n += 1; s = i }
-        i += 1
-      }
-      if (n == 1) s else -1
-    }
-    private val count = new Array[Int](MaxLen + 1)
-    private val firstCode = new Array[Int](MaxLen + 1)
-    private val offset = new Array[Int](MaxLen + 1)
-    private val sorted: Array[Int] = {
-      var i = 0
-      while (i < lengths.length) {
-        val l = lengths(i)
-        if (l > MaxLen) reject("malformed", s"code length $l")
-        if (l > 0) count(l) += 1
-        i += 1
-      }
-      // RFC 1951 canonical assignment: firstCode(l) advances by the
-      // PREVIOUS length's count only — the current length's codes are
-      // folded in at the next iteration's (code + count(l-1)) << 1
-      var code = 0
-      var total = 0
-      var l = 1
-      while (l <= MaxLen) {
-        code = (code + count(l - 1)) << 1
-        firstCode(l) = code
-        offset(l) = total
-        total += count(l)
-        l += 1
-      }
-      val out = new Array[Int](total)
-      val fill = offset.clone()
-      i = 0
-      while (i < lengths.length) {
-        if (lengths(i) > 0) { out(fill(lengths(i))) = i; fill(lengths(i)) += 1 }
-        i += 1
-      }
-      out
-    }
-
-    def read(br: BitReader): Int = {
-      if (single >= 0) return single
-      var code = 0
-      var len = 0
-      while (len < MaxLen) {
-        code = (code << 1) | br.readBit()
-        len += 1
-        if (count(len) > 0 && code >= firstCode(len) &&
-            code - firstCode(len) < count(len))
-          return sorted(offset(len) + code - firstCode(len))
-      }
-      reject("malformed", "prefix code over 15 bits")
-    }
-  }
+  private val reject = Reject.in("brotli")
 
   // the fixed 4-bit-peek code for the code-length code's own lengths
   // (RFC 7932 §3.5's table, in the standard peek form)
@@ -177,7 +61,7 @@ object Brotli {
     * complex (code-length code, then symbol lengths with the 16/17
     * repeat codes and their compounding run lengths).
     */
-  private def readPrefixCode(br: BitReader, alphabetSize: Int): Prefix = {
+  private def readPrefixCode(br: LsbBits, alphabetSize: Int): PrefixCode = {
     val hskip = br.readBits(2)
     if (hskip == 1) {
       // simple code
@@ -200,7 +84,7 @@ object Brotli {
       }
       val lengths = new Array[Int](alphabetSize)
       nsym match {
-        case 1 => lengths(syms(0)) = 1 // single → zero-bit via `single`
+        case 1 => lengths(syms(0)) = 1 // one symbol: reads zero bits
         case 2 =>
           lengths(syms(0)) = 1; lengths(syms(1)) = 1
         case 3 =>
@@ -213,11 +97,7 @@ object Brotli {
             lengths(syms(2)) = 3; lengths(syms(3)) = 3
           }
       }
-      if (nsym == 1) {
-        val l = new Array[Int](alphabetSize); l(syms(0)) = 1
-        return new Prefix(l) // reads zero bits
-      }
-      new Prefix(lengths)
+      new PrefixCode("brotli", lengths)
     } else {
       // complex code: lengths of the code-length code first
       val clLengths = new Array[Int](18)
@@ -242,7 +122,7 @@ object Brotli {
       if (numCodes == 0) reject("malformed", "empty code-length code")
       if (space != 0 && numCodes != 1)
         reject("malformed", "code-length code under-subscribed")
-      val clCode = new Prefix(clLengths)
+      val clCode = new PrefixCode("brotli", clLengths)
       // symbol lengths with 16/17 repeats (compounding runs)
       val lengths = new Array[Int](alphabetSize)
       var symSpace = 32768
@@ -278,14 +158,14 @@ object Brotli {
         while (k < alphabetSize) { if (lengths(k) > 0) nz += 1; k += 1 }
         if (nz != 1) reject("malformed", "prefix code under-subscribed")
       }
-      new Prefix(lengths)
+      new PrefixCode("brotli", lengths)
     }
   }
 
   // --------------------------------------------------- fixed tables
 
   // §9.3's variable-length count (NBLTYPES / NTREES): 1..256
-  private def readVarLenUint(br: BitReader): Int =
+  private def readVarLenUint(br: LsbBits): Int =
     if (br.readBits(1) == 0) 1
     else {
       val k = br.readBits(3)
@@ -350,7 +230,7 @@ object Brotli {
   }
 
   // §7.3: context map (RLE zeros + optional inverse move-to-front)
-  private def readContextMap(br: BitReader, nTrees: Int,
+  private def readContextMap(br: LsbBits, nTrees: Int,
                              size: Int): Array[Int] = {
     val map = new Array[Int](size)
     if (nTrees < 2) return map
@@ -390,12 +270,12 @@ object Brotli {
 
   /** Per-category block-switching state (§6). */
   private final class BlockState(val nTypes: Int,
-                                 typeCode: Prefix, countCode: Prefix,
+                                 typeCode: PrefixCode, countCode: PrefixCode,
                                  var blockLen: Long) {
     var curType = 0
     private var prevType = 1
 
-    def switchType(br: BitReader): Unit = {
+    def switchType(br: LsbBits): Unit = {
       val sym = typeCode.read(br)
       val nt =
         if (sym == 0) prevType
@@ -407,12 +287,12 @@ object Brotli {
     }
   }
 
-  private def readBlockLength(code: Prefix, br: BitReader): Long = {
+  private def readBlockLength(code: PrefixCode, br: LsbBits): Long = {
     val sym = code.read(br)
     BlockLenOffset(sym).toLong + br.readBits(BlockLenBits(sym))
   }
 
-  private def readBlockState(br: BitReader): BlockState = {
+  private def readBlockState(br: LsbBits): BlockState = {
     val n = readVarLenUint(br)
     if (n >= 2) {
       val typeCode = readPrefixCode(br, n + 2)
@@ -428,7 +308,7 @@ object Brotli {
     */
   def decode(input: Array[Byte], maxOut: Int = 1 << 26): Array[Byte] = {
     if (input.isEmpty) reject("malformed", "empty stream")
-    val br = new BitReader(input)
+    val br = new LsbBits(input, 0, input.length, "brotli")
     // WBITS (§9.1)
     val wbits =
       if (br.readBits(1) == 0) 16
@@ -516,7 +396,7 @@ object Brotli {
     * direct distance params, context modes, context maps, the three
     * code families) then the command loop.
     */
-  private def decodeCompressedMetaBlock(br: BitReader, mlen: Long,
+  private def decodeCompressedMetaBlock(br: LsbBits, mlen: Long,
       maxBackward: Long, distRb: Array[Int], getRbIdx: () => Int,
       setRbIdx: Int => Unit, emit: Int => Unit, getPos: () => Int,
       byteAt: Int => Byte): Unit = {

@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.codec.{Inflate, Reject}
+
 /** WARC (ISO 28500 / WARC/1.x) record parsing — the container a web
   * crawl actually arrives in (Common Crawl et al.): a record is a
   * version line, CRLF-terminated named headers, an empty line, then a
@@ -48,8 +50,8 @@ package graft.sources
   *        a null row;
   *  - other record types (`warcinfo`, `request`, `metadata`, …) keep
   *    their raw block as the body with no HTTP facts.
-  * Malformed input throws — the extraction layer nulls the row, the
-  * codec-family contract ([[graft.operators.WebpCodec]] discipline).
+  * Malformed input throws a `warc` [[graft.codec.Reject]] — the
+  * extraction layer nulls the row, the codec-family contract.
   */
 object WarcCodec {
 
@@ -77,8 +79,14 @@ object WarcCodec {
 
   private val Crlf = "\r\n".getBytes("US-ASCII")
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"warc: $msg")
+  private val fail = Reject.malformed("warc")
+
+  /** A decimal header value that fits an Int; anything else rejects
+    * as `what`.
+    */
+  private def decimal(v: String, what: String): Int =
+    (if (v.forall(c => c >= '0' && c <= '9')) v.toIntOption else None)
+      .getOrElse(fail(s"$what '$v'"))
 
   /** Index of the next CRLF at/after `from`, or -1. */
   private def crlfAt(b: Array[Byte], from: Int): Int = {
@@ -143,10 +151,8 @@ object WarcCodec {
     val warcType = headers.getOrElse("warc-type", fail("missing WARC-Type"))
     val lenStr = headers.getOrElse("content-length",
       fail("missing Content-Length"))
-    if (!lenStr.forall(c => c >= '0' && c <= '9'))
-      fail(s"bad Content-Length '$lenStr'")
-    val len = lenStr.toInt
-    if (blockAt + len > bytes.length) fail("content block truncated")
+    val len = decimal(lenStr, "bad Content-Length")
+    if (blockAt.toLong + len > bytes.length) fail("content block truncated")
     val block = java.util.Arrays.copyOfRange(bytes, blockAt, blockAt + len)
     val uri = headers.getOrElse("warc-target-uri", null)
     val recCt = headers.getOrElse("content-type", "")
@@ -163,8 +169,7 @@ object WarcCodec {
       val parts = status.split(" ", 3)
       if (parts.length < 2 || !parts(0).startsWith("HTTP/"))
         fail(s"http: bad status line '$status'")
-      if (!parts(1).forall(c => c >= '0' && c <= '9'))
-        fail(s"http: bad status code '${parts(1)}'")
+      val code = decimal(parts(1), "http: bad status code")
       val (httpHeaders, bodyAt) = parseHeaders(block, stEnd + 2)
       val body0 = java.util.Arrays.copyOfRange(block, bodyAt, block.length)
       val te = httpHeaders.get("transfer-encoding")
@@ -173,14 +178,14 @@ object WarcCodec {
           "(smuggling-shaped framing ambiguity)")
       val delimited = httpHeaders.get("content-length") match {
         case Some(cl) if cl.forall(c => c >= '0' && c <= '9') =>
-          val n = cl.toInt
+          val n = decimal(cl, "http: bad Content-Length")
           if (n > body0.length) fail("http: body truncated")
           java.util.Arrays.copyOfRange(body0, 0, n)
         case _ => body0
       }
       val (body, codingErr) = decodePayload(te,
         httpHeaders.get("content-encoding"), delimited)
-      WarcRecord(warcType, uri, parts(1).toInt,
+      WarcRecord(warcType, uri, code,
         httpHeaders.getOrElse("content-type", null),
         // the redirect-discovery channel's input: 3xx responses name
         // their successor here (RFC 9110 §10.2.2; may be RELATIVE —
@@ -237,7 +242,8 @@ object WarcCodec {
           // with the bytes kept, the zstd-dictionary shape
           try body = Brotli.decode(body)
           catch {
-            case e: Brotli.BrotliReject if e.kind == "dictionary" =>
+            case e: Reject if e.codec == "brotli" &&
+                e.kind == "dictionary" =>
               err = "content-coding:br-dictionary"
           }
         case other => err = s"content-coding:$other"
@@ -303,28 +309,11 @@ object WarcCodec {
     val zlibWrapped = b.length >= 2 && (b(0) & 0x0F) == 8 &&
       ((b(0) & 0xF0) >>> 4) <= 7 &&
       (((b(0) & 0xFF) << 8) | (b(1) & 0xFF)) % 31 == 0
-    val inf = new java.util.zip.Inflater(!zlibWrapped)
-    try {
-      inf.setInput(b)
-      val buf = new Array[Byte](64 * 1024)
-      val out = new java.io.ByteArrayOutputStream()
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch {
-            case e: java.util.zip.DataFormatException =>
-              fail(s"deflate: corrupt stream: ${e.getMessage}")
-          }
-        if (n > 0) {
-          if (out.size().toLong + n > WarcGz.maxMemberBytes)
-            fail(s"deflate: payload inflates past the " +
-              s"${WarcGz.maxMemberBytes}-byte cap")
-          out.write(buf, 0, n)
-        } else if (!inf.finished() && inf.needsInput())
-          fail("deflate: truncated stream")
-      }
-      out.toByteArray
-    } finally inf.end()
+    val z = Inflate("warc", b, 0, b.length, zlibWrapped,
+      WarcGz.maxMemberBytes,
+      s"deflate: payload inflates past the ${WarcGz.maxMemberBytes}-byte cap")
+    if (!z.ended) fail("deflate: truncated stream")
+    z.bytes
   }
 
   /** Fixture encoder — chunk a payload per RFC 9112 §7.1: rotating

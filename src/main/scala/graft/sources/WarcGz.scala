@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
+import graft.codec.{Inflate, Reject}
+import java.util.zip.{CRC32, Deflater}
 
 /** Concatenated-gzip-member splitting — the container framing a real
   * crawl archive arrives in: a `.warc.gz` file (Common Crawl et al.)
@@ -9,9 +10,9 @@ import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
   * reader can fan records out without understanding WARC at all. This
   * is the file-source half that [[WarcCodec]]'s header promised
   * ("splitting a multi-record WARC file into records is the file
-  * source's job"): walk the members, inflate each with the JVM
-  * `Inflater` (the [[graft.operators.PixelCodec]] zlib discipline,
-  * nowrap + manual framing), verify each member's CRC32 + ISIZE
+  * source's job"): walk the members, inflate each through the bounded
+  * [[graft.codec.Inflate]] loop (raw deflate + manual framing),
+  * verify each member's CRC32 + ISIZE
   * trailer, and hand the inflated bytes to [[WarcCodec.parseRecord]].
   *
   * Reference analog: the DCP feed is the reference's own byte-transport
@@ -49,8 +50,9 @@ object WarcGz {
     */
   val maxMemberBytes: Int = 1 << 30
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"warc.gz: $msg")
+  private val fail = Reject.malformed("warc.gz")
+
+  private val overCap = s"member inflates past the $maxMemberBytes-byte cap"
 
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
 
@@ -126,34 +128,17 @@ object WarcGz {
         fail("FHCRC header checksum mismatch")
       p += 2
     }
-    val inf = new Inflater(true)
-    try {
-      inf.setInput(bytes, p, bytes.length - p)
-      val buf = new Array[Byte](64 * 1024)
-      val body = new java.io.ByteArrayOutputStream()
-      val crc = new CRC32
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch {
-            case e: DataFormatException =>
-              fail(s"corrupt deflate stream: ${e.getMessage}")
-          }
-        if (n > 0) {
-          if (body.size().toLong + n > maxMemberBytes)
-            fail(s"member inflates past the $maxMemberBytes-byte cap")
-          body.write(buf, 0, n)
-          crc.update(buf, 0, n)
-        } else if (!inf.finished()) fail("truncated deflate stream")
-      }
-      val trailerAt = p + inf.getBytesRead.toInt
-      if (trailerAt + 8 > bytes.length) fail("truncated gzip trailer")
-      if (u32le(bytes, trailerAt) != crc.getValue)
-        fail("member CRC32 mismatch")
-      if (u32le(bytes, trailerAt + 4) != (body.size().toLong & 0xFFFFFFFFL))
-        fail("member ISIZE mismatch")
-      (body.toByteArray, trailerAt + 8)
-    } finally inf.end()
+    val z = Inflate("warc.gz", bytes, p, bytes.length, zlib = false,
+      maxMemberBytes, overCap)
+    if (!z.ended) fail("truncated deflate stream")
+    val trailerAt = p + z.consumed
+    if (trailerAt + 8 > bytes.length) fail("truncated gzip trailer")
+    val crc = new CRC32
+    crc.update(z.bytes)
+    if (u32le(bytes, trailerAt) != crc.getValue) fail("member CRC32 mismatch")
+    if (u32le(bytes, trailerAt + 4) != (z.bytes.length & 0xFFFFFFFFL))
+      fail("member ISIZE mismatch")
+    (z.bytes, trailerAt + 8)
   }
 
   /** Fixture encoder — one real gzip member with optional FNAME /

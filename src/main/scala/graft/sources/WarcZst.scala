@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.codec.Reject
+
 /** `.warc.zst` member splitting — Common Crawl's CURRENT archive
   * framing (the gzip layout's successor): one file of back-to-back
   * zstd frames (RFC 8878), each data frame holding one or more WARC
@@ -66,8 +68,7 @@ object WarcZst {
     */
   final case class Member(payload: Array[Byte], err: String)
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"warc.zst: $msg")
+  private val fail = Reject.malformed("warc.zst")
 
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.operators.AacCodec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +12,7 @@ class AacCodecSpec extends AnyFunSuite {
 
   private def facts(b: Array[Byte]) = AacCodec.decodeAdts(b)
   private def rejectKind(b: Array[Byte]): String =
-    intercept[AacCodec.AacReject](AacCodec.decodeAdts(b)).kind
+    rejectOf("aac")(AacCodec.decodeAdts(b)).kind
 
   test("LC stereo MPEG-4: frames, samples, floor duration, VBR flag") {
     val f = facts(AacCodec.encodeAdts(mpeg2 = false, profile = 1,

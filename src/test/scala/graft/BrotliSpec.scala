@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.sources.Brotli
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -104,8 +105,8 @@ class BrotliSpec extends AnyFunSuite {
     val zh = b64(
       "G+MMAIzUSE1zuyYvP0enJws52z4hCp+MpkgHG3DgkmAYIA7uwwacaFTr2DdE" +
       "IL3Hx2XmJGFEbGoUlUeOOmIQzkUAgJwC")
-    val e1 = intercept[Brotli.BrotliReject](Brotli.decode(hello))
-    val e2 = intercept[Brotli.BrotliReject](Brotli.decode(zh))
+    val e1 = rejectOf("brotli")(Brotli.decode(hello))
+    val e2 = rejectOf("brotli")(Brotli.decode(zh))
     assert(e1.kind == "dictionary" && e2.kind == "dictionary")
   }
 
@@ -114,7 +115,7 @@ class BrotliSpec extends AnyFunSuite {
     val good = b64("GwcHAAAitpnqhURLhLKeqb6iuMLEuLZSW4Rj1tDxQ5+NpC9trvuJ3jK4irC4" +
       "/yNqNgA=")
     def kindOf(b: Array[Byte], maxOut: Int = 1 << 26): String =
-      intercept[Brotli.BrotliReject](Brotli.decode(b, maxOut)).kind
+      rejectOf("brotli")(Brotli.decode(b, maxOut)).kind
     assert(kindOf(good.dropRight(10)) == "malformed")
     assert(kindOf(good ++ Array[Byte](7)) == "malformed")
     assert(kindOf(Array.emptyByteArray) == "malformed")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GifCodec
@@ -101,7 +102,7 @@ class GifCodecSpec extends AnyFunSuite {
 
   test("structural rejection") {
     def fails(bytes: Array[Byte], what: String): Unit = {
-      val e = intercept[IllegalArgumentException](
+      val e = rejectOf("gif")(
         GifCodec.decodeGif(bytes))
       assert(e.getMessage.contains(what), s"got: ${e.getMessage}")
     }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.JpegCodec
@@ -14,6 +15,7 @@ import graft.operators.PixelCodec.Image
   * profile.
   */
 class JpegCodecSpec extends AnyFunSuite {
+  import JpegCodecSpec.imageIoEncodeProgressive
 
   private def raster(w: Int, h: Int, c: Int): Array[Byte] =
     Array.tabulate(w * h * c)(i => ((i * 7 + (i / 13) * 31 + 5) % 256).toByte)
@@ -50,32 +52,6 @@ class JpegCodecSpec extends AnyFunSuite {
     val p = w.getDefaultWriteParam
     p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
     p.setCompressionQuality(quality)
-    val bos = new java.io.ByteArrayOutputStream()
-    w.setOutput(new javax.imageio.stream.MemoryCacheImageOutputStream(bos))
-    w.write(null, new javax.imageio.IIOImage(awt, null, null), p)
-    w.dispose()
-    bos.toByteArray
-  }
-
-  /** ImageIO's PROGRESSIVE encode (the JDK writer emits an IJG-style
-    * progression script: interleaved DC first+refinement, per-component
-    * AC bands with successive approximation) — the independent producer
-    * for the SOF2 decode path.
-    */
-  private def imageIoEncodeProgressive(img: Image, quality: Float): Array[Byte] = {
-    val t = if (img.channels == 1)
-      java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-    else java.awt.image.BufferedImage.TYPE_3BYTE_BGR
-    val awt = new java.awt.image.BufferedImage(img.width, img.height, t)
-    for (y <- 0 until img.height; x <- 0 until img.width;
-         b <- 0 until img.channels)
-      awt.getRaster.setSample(x, y, b,
-        img.pixels((y * img.width + x) * img.channels + b) & 0xff)
-    val w = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-    val p = w.getDefaultWriteParam
-    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-    p.setCompressionQuality(quality)
-    p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
     val bos = new java.io.ByteArrayOutputStream()
     w.setOutput(new javax.imageio.stream.MemoryCacheImageOutputStream(bos))
     w.write(null, new javax.imageio.IIOImage(awt, null, null), p)
@@ -239,7 +215,7 @@ class JpegCodecSpec extends AnyFunSuite {
 
   test("structural rejection: malformed progressive, truncation, broken tables") {
     def fails(bytes: Array[Byte], what: String): Unit = {
-      val e = intercept[IllegalArgumentException](
+      val e = rejectOf("jpeg")(
         JpegCodec.decodeJpeg(bytes))
       assert(e.getMessage.contains(what), s"got: ${e.getMessage}")
     }
@@ -264,5 +240,34 @@ class JpegCodecSpec extends AnyFunSuite {
     // ImageIO output also parses (independent producer)
     val external = imageIoEncode(Image(10, 10, 1, raster(10, 10, 1)), 0.9f)
     JpegCodec.decodeJpeg(external)
+  }
+}
+
+object JpegCodecSpec {
+
+  /** ImageIO's PROGRESSIVE encode (the JDK writer emits an IJG-style
+    * progression script: interleaved DC first+refinement, per-component
+    * AC bands with successive approximation) — the independent producer
+    * for the SOF2 decode path.
+    */
+  def imageIoEncodeProgressive(img: Image, quality: Float): Array[Byte] = {
+    val t = if (img.channels == 1)
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY
+    else java.awt.image.BufferedImage.TYPE_3BYTE_BGR
+    val awt = new java.awt.image.BufferedImage(img.width, img.height, t)
+    for (y <- 0 until img.height; x <- 0 until img.width;
+         b <- 0 until img.channels)
+      awt.getRaster.setSample(x, y, b,
+        img.pixels((y * img.width + x) * img.channels + b) & 0xff)
+    val w = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+    val p = w.getDefaultWriteParam
+    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    p.setCompressionQuality(quality)
+    p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+    val bos = new java.io.ByteArrayOutputStream()
+    w.setOutput(new javax.imageio.stream.MemoryCacheImageOutputStream(bos))
+    w.write(null, new javax.imageio.IIOImage(awt, null, null), p)
+    w.dispose()
+    bos.toByteArray
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.operators.Mp3Codec
-import graft.operators.Mp3Codec.Mp3Reject
 
 /** [[Mp3Codec]] beyond the planted oracle: frame-length math
   * (padding, every version/rate family), tag skipping, Xing/Info
@@ -53,7 +53,7 @@ class Mp3CodecSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   private def kindOf(p: Array[Byte]): String =
-    intercept[Mp3Reject](Mp3Codec.decodeMp3(p)).kind
+    rejectOf("mp3")(Mp3Codec.decodeMp3(p)).kind
 
   test("named rejections: free-format, layer, version, malformed " +
       "(truncation, desync, garbage, empty)") {

@@ -1,7 +1,7 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.operators.PdfCodec
-import graft.operators.PdfCodec.PdfReject
 
 /** [[PdfCodec]]: the bounded PDF 1.x text-extraction core — round
   * trips through the fixture encoder, string/operator syntax, the
@@ -133,11 +133,11 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     offs.foreach(o => out.write(a(f"$o%010d 00000 n \n")))
     out.write(a(s"trailer\n<< /Size ${offs.length + 1} /Root 1 0 R " +
       s">>\nstartxref\n$xrefAt\n%%EOF\n"))
-    val e = intercept[PdfReject](PdfCodec.extractText(out.toByteArray))
+    val e = rejectOf("pdf")(PdfCodec.extractText(out.toByteArray))
     assert(e.kind == "malformed" && e.getMessage.contains("depth"))
     // a 70-deep balanced array tower in a content stream
     val deep = a("BT " + ("[ " * 70) + ("] " * 70) + "ET")
-    val e2 = intercept[PdfReject](
+    val e2 = rejectOf("pdf")(
       PdfCodec.extractText(onePagePdf(deep)))
     assert(e2.kind == "malformed" && e2.getMessage.contains("depth"))
   }
@@ -161,7 +161,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       flate = true, xrefStream = true, objStm = true, predictor = 2))
     assert(x4.text == want, "TIFF horizontal differencing must invert")
     // /Encrypt carried in the xref STREAM dict still rejects
-    assert(intercept[PdfReject](PdfCodec.extractText(
+    assert(rejectOf("pdf")(PdfCodec.extractText(
       PdfCodec.encodePdf(pages, xrefStream = true, encrypted = true)))
       .kind == "encrypted")
   }
@@ -224,9 +224,9 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
         s"prefix length $n")
     }
     // truncated LZW (no EOD) and bad ASCII85 bytes reject by name
-    assert(intercept[PdfReject](
+    assert(rejectOf("pdf")(
       PdfCodec.lzwDecode(Array[Byte](0x40), 1)).kind == "malformed")
-    assert(intercept[PdfReject](
+    assert(rejectOf("pdf")(
       PdfCodec.ascii85Decode(a("ab|cd~>"))).kind == "malformed")
   }
 
@@ -309,7 +309,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     cyc.write(rows)
     cyc.write(a("\nendstream\nendobj\n"))
     cyc.write(a(s"startxref\n$xsAt\n%%EOF\n"))
-    val e = intercept[PdfReject](PdfCodec.extractText(cyc.toByteArray))
+    val e = rejectOf("pdf")(PdfCodec.extractText(cyc.toByteArray))
     assert(e.kind == "malformed" && e.getMessage.contains("cycle"),
       e.getMessage)
     // (c) the spec-legal array spelling on the xref stream's dict
@@ -330,10 +330,10 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     val htAt = hyb.size()
     hyb.write(a(s"xref\n0 0\ntrailer\n<< /Size 8 /Root 1 0 R " +
       s"/Prev $baseXref /XRefStm $hxAt >>\nstartxref\n$htAt\n%%EOF\n"))
-    assert(intercept[PdfReject](
+    assert(rejectOf("pdf")(
       PdfCodec.extractText(hyb.toByteArray)).kind == "encrypted")
     // (e) an ASCII85 group past 2^32-1 cannot be silently truncated
-    assert(intercept[PdfReject](
+    assert(rejectOf("pdf")(
       PdfCodec.ascii85Decode(a("uuuuu~>"))).kind == "malformed")
   }
 
@@ -378,11 +378,11 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(r.text == "before inside the form after",
       "form text must extract in place; the image must not reject")
     // a form whose content invokes ITSELF must hit the nesting cap
-    val e = intercept[PdfReject](PdfCodec.extractText(xobjPdf(
+    val e = rejectOf("pdf")(PdfCodec.extractText(xobjPdf(
       "q /Fm1 Do Q", "q /Fm1 Do Q")))
     assert(e.kind == "malformed" && e.getMessage.contains("nesting"))
     // an unknown XObject name is malformed, not silence
-    val e2 = intercept[PdfReject](PdfCodec.extractText(xobjPdf(
+    val e2 = rejectOf("pdf")(PdfCodec.extractText(xobjPdf(
       "BT (x) Tj ET", "q /Nope Do Q")))
     assert(e2.kind == "malformed" &&
       e2.getMessage.contains("unknown XObject"))
@@ -404,7 +404,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       Seq(Seq("plain line")), differences = true))
     assert(gen.text == "plain line\n€•ł")
     // surrogate-range uniXXXX is not a scalar value
-    val bad = intercept[PdfReject](PdfCodec.extractText(onePagePdf(
+    val bad = rejectOf("pdf")(PdfCodec.extractText(onePagePdf(
       a("BT /F1 12 Tf (A) Tj ET"),
       fontDict = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
         "/Encoding << /Differences [ 65 /uniD800 ] >> >>")))
@@ -425,20 +425,20 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     // 'a' encodes as <02000201>; corrupt its first code to 0FFF
     val patched = s.replace("<02000201>", "<0FFF0201>")
     assert(patched != s)
-    val e1 = intercept[PdfReject](
+    val e1 = rejectOf("pdf")(
       PdfCodec.extractText(patched.getBytes("ISO-8859-1")))
     assert(e1.kind == "encoding" && e1.getMessage.contains("0fff"))
     // odd byte count under a 2-byte font is malformed (same-length
     // patch: hex whitespace is ignored, so this is ONE byte)
     val odd = s.replace("<02000201>", "<02      >")
     assert(odd != s)
-    assert(intercept[PdfReject](PdfCodec.extractText(
+    assert(rejectOf("pdf")(PdfCodec.extractText(
       odd.getBytes("ISO-8859-1"))).kind == "malformed")
     // Identity-H WITHOUT /ToUnicode stays a type0-font rejection
     // (same-length blank-out keeps every xref offset valid)
     val noMap = s.replace("/ToUnicode 6 0 R", " " * 16)
     assert(noMap != s)
-    assert(intercept[PdfReject](PdfCodec.extractText(
+    assert(rejectOf("pdf")(PdfCodec.extractText(
       noMap.getBytes("ISO-8859-1"))).kind == "type0-font")
   }
 
@@ -460,7 +460,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       crypt = "rc4", cryptUnsignedP = true))
     assert(r3.text == want)
     // a real user password: the empty password fails the /U check
-    val e = intercept[PdfReject](PdfCodec.extractText(
+    val e = rejectOf("pdf")(PdfCodec.extractText(
       PdfCodec.encodePdf(pages, crypt = "rc4-pwd")))
     assert(e.kind == "encrypted" && e.getMessage.contains("password"))
     // V5/R6 AES-256 with the empty user password: the hardened
@@ -470,7 +470,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       flate = true, crypt = "aes256"))
     assert(r5.nPages == 2 && r5.text == want)
     // a passworded V5 file stays a named rejection
-    val e5 = intercept[PdfReject](PdfCodec.extractText(
+    val e5 = rejectOf("pdf")(PdfCodec.extractText(
       PdfCodec.encodePdf(pages, crypt = "aes256-pwd")))
     assert(e5.kind == "encrypted" && e5.getMessage.contains("password"))
     // a V5 dict whose crypt filter is not AESV3 rejects by name
@@ -479,7 +479,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       "ISO-8859-1")
     val v5bad = raw.replace("/CFM /AESV3", "/CFM /AESV9")
     assert(v5bad != raw)
-    assert(intercept[PdfReject](PdfCodec.extractText(
+    assert(rejectOf("pdf")(PdfCodec.extractText(
       v5bad.getBytes("ISO-8859-1"))).kind == "encrypted")
     // the zero-length literal () some real writers emit UNENCRYPTED
     // inside encrypted files passes through (poppler/pdf.js parity);
@@ -508,7 +508,7 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       PdfCodec.encodePdf(pages, flate = true, inlineImage = "raw"))
     assert(rf.text == want)
     // a filtered image with no /L cannot be skipped without decoding
-    val e = intercept[PdfReject](PdfCodec.extractText(
+    val e = rejectOf("pdf")(PdfCodec.extractText(
       PdfCodec.encodePdf(pages, inlineImage = "nolen")))
     assert(e.kind == "inline-image" && e.getMessage.contains("/L"))
     // truncated data is malformed, not a silent partial extraction
@@ -516,14 +516,14 @@ class PdfCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       inlineImage = "raw"), "ISO-8859-1")
     val cut = raw.replace("/W 2 /H 2", "/W 9 /H 9")
     assert(cut != raw)
-    assert(intercept[PdfReject](PdfCodec.extractText(
+    assert(rejectOf("pdf")(PdfCodec.extractText(
       cut.getBytes("ISO-8859-1"))).kind == "malformed")
   }
 
   test("named rejections: encrypted, type0, filter, xref-stream, " +
       "inline image, non-WinAnsi high byte, malformed") {
     def kind(b: Array[Byte]): String =
-      intercept[PdfReject](PdfCodec.extractText(b)).kind
+      rejectOf("pdf")(PdfCodec.extractText(b)).kind
     val p = Seq(Seq("x"))
     assert(kind(PdfCodec.encodePdf(p, encrypted = true)) == "encrypted")
     assert(kind(PdfCodec.encodePdf(p, type0 = true)) == "type0-font")

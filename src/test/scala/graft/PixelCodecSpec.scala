@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PixelCodec
@@ -102,7 +103,7 @@ class PixelCodecSpec extends AnyFunSuite {
     // interlace METHOD 2 does not exist: structural failure
     val bad = patchIhdr(PixelCodec.encodePng(Image(4, 4, 1,
       raster(4, 4, 1))))(_(28) = 2)
-    val e = intercept[IllegalArgumentException](PixelCodec.decodePng(bad))
+    val e = rejectOf("png")(PixelCodec.decodePng(bad))
     assert(e.getMessage.contains("interlace"))
   }
 
@@ -110,7 +111,7 @@ class PixelCodecSpec extends AnyFunSuite {
     val good = PixelCodec.encodePng(Image(6, 5, 3, raster(6, 5, 3)),
       filterFor = _ % 5)
     def fails(bytes: Array[Byte], what: String): Unit = {
-      val e = intercept[IllegalArgumentException](PixelCodec.decodePng(bytes))
+      val e = rejectOf("png")(PixelCodec.decodePng(bytes))
       assert(e.getMessage.contains(what), s"got: ${e.getMessage}")
     }
     fails("not a png at all".getBytes, "bad signature")
@@ -208,7 +209,7 @@ class PixelCodecSpec extends AnyFunSuite {
       out.toByteArray
     }
     def fails(b: Array[Byte], what: String): Unit = {
-      val e = intercept[IllegalArgumentException](PixelCodec.decodePng(b))
+      val e = rejectOf("png")(PixelCodec.decodePng(b))
       assert(e.getMessage.contains(what), s"got: ${e.getMessage}")
     }
     fails(rewrite(bytes)(_.filterNot(c =>
@@ -372,7 +373,7 @@ class PixelCodecSpec extends AnyFunSuite {
     // G.711 requires 8-bit storage
     val bad = PixelCodec.encodeWavAlaw(8000, 1, codes.take(2))
     bad(34) = 16 // bits-per-sample field
-    val e = intercept[IllegalArgumentException](PixelCodec.decodeWavPcm(bad))
+    val e = rejectOf("wav")(PixelCodec.decodeWavPcm(bad))
     assert(e.getMessage.contains("8-bit"))
   }
 
@@ -402,14 +403,14 @@ class PixelCodecSpec extends AnyFunSuite {
       codes.toSeq.map(b => PixelCodec.mulawDecode(b & 0xff)))
     // mu-law claims 16-bit storage -> rejected loudly
     val bad = wav.clone(); bad(34) = 16
-    val e = intercept[IllegalArgumentException](PixelCodec.decodeWavPcm(bad))
+    val e = rejectOf("wav")(PixelCodec.decodeWavPcm(bad))
     assert(e.getMessage.contains("G.711 requires 8-bit"))
   }
 
   test("WAV PCM decode rejects malformed payloads") {
     val good = PixelCodec.encodeWavPcm(Pcm(16000, 1, 16, Array(1, -2, 3, -4)))
     def fails(bytes: Array[Byte], what: String): Unit = {
-      val e = intercept[IllegalArgumentException](
+      val e = rejectOf("wav")(
         PixelCodec.decodeWavPcm(bytes))
       assert(e.getMessage.contains(what), s"got: ${e.getMessage}")
     }

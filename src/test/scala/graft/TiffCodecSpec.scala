@@ -1,7 +1,7 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.operators.{PixelCodec, TiffCodec}
-import graft.operators.TiffCodec.TiffReject
 
 /** [[TiffCodec]] beyond the planted oracle: both byte orders, every
   * compression path, the predictor, palette and bilevel expansion,
@@ -118,7 +118,7 @@ class TiffCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   private def kindOf(payload: Array[Byte]): String =
-    intercept[TiffReject](TiffCodec.decodeTiff(payload)).kind
+    rejectOf("tiff")(TiffCodec.decodeTiff(payload)).kind
 
   test("named rejections: jpeg, ccitt, tiled, planar, deep-sample, " +
       "photometric, compression, malformed") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.operators.{Vp8Codec, WebpCodec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -169,7 +170,7 @@ class Vp8CodecSpec extends AnyFunSuite {
 
   test("named rejections: interframe, colorspace, malformed") {
     def kindOf(b: Array[Byte]): String =
-      intercept[Vp8Codec.Vp8Reject](Vp8Codec.decode(b)).kind
+      rejectOf("vp8")(Vp8Codec.decode(b)).kind
     val good = Vp8Codec.encodeDcOnly(16, 16, 40, 2, 1, -1)
     val inter = good.clone(); inter(0) = (inter(0) | 1).toByte
     assert(kindOf(inter) == "interframe")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.sources.WarcCodec
 
 /** [[WarcCodec]] beyond the planted oracle: header case folding,
@@ -88,7 +89,7 @@ class WarcCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("named rejections: version, truncation, obs-fold, lengths, " +
       "status line") {
     def reject(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException](WarcCodec.parseRecord(b))
+      val e = rejectOf("warc")(WarcCodec.parseRecord(b))
       assert(e.getMessage.contains(needle), e.getMessage)
     }
     reject(ascii("WARC/2.0\r\nWARC-Type: x\r\nContent-Length: 0\r\n\r\n"),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.sources.{WarcCodec, WarcGz}
 
 /** [[WarcGz]]: the concatenated-gzip-member walk behind the `.warc.gz`
@@ -55,7 +56,7 @@ class WarcGzSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("named rejections: magic, method, FLG, truncations, checksums, " +
       "trailing garbage, bomb cap") {
     def reject(b: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException](WarcGz.members(b))
+      val e = rejectOf("warc.gz")(WarcGz.members(b))
       assert(e.getMessage.contains(needle), e.getMessage)
     }
     def flipped(b: Array[Byte], at: Int): Array[Byte] = {

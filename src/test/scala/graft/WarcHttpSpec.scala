@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.sources.{WarcCodec, WarcGz}
 
 /** HTTP payload decoding in [[WarcCodec]] — the wire codings a
@@ -139,7 +140,7 @@ class WarcHttpSpec extends org.scalatest.funsuite.AnyFunSuite {
       "WARC-Target-URI: http://a.com/p\r\n" +
       "Content-Type: application/http\r\n" +
       s"Content-Length: ${http.length}\r\n\r\n") ++ http
-    val e = intercept[IllegalArgumentException](parse(rec))
+    val e = rejectOf("warc")(parse(rec))
     assert(e.getMessage.contains("Transfer-Encoding and Content-Length"))
   }
 
@@ -162,7 +163,7 @@ class WarcHttpSpec extends org.scalatest.funsuite.AnyFunSuite {
       ("unterminated trailer section", ascii("2\r\nhi\r\n0\r\nX: y\r\n")),
       ("chunk size overflows", ascii("fffffffff\r\n")))
     for ((want, body) <- cases) {
-      val e = intercept[IllegalArgumentException](parse(chunkedRec(body)))
+      val e = rejectOf("warc")(parse(chunkedRec(body)))
       assert(e.getMessage.contains(want.split(" ").last) ||
         e.getMessage.toLowerCase.contains(want), s"$want: ${e.getMessage}")
     }
@@ -170,7 +171,7 @@ class WarcHttpSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("gzip content coding with trailing bytes rejects (mis-delimited " +
       "body must not pass)") {
-    val e = intercept[IllegalArgumentException](parse(
+    val e = rejectOf("warc.gz")(parse(
       WarcCodec.encodeResponseEncoded("http://a.com/p", 200, "text/html",
         WarcGz.encodeMember(raw) ++ ascii("junk"), chunked = false,
         contentEncoding = "gzip")))
@@ -178,7 +179,7 @@ class WarcHttpSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("corrupt deflate stream rejects by name") {
-    val e = intercept[IllegalArgumentException](parse(
+    val e = rejectOf("warc")(parse(
       WarcCodec.encodeResponseEncoded("http://a.com/p", 200, "text/html",
         Array[Byte](0x78, 0x9C.toByte, 1, 2, 3), chunked = false,
         contentEncoding = "deflate")))

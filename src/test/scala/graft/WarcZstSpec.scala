@@ -1,5 +1,6 @@
 package graft
 
+import graft.CodecRejects.rejectOf
 import graft.sources.WarcZst
 
 /** [[WarcZst]] — the zstd frame walk: member boundaries found by the
@@ -65,7 +66,7 @@ class WarcZstSpec extends org.scalatest.funsuite.AnyFunSuite {
       "checksum and reserved descriptor bit all fail by name") {
     val ok = WarcZst.encodeFrame(ascii("x" * 100), checksum = true)
     def expectFail(b: Array[Byte], msg: String): Unit = {
-      val e = intercept[IllegalArgumentException](WarcZst.members(b))
+      val e = rejectOf("warc.zst")(WarcZst.members(b))
       assert(e.getMessage.contains(msg), e.getMessage)
     }
     expectFail(ascii("GARBAGE!"), "bad frame magic")

@@ -1,5 +1,7 @@
 package graft
 
+import graft.CodecRejects.rejectOf
+import graft.codec.Reject
 import graft.operators.WebpCodec
 
 /** [[WebpCodec]] beyond the planted-fixture oracle: encode∘decode
@@ -111,23 +113,24 @@ class WebpCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("honest rejection, by name: plane codes, truncation, " +
       "non-WebP; garbage in a lossy chunk is malformed VP8 now that " +
       "the lossy tier decodes") {
-    def reject(bytes: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException](WebpCodec.decodeWebp(bytes))
+    def reject(bytes: Array[Byte], codec: String, needle: String): Unit = {
+      val e = rejectOf(codec)(WebpCodec.decodeWebp(bytes))
       assert(e.getMessage.contains(needle), e.getMessage)
     }
     // the stub's 10 garbage bytes route into Vp8Codec (round 16) and
     // fail its frame checks — a named VP8 rejection, not "lossy tier"
-    reject(WebpCodec.lossyStub(4, 4), "vp8:")
+    reject(WebpCodec.lossyStub(4, 4), "vp8", "vp8:")
     reject(WebpCodec.encodeWebpLossless(2, 2,
       Seq(WebpCodec.Lit(px(255, 1, 2, 3)), WebpCodec.Ref(3, 2))),
-      "close-neighborhood")
-    reject("just some text".getBytes, "RIFF")
+      "vp8l", "close-neighborhood")
+    reject("just some text".getBytes, "webp", "RIFF")
     // cut mid-bitstream (one trailing byte may be a legal RIFF pad, so
     // cut deeper): either the container walk or the bit reader reports
     val good = WebpCodec.encodeWebpLossless(9, 7,
       (0 until 63).map(p => WebpCodec.Lit(px(255, 1, (p * 37) % 256, 3))))
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[Reject](
       WebpCodec.decodeWebp(good.take(good.length - 4)))
+    assert(Set("webp", "vp8l")(e.codec), e.getMessage)
     assert(e.getMessage.contains("truncated") ||
       e.getMessage.contains("overruns"), e.getMessage)
   }
@@ -151,7 +154,7 @@ class WebpCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       Array[Byte](32, 0, 0, 0) ++ Array.fill[Byte](32)(0x55)
     val bytes = head ++ (if (newSize % 2 == 1) Array[Byte](0)
       else Array.emptyByteArray) ++ exif
-    val e = intercept[IllegalArgumentException](WebpCodec.decodeWebp(bytes))
+    val e = rejectOf("vp8l")(WebpCodec.decodeWebp(bytes))
     assert(e.getMessage.contains("truncated") ||
       e.getMessage.contains("vp8l"), e.getMessage)
   }
@@ -163,7 +166,7 @@ class WebpCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
       "VP8L".getBytes("US-ASCII") ++
       Array[Byte](0xf0.toByte, 0xff.toByte, 0xff.toByte, 0x7f) ++
       Array.fill[Byte](16)(0x2f)
-    val e = intercept[IllegalArgumentException](WebpCodec.decodeWebp(bytes))
+    val e = rejectOf("webp")(WebpCodec.decodeWebp(bytes))
     assert(e.getMessage.contains("overruns"), e.getMessage)
     assert(WebpCodec.sniffDims(bytes).isEmpty)
   }
@@ -172,11 +175,11 @@ class WebpCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     // dist 5 with only 1 pixel decoded
     val early = WebpCodec.encodeWebpLossless(3, 1,
       Seq(WebpCodec.Lit(px(255, 1, 2, 3)), WebpCodec.Ref(2, 5 + 120)))
-    val e1 = intercept[IllegalArgumentException](WebpCodec.decodeWebp(early))
+    val e1 = rejectOf("vp8l")(WebpCodec.decodeWebp(early))
     assert(e1.getMessage.contains("before start"))
     val over = WebpCodec.encodeWebpLossless(3, 1,
       Seq(WebpCodec.Lit(px(255, 1, 2, 3)), WebpCodec.Ref(9, 1 + 120)))
-    val e2 = intercept[IllegalArgumentException](WebpCodec.decodeWebp(over))
+    val e2 = rejectOf("vp8l")(WebpCodec.decodeWebp(over))
     assert(e2.getMessage.contains("overruns image"))
   }
 }

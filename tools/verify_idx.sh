@@ -13,6 +13,10 @@
 #                  ingest, upsert, delete, filtered, residual, retrain,
 #                  stats, stream maintenance, SQL lifecycle, hybrid search
 #                  in every form, multimodal pipeline)
+#   codec          the queries that decode untrusted bytes (WARC gz, HTTP
+#                  and zst sources and streams, PDF text, the pixel,
+#                  resize, TIFF, WebP, GIF, JPEG, MP3 and AAC decoders,
+#                  multimodal pipeline)
 #
 # sfDir defaults to $SPARK_GRAFT_SF_DIR, else $HOME/testdata/sf0.01; outDir
 # to a fresh temporary directory. Exits non-zero unless every query of the
@@ -21,13 +25,14 @@ set -euo pipefail
 
 root="$(cd "$(dirname "$0")/.." && pwd)"
 set_name=idx
-if [[ "${1:-}" == idx || "${1:-}" == ann ]]; then
+if [[ "${1:-}" == idx || "${1:-}" == ann || "${1:-}" == codec ]]; then
   set_name="$1"
   shift
 fi
 case "$set_name" in
   idx) queries=idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup ;;
   ann) queries=sim_ann_persisted,sim_ann_ingest,sim_ann_upsert,sim_ann_delete,sim_ann_filtered,sim_ann_residual,sim_ann_retrain,sim_ann_stats,sim_ann_stream_maintain,ann_build_sql,text_hybrid_search,text_hybrid_batch,text_hybrid_filtered,text_hybrid_stream,hybrid_search_sql,hybrid_batch_sql,pipeline_multimodal ;;
+  codec) queries=source_warc_gz,source_warc_http,source_warc_zst,pipeline_warc_gz_stream,pipeline_crawl_mixed,text_extract_pdf,pipeline_pretrain_pdf,multimodal_pixels,multimodal_resize,multimodal_tiff,multimodal_webp,multimodal_webp_lossy,multimodal_gif,multimodal_jpeg,multimodal_mp3,multimodal_aac,pipeline_multimodal ;;
 esac
 sf="${1:-${SPARK_GRAFT_SF_DIR:-$HOME/testdata/sf0.01}}"
 out="${2:-$(mktemp -d -t "verify_$set_name.XXXXXX")}"
