@@ -421,9 +421,10 @@ object GraftExtensions {
       (es: Seq[Expression]) => graft.functions.WarcParseExpr(es.head)),
     "graft_warc_gz_members" -> (info("graft_warc_gz_members",
       "graft_warc_gz_members(file_bytes) - generator: one row " +
-        "(member_idx, member) per gzip member of a concatenated " +
-        ".warc.gz archive buffer (use in LATERAL VIEW / as the " +
-        "select's generator)"),
+        "(member_idx, member, err) per gzip member of a concatenated " +
+        ".warc.gz archive buffer; a malformed member ends the rows " +
+        "with a NULL member and its rejection in err (use in " +
+        "LATERAL VIEW / as the select's generator)"),
       (es: Seq[Expression]) =>
         graft.functions.WarcGzMembersExpr(es.head)),
     "graft_warc_zst_members" -> (info("graft_warc_zst_members",

@@ -164,13 +164,15 @@ case class WarcConversionExpr(uri: Expression, text: Expression,
 
 /** `warc_gz_members(file_bytes)` — generator: one row per gzip member
   * of a concatenated `.warc.gz` buffer ([[graft.sources.WarcGz]]),
-  * `struct<member_idx int, member binary>` in file order. This is the
-  * record-splitting half the WARC tier's file source needs: binaryFile
-  * scan → member fan-out → [[WarcParseExpr]] per member, all in one
-  * map-only stage. A malformed CONTAINER throws (a broken archive is a
-  * broken file, not a short one — the inflate layer's named-failure
-  * contract); malformed bytes INSIDE a member flow on to
-  * [[WarcParseExpr]], which nulls that record's row.
+  * `struct<member_idx int, member binary, err string>` in file order.
+  * This is the record-splitting half the WARC tier's file source needs:
+  * binaryFile scan → member fan-out → [[WarcParseExpr]] per member, all
+  * in one map-only stage. A malformed CONTAINER ends the row's members
+  * with one row of NULL `member` and the rejection message in `err`,
+  * after the members decoded before the fault (the
+  * [[WarcZstMembersExpr]] contract: one broken archive never fails the
+  * job); malformed bytes INSIDE a member flow on to [[WarcParseExpr]],
+  * which nulls that record's row.
   */
 case class WarcGzMembersExpr(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.Generator
@@ -179,7 +181,8 @@ case class WarcGzMembersExpr(child: Expression)
   override def children: Seq[Expression] = Seq(child)
   override def elementSchema: StructType = StructType(Seq(
     StructField("member_idx", IntegerType, nullable = false),
-    StructField("member", BinaryType, nullable = false)))
+    StructField("member", BinaryType, nullable = true),
+    StructField("err", StringType, nullable = true)))
   override def prettyName: String = "warc_gz_members"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -190,11 +193,17 @@ case class WarcGzMembersExpr(child: Expression)
       : IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
     val bytes = child.eval(input)
     if (bytes == null) Seq.empty
-    else graft.sources.WarcGz.members(bytes.asInstanceOf[Array[Byte]])
-      .zipWithIndex.map { case (m, i) =>
+    else {
+      def row(i: Int, m: Array[Byte], err: String) =
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i, m))
-      }
+          Array[Any](i, m,
+            if (err == null) null
+            else org.apache.spark.unsafe.types.UTF8String.fromString(err)))
+      val (ms, fault) = graft.sources.WarcGz.membersUntilReject(
+        bytes.asInstanceOf[Array[Byte]])
+      ms.zipWithIndex.map { case (m, i) => row(i, m, null) } ++
+        fault.map(r => row(ms.length, null, r.getMessage))
+    }
   }
 
   override protected def withNewChildrenInternal(

@@ -4,6 +4,9 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.DataStreamWriter
+
 /** The ONE implementation of immutable version-slot claiming shared by
   * every versioned artifact store ([[TokenizerStore]],
   * [[graft.operators.AnnIndex]], [[LibraryStore]], the streaming dedup
@@ -30,6 +33,12 @@ import scala.jdk.CollectionConverters._
   * version can never observe drift; deletion is the separate, explicit
   * lifecycle step [[gcShadowed]] (shadowed versions + stale crashed
   * claims), never implicit.
+  *
+  * The batch-directory stores ([[graft.operators.AnnIndex]] codes,
+  * [[graft.operators.Retrieval]] postings, [[graft.streaming.EpochStore]]
+  * tables) take their whole lifecycle from here: version slots through
+  * [[Dirs]], committed batches through [[committedBatches]], and the
+  * batch-id namespace through [[requireAppend]] / [[maintain]].
   */
 object VersionedSlots {
 
@@ -70,6 +79,16 @@ object VersionedSlots {
         case _ => None
       }).toSeq.sorted
     finally stream.close()
+  }
+
+  /** [[committedBatches]] up to the snapshot ceiling `asOfBatch` (a
+    * reader racing a retried append never lists the directory the retry
+    * overwrites), required non-empty; `what` names the table.
+    */
+  def committedUpTo(root: String, asOfBatch: Long, what: => String): Seq[Long] = {
+    val bs = committedBatches(root).filter(_ <= asOfBatch)
+    require(bs.nonEmpty, s"$what has no committed batches")
+    bs
   }
 
   /** Publish `content` at `target` atomically AND exclusively: full
@@ -167,6 +186,69 @@ object VersionedSlots {
       catch { case _: FileAlreadyExistsException => v += 1 }
     }
     v // unreachable
+  }
+
+  /** A DIRECTORY-slot store: versions are `<prefix><N>/` directories
+    * under the store root, each made visible by its `marker` file,
+    * published LAST ([[publish]]). One instance per store kind
+    * (`model.json` for ANN, `bm25.json` for BM25, `def.json` for scalar
+    * index versions, `_COMMITTED` for epochs), so listing, pinning,
+    * claiming and GC are the same code for all of them. `what` names
+    * the store in the "no versions" error.
+    */
+  final case class Dirs(marker: String, what: String, prefix: String = "v") {
+    private val SlotName = (java.util.regex.Pattern.quote(prefix) + "([0-9]+)").r
+
+    /** The slot number of a directory name; None for foreign entries,
+      * including numbers past Int range (a copy artifact must be
+      * ignored, not crash every listing).
+      */
+    def parse(name: String): Option[Int] = name match {
+      case SlotName(n) => scala.util.Try(n.toInt).toOption
+      case _ => None
+    }
+
+    def path(dir: String, v: Int): Path = Paths.get(dir, s"$prefix$v")
+
+    private def visible(p: Path): Boolean = Files.exists(p.resolve(marker))
+
+    /** Visible versions, ascending. */
+    def versions(dir: String): Seq[Int] =
+      VersionedSlots.versions(dir, parse, visible)
+
+    /** The newest visible version, if any. */
+    def latest(dir: String): Option[Int] = versions(dir).lastOption
+
+    /** The version a reader or writer works on: `version` when > 0,
+      * else the newest visible one NOW — a stream maintainer calls this
+      * once at construction, so a later build cannot retarget it.
+      * Throws NoSuchElementException on an empty store.
+      */
+    def pin(dir: String, version: Int): Int =
+      if (version > 0) version
+      else latest(dir).getOrElse(throw new NoSuchElementException(
+        s"no $what versions under $dir"))
+
+    /** Claim the next slot above every slot directory present, visible
+      * or not ([[claimDir]]: exclusive, never below the claim floor).
+      */
+    def claimNext(dir: String): Int =
+      claimDir(dir, n => s"$prefix$n",
+        VersionedSlots.versions(dir, parse).lastOption.getOrElse(0) + 1)
+
+    /** Publish the marker: the version becomes visible. */
+    def publish(dir: String, v: Int, content: String): Unit =
+      publishReplace(path(dir, v).resolve(marker), content)
+
+    def readMarker(dir: String, v: Int): String =
+      Files.readString(path(dir, v).resolve(marker))
+
+    /** [[gcShadowed]] with the marker deleted first. */
+    def gc(dir: String, keepLast: Int = 2,
+           staleUncommittedMs: Long = 24L * 3600 * 1000,
+           nowMs: Long = System.currentTimeMillis): Seq[Int] =
+      gcShadowed(dir, parse, visible, keepLast, Some(marker),
+        staleUncommittedMs, nowMs)
   }
 
   /** The GC tombstone: written into a directory slot BEFORE its
@@ -281,5 +363,44 @@ object VersionedSlots {
         true
       } catch { case e: Exception => onDeleteFailure(v, e); false }
     }.map(_._1)
+  }
+
+  /** '''Batch-id namespace''' of a batch-directory store version (or
+    * epoch): batch 0 is the base a build, compaction or seed writes;
+    * every append — ingest, delete, mutation batch, stream micro-batch
+    * — writes its own `b=<id>` directory with id ≥ 1, wholesale
+    * overwriting on a repeated id. The ids are ONE namespace shared by
+    * the manual appends and the stream maintainers, and
+    * overwrite-on-collision is deliberate: it is what makes checkpoint
+    * REPLAY of a micro-batch exactly-once, so a collision cannot be
+    * detected and failed without breaking restart. A maintainer
+    * ([[maintain]]) owns the contiguous range `[batchIdBase, ∞)`;
+    * manual appends on a stream-maintained version must use ids BELOW
+    * `batchIdBase` (attach a stream to a manually maintained version
+    * with `batchIdBase = committedBatches(...).max + 1`). Mixing ids
+    * across that split silently replaces the other writer's batch.
+    */
+  def requireAppend(batchId: Long): Unit =
+    require(batchId >= 1,
+      s"batchId must be >= 1 (0 is the base batch), got $batchId")
+
+  /** A store maintainer over `stream`: `pin` (the version or epoch
+    * the stream writes to) is evaluated ONCE, here at construction, so
+    * a build, compaction or rotation after the stream starts never
+    * retargets it; micro-batch `n` is appended as store batch
+    * `batchIdBase + n` of the pinned target ([[requireAppend]]'s
+    * namespace; streaming ids start at 0, so the default base of 1
+    * starts right after the base batch). foreachBatch is at-least-once
+    * and every append overwrites its own directory, so the composition
+    * is exactly-once.
+    */
+  def maintain[P](stream: DataFrame, batchIdBase: Long, pin: => P)(
+      append: (DataFrame, P, Long) => Unit): DataStreamWriter[Row] = {
+    require(batchIdBase >= 1,
+      s"batchIdBase must be >= 1 (0 is the base batch), got $batchIdBase")
+    val pinned = pin
+    stream.writeStream.foreachBatch { (batch: DataFrame, n: Long) =>
+      append(batch, pinned, batchIdBase + n)
+    }
   }
 }

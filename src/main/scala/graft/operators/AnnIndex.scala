@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import scala.jdk.CollectionConverters._
 
 import org.json4s.{DefaultFormats, Formats}
@@ -101,16 +99,9 @@ object AnnIndex {
 
   private implicit val formats: Formats = DefaultFormats
 
-  private val VersionDir = "v([0-9]+)".r
+  /** The version slots: `v<N>/`, visible once `model.json` lands. */
+  private[graft] val Versions = VersionedSlots.Dirs("model.json", "ANN index")
 
-  private def parseVersion(name: String): Option[Int] = name match {
-    case VersionDir(v) => Some(v.toInt)
-    case _ => None
-  }
-
-  private def versionPath(dir: String, v: Int) = Paths.get(dir, s"v$v")
-  private def modelPath(dir: String, v: Int) =
-    versionPath(dir, v).resolve("model.json")
   private def codesRoot(dir: String, v: Int) = s"$dir/v$v/codes"
 
   /** The given committed batches of a version's codes table, `b`/`c_id`
@@ -119,17 +110,14 @@ object AnnIndex {
     */
   private def readCodes(spark: SparkSession, dir: String, v: Int,
                         batches: Seq[Long]): DataFrame =
-    graft.plans.StoreReads.parquet(spark,
-      batches.map(b => s"${codesRoot(dir, v)}/b=$b"), Some(codesRoot(dir, v)))
+    graft.plans.StoreReads.batches(spark, codesRoot(dir, v), batches)
 
   /** Versions present in the store, ascending. A version EXISTS only
     * once its `model.json` does — the model is published LAST (and
     * atomically) in [[build]], so a half-written codes table is never
     * visible as a version.
     */
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, parseVersion,
-      visible = p => Files.exists(p.resolve("model.json")))
+  def versions(dir: String): Seq[Int] = Versions.versions(dir)
 
   /** The base + ingested batch ids committed under a version's codes
     * table, ascending ([[VersionedSlots.committedBatches]] — the shared
@@ -141,6 +129,11 @@ object AnnIndex {
     */
   def committedBatches(dir: String, version: Int): Seq[Long] =
     VersionedSlots.committedBatches(codesRoot(dir, version))
+
+  private def batchesOf(dir: String, v: Int,
+                        asOfBatch: Long = Long.MaxValue): Seq[Long] =
+    VersionedSlots.committedUpTo(codesRoot(dir, v), asOfBatch,
+      s"version $v codes table")
 
   /** The codes rows for `corpus` under `model`: (id, cluster id, PQ
     * codes, norm) — frozen-model scan expressions, shared verbatim by
@@ -174,19 +167,9 @@ object AnnIndex {
     codes.repartition(col("c_id"))
       .write.mode("overwrite").partitionBy("c_id")
       .parquet(root)
-    // an EMPTY batch (a compact fold of a fully-tombstoned version, an
-    // empty delete list) writes _SUCCESS but ZERO data files under the
-    // partitioned layout, and a parquet read over file-less directories
-    // cannot infer schema — the committed batch would wedge every
-    // probe/stats/compact that reads it alone. Plant one 0-row
-    // schema-carrying file under the reserved tombstone partition (the
-    // cheap post-write directory check costs no extra job; the 0-row
-    // file is semantically invisible).
-    val wrote = Option(new java.io.File(root).listFiles).exists(
-      _.exists(f => f.isDirectory && f.getName.startsWith("c_id=")))
-    if (!wrote)
-      codes.drop("c_id").limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/c_id=$TombstoneCluster")
+    // an empty batch's schema file goes under the reserved tombstone
+    // partition, where a 0-row file is semantically invisible
+    IndexStore.plantIfEmpty(codes.drop("c_id"), root, "c_id", TombstoneCluster)
   }
 
   /** Train the IVF routing + PQ codebooks on `corpus` and persist both
@@ -258,14 +241,13 @@ object AnnIndex {
       residual = if (residual) Some(true) else None)
     // claim the next version slot atomically (losers retry the next
     // number) — occupied-but-invisible slots are skipped past too
-    val v = VersionedSlots.claimDir(dir, n => s"v$n",
-      VersionedSlots.versions(dir, parseVersion).lastOption.getOrElse(0) + 1)
+    val v = Versions.claimNext(dir)
     // the stored index rows: codes + norm only, partitioned by cluster —
     // a probe reads nprobe cluster directories, never the whole table.
     // The model JSON lands LAST and atomically: its presence is what
     // makes the version visible.
     writeBatch(encodeFrame(corpus, model, idCol, vecCol), dir, v, 0L)
-    VersionedSlots.publishReplace(modelPath(dir, v), Serialization.write(model))
+    Versions.publish(dir, v, Serialization.write(model))
     (model, v)
   }
 
@@ -297,8 +279,8 @@ object AnnIndex {
   def ingest(batch: DataFrame, dir: String, batchId: Long,
              version: Int = -1,
              idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(batchId >= 1, s"batchId must be >= 1 (0 is the build batch), got $batchId")
-    val v = resolveVersion(dir, version)
+    VersionedSlots.requireAppend(batchId)
+    val v = Versions.pin(dir, version)
     writeBatch(encodeFrame(batch, loadModel(dir, v), idCol, vecCol),
       dir, v, batchId)
   }
@@ -336,8 +318,8 @@ object AnnIndex {
     */
   def delete(ids: DataFrame, dir: String, batchId: Long,
              version: Int = -1, idCol: String = "vec_id"): Unit = {
-    require(batchId >= 1, s"batchId must be >= 1 (0 is the build batch), got $batchId")
-    val v = resolveVersion(dir, version)
+    VersionedSlots.requireAppend(batchId)
+    val v = Versions.pin(dir, version)
     val tombs = ids.select(col(idCol),
       lit(TombstoneCluster).as("c_id"),
       lit(null).cast(org.apache.spark.sql.types.ArrayType(
@@ -374,8 +356,8 @@ object AnnIndex {
                      version: Int = -1, opcodeCol: String = "opcode",
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      seqnoCol: Option[String] = None): Unit = {
-    require(batchId >= 1, s"batchId must be >= 1 (0 is the build batch), got $batchId")
-    val v = resolveVersion(dir, version)
+    VersionedSlots.requireAppend(batchId)
+    val v = Versions.pin(dir, version)
     val model = loadModel(dir, v)
     val reduced = seqnoCol match {
       case Some(sq) => feed
@@ -410,37 +392,17 @@ object AnnIndex {
   /** Streaming maintenance of a persisted ANN version: every arriving
     * micro-batch of (id, vector) rows folds in through [[ingest]] —
     * the ANN counterpart of [[graft.streaming.StreamingIndex.maintain]].
-    * foreachBatch is at-least-once; [[ingest]]'s per-batch idempotence
-    * makes the composition exactly-once. The micro-batch id maps to
-    * ingest batch `id + batchIdBase` (streaming ids start at 0; batch 0
-    * is the build's base batch, so the default base of 1 starts the
-    * stream right after it).
-    *
-    * '''Batch-id namespace''': a version's batch ids are ONE namespace
-    * shared by [[ingest]]/[[delete]]/[[applyMutations]] and the stream
-    * maintainers, and overwrite-on-collision is deliberate — it is what
-    * makes checkpoint REPLAY of a micro-batch exactly-once, so a
-    * collision cannot be detected-and-failed without breaking restart.
-    * A maintainer owns the contiguous range `[batchIdBase, ∞)`; manual
-    * mutation batches on a stream-maintained version must use ids BELOW
-    * `batchIdBase` (attach a stream to a manually-maintained version
-    * with `batchIdBase = committedBatches(dir, v).max + 1`). Mixing ids
-    * across that split silently replaces the other writer's batch.
+    * A negative version means "latest at construction"; the pin, batch
+    * ids and exactly-once delivery are [[VersionedSlots.maintain]]'s —
+    * the stream owns `[batchIdBase, ∞)` of the version's batch-id
+    * namespace ([[VersionedSlots.requireAppend]]).
     */
   def maintainStream(stream: DataFrame, dir: String, version: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      batchIdBase: Long = 1L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(batchIdBase >= 1,
-      s"batchIdBase must be >= 1 (0 is the build batch), got $batchIdBase")
-    // pin at CONSTRUCTION: a negative version means "latest NOW", not
-    // "latest at each micro-batch" — re-resolving per batch would let a
-    // concurrent build/compact silently re-target the stream mid-flight
-    // (the hybridSearchStream hazard), stranding every earlier batch in
-    // the old version
-    val pinned = resolveVersion(dir, version)
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      ingest(batch, dir, batchId + batchIdBase, pinned, idCol, vecCol)
+    VersionedSlots.maintain(stream, batchIdBase, Versions.pin(dir, version)) {
+      (batch, v, b) => ingest(batch, dir, b, v, idCol, vecCol)
     }
   }
 
@@ -450,12 +412,10 @@ object AnnIndex {
     * reference's actual shape: its projector consumes one continuous
     * feed where both opcodes arrive in arrival order
     * (`Projector/indexjs.go:123-189`), not separate upsert and delete
-    * channels. foreachBatch at-least-once × per-batch idempotent
-    * overwrite = exactly-once; cross-batch ordering is the micro-batch
-    * sequence itself (batch N+1's events outrank batch N's via
-    * [[latestWins]]), within-batch ordering is `seqnoCol`. Batch-id
-    * namespace rules are [[maintainStream]]'s: this maintainer owns
-    * `[batchIdBase, ∞)`.
+    * channels. Cross-batch ordering is the micro-batch sequence itself
+    * (batch N+1's events outrank batch N's via [[latestWins]]),
+    * within-batch ordering is `seqnoCol`; version pin and batch ids as
+    * in [[maintainStream]].
     */
   def maintainChangeStream(stream: DataFrame, dir: String, version: Int,
                            opcodeCol: String = "opcode",
@@ -464,13 +424,9 @@ object AnnIndex {
                            seqnoCol: Option[String] = Some("seqno"),
                            batchIdBase: Long = 1L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(batchIdBase >= 1,
-      s"batchIdBase must be >= 1 (0 is the build batch), got $batchIdBase")
-    // construction-time pin, as in [[maintainStream]]
-    val pinned = resolveVersion(dir, version)
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyMutations(batch, dir, batchId + batchIdBase, pinned, opcodeCol,
-        idCol, vecCol, seqnoCol)
+    VersionedSlots.maintain(stream, batchIdBase, Versions.pin(dir, version)) {
+      (batch, v, b) =>
+        applyMutations(batch, dir, b, v, opcodeCol, idCol, vecCol, seqnoCol)
     }
   }
 
@@ -521,17 +477,14 @@ object AnnIndex {
     */
   def compact(spark: SparkSession, dir: String, version: Int = -1,
               idCol: String = "vec_id"): Int = {
-    val v = resolveVersion(dir, version)
-    val batches = committedBatches(dir, v)
-    require(batches.nonEmpty, s"version $v has no committed codes batches")
+    val v = Versions.pin(dir, version)
+    val batches = batchesOf(dir, v)
     val folded = latestWins(readCodes(spark, dir, v, batches),
       idCol, batches.length)
       .select(col(idCol), col("c_id"), col("codes"), col("nrm"))
-    val nv = VersionedSlots.claimDir(dir, n => s"v$n",
-      VersionedSlots.versions(dir, parseVersion).lastOption.getOrElse(0) + 1)
+    val nv = Versions.claimNext(dir)
     writeBatch(folded, dir, nv, 0L)
-    VersionedSlots.publishReplace(modelPath(dir, nv),
-      Files.readString(modelPath(dir, v)))
+    Versions.publish(dir, nv, Versions.readMarker(dir, v))
     nv
   }
 
@@ -585,11 +538,10 @@ object AnnIndex {
               idCol: String = "vec_id", vecCol: String = "embedding",
               twoLevelThreshold: Int = 64, coarseProbes: Int = -1,
               residual: Option[Boolean] = None): (Model, Int) = {
-    val v = resolveVersion(dir, version)
+    val v = Versions.pin(dir, version)
     val src = loadModel(dir, v)
     def inherit(arg: Int, fromModel: Int) = if (arg > 0) arg else fromModel
-    val batches = committedBatches(dir, v)
-    require(batches.nonEmpty, s"version $v has no committed codes batches")
+    val batches = batchesOf(dir, v)
     val live = latestWins(readCodes(spark, dir, v, batches),
       idCol, batches.length).select(col(idCol))
     // shared lazy checkpoint ([[stats]]/[[probe]] discipline): the
@@ -633,10 +585,7 @@ object AnnIndex {
   def gcShadowed(dir: String, keepLast: Int = 2,
                  staleUncommittedMs: Long = 24L * 3600 * 1000,
                  nowMs: Long = System.currentTimeMillis): Seq[Int] =
-    VersionedSlots.gcShadowed(dir, parseVersion,
-      visible = p => Files.exists(p.resolve("model.json")),
-      keepLast = keepLast, marker = Some("model.json"),
-      staleUncommittedMs = staleUncommittedMs, nowMs = nowMs)
+    Versions.gc(dir, keepLast, staleUncommittedMs, nowMs)
 
   /** Store STATISTICS for a pinned version over the RESOLVED state
     * (latest-batch-wins) — the ANN tier's `idx_stats`/`bm25Stats`
@@ -651,9 +600,8 @@ object AnnIndex {
   def stats(spark: SparkSession, dir: String,
             version: Int = -1,
             idCol: String = "vec_id"): DataFrame = {
-    val v = resolveVersion(dir, version)
-    val batches = committedBatches(dir, v)
-    require(batches.nonEmpty, s"version $v has no committed codes batches")
+    val v = Versions.pin(dir, version)
+    val batches = batchesOf(dir, v)
     val all = readCodes(spark, dir, v, batches)
     // the SHARED winners resolver ([[winnersOf]] — the exact view
     // probes resolve); latestWins drops tombstone winners, stats counts
@@ -689,20 +637,15 @@ object AnnIndex {
   def encodeWith(corpus: DataFrame, dir: String, version: Int = -1,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame =
-    encodeFrame(corpus, loadModel(dir, resolveVersion(dir, version)),
+    encodeFrame(corpus, loadModel(dir, Versions.pin(dir, version)),
       idCol, vecCol)
 
   /** Load a pinned version's model (immutable). */
   def loadModel(dir: String, version: Int): Model =
-    Serialization.read[Model](Files.readString(modelPath(dir, version)))
+    Serialization.read[Model](Versions.readMarker(dir, version))
 
   /** The newest visible version, if any. */
-  def latestVersion(dir: String): Option[Int] = versions(dir).lastOption
-
-  private def resolveVersion(dir: String, version: Int): Int =
-    if (version > 0) version
-    else latestVersion(dir).getOrElse(throw new NoSuchElementException(
-      s"no ANN index versions under $dir"))
+  def latestVersion(dir: String): Option[Int] = Versions.latest(dir)
 
   private def route(model: Model)(vecC: Column, kk: Int): Column =
     VectorOps.nearestCentroids(vecC, model.fineArr, model.coarseArr,
@@ -793,7 +736,7 @@ object AnnIndex {
             broadcastQ: Boolean = true,
             excluded: Option[DataFrame] = None,
             asOfBatch: Long = Long.MaxValue): DataFrame = {
-    val v = resolveVersion(dir, version)
+    val v = Versions.pin(dir, version)
     if (broadcastQ)
       scoreRouted(spark, dir, v, routeQueries(spark, dir, queries, nprobe, v),
         corpus, k, rerank, idCol, vecCol, allowed, excluded, asOfBatch)
@@ -854,8 +797,8 @@ object AnnIndex {
     */
   def routeQueries(spark: SparkSession, dir: String, queries: DataFrame,
                    nprobe: Int, version: Int = -1): Routed = {
-    val v = resolveVersion(dir, version)
-    val json = Files.readString(modelPath(dir, v))
+    val v = Versions.pin(dir, version)
+    val json = Versions.readMarker(dir, v)
     val model = Serialization.read[Model](json)
     val routedQ = queries.select(col("q_id"), col("q_vec"),
       VectorOps.norm(col("q_vec")).as("__qn"),
@@ -888,8 +831,8 @@ object AnnIndex {
                   allowed: Option[DataFrame] = None,
                   excluded: Option[DataFrame] = None,
                   asOfBatch: Long = Long.MaxValue): DataFrame = {
-    val v = resolveVersion(dir, version)
-    require(fingerprint(Files.readString(modelPath(dir, v))) ==
+    val v = Versions.pin(dir, version)
+    require(fingerprint(Versions.readMarker(dir, v)) ==
       routed.modelFingerprint,
       s"queries routed against v${routed.version} cannot probe v$v under " +
         s"$dir: v$v carries a different model (route them against v$v)")
@@ -914,8 +857,7 @@ object AnnIndex {
                           allowed: Option[DataFrame],
                           excluded: Option[DataFrame],
                           asOfBatch: Long): DataFrame = {
-    val batches = committedBatches(dir, v).filter(_ <= asOfBatch)
-    require(batches.nonEmpty, s"version $v has no committed codes batches")
+    val batches = batchesOf(dir, v, asOfBatch)
     val scanned = (probed :+ TombstoneCluster).map(Integer.valueOf)
     val rawCodes = readCodes(spark, dir, v, batches)
       .filter(col("c_id").isin(scanned.toIndexedSeq: _*))

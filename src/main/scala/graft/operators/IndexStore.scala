@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -32,32 +30,15 @@ object IndexStore {
             numFiles: Int = 8): Unit = {
     val keys = index.columns.filter(c => c != "docid" && c != "part").toSeq
     val sortCols = (keys :+ "docid").map(col)
-    // an EMPTY index under the partitionBy('part') layouts writes
-    // _SUCCESS but zero data files, and a parquet read over file-less
-    // directories cannot infer schema — a committed-but-empty segment
-    // (e.g. the compact fold of a fully-tombstoned store) would wedge
-    // every reader. Plant one 0-row schema-carrying file under part=0.
-    // (The range/single layouts write plain files, which carry schema
-    // even at zero rows.)
-    def plantIfEmpty(): Unit = {
-      val listed = Option(new java.io.File(path).listFiles)
-      // listFiles is null for URI-form / non-local paths — that is NOT
-      // evidence the write was empty, and planting on it would
-      // destructively overwrite part=0 of a real index; only a real
-      // listing showing zero part= dirs plants the schema file
-      val provenEmpty = listed.exists(
-        !_.exists(f => f.isDirectory && f.getName.startsWith("part=")))
-      if (provenEmpty)
-        index.limit(0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/part=0")
-    }
+    // the range/single layouts write plain files, which carry schema
+    // even at zero rows; the part= layouts need [[plantIfEmpty]]
     defn.partition match {
       case HashPartition(pkeys, n) =>
         index.withColumn("part", pmod(hash(pkeys.map(col): _*), lit(n)))
           .repartition(col("part"))
           .sortWithinPartitions(sortCols: _*)
           .write.mode("overwrite").partitionBy("part").parquet(path)
-        plantIfEmpty()
+        plantIfEmpty(index, path, "part", 0)
       case KeyPartition(n) =>
         // a primary index has no secondary keys — its key is the docid
         // (hash() with zero args fails analysis)
@@ -66,7 +47,7 @@ object IndexStore {
           .repartition(col("part"))
           .sortWithinPartitions(sortCols: _*)
           .write.mode("overwrite").partitionBy("part").parquet(path)
-        plantIfEmpty()
+        plantIfEmpty(index, path, "part", 0)
       case RangePartition(pkeys, n) =>
         // honor the declared partition keys; fall back to the full sort
         // order when the spec leaves them empty
@@ -79,6 +60,25 @@ object IndexStore {
           .sortWithinPartitions(sortCols: _*)
           .write.mode("overwrite").parquet(path)
     }
+  }
+
+  /** After a `partitionBy(partCol)` write of `rows` to `path`: an EMPTY
+    * write leaves `_SUCCESS` but zero data files, and a parquet read over
+    * file-less directories cannot infer schema — a committed-but-empty
+    * batch (the compact fold of a fully-tombstoned store, an empty delete
+    * list) would wedge every reader. Plant one 0-row schema-carrying file
+    * under `partCol=value` (no extra job for a non-empty write). Only a
+    * real listing showing zero partition directories plants: `listFiles`
+    * is null for URI-form / non-local paths, which is no evidence of an
+    * empty write, and planting there would overwrite a real partition.
+    */
+  private[graft] def plantIfEmpty(rows: DataFrame, path: String,
+                                  partCol: String, value: Int): Unit = {
+    val provenEmpty = Option(new java.io.File(path).listFiles).exists(
+      !_.exists(f => f.isDirectory && f.getName.startsWith(s"$partCol=")))
+    if (provenEmpty)
+      rows.limit(0).coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/$partCol=$value")
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -117,19 +117,14 @@ object IndexStore {
       funcName: Option[String] = None)
 
   private implicit val formats: Formats = DefaultFormats
-  private val VersionDir = "v([0-9]+)".r
-  private def parseVersion(name: String): Option[Int] = name match {
-    case VersionDir(v) => Some(v.toInt)
-    case _ => None
-  }
+  /** The version slots: `v<N>/`, visible once `def.json` lands. */
+  private val Versions = VersionedSlots.Dirs("def.json", "index")
 
   /** Visible versions under a versioned index store, ascending — a
     * version exists only once its `def.json` marker does (published LAST
     * by [[buildVersioned]]), the [[graft.operators.AnnIndex]] contract.
     */
-  def versionsOf(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, parseVersion,
-      visible = p => Files.exists(p.resolve("def.json")))
+  def versionsOf(dir: String): Seq[Int] = Versions.versions(dir)
 
   /** Build `defn` over `source` and persist it as the NEXT immutable
     * version under `dir` — the engine's core object (the scalar index,
@@ -143,43 +138,38 @@ object IndexStore {
                      catalog: graft.functions.FunctionCatalog =
                        new graft.functions.FunctionCatalog,
                      numFiles: Int = 8): Int = {
-    val v = VersionedSlots.claimDir(dir, n => s"v$n",
-      versionsOf(dir).lastOption.getOrElse(0) + 1)
+    val v = Versions.claimNext(dir)
     // buildEntries, not build: write() re-establishes the layout, so
     // build's own sortAndPartition pass would be computed and discarded
     // (for SinglePartition: the whole build through one coalesce task)
     write(IndexBuilder.buildEntries(source, defn, catalog),
       s"$dir/v$v/entries", defn, numFiles)
-    VersionedSlots.publishReplace(Paths.get(dir, s"v$v", "def.json"),
-      Serialization.write(StoredDef(defn.name, defn.source, defn.docidExpr,
-        defn.secExprs, defn.whereExpr, defn.desc, defn.isPrimary,
-        defn.isArrayIndex, defn.funcName)))
+    Versions.publish(dir, v, Serialization.write(StoredDef(defn.name,
+      defn.source, defn.docidExpr, defn.secExprs, defn.whereExpr, defn.desc,
+      defn.isPrimary, defn.isArrayIndex, defn.funcName)))
     v
   }
 
   /** A pinned version's entries. */
   def readVersion(spark: SparkSession, dir: String, version: Int): DataFrame =
-    spark.read.parquet(s"$dir/v$version/entries")
+    graft.plans.StoreReads.parquet(spark, Seq(s"$dir/v$version/entries"))
 
   /** A pinned version's definition (immutable). */
   def loadDef(dir: String, version: Int): IndexDef = {
-    val d = Serialization.read[StoredDef](
-      Files.readString(Paths.get(dir, s"v$version", "def.json")))
+    val d = Serialization.read[StoredDef](Versions.readMarker(dir, version))
     IndexDef(d.name, d.source, d.docidExpr, secExprs = d.secExprs,
       funcName = d.funcName, whereExpr = d.whereExpr, desc = d.desc,
       isPrimary = d.isPrimary, isArrayIndex = d.isArrayIndex)
   }
 
   /** The newest visible version, if any. */
-  def latestVersion(dir: String): Option[Int] = versionsOf(dir).lastOption
+  def latestVersion(dir: String): Option[Int] = Versions.latest(dir)
 
   /** Explicit version GC ([[VersionedSlots.gcShadowed]], marker-first
     * decommission via `def.json`). Returns the versions deleted.
     */
   def gcVersioned(dir: String, keepLast: Int = 2): Seq[Int] =
-    VersionedSlots.gcShadowed(dir, parseVersion,
-      visible = p => Files.exists(p.resolve("def.json")),
-      keepLast = keepLast, marker = Some("def.json"))
+    Versions.gc(dir, keepLast)
 
   /** Persist a table clustered by a Z-ORDER key over `dims`
     * ([[graft.functions.ZOrder]]): range-partitioned and sorted by the

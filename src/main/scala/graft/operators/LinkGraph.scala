@@ -56,7 +56,7 @@ object LinkGraph {
     */
   def ingest(edges: DataFrame, ref: EpochStore.Ref,
              batchId: Long): Unit = {
-    require(batchId >= 1, "batch 0 is the seed; waves start at 1")
+    graft.functions.VersionedSlots.requireAppend(batchId)
     EpochStore.writeBatch(edges.select("src", "dst").distinct(),
       ref, EdgesTable, batchId)
   }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -80,25 +78,17 @@ object Retrieval {
 
   private implicit val formats: Formats = DefaultFormats
 
-  private val VersionDir = "v([0-9]+)".r
+  /** The version slots: `v<N>/`, visible once `bm25.json` lands. */
+  private[graft] val Versions = VersionedSlots.Dirs("bm25.json", "BM25 index")
 
-  private def parseVersion(name: String): Option[Int] = name match {
-    case VersionDir(v) => Some(v.toInt)
-    case _ => None
-  }
-
-  private def markerPath(dir: String, v: Int) =
-    Paths.get(dir, s"v$v", "bm25.json")
   private def postingsRoot(dir: String, v: Int) = s"$dir/v$v/postings"
   private def docstatsRoot(dir: String, v: Int) = s"$dir/v$v/docstats"
 
   /** Visible store versions, ascending (`bm25.json` published last). */
-  def versionsOf(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, parseVersion,
-      visible = p => Files.exists(p.resolve("bm25.json")))
+  def versionsOf(dir: String): Seq[Int] = Versions.versions(dir)
 
   /** The newest visible version, if any. */
-  def latestVersion(dir: String): Option[Int] = versionsOf(dir).lastOption
+  def latestVersion(dir: String): Option[Int] = Versions.latest(dir)
 
   /** The base + ingested batch ids committed under a version, ascending
     * (the doc-stats sidecar is the authority: every mutation batch —
@@ -111,9 +101,7 @@ object Retrieval {
     * decommission). Returns the versions deleted.
     */
   def gcShadowed(dir: String, keepLast: Int = 2): Seq[Int] =
-    VersionedSlots.gcShadowed(dir, parseVersion,
-      visible = p => Files.exists(p.resolve("bm25.json")),
-      keepLast = keepLast, marker = Some("bm25.json"))
+    Versions.gc(dir, keepLast)
 
   private def bm25Def(idCol: String, nPartitions: Int): IndexDef =
     IndexDef("idx_bm25_postings", "documents", idCol,
@@ -123,7 +111,7 @@ object Retrieval {
       partition = HashPartition(Seq("key"), nPartitions))
 
   private def loadLayout(dir: String, v: Int): Bm25Layout =
-    Serialization.read[Bm25Layout](Files.readString(markerPath(dir, v)))
+    Serialization.read[Bm25Layout](Versions.readMarker(dir, v))
 
   /** The postings partition a term hashes to — the SAME arithmetic the
     * store layout writes with ([[IndexStore.write]]'s
@@ -194,11 +182,9 @@ object Retrieval {
   def buildBm25Index(docs: DataFrame, dir: String,
                      textCol: String = "text", idCol: String = "doc_id",
                      nPartitions: Int = 16): Int = {
-    val v = VersionedSlots.claimDir(dir, n => s"v$n",
-      VersionedSlots.versions(dir, parseVersion).lastOption.getOrElse(0) + 1)
+    val v = Versions.claimNext(dir)
     writeBatch(docs, dir, v, 0L, textCol, idCol, nPartitions)
-    VersionedSlots.publishReplace(markerPath(dir, v),
-      Serialization.write(Bm25Layout(nPartitions)))
+    Versions.publish(dir, v, Serialization.write(Bm25Layout(nPartitions)))
     v
   }
 
@@ -212,8 +198,8 @@ object Retrieval {
   def ingestBm25(batch: DataFrame, dir: String, batchId: Long,
                  version: Int = -1, textCol: String = "text",
                  idCol: String = "doc_id"): Unit = {
-    require(batchId >= 1, s"batchId must be >= 1 (0 is the build batch), got $batchId")
-    val v = resolveVersion(dir, version)
+    VersionedSlots.requireAppend(batchId)
+    val v = Versions.pin(dir, version)
     writeBatch(batch, dir, v, batchId, textCol, idCol,
       loadLayout(dir, v).nPartitions)
   }
@@ -235,8 +221,8 @@ object Retrieval {
     */
   def deleteBm25(ids: DataFrame, dir: String, batchId: Long,
                  version: Int = -1, idCol: String = "doc_id"): Unit = {
-    require(batchId >= 1, s"batchId must be >= 1 (0 is the build batch), got $batchId")
-    val v = resolveVersion(dir, version)
+    VersionedSlots.requireAppend(batchId)
+    val v = Versions.pin(dir, version)
     val nP = loadLayout(dir, v).nPartitions
     val spark = ids.sparkSession
     val empty = spark.createDataFrame(
@@ -254,45 +240,39 @@ object Retrieval {
   /** Streaming maintenance of a persisted BM25 version: every arriving
     * micro-batch of (doc_id, text) rows folds in through [[ingestBm25]]
     * — the retrieval-tier counterpart of [[AnnIndex.maintainChangeStream]].
-    * foreachBatch is at-least-once; the per-batch idempotent overwrite
-    * makes the composition exactly-once. The micro-batch id maps to
-    * ingest batch `id + batchIdBase` (streaming ids start at 0; batch 0
-    * is the build's base batch, so the default base of 1 starts the
-    * stream right after it).
-    *
-    * '''Batch-id namespace''': a version's batch ids are ONE namespace
-    * shared by [[ingestBm25]], [[deleteBm25]] and this maintainer, and
-    * overwrite-on-collision is deliberate — it is what makes checkpoint
-    * REPLAY of a micro-batch exactly-once, so a collision cannot be
-    * detected-and-failed without breaking restart. The maintainer
-    * therefore owns the contiguous range `[batchIdBase, ∞)`; manual
-    * mutation batches on a stream-maintained version must use ids BELOW
-    * `batchIdBase` (pass a base above any existing committed batch when
-    * attaching a stream to a manually-maintained version:
-    * `committedBatches(dir, v).max + 1`). Mixing ids across that split
-    * silently replaces the other writer's batch.
+    * The version pin, batch ids and exactly-once delivery are
+    * [[VersionedSlots.maintain]]'s — the stream owns
+    * `[batchIdBase, ∞)` of the version's batch-id namespace, which it
+    * shares with [[ingestBm25]] and [[deleteBm25]]
+    * ([[VersionedSlots.requireAppend]]).
     */
   def maintainBm25Stream(stream: DataFrame, dir: String, version: Int,
                          textCol: String = "text",
                          idCol: String = "doc_id",
                          batchIdBase: Long = 1L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(batchIdBase >= 1,
-      s"batchIdBase must be >= 1 (0 is the build batch), got $batchIdBase")
-    // construction-time pin ([[AnnIndex.maintainStream]] discipline): a
-    // negative version must not re-resolve to "latest" on every
-    // micro-batch, or a concurrent build/compact re-targets the stream
-    // mid-flight and strands the earlier batches
-    val pinned = resolveVersion(dir, version)
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      ingestBm25(batch, dir, batchId + batchIdBase, pinned, textCol, idCol)
+    VersionedSlots.maintain(stream, batchIdBase, Versions.pin(dir, version)) {
+      (batch, v, b) => ingestBm25(batch, dir, b, v, textCol, idCol)
     }
   }
 
-  private def resolveVersion(dir: String, version: Int): Int =
-    if (version > 0) version
-    else latestVersion(dir).getOrElse(throw new NoSuchElementException(
-      s"no BM25 index versions under $dir"))
+  private def batchesOf(dir: String, v: Int,
+                        asOfBatch: Long = Long.MaxValue): Seq[Long] =
+    VersionedSlots.committedUpTo(docstatsRoot(dir, v), asOfBatch,
+      s"version $v")
+
+  /** The postings rows of the given batches, `b` and `part` as columns. */
+  private def postings(spark: SparkSession, dir: String, v: Int,
+                       batches: Seq[Long]): DataFrame =
+    graft.plans.StoreReads.batches(spark, postingsRoot(dir, v), batches)
+
+  /** Postings rows from each doc's WINNING batch only (latest-batch-wins;
+    * a tombstoned doc has no live row), joined with the resolved
+    * doc-stats (`dl`). `post` keys on docid and carries `b`.
+    */
+  private def winning(post: DataFrame, live: DataFrame): DataFrame =
+    post.join(live, "docid").filter(col("b") === col("__wb"))
+      .drop("b", "__wb")
 
   /** The resolved doc-stats view of a version: each docid's row from its
     * highest committed batch, tombstones dropped — (docid, dl, __wb =
@@ -302,9 +282,8 @@ object Retrieval {
     */
   private def resolvedDocstats(spark: SparkSession, dir: String, v: Int,
                                batches: Seq[Long]): DataFrame = {
-    val ds = spark.read
-      .option("basePath", docstatsRoot(dir, v))
-      .parquet(batches.map(b => s"${docstatsRoot(dir, v)}/b=$b"): _*)
+    val ds = graft.plans.StoreReads.batches(spark, docstatsRoot(dir, v),
+      batches)
     val win =
       if (batches.length <= 1)
         ds.withColumn("__wb", lit(batches.head)).drop("b")
@@ -316,40 +295,25 @@ object Retrieval {
     win.filter(col("dl").isNotNull)
   }
 
-  /** Top-k BM25 over a pinned version's postings: (doc_id, n_hit,
-    * score_micro, rk) — the same output contract as
-    * [[TextOps.bm25TopK]], computed from the store alone (the layout
-    * comes from the version's own marker, never from the caller).
-    * Multi-batch versions resolve upserts/deletes latest-batch-wins via
-    * the doc-stats sidecar.
-    */
-  /** `allowed` (optional): the metadata-constrained query — top-k among
-    * the docids in the one-column frame only. Corpus statistics (N,
-    * Σdl, df) stay CORPUS-WIDE — the standard engine semantics: a
-    * tenant/date filter restricts which documents may answer, not what
-    * the terms mean — so an allowed doc's score is identical with or
-    * without the filter, and the filter applies to scored candidates
-    * BEFORE the top-k (every allowed candidate is scored; selectivity
-    * cannot starve the k slots).
-    */
   /** The shared probe→score pipeline of [[bm25TopKFromIndex]] and
     * [[bm25TopKBatchFromIndex]]: resolve the version, statically prune
     * the postings read to the terms' partitions (the probed ids resolve
     * driver-side with the layout's own hash — one 1-row job over
     * literal terms, control-plane), reduce to winning-batch tf rows
-    * (latest-batch-wins; a tombstoned doc has no live row), and build
-    * the `TextOps.bm25TopK`-structured partial (micro-rounded before
-    * the long sum — the cross-engine exactness discipline). Returns
-    * (tf, dfreq, stats, partial). Shared BY REFERENCE: the single-query
-    * and batched scorers' parity contract is one piece of arithmetic,
-    * not two copies that can drift.
+    * (latest-batch-wins; a tombstoned doc has no live row), and score
+    * each (doc, term) row with the `TextOps.bm25TopK`-structured partial
+    * `__sc` (micro-rounded before the long sum — the cross-engine
+    * exactness discipline). `allowed` gates CANDIDATES (a semi-join on
+    * the pruned tf rows — ∝ probed candidates, never the corpus) while
+    * the term statistics stay corpus-wide. Shared BY REFERENCE: the
+    * single-query and batched scorers' parity contract is one piece of
+    * arithmetic, not two copies that can drift.
     */
   private def scoredTf(spark: SparkSession, dir: String,
                        terms: Seq[String], k1: Double, b: Double,
-                       version: Int,
-                       asOfBatch: Option[Long] = None)
-      : (DataFrame, DataFrame, DataFrame, org.apache.spark.sql.Column) = {
-    val v = resolveVersion(dir, version)
+                       version: Int, allowed: Option[DataFrame],
+                       asOfBatch: Long): DataFrame = {
+    val v = Versions.pin(dir, version)
     val nPartitions = loadLayout(dir, v).nPartitions
     // asOfBatch = snapshot isolation for probes racing a streaming
     // retry ([[AnnIndex.probe]]'s contract): a replayed micro-batch
@@ -357,15 +321,9 @@ object Retrieval {
     // that listed b=N before the overwrite would hit FILE_NOT_EXIST
     // mid-scan; capping the batch set at a caller-captured ceiling
     // keeps the probe on directories no retry will touch
-    val batches = {
-      val all = committedBatches(dir, v)
-      asOfBatch.fold(all)(a => all.filter(_ <= a))
-    }
-    require(batches.nonEmpty, s"version $v has no committed batches")
+    val batches = batchesOf(dir, v, asOfBatch)
     val parts = terms.map(termPartition(_, nPartitions)).distinct.sorted
-    val post = spark.read
-      .option("basePath", postingsRoot(dir, v))
-      .parquet(batches.map(b0 => s"${postingsRoot(dir, v)}/b=$b0"): _*)
+    val post = postings(spark, dir, v, batches)
       .filter(col("part").isin(parts.map(Integer.valueOf): _*) &&
         col("key").isin(terms: _*))
     // shared lazy checkpoint ([[AnnIndex.stats]]'s barrier) on the
@@ -381,9 +339,7 @@ object Retrieval {
       resolvedDocstats(spark, dir, v, batches))
     val tfRaw = post.groupBy("docid", "key", "b")
       .agg(count(lit(1)).as("__tf"))
-    val tf = tfRaw.join(live, "docid")
-      .filter(col("b") === col("__wb"))
-      .drop("b", "__wb")
+    val tf = winning(tfRaw, live)
     val dfreq = tf.groupBy("key").agg(count(lit(1)).cast("long").as("__df"))
     val stats = live.agg(count(lit(1)).cast("long").as("__n"),
       sum("dl").as("__tot"))
@@ -394,29 +350,41 @@ object Retrieval {
     val partial = round(idf * (tfD * lit(k1 + 1)) /
       (tfD + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / avgdl))) *
       lit(1e6)).cast("long")
-    (tf, dfreq, stats, partial)
+    allowed.fold(tf)(ids => tf.join(
+        ids.select(col(ids.columns.head).as("docid")), Seq("docid"),
+        "left_semi"))
+      .join(broadcast(dfreq), "key")
+      .crossJoin(broadcast(stats))
+      .withColumn("__sc", partial)
   }
 
+  /** Top-k BM25 over a pinned version's postings: (doc_id, n_hit,
+    * score_micro, rk) — the same output contract as
+    * [[TextOps.bm25TopK]], computed from the store alone (the layout
+    * comes from the version's own marker, never from the caller).
+    * Multi-batch versions resolve upserts/deletes latest-batch-wins via
+    * the doc-stats sidecar.
+    *
+    * `allowed` (optional): the metadata-constrained query — top-k among
+    * the docids in the one-column frame only. Corpus statistics (N,
+    * Σdl, df) stay CORPUS-WIDE — the standard engine semantics: a
+    * tenant/date filter restricts which documents may answer, not what
+    * the terms mean — so an allowed doc's score is identical with or
+    * without the filter, and the filter applies to scored candidates
+    * BEFORE the top-k (every allowed candidate is scored; selectivity
+    * cannot starve the k slots).
+    */
   def bm25TopKFromIndex(spark: SparkSession, dir: String,
                         terms: Seq[String], k: Int,
                         k1: Double = 1.2, b: Double = 0.75,
                         version: Int = -1,
                         allowed: Option[DataFrame] = None,
-                        asOfBatch: Option[Long] = None): DataFrame = {
+                        asOfBatch: Long = Long.MaxValue): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     require(terms.distinct == terms, "query terms must be distinct")
     require(k >= 1, "k must be >= 1")
-    val (tf, dfreq, stats, partial) =
-      scoredTf(spark, dir, terms, k1, b, version, asOfBatch)
-    // the allowed-id restriction gates CANDIDATES (semi-join on the
-    // pruned tf rows — ∝ probed candidates, never the corpus); stats
-    // above were already taken corpus-wide
-    val tfA = allowed.fold(tf)(ids =>
-      tf.join(ids.select(col(ids.columns.head).as("docid")),
-        Seq("docid"), "left_semi"))
-    val scored = tfA.join(broadcast(dfreq), "key")
-      .crossJoin(broadcast(stats))
-      .withColumn("__sc", partial)
+    val scored = scoredTf(spark, dir, terms, k1, b, version, allowed,
+        asOfBatch)
       .groupBy("docid")
       .agg(count(lit(1)).cast("int").as("n_hit"),
         sum("__sc").as("score_micro"))
@@ -446,7 +414,7 @@ object Retrieval {
                              k1: Double = 1.2, b: Double = 0.75,
                              version: Int = -1,
                              allowed: Option[DataFrame] = None,
-                             asOfBatch: Option[Long] = None): DataFrame = {
+                             asOfBatch: Long = Long.MaxValue): DataFrame = {
     require(k >= 1, "k must be >= 1")
     // lazy checkpoint BEFORE the driver-side collect ([[AnnIndex.probe]]
     // discipline): the frame is evaluated once here and re-joined below —
@@ -464,19 +432,10 @@ object Retrieval {
       return queries.select(col("q_id"),
         lit(0L).as("doc_id"), lit(0).cast("int").as("n_hit"),
         lit(0L).as("score_micro"), lit(0).cast("int").as("rk")).limit(0)
-    val (tf, dfreq, stats, partial) =
-      scoredTf(spark, dir, terms, k1, b, version, asOfBatch)
-    // [[bm25TopKFromIndex]]'s pre-filter semantics, per query: the
-    // allowed-id set gates CANDIDATES (semi-join on the pruned tf rows)
-    // while dfreq/stats stay corpus-wide — the tenant filter restricts
-    // who may answer, never what the terms mean
-    val tfA = allowed.fold(tf)(ids =>
-      tf.join(ids.select(col(ids.columns.head).as("docid")),
-        Seq("docid"), "left_semi"))
-    val scored = tfA.join(broadcast(dfreq), "key")
-      .crossJoin(broadcast(stats))
+    // [[bm25TopKFromIndex]]'s pre-filter semantics, per query
+    val scored = scoredTf(spark, dir, terms, k1, b, version, allowed,
+        asOfBatch)
       .join(broadcast(qterms), "key") // fan out per referencing query
-      .withColumn("__sc", partial)
       .groupBy("q_id", "docid")
       .agg(count(lit(1)).cast("int").as("n_hit"),
         sum("__sc").as("score_micro"))
@@ -501,20 +460,15 @@ object Retrieval {
   def phraseMatches(spark: SparkSession, dir: String, phrase: Seq[String],
                     version: Int = -1): DataFrame = {
     require(phrase.length >= 2, "a phrase needs at least two tokens")
-    val v = resolveVersion(dir, version)
+    val v = Versions.pin(dir, version)
     val nPartitions = loadLayout(dir, v).nPartitions
-    val batches = committedBatches(dir, v)
-    require(batches.nonEmpty, s"version $v has no committed batches")
+    val batches = batchesOf(dir, v)
     val uniq = phrase.distinct
     val parts = uniq.map(termPartition(_, nPartitions)).distinct.sorted
-    val post = spark.read
-      .option("basePath", postingsRoot(dir, v))
-      .parquet(batches.map(b => s"${postingsRoot(dir, v)}/b=$b"): _*)
+    val post = postings(spark, dir, v, batches)
       .filter(col("part").isin(parts.map(Integer.valueOf): _*) &&
         col("key").isin(uniq: _*))
-    val live = resolvedDocstats(spark, dir, v, batches)
-    val resolved = post.join(live.select("docid", "__wb"), "docid")
-      .filter(col("b") === col("__wb"))
+    val resolved = winning(post, resolvedDocstats(spark, dir, v, batches))
       .select("key", "pos", "docid")
     val legs = phrase.zipWithIndex.map { case (t, i) =>
       resolved.filter(col("key") === t)
@@ -539,16 +493,10 @@ object Retrieval {
     */
   def bm25Stats(spark: SparkSession, dir: String,
                 version: Int = -1): DataFrame = {
-    val v = resolveVersion(dir, version)
-    val batches = committedBatches(dir, v)
-    require(batches.nonEmpty, s"version $v has no committed batches")
+    val v = Versions.pin(dir, version)
+    val batches = batchesOf(dir, v)
     val live = resolvedDocstats(spark, dir, v, batches)
-    val post = spark.read
-      .option("basePath", postingsRoot(dir, v))
-      .parquet(batches.map(b => s"${postingsRoot(dir, v)}/b=$b"): _*)
-    val resolved = post.join(live.select("docid", "__wb"), "docid")
-      .filter(col("b") === col("__wb"))
-    resolved.agg(
+    winning(postings(spark, dir, v, batches), live).agg(
         count_distinct(col("key")).cast("long").as("n_terms"),
         count(lit(1)).cast("long").as("n_postings"))
       .crossJoin(broadcast(live.agg(
@@ -569,25 +517,18 @@ object Retrieval {
     * postings. Returns the new version.
     */
   def compactBm25(spark: SparkSession, dir: String, version: Int = -1): Int = {
-    val v = resolveVersion(dir, version)
+    val v = Versions.pin(dir, version)
     val layout = loadLayout(dir, v)
-    val batches = committedBatches(dir, v)
-    require(batches.nonEmpty, s"version $v has no committed batches")
+    val batches = batchesOf(dir, v)
     val live = resolvedDocstats(spark, dir, v, batches)
-    val post = spark.read
-      .option("basePath", postingsRoot(dir, v))
-      .parquet(batches.map(b => s"${postingsRoot(dir, v)}/b=$b"): _*)
-    val folded = post.join(live.select(col("docid"), col("__wb")), "docid")
-      .filter(col("b") === col("__wb"))
+    val folded = winning(postings(spark, dir, v, batches), live)
       .select("key", "pos", "docid")
-    val nv = VersionedSlots.claimDir(dir, n => s"v$n",
-      VersionedSlots.versions(dir, parseVersion).lastOption.getOrElse(0) + 1)
+    val nv = Versions.claimNext(dir)
     IndexStore.write(folded, s"${postingsRoot(dir, nv)}/b=0",
       bm25Def("docid", layout.nPartitions))
     live.select("docid", "dl")
       .write.mode("overwrite").parquet(s"${docstatsRoot(dir, nv)}/b=0")
-    VersionedSlots.publishReplace(markerPath(dir, nv),
-      Files.readString(markerPath(dir, v)))
+    Versions.publish(dir, nv, Versions.readMarker(dir, v))
     nv
   }
 
@@ -728,7 +669,7 @@ object Retrieval {
                         idCol: String = "vec_id",
                         vecCol: String = "embedding",
                         allowed: Option[DataFrame] = None,
-                        bm25AsOf: Option[Long] = None,
+                        bm25AsOf: Long = Long.MaxValue,
                         annAsOf: Long = Long.MaxValue): DataFrame = {
     val bm = bm25TopKBatchFromIndex(spark, bm25Dir,
         queries.select("q_id", "terms"), kLeg, version = bm25Version,
@@ -773,20 +714,13 @@ object Retrieval {
                          idCol: String = "vec_id",
                          vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // `> 0`, matching resolveVersion's convention: version 0 is not a
-    // valid slot number, and letting it through would resolve to 0
-    // downstream, which resolveVersion treats as "latest at probe
-    // time" — silently unpinning the stream every micro-batch.
+    // version 0 is not a valid slot number; `Dirs.pin` would read it as
+    // "latest now", which silently repins a caller that meant a slot
     require(bm25Version != 0 && annVersion != 0,
       "index version 0 is invalid (versions are 1-based; pass a " +
         "negative value to pin to the latest at construction)")
-    val bv = if (bm25Version > 0) bm25Version
-      else latestVersion(bm25Dir).getOrElse(throw new NoSuchElementException(
-        s"no BM25 index versions under $bm25Dir"))
-    val av = if (annVersion > 0) annVersion
-      else AnnIndex.latestVersion(annDir).getOrElse(
-        throw new NoSuchElementException(
-          s"no ANN index versions under $annDir"))
+    val bv = Versions.pin(bm25Dir, bm25Version)
+    val av = AnnIndex.Versions.pin(annDir, annVersion)
     // snapshot ceilings captured at CONSTRUCTION alongside the version
     // pins: a probe must never list a batch directory a concurrent
     // maintainer's retry could overwrite mid-scan (the
@@ -801,7 +735,7 @@ object Retrieval {
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(hybridSearchBatch(spark, bm25Dir, annDir, batch, corpus,
         k, kLeg, nprobe, rerank, bv, av, idCol, vecCol,
-        bm25AsOf = Some(bmAsOf), annAsOf = annAsOf), batchId)
+        bm25AsOf = bmAsOf, annAsOf = annAsOf), batchId)
     }
   }
 }

@@ -232,6 +232,28 @@ object WebpCodec {
     * the container spec (even-padded).
     */
   def decodeWebp(payload: Array[Byte]): Image = {
+    val (cc, at, size) = findChunk(payload, Seq("VP8L", "VP8 "))
+    if (cc == "VP8L") decodeVp8l(payload, at, size)
+    else yuvToRgb(Vp8Codec.decode(payload, at, at + size))
+  }
+
+  /** Walk the RIFF container to the `VP8 ` chunk and decode the YUV
+    * planes themselves — the exact-pixel surface the lossy feature
+    * queries consume (no color-conversion policy in the contract).
+    */
+  def decodeLossyYuv(payload: Array[Byte]): Vp8Codec.Yuv = {
+    val (_, at, size) = findChunk(payload, Seq("VP8 "))
+    Vp8Codec.decode(payload, at, at + size)
+  }
+
+  /** The RIFF chunk walk every entry point shares: the first chunk whose
+    * fourcc is in `wanted`, as (fourcc, payload offset, payload size).
+    * Other chunks (VP8X, ICCP, EXIF, …) are skipped per the container
+    * spec (even-padded); a chunk overrunning the container, or none of
+    * `wanted` present, is a `webp`/`malformed` rejection.
+    */
+  private def findChunk(payload: Array[Byte],
+                        wanted: Seq[String]): (String, Int, Int) = {
     if (payload.length < 12 || fourcc(payload, 0) != "RIFF" ||
         fourcc(payload, 8) != "WEBP")
       fail("not a RIFF/WEBP container")
@@ -243,34 +265,10 @@ object WebpCodec {
       // rejection, not wrap negative past it
       if (size < 0 || at.toLong + 8 + size > payload.length)
         fail("chunk overruns container")
-      if (cc == "VP8L")
-        return decodeVp8l(payload, at + 8, size)
-      if (cc == "VP8 ")
-        return yuvToRgb(Vp8Codec.decode(payload, at + 8, at + 8 + size))
+      if (wanted.contains(cc)) return (cc, at + 8, size)
       at += 8 + size + (size & 1) // chunks are even-padded
     }
-    fail("no VP8L or VP8 chunk")
-  }
-
-  /** Walk the RIFF container to the `VP8 ` chunk and decode the YUV
-    * planes themselves — the exact-pixel surface the lossy feature
-    * queries consume (no color-conversion policy in the contract).
-    */
-  def decodeLossyYuv(payload: Array[Byte]): Vp8Codec.Yuv = {
-    if (payload.length < 12 || fourcc(payload, 0) != "RIFF" ||
-        fourcc(payload, 8) != "WEBP")
-      fail("not a RIFF/WEBP container")
-    var at = 12
-    while (at + 8 <= payload.length) {
-      val cc = fourcc(payload, at)
-      val size = le32(payload, at + 4)
-      if (size < 0 || at.toLong + 8 + size > payload.length)
-        fail("chunk overruns container")
-      if (cc == "VP8 ")
-        return Vp8Codec.decode(payload, at + 8, at + 8 + size)
-      at += 8 + size + (size & 1)
-    }
-    fail("no VP8 chunk")
+    fail(s"no ${wanted.map(_.trim).mkString(" or ")} chunk")
   }
 
   /** The YUV 4:2:0 → RGB policy for [[Image]] consumers: BT.601
@@ -308,29 +306,20 @@ object WebpCodec {
     */
   def sniffDims(payload: Array[Byte]): Option[(Int, Int)] =
     scala.util.Try {
-      if (fourcc(payload, 0) != "RIFF" || fourcc(payload, 8) != "WEBP")
-        fail("not webp")
-      var at = 12
-      var dims: Option[(Int, Int)] = None
-      while (dims.isEmpty && at + 8 <= payload.length) {
-        val cc = fourcc(payload, at)
-        val size = le32(payload, at + 4)
-        if (size < 0 || at.toLong + 8 + size > payload.length)
-          fail("truncated")
-        if (cc == "VP8L") {
-          if (size < 5) fail("short vp8l")
-          val br = new LsbBits(payload, at + 8, at + 8 + size, "vp8l")
-          if (br.readBits(8) != 0x2f)
-            fail("bad vp8l signature")
-          dims = Some((br.readBits(14) + 1, br.readBits(14) + 1))
-        } else at += 8 + size + (size & 1)
-      }
-      dims.getOrElse(fail("no VP8L"))
+      val (_, at, size) = findChunk(payload, Seq("VP8L"))
+      if (size < 5) fail("short vp8l")
+      val br = new LsbBits(payload, at, at + size, "vp8l")
+      if (br.readBits(8) != 0x2f)
+        fail("bad vp8l signature")
+      (br.readBits(14) + 1, br.readBits(14) + 1)
     }.toOption
 
   // ------------------------------------------------------------ VP8L
 
   private val HashMul = 0x1e35a7bd
+
+  /** Raster cap: 8 bytes per pixel (ARGB ints + RGBA out) ≤ 512 MiB. */
+  private val maxPixels = 1 << 26
 
   private def decodeVp8l(data: Array[Byte], off: Int, len: Int): Image = {
     if (len < 5) vp8l("short chunk")
@@ -339,6 +328,11 @@ object WebpCodec {
       vp8l("bad signature byte")
     val width = br.readBits(14) + 1
     val height = br.readBits(14) + 1
+    // the raster is allocated before a pixel is decoded (and a
+    // single-symbol prefix code reads zero bits), so the header alone
+    // must not be able to ask for gigabytes
+    if (width.toLong * height > maxPixels)
+      vp8l(s"${width}x$height is past the $maxPixels-pixel cap")
     br.readBit() // alpha-is-used hint
     if (br.readBits(3) != 0)
       vp8l("unknown version")

@@ -24,6 +24,16 @@ object StoreReads {
       .fold(reader.parquet(paths: _*))(reader.schema(_).parquet(paths: _*))
   }
 
+  /** The batch directories `b=<id>` of one store table under `root`, as
+    * one frame — the committed-batch read of every batch-directory
+    * store. `withBatch` reads with `root` as the base path, so `b` (and
+    * any partition directories below it) become columns.
+    */
+  def batches(spark: SparkSession, root: String, ids: Seq[Long],
+              withBatch: Boolean = true): DataFrame =
+    parquet(spark, ids.map(b => s"$root/b=$b"),
+      if (withBatch) Some(root) else None)
+
   /** The data schema `spark.read.parquet(paths: _*)` infers, without the
     * Spark job that inference runs: Spark's row schema from the footer of
     * the file its non-merging inference picks — the first data file in

@@ -720,7 +720,7 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
     // epoch-0 ingest of wave 1: screened against the seed base (that
     // output is epoch-0's, not under test here) + sigs accumulated
     sd.spanIngestBatch(s, ref0, all.filter(col("doc_id") % 10 === 7),
-      batchId = 0L, k = 8, textCol = "text", idCol = "doc_id",
+      batchId = 1L, k = 8, textCol = "text", idCol = "doc_id",
       hashKind = "xx")
     val ref1 = sd.rotateSpanStore(s, dir)
     Dedup.duplicatedSpansAgainstSigs(

@@ -66,14 +66,28 @@ object WarcGz {
     * bytes — is too).
     */
   def members(bytes: Array[Byte]): IndexedSeq[Array[Byte]] = {
+    val (ms, fault) = membersUntilReject(bytes)
+    fault.foreach(throw _)
+    ms
+  }
+
+  /** [[members]] without the throw: the members decoded before the
+    * first malformed one, and that member's rejection (None when the
+    * whole buffer decoded) — the per-row form a scan expression needs,
+    * so one broken archive does not fail a job.
+    */
+  def membersUntilReject(bytes: Array[Byte])
+      : (IndexedSeq[Array[Byte]], Option[Reject]) = {
     val out = IndexedSeq.newBuilder[Array[Byte]]
     var at = 0
-    while (at < bytes.length) {
-      val (payload, next) = member(bytes, at)
-      out += payload
-      at = next
-    }
-    out.result()
+    try {
+      while (at < bytes.length) {
+        val (payload, next) = member(bytes, at)
+        out += payload
+        at = next
+      }
+      (out.result(), None)
+    } catch { case r: Reject => (out.result(), Some(r)) }
   }
 
   /** Exactly ONE gzip member consuming the whole buffer — the shape an

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.VersionedSlots
+import graft.plans.StoreReads
 
 /** Epoch-versioned multi-table parquet store — the shared lifecycle
   * layer under the streaming dedup stores
@@ -55,17 +54,10 @@ object EpochStore {
     */
   final case class Ref(root: String, epoch: Int)
 
-  private val EpochDir = "e=([0-9]+)".r
-  private val parseEpoch: String => Option[Int] = {
-    // Try: a foreign 'e=99999999999' directory (copy artifact,
-    // external tooling) must be ignored, not crash every listing
-    case EpochDir(e) => scala.util.Try(e.toInt).toOption
-    case _ => None
-  }
+  /** The epoch slots: `e=<N>/`, committed once `_COMMITTED` lands. */
+  private val Epochs =
+    VersionedSlots.Dirs("_COMMITTED", "committed epoch", prefix = "e=")
 
-  private def epochPath(root: String, e: Int) = Paths.get(root, s"e=$e")
-  private def marker(root: String, e: Int) =
-    epochPath(root, e).resolve("_COMMITTED")
   private def tableRoot(ref: Ref, table: String) =
     s"${ref.root}/e=${ref.epoch}/$table"
 
@@ -73,13 +65,11 @@ object EpochStore {
     * its `_COMMITTED` marker does — the marker is written last by
     * [[commit]]/[[rotate]]).
     */
-  def epochs(root: String): Seq[Int] =
-    VersionedSlots.versions(root, parseEpoch,
-      visible = p => Files.exists(p.resolve("_COMMITTED")))
+  def epochs(root: String): Seq[Int] = Epochs.versions(root)
 
   /** The newest committed epoch pinned as a [[Ref]]. */
   def current(root: String): Ref =
-    Ref(root, epochs(root).lastOption.getOrElse(throw new NoSuchElementException(
+    Ref(root, Epochs.latest(root).getOrElse(throw new NoSuchElementException(
       s"no committed epochs under $root — seed the store first")))
 
   /** Claim the next epoch number exclusively (concurrent
@@ -87,33 +77,31 @@ object EpochStore {
     * number). The claimed epoch is INVISIBLE until [[commit]].
     */
   def claimNext(root: String): Ref = {
-    val from = VersionedSlots.versions(root, parseEpoch)
-      .lastOption.getOrElse(-1) + 1
     // claimDir floors at slot 1; epoch numbering starts at 0, so claim
     // the initial epoch directly (exclusive createDirectory all the
     // same) — but only when no claim floor fences it (a swept crashed
     // epoch-0 claim must not have its number reused)
-    if (from == 0 && VersionedSlots.claimFloor(root) <= 0) {
+    if (VersionedSlots.versions(root, Epochs.parse).isEmpty &&
+        VersionedSlots.claimFloor(root) <= 0) {
       try {
-        Files.createDirectories(Paths.get(root))
-        Files.createDirectory(epochPath(root, 0))
+        Files.createDirectories(java.nio.file.Paths.get(root))
+        Files.createDirectory(Epochs.path(root, 0))
         VersionedSlots.raiseFloor(root, 1)
         return Ref(root, 0)
       } catch { case _: java.nio.file.FileAlreadyExistsException => }
     }
-    Ref(root, VersionedSlots.claimDir(root, n => s"e=$n", math.max(from, 1)))
+    Ref(root, Epochs.claimNext(root))
   }
 
   /** Publish the epoch's `_COMMITTED` marker — written LAST, after every
     * table's base batch, so a visible epoch is always complete.
     */
-  def commit(ref: Ref): Unit =
-    VersionedSlots.publishReplace(marker(ref.root, ref.epoch), "")
+  def commit(ref: Ref): Unit = Epochs.publish(ref.root, ref.epoch, "")
 
   /** Write `df` as the table's batch directory — wholesale overwrite, so
     * a retried batch id is idempotent (never appends). Batch 0 is the
-    * epoch's frozen base (seed or rotation fold); streaming appends use
-    * ids ≥ 1.
+    * epoch's frozen base (seed or rotation fold); appends use ids ≥ 1
+    * ([[VersionedSlots.requireAppend]]'s namespace).
     */
   def writeBatch(df: DataFrame, ref: Ref, table: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"${tableRoot(ref, table)}/b=$batchId")
@@ -134,20 +122,21 @@ object EpochStore {
   /** One batch directory of the table. */
   def readBatch(spark: SparkSession, ref: Ref, table: String,
                 batchId: Long): DataFrame =
-    spark.read.parquet(s"${tableRoot(ref, table)}/b=$batchId")
+    StoreReads.batches(spark, tableRoot(ref, table), Seq(batchId),
+      withBatch = false)
+
+  private def committedOf(ref: Ref, table: String): Seq[Long] =
+    VersionedSlots.committedUpTo(tableRoot(ref, table), Long.MaxValue,
+      s"table $table under ${ref.root} e=${ref.epoch}")
 
   /** Every committed batch of the table, base included — what a
     * growing-store probe reads
     * ([[StreamingDedup.nearDupIngestStore]] semantics) and what
     * [[rotate]] folds.
     */
-  def readAll(spark: SparkSession, ref: Ref, table: String): DataFrame = {
-    val dirs = committedBatches(ref, table)
-      .map(b => s"${tableRoot(ref, table)}/b=$b")
-    require(dirs.nonEmpty,
-      s"table $table has no committed batches under ${ref.root} e=${ref.epoch}")
-    spark.read.parquet(dirs: _*)
-  }
+  def readAll(spark: SparkSession, ref: Ref, table: String): DataFrame =
+    StoreReads.batches(spark, tableRoot(ref, table), committedOf(ref, table),
+      withBatch = false)
 
   /** [[readAll]] with BATCH PROVENANCE: the `b=` partition column
     * surfaces as `__b`. What a latest-wins resolution over re-carried
@@ -155,15 +144,9 @@ object EpochStore {
     * rows are indistinguishable.
     */
   def readAllWithBatch(spark: SparkSession, ref: Ref,
-                       table: String): DataFrame = {
-    val dirs = committedBatches(ref, table)
-      .map(b => s"${tableRoot(ref, table)}/b=$b")
-    require(dirs.nonEmpty,
-      s"table $table has no committed batches under ${ref.root} e=${ref.epoch}")
-    spark.read.option("basePath", tableRoot(ref, table))
-      .parquet(dirs: _*)
+                       table: String): DataFrame =
+    StoreReads.batches(spark, tableRoot(ref, table), committedOf(ref, table))
       .withColumnRenamed("b", "__b")
-  }
 
   /** Every committed batch of the table across ALL committed epochs —
     * what [[rotate]] folds. Folding one epoch would be wrong under a
@@ -181,7 +164,7 @@ object EpochStore {
     }
     require(dirs.nonEmpty,
       s"table $table has no committed batches under any epoch of $root")
-    spark.read.parquet(dirs: _*)
+    StoreReads.parquet(spark, dirs)
   }
 
   /** [[readAllEpochs]] with FULL provenance (`__e` epoch, `__b` batch)
@@ -194,8 +177,7 @@ object EpochStore {
       val ref = Ref(root, e)
       val bs = committedBatches(ref, table)
       if (bs.isEmpty) None
-      else Some(spark.read.option("basePath", tableRoot(ref, table))
-        .parquet(bs.map(b => s"${tableRoot(ref, table)}/b=$b"): _*)
+      else Some(StoreReads.batches(spark, tableRoot(ref, table), bs)
         .withColumnRenamed("b", "__b")
         .withColumn("__e", org.apache.spark.sql.functions.lit(e)))
     }
@@ -258,8 +240,5 @@ object EpochStore {
   def gc(root: String, keepLast: Int = 2,
          staleUncommittedMs: Long = 24L * 3600 * 1000,
          nowMs: Long = System.currentTimeMillis): Seq[Int] =
-    VersionedSlots.gcShadowed(root, parseEpoch,
-      visible = p => Files.exists(p.resolve("_COMMITTED")),
-      keepLast = keepLast, marker = Some("_COMMITTED"),
-      staleUncommittedMs = staleUncommittedMs, nowMs = nowMs)
+    Epochs.gc(root, keepLast, staleUncommittedMs, nowMs)
 }

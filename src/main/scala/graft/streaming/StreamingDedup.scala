@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextOps
+import graft.functions.{TextOps, VersionedSlots}
 
 /** Streaming exact deduplication: the arrival-time form of
   * [[graft.operators.Dedup.exact]]. Each micro-batch folds into the
@@ -70,7 +70,8 @@ object StreamingDedup {
     *   1. the batch's hashed-shingle and bucket rows (computed ONCE —
     *      the shingle/signature pass is the dominant per-batch cost)
     *      land in the store first as the batch's OWN committed
-    *      directories (`b=<batchId+1>`, wholesale overwrite — a retried
+    *      directories (`b=<batchIdBase+n>` for micro-batch n,
+    *      [[VersionedSlots.maintain]]; wholesale overwrite — a retried
     *      micro-batch rewrites them and can never double-append, so
     *      foreachBatch's at-least-once delivery composes to
     *      exactly-once, the [[StreamingIndex]] `v=<batch>` idempotence
@@ -117,8 +118,6 @@ object StreamingDedup {
                          hashKind: String = "xx",
                          batchIdBase: Long = 1L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(batchIdBase >= 1,
-      s"batchIdBase must be >= 1 (0 is the seeded base), got $batchIdBase")
     // a store seeded with DIFFERENT minhash parameters never errors on
     // its own — bucket hashes simply stop colliding and recall silently
     // drops to ~zero; validate against the seed-time sidecar when one
@@ -130,11 +129,9 @@ object StreamingDedup {
             shingleN, hashKind)} — a parameter mismatch silently " +
           "disables dedup (no bucket ever collides)")
     }
-    val ref = EpochStore.current(storeDir) // pinned for the stream's life
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      nearDupIngestBatch(spark, ref, batch, batchId + batchIdBase - 1,
-        threshold, numHashes, bands, shingleN, maxBucket, textCol, idCol,
-        hashKind)
+    VersionedSlots.maintain(stream, batchIdBase, EpochStore.current(storeDir)) {
+      (batch, ref, b) => nearDupIngestBatch(spark, ref, batch, b, threshold,
+        numHashes, bands, shingleN, maxBucket, textCol, idCol, hashKind)
     }
   }
 
@@ -159,20 +156,22 @@ object StreamingDedup {
     }
   }
 
-  /** One micro-batch of [[nearDupIngestStore]] — factored out so the
-    * retry-idempotence contract is directly testable: calling this twice
-    * with the same `batchId` (a foreachBatch retry after a lost ack)
-    * leaves the store and the pair set bit-identical.
+  /** One micro-batch of [[nearDupIngestStore]], written as store batch
+    * `batchId` (≥ 1) — factored out so the retry-idempotence contract is
+    * directly testable: calling this twice with the same `batchId` (a
+    * foreachBatch retry after a lost ack) leaves the store and the pair
+    * set bit-identical.
     */
   private[graft] def nearDupIngestBatch(
       spark: org.apache.spark.sql.SparkSession, ref: EpochStore.Ref,
       batch: DataFrame, batchId: Long, threshold: Double, numHashes: Int,
       bands: Int, shingleN: Int, maxBucket: Int,
       textCol: String, idCol: String, hashKind: String): Unit = {
+    VersionedSlots.requireAppend(batchId)
     val (sets, buckets) = graft.operators.Dedup.minhashStoreTables(
       batch, numHashes, bands, shingleN, textCol, idCol, hashKind)
-    EpochStore.writeBatch(sets, ref, "sigs", batchId + 1)
-    EpochStore.writeBatch(buckets, ref, "buckets", batchId + 1)
+    EpochStore.writeBatch(sets, ref, "sigs", batchId)
+    EpochStore.writeBatch(buckets, ref, "buckets", batchId)
     // sigs read WITH batch provenance: the probe verifies every
     // candidate id against its NEWEST content (latest-wins on __b), so
     // a re-carried id cannot fan pairs out against stale shingles
@@ -181,7 +180,7 @@ object StreamingDedup {
         EpochStore.readAllWithBatch(spark, ref, "sigs"),
         EpochStore.readAll(spark, ref, "buckets"),
         buckets, threshold, maxBucket),
-      ref, "pairs", batchId + 1)
+      ref, "pairs", batchId)
   }
 
   /** Seed a near-dup [[EpochStore]] with the standing corpus's signature
@@ -257,7 +256,7 @@ object StreamingDedup {
     *      and lands per-doc coverage rows as its own committed
     *      `coverage` batch directory;
     *   2. lands its own distinct window fingerprints as its own
-    *      `spansigs` batch directory (`b=<batchId+1>`) — the
+    *      `spansigs` batch directory (`b=<batchIdBase+n>`) — the
     *      accumulation [[rotateSpanStore]] folds into the next epoch's
     *      frozen base when the corpus snapshot is cut.
     *
@@ -280,32 +279,30 @@ object StreamingDedup {
                       idCol: String = "doc_id", hashKind: String = "xx",
                       batchIdBase: Long = 1L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(batchIdBase >= 1,
-      s"batchIdBase must be >= 1 (0 is the seeded base), got $batchIdBase")
-    val ref = EpochStore.current(storeDir) // pinned for the stream's life
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      spanIngestBatch(spark, ref, batch, batchId + batchIdBase - 1, k,
-        textCol, idCol, hashKind)
+    VersionedSlots.maintain(stream, batchIdBase, EpochStore.current(storeDir)) {
+      (batch, ref, b) =>
+        spanIngestBatch(spark, ref, batch, b, k, textCol, idCol, hashKind)
     }
   }
 
-  /** One micro-batch of [[spanIngestStore]] — factored out so the
-    * retry-idempotence contract is directly testable: calling this twice
-    * with the same `batchId` leaves coverage and accumulated sigs
-    * bit-identical.
+  /** One micro-batch of [[spanIngestStore]], written as store batch
+    * `batchId` (≥ 1) — factored out so the retry-idempotence contract is
+    * directly testable: calling this twice with the same `batchId`
+    * leaves coverage and accumulated sigs bit-identical.
     */
   private[graft] def spanIngestBatch(
       spark: org.apache.spark.sql.SparkSession, ref: EpochStore.Ref,
       batch: DataFrame, batchId: Long, k: Int,
       textCol: String, idCol: String, hashKind: String): Unit = {
+    VersionedSlots.requireAppend(batchId)
     EpochStore.writeBatch(
       graft.operators.Dedup.duplicatedSpansAgainstSigs(
         EpochStore.readBase(spark, ref, "spansigs"),
         batch, k, textCol, idCol, hashKind),
-      ref, "coverage", batchId + 1)
+      ref, "coverage", batchId)
     EpochStore.writeBatch(
       graft.operators.Dedup.spanStoreSigs(batch, k, textCol, hashKind),
-      ref, "spansigs", batchId + 1)
+      ref, "spansigs", batchId)
   }
 
   /** Seed a span [[EpochStore]]: the corpus's distinct window
@@ -370,7 +367,7 @@ object StreamingDedup {
     *      broadcasts) for each row's nearest live neighbor, and hands
     *      the (id, nn_id, sim, is_dup) verdicts to `sink`;
     *   2. ingests its own vectors under the FROZEN model as its own
-    *      idempotent `b=<batchIdBase+batchId>` codes directory
+    *      idempotent `b=<batchIdBase+n>` codes directory
     *      ([[graft.operators.AnnIndex.ingest]] — a retried batch
     *      wholesale-overwrites it), so LATER batches dedup against it.
     *
@@ -390,9 +387,9 @@ object StreamingDedup {
     * `vectors` resolves candidate ids to exact vectors for the re-rank;
     * a superset of the store's live ids is fine (the join is gated by
     * the shortlist). The model version is pinned ONCE at stream
-    * construction, like [[nearDupIngestStore]]'s epoch pin; per the
-    * [[graft.operators.AnnIndex.maintainChangeStream]] contract the
-    * stream owns batch ids `[batchIdBase, ∞)` of that version.
+    * construction, like [[nearDupIngestStore]]'s epoch pin; the stream
+    * owns batch ids `[batchIdBase, ∞)` of that version
+    * ([[VersionedSlots.maintain]]); `sink` receives the micro-batch id.
     */
   def semanticIngestStore(spark: org.apache.spark.sql.SparkSession,
                           storeDir: String, stream: DataFrame,
@@ -403,16 +400,10 @@ object StreamingDedup {
                           vecCol: String = "embedding", version: Int = -1,
                           batchIdBase: Long = 1L)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(batchIdBase >= 1,
-      s"batchIdBase must be >= 1 (0 is the build batch), got $batchIdBase")
-    val v = if (version > 0) version // pinned once at construction
-      else graft.operators.AnnIndex.latestVersion(storeDir).getOrElse(
-        throw new NoSuchElementException(
-          s"no ANN index versions under $storeDir"))
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(semanticIngestBatch(spark, storeDir, batch,
-        batchIdBase + batchId, vectors, threshold, nprobe, rerank,
-        idCol, vecCol, v), batchId)
+    VersionedSlots.maintain(stream, batchIdBase,
+        graft.operators.AnnIndex.Versions.pin(storeDir, version)) {
+      (batch, v, b) => sink(semanticIngestBatch(spark, storeDir, batch, b,
+        vectors, threshold, nprobe, rerank, idCol, vecCol, v), b - batchIdBase)
     }
   }
 

@@ -198,6 +198,13 @@ class CodecFuzzSpec extends AnyFunSuite {
       "ISO-8859-1")
     pinned("pdf", pdf.replaceFirst("xref\\n0 \\d+", "xref\n0 870000000000")
       .getBytes("ISO-8859-1"))
+    // WebP lossless: a 1×1 stream of single-symbol codes (zero bits per
+    // pixel) whose header claims 16384² — rejected before the raster
+    // is allocated, not after a gigabyte of it
+    val webp = WebpCodec.encodeWebpLossless(1, 1, Seq(WebpCodec.Lit(0xFF102030)))
+    val hdr = webp.indexOfSlice(ascii("VP8L")) + 9 // past fourcc, size, 0x2f
+    pinned("vp8l", webp.updated(hdr, 0xFF.toByte).updated(hdr + 1, 0xFF.toByte)
+      .updated(hdr + 2, 0xFF.toByte).updated(hdr + 3, (webp(hdr + 3) | 0x0F).toByte))
   }
 
   test("every seed decodes cleanly") {

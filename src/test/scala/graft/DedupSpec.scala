@@ -316,7 +316,7 @@ class DedupSpec extends SparkSpec {
     val ndRef = StreamingDedup.seedNearDupStore(
       nd, sets, Dedup.guardBuckets(buckets, 64))
     def ingestNd(): Unit = StreamingDedup.nearDupIngestBatch(
-      spark, ndRef, arrival, batchId = 0L, threshold = 0.5, numHashes = 64,
+      spark, ndRef, arrival, batchId = 1L, threshold = 0.5, numHashes = 64,
       bands = 16, shingleN = 3, maxBucket = 64, textCol = "text",
       idCol = "doc_id", hashKind = "xx")
     ingestNd()
@@ -334,7 +334,7 @@ class DedupSpec extends SparkSpec {
     val spRef = StreamingDedup.seedSpanStore(sp,
       Dedup.spanStoreSigs(corpus, k = 8))
     def ingestSp(): Unit = StreamingDedup.spanIngestBatch(
-      spark, spRef, arrival, batchId = 0L, k = 8, textCol = "text",
+      spark, spRef, arrival, batchId = 1L, k = 8, textCol = "text",
       idCol = "doc_id", hashKind = "xx")
     ingestSp()
     val cov1 = EpochStore.readAll(spark, spRef, "coverage").collect().toSet
@@ -362,7 +362,7 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_sprotate").toString
     val ref0 = StreamingDedup.seedSpanStore(dir,
       Dedup.spanStoreSigs(corpus, k = 8))
-    StreamingDedup.spanIngestBatch(spark, ref0, wave1, batchId = 0L, k = 8,
+    StreamingDedup.spanIngestBatch(spark, ref0, wave1, batchId = 1L, k = 8,
       textCol = "text", idCol = "doc_id", hashKind = "xx")
     val ref1 = StreamingDedup.rotateSpanStore(spark, dir)
     assert(ref1.epoch == ref0.epoch + 1)
@@ -397,7 +397,7 @@ class DedupSpec extends SparkSpec {
     val (sets, buckets) = Dedup.minhashStoreTables(corpus)
     val ref0 = StreamingDedup.seedNearDupStore(
       dir, sets, Dedup.guardBuckets(buckets, 64))
-    StreamingDedup.nearDupIngestBatch(spark, ref0, arrival, batchId = 0L,
+    StreamingDedup.nearDupIngestBatch(spark, ref0, arrival, batchId = 1L,
       threshold = 0.5, numHashes = 64, bands = 16, shingleN = 3,
       maxBucket = 64, textCol = "text", idCol = "doc_id", hashKind = "xx")
     val pairsBefore = EpochStore.readAll(spark, ref0, "pairs")
@@ -442,11 +442,11 @@ class DedupSpec extends SparkSpec {
       StreamingDedup.nearDupIngestBatch(spark, ref, df, batchId = b,
         threshold = 0.5, numHashes = 64, bands = 16, shingleN = 3,
         maxBucket = 64, textCol = "text", idCol = "doc_id", hashKind = "xx")
-    ingest(ref0, Seq((100L, base + " again")).toDF("doc_id", "text"), 0L)
+    ingest(ref0, Seq((100L, base + " again")).toDF("doc_id", "text"), 1L)
     // rotation happens WHILE the stream stays pinned to e=0 ...
     StreamingDedup.compactNearDupStore(spark, dir)
     // ... and the pinned stream appends another batch to the OLD epoch
-    ingest(ref0, Seq((200L, base + " once more")).toDF("doc_id", "text"), 1L)
+    ingest(ref0, Seq((200L, base + " once more")).toDF("doc_id", "text"), 2L)
     // the NEXT rotation must carry the post-rotation batch forward
     val ref2 = StreamingDedup.compactNearDupStore(spark, dir)
     val ids = EpochStore.readAll(spark, ref2, "sigs").select("id")
@@ -731,11 +731,11 @@ class DedupSpec extends SparkSpec {
       graft.streaming.StreamingDedup.nearDupIngestBatch(spark, ref,
         rows.toDF("doc_id", "text"), batchId, 0.5, 64, 16, 3, 64,
         "text", "doc_id", "xx")
-    ingest(0L, (42L, t1)) // 42 arrives similar to the base doc
-    ingest(1L, (42L, t2)) // 42 REFETCHED with unrelated content
+    ingest(1L, (42L, t1)) // 42 arrives similar to the base doc
+    ingest(2L, (42L, t2)) // 42 REFETCHED with unrelated content
     // 99 duplicates 42's OLD content: it must NOT pair with 42 (whose
     // live content is t2), only with doc 1 (the standing base)
-    ingest(2L, (99L, t1))
+    ingest(3L, (99L, t1))
     val pairs = graft.streaming.EpochStore.readAll(spark, ref, "pairs")
       .select("id_a", "id_b", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

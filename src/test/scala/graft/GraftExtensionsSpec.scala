@@ -228,12 +228,39 @@ class GraftExtensionsSpec extends SparkSpec {
         |  graft_warc_parse(m.member).warc_type AS t,
         |  graft_warc_parse(m.member).status AS st
         |FROM gz_src
-        |LATERAL VIEW graft_warc_gz_members(content) m AS member_idx, member
+        |LATERAL VIEW graft_warc_gz_members(content) m AS member_idx, member, err
         |ORDER BY member_idx""".stripMargin).collect()
     assert(rows.length == 3)
     assert(rows(0).getString(1) == "response" && rows(0).getInt(2) == 200)
     assert(rows(1).getString(1) == "warcinfo" && rows(1).isNullAt(2))
     assert(rows(2).isNullAt(1), "garbage member parses to NULL")
+  }
+
+  test("warc_gz_members: a malformed archive yields the members before " +
+      "the fault and a named err row, not a failed job") {
+    import graft.sources.{WarcCodec, WarcGz}
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val recs = Seq(WarcCodec.encodeInfo("software: graft\r\n".getBytes("US-ASCII")),
+      WarcCodec.encodeResponse("http://a.com/p", 200, "text/html",
+        "<html><body>hi</body></html>".getBytes("UTF-8")))
+    val good = WarcGz.encodeMembers(recs)
+    val cut = good.dropRight(3) // the last member's trailer loses 3 bytes
+    val members = GraftBridge.column(graft.functions.WarcGzMembersExpr(
+      GraftBridge.expression(col("content"))))
+    val rows = Seq((1, good), (2, cut)).toDF("file", "content")
+      .select(col("file"), members).orderBy("file", "member_idx").collect()
+    val byFile = rows.groupBy(_.getInt(0))
+    assert(byFile(1).map(_.getAs[Array[Byte]]("member").toSeq).toSeq ==
+      recs.map(_.toSeq))
+    assert(byFile(1).forall(_.isNullAt(3)))
+    val bad = byFile(2)
+    assert(bad.length == 2)
+    assert(bad(0).getAs[Array[Byte]]("member").toSeq == recs.head.toSeq &&
+      bad(0).isNullAt(3))
+    assert(bad(1).getInt(1) == 1 && bad(1).isNullAt(2))
+    assert(bad(1).getString(3) == "warc.gz: malformed: truncated gzip trailer")
   }
 
   test("graft_pdf_text: extraction and named rejection over SQL") {

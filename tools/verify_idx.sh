@@ -17,6 +17,11 @@
 #                  and zst sources and streams, PDF text, the pixel,
 #                  resize, TIFF, WebP, GIF, JPEG, MP3 and AAC decoders,
 #                  multimodal pipeline)
+#   store          the queries over the versioned batch stores outside
+#                  ANN (BM25 postings: indexed, incremental, batched,
+#                  stats, phrase, fusion; the streaming-dedup and
+#                  frontier epoch stores; the link graph; SQL-built
+#                  scalar-index versions)
 #
 # sfDir defaults to $SPARK_GRAFT_SF_DIR, else $HOME/testdata/sf0.01; outDir
 # to a fresh temporary directory. Exits non-zero unless every query of the
@@ -25,13 +30,14 @@ set -euo pipefail
 
 root="$(cd "$(dirname "$0")/.." && pwd)"
 set_name=idx
-if [[ "${1:-}" == idx || "${1:-}" == ann || "${1:-}" == codec ]]; then
+if [[ "${1:-}" == idx || "${1:-}" == ann || "${1:-}" == codec || "${1:-}" == store ]]; then
   set_name="$1"
   shift
 fi
 case "$set_name" in
   idx) queries=idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup ;;
   ann) queries=sim_ann_persisted,sim_ann_ingest,sim_ann_upsert,sim_ann_delete,sim_ann_filtered,sim_ann_residual,sim_ann_retrain,sim_ann_stats,sim_ann_stream_maintain,ann_build_sql,text_hybrid_search,text_hybrid_batch,text_hybrid_filtered,text_hybrid_stream,hybrid_search_sql,hybrid_batch_sql,pipeline_multimodal ;;
+  store) queries=text_bm25_indexed,text_bm25_incremental,text_bm25_queries,text_bm25_stats,text_phrase_search,text_rrf_fusion,dedup_streaming_neardup,dedup_streaming_spans,dedup_span_rotate,dedup_semantic_stream,pipeline_frontier_store,pipeline_pagerank,pipeline_pagerank_incremental,idx_build_sql ;;
   codec) queries=source_warc_gz,source_warc_http,source_warc_zst,pipeline_warc_gz_stream,pipeline_crawl_mixed,text_extract_pdf,pipeline_pretrain_pdf,multimodal_pixels,multimodal_resize,multimodal_tiff,multimodal_webp,multimodal_webp_lossy,multimodal_gif,multimodal_jpeg,multimodal_mp3,multimodal_aac,pipeline_multimodal ;;
 esac
 sf="${1:-${SPARK_GRAFT_SF_DIR:-$HOME/testdata/sf0.01}}"
