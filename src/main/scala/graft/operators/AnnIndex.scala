@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Des
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DoubleType, IntegerType, LongType, MapType, StructField, StructType}
 
 import graft.functions.{VectorOps, VersionedSlots}
 
@@ -342,10 +342,10 @@ object AnnIndex {
     * is given the batch is first reduced to each id's NEWEST event
     * (change feeds re-carry hot ids within one batch; the winner must
     * be the latest, not an arbitrary partition order) — one window over
-    * the BATCH, never the standing index. Without a seqno the caller
-    * asserts one event per id (duplicate ids would race on
-    * [[latestWins]]'s within-batch tie rule, which is defined for the
-    * reduced shape only).
+    * the BATCH, never the standing index. Without a seqno, duplicate
+    * ids of one batch resolve by [[winnersOf]]'s total order (a
+    * tombstone first, then the smaller codes) — deterministic, but not
+    * arrival order.
     *
     * Everything [[ingest]]/[[delete]] guarantee holds here: frozen-model
     * scan-expression encode, write volume ∝ the batch, wholesale
@@ -430,31 +430,27 @@ object AnnIndex {
     }
   }
 
-  /** Latest-batch-wins resolution over a multi-batch codes frame: each id
-    * keeps its row from the highest `b` (the batch directory partition
-    * column); within one batch a [[delete]] tombstone shadows a data row.
-    * A winning tombstone resolves the id as ABSENT (filtered out here, so
-    * downstream scoring never sees it). Skipped entirely for single-batch
-    * reads — the common built-then-compacted shape pays no shuffle, and
-    * batch 0 ([[build]]/[[compact]] output) never contains tombstones.
-    * The window runs over the PROBED subset only in [[probe]] (post
-    * partition-pruning), so its cost is ∝ probed codes, never the
-    * standing index.
-    */
-  /** Each id's WINNING row across batches — highest batch, tombstone
-    * outranking a data row within one batch. The single resolver both
-    * [[latestWins]] (which then drops tombstone winners) and [[stats]]
-    * (which counts them) share, so the tie-break can never silently
-    * diverge between what probes resolve and what the stats surface
-    * reports.
+  /** Each id's WINNING row across batches under one total order — the
+    * highest `b` first; within one batch a [[delete]] tombstone before a
+    * data row; then the smaller `codes` (Spark's array order), the
+    * smaller `nrm`, the smaller `c_id`. The last three make the winner
+    * deterministic when one batch carries an id twice ([[ingest]] does
+    * not collapse duplicates), so [[compact]], [[stats]], the batch
+    * probe and the interactive probe's driver resolution
+    * ([[winnerOrdering]], the same order) all keep the same row.
+    * [[latestWins]] drops tombstone winners and [[stats]] counts them
+    * from this one view. Skipped for single-batch reads (the
+    * built-then-compacted shape pays no shuffle; batch 0 never holds
+    * tombstones).
     */
   private def winnersOf(codes: DataFrame, idCol: String,
                         nBatches: Int): DataFrame =
     if (nBatches <= 1) codes
     else codes
       .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(idCol))
-          .orderBy(col("b").desc, col("codes").isNull.desc)))
+        Window.partitionBy(col(idCol)).orderBy(col("b").desc,
+          col("codes").isNull.desc, col("codes").asc, col("nrm").asc,
+          col("c_id").asc)))
       .filter(col("__rn") === 1).drop("__rn")
 
   private def latestWins(codes: DataFrame, idCol: String,
@@ -667,13 +663,16 @@ object AnnIndex {
     * are control-plane-sized by premise) are EAGER: [[routeQueries]]
     * routes the query batch once on the driver, [[probeRouted]] runs
     * the scan and returns the answer as a driver-local frame. Job
-    * budget, with a driver-local query frame: 2 Spark jobs on a
-    * single-batch version (the ADC shortlist scan, the re-rank scan), 3
-    * on a multi-batch one (+ the latest-wins shuffle); an `allowed` /
-    * `excluded` frame adds its own jobs. No job infers the codes schema
-    * ([[graft.plans.StoreReads]]). Driver memory: the routed queries
-    * (LUT + vector each) plus at most partitions × |queries| × k·rerank
-    * shortlist rows.
+    * budget, with a driver-local query frame: 2 Spark jobs on any
+    * version (the ADC shortlist scan, the re-rank scan), 3 only when
+    * the shortlist needs a second, deeper ADC pass; an `allowed` /
+    * `excluded` frame adds its own jobs. Latest-batch-wins is resolved
+    * on the driver from the ADC scan, with no shuffle, and no job infers
+    * the codes schema ([[graft.plans.StoreReads]]). Driver memory: the
+    * routed queries (LUT + vector each), at most partitions × |queries|
+    * × k·rerank shortlist rows (more on a second pass), and the keys of
+    * the probed clusters' rows since the last [[compact]] plus the
+    * tombstones `<= asOfBatch` ([[scoreRouted]]).
     *
     * '''Filtered search''' (`allowed`): the metadata-constrained vector
     * query every production ANN service answers ("nearest neighbors
@@ -757,8 +756,9 @@ object AnnIndex {
           VectorOps.dot(col("q_vec"),
             element_at(typedlit(model.fine), col("c_id") + 1)))
         else ck
-      val corpusCodes = probedCodes(spark, dir, v, probed, idCol, allowed,
-          excluded, asOfBatch)
+      val (scanned, nBatches) = scannedCodes(spark, dir, v, probed, idCol,
+        allowed, excluded, asOfBatch)
+      val corpusCodes = latestWins(scanned, idCol, nBatches)
         .select(col(idCol), col("c_id"), col("codes").as("__codes"),
           col("nrm").as("__n"))
       val vecs = corpus.select(col(idCol).as("neighbor_id"),
@@ -820,9 +820,11 @@ object AnnIndex {
     * the interactive path, exposed so independent probe arms of one
     * lifecycle invariant can share a single routing pass (and run
     * concurrently; the store reads are immutable per-version
-    * directories). Eager, with [[probe]]'s job budget; returns a
-    * driver-local frame. Throws when `version`'s model JSON differs from
-    * the one the batch was routed with.
+    * directories). Eager, with [[probe]]'s job budget and driver-memory
+    * bound — 2 Spark jobs on any version, 3 on a second ADC pass,
+    * latest-batch-wins resolved on the driver without a shuffle; returns
+    * a driver-local frame. Throws when `version`'s model JSON differs
+    * from the one the batch was routed with.
     */
   def probeRouted(spark: SparkSession, dir: String, routed: Routed,
                   corpus: DataFrame, k: Int, rerank: Int = 16,
@@ -845,18 +847,20 @@ object AnnIndex {
       .digest(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"${b & 0xff}%02x").mkString
 
-  /** A version's codes rows for one probe: the committed batches
-    * `<= asOfBatch`, statically pruned to the probed clusters PLUS the
-    * reserved tombstone partition (deletions must shadow data rows
-    * wherever the data row's cluster is; its volume is ∝ live deletions,
-    * absent entirely on the compacted path), `allowed`/`excluded`
-    * gated, resolved latest-batch-wins.
+  /** A version's codes rows for one probe, with the number of batches
+    * read: the committed batches `<= asOfBatch`, statically pruned to the
+    * probed clusters PLUS the reserved tombstone partition (deletions
+    * must shadow data rows wherever the data row's cluster is; its
+    * volume is ∝ live deletions, absent entirely on the compacted path),
+    * `allowed`/`excluded` gated, NOT yet resolved latest-batch-wins —
+    * the batch probe resolves with [[latestWins]], the interactive one
+    * on the driver ([[scoreRouted]]), over these same rows.
     */
-  private def probedCodes(spark: SparkSession, dir: String, v: Int,
-                          probed: Seq[Int], idCol: String,
-                          allowed: Option[DataFrame],
-                          excluded: Option[DataFrame],
-                          asOfBatch: Long): DataFrame = {
+  private def scannedCodes(spark: SparkSession, dir: String, v: Int,
+                           probed: Seq[Int], idCol: String,
+                           allowed: Option[DataFrame],
+                           excluded: Option[DataFrame],
+                           asOfBatch: Long): (DataFrame, Int) = {
     val batches = batchesOf(dir, v, asOfBatch)
     val scanned = (probed :+ TombstoneCluster).map(Integer.valueOf)
     val rawCodes = readCodes(spark, dir, v, batches)
@@ -865,7 +869,7 @@ object AnnIndex {
       rawCodes.join(ids.select(col(idCol)), Seq(idCol), "left_semi"))
     val gated = excluded.fold(admitted)(ids =>
       admitted.join(ids.select(col(idCol)), Seq(idCol), "left_anti"))
-    latestWins(gated, idCol, batches.length)
+    (gated, batches.length)
   }
 
   /** The interactive scoring half: ADC over the probed codes with the
@@ -877,12 +881,23 @@ object AnnIndex {
     * queries that shortlisted it only, so the scan computes at most
     * |q| × k·rerank sims — with a per-partition and a driver top-k.
     *
+    * Latest-batch-wins is resolved on the driver from the ADC scan
+    * itself, with no shuffle ([[shortlistOf]]): each partition also
+    * reports the key of every scanned row of a batch ≥ 1, tombstones
+    * included, and a candidate lives unless a key of its id outranks
+    * it under [[winnerOrdering]]. When shadowed rows may have pushed a
+    * live candidate out of a partition's list, the ADC scan runs once
+    * more, deeper (3 jobs instead of 2).
+    *
     * Every ranking uses Spark's own ordering on (sim DESC, neighbor_id
     * ASC) — the order [[Similarity.pqScore]]'s `row_number` windows use,
     * NaN, −0.0 and every id type included — so the answers equal the
     * batch path's row for row. Queries sharing a `q_id` rank as one
     * group, as they do in those windows. Driver memory: at most
-    * partitions × |q| × k·rerank shortlist rows.
+    * partitions × |q| × k·rerank shortlist rows (the second pass: ×
+    * its depth over k·rerank), plus the keys of the probed clusters'
+    * delta rows and of the tombstones `<= asOfBatch` — O(rows since the
+    * last compaction), which [[compact]] bounds.
     */
   private def scoreRouted(spark: SparkSession, dir: String, v: Int,
                           routed: Routed, corpus: DataFrame, k: Int,
@@ -921,20 +936,28 @@ object AnnIndex {
       element_at(arrayLit("__lut"), qi + 1))
     val approxDot =
       if (biases.isDefined) e.getField("_3") + adcDot else adcDot
-    val codes = probedCodes(spark, dir, v, routed.probed, idCol, allowed,
-      excluded, asOfBatch)
+    val (codes, _) = scannedCodes(spark, dir, v, routed.probed, idCol,
+      allowed, excluded, asOfBatch)
+    // one row per (code row, query routed to its cluster) in the
+    // [[AdcPart]] layout; a row no query scores (a tombstone) comes
+    // through once with a null entry, so every scanned row reports its
+    // key exactly once (its first entry, or its null one)
     val adc = codes
-      .select(col(idCol), col("codes"), col("nrm"),
-        explode(element_at(typedlit(entries.groupMap(_._1)(_._2)),
-          col("c_id"))).as("__e"))
-      .filter(col(idCol) =!= element_at(arrayLit("q_id"), qi + 1))
-      .select(grp, qi, col(idCol),
+      .select(col(idCol), col("b"), col("codes"), col("nrm"), col("c_id"),
+        posexplode_outer(element_at(typedlit(entries.groupMap(_._1)(_._2)),
+          col("c_id"))).as(Seq("__p", "__e")))
+      .select(grp.as("__g"), qi.as("__qi"), col(idCol),
         (approxDot / (col("nrm") * element_at(arrayLit("__qn"), qi + 1)))
-          .as("sim_adc"))
+          .as("sim_adc"),
+        col("b").cast(LongType).as("b"), col("codes").isNull.as("__tomb"),
+        col("codes"), col("nrm"), col("c_id").cast(IntegerType).as("c_id"),
+        coalesce(e.isNotNull &&
+          col(idCol) =!= element_at(arrayLit("q_id"), qi + 1), lit(false))
+          .as("__cand"),
+        (col("b") >= 1 && coalesce(col("__p"), lit(0)) === 0).as("__key"))
     val codesId = codes.schema(idCol).dataType
-    val adcOrd = simOrdering(codesId)
-    val shortlist = rankPerGroup(topInternal(adc, depth, adcOrd),
-      depth, adcOrd)
+    val shortlist = shortlistOf(adc, codesId, depth,
+      group.groupBy(identity).valuesIterator.map(_.size).max)
     if (shortlist.isEmpty)
       return spark.createDataFrame(java.util.List.of[Row](), outSchema)
 
@@ -958,13 +981,63 @@ object AnnIndex {
     val nid = corpusId.dataType
     val simOrd = simOrdering(nid)
     val toScala = CatalystTypeConverters.createToScalaConverter(nid)
-    val out = rankPerGroup(topInternal(scored, k, simOrd), k, simOrd)
+    val out = rankPerGroup(
+        collectPartitions(scored)(topOf(_, k, simOrd)).flatten.toSeq, k, simOrd)
       .flatMap { case (g, ranked) => ranked.zipWithIndex.map { case (r, i) =>
         Row(qIds(g), toScala(r.get(2, nid)),
           if (r.isNullAt(3)) null else r.getDouble(3), i + 1L)
       }
     }
     spark.createDataFrame(out.asJava, outSchema)
+  }
+
+  /** The exact ADC shortlist of an interactive probe, latest-batch-wins
+    * resolved on the driver: each group's best `depth` live candidates,
+    * by ascending group. `adc` is the ADC scan in the [[AdcPart]]
+    * layout; `groupSize` the most queries any ranking group holds.
+    *
+    * Pass 1 keeps the best `depth` candidates per group per partition.
+    * A candidate lives unless a delta key of its id outranks it under
+    * [[winnerOrdering]] — a base row, any delta key of its id; identical
+    * rows of one batch answer once. The merged list is exact unless a
+    * partition cut a group's list at a row ranking above the group's
+    * `depth`-th live candidate, or fewer than `depth` live while a
+    * partition cut the group: the rows a cut dropped all rank at or
+    * below its last kept row. Then pass 2 re-runs the same scan keeping
+    * `depth + D·groupSize` per partition, D the delta keys of pass 1.
+    * Each id's shadowed rows number at most its delta rows (the base
+    * batch holds one row per id, as [[build]] of a one-row-per-id corpus
+    * and [[compact]] write it), so a group's list holds at most
+    * D·groupSize shadowed rows, and pass 2 is exact by construction.
+    */
+  private def shortlistOf(adc: DataFrame, idType: DataType, depth: Int,
+                          groupSize: Int): Seq[(Int, Seq[InternalRow])] = {
+    val ord = simOrdering(idType)
+    val winOrd = winnerOrdering
+    def idOf(r: InternalRow) = r.get(2, idType)
+    def scan(df: DataFrame, n: Int) = collectPartitions(df)(adcPart(_, n, ord))
+    val first = scan(adc, depth)
+    val keys = first.flatMap(_.keys)
+    val winner = scala.collection.mutable.HashMap.empty[Any, InternalRow]
+    keys.foreach { r =>
+      if (winner.get(idOf(r)).forall(winOrd.lt(r, _))) winner(idOf(r)) = r
+    }
+    def live(parts: Array[AdcPart]) = {
+      val seen = scala.collection.mutable.HashSet.empty[(Int, Any)]
+      rankPerGroup(parts.iterator.flatMap(_.tops).filter(r =>
+        winner.get(idOf(r)).forall(w =>
+          winOrd.equiv(r, w) && seen.add((r.getInt(1), idOf(r))))).toSeq,
+        depth, ord)
+    }
+    val firstList = live(first)
+    val byGroup = firstList.toMap
+    val exact = first.iterator.flatMap(_.cuts).forall(c =>
+      byGroup.get(c.getInt(0)).exists(rs =>
+        rs.length == depth && !ord.lt(c, rs.last)))
+    if (exact) firstList
+    // a fresh plan over the same file listing, so the same rows
+    else live(scan(adc.select("*"),
+      math.min(depth + keys.length.toLong * groupSize, Int.MaxValue).toInt))
   }
 
   /** Spark's ordering for (sim DESC, neighbor_id ASC) over rows shaped
@@ -976,39 +1049,86 @@ object AnnIndex {
       SortOrder(BoundReference(3, DoubleType, nullable = true), Descending),
       SortOrder(BoundReference(2, idType, nullable = true), Ascending)))
 
+  /** [[winnersOf]]'s total order over [[AdcPart]] rows — batch DESC,
+    * tombstone first, then codes, nrm and c_id ASC: a row sorting
+    * before another outranks it.
+    */
+  private def winnerOrdering: Ordering[InternalRow] =
+    new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(4, LongType, nullable = true), Descending),
+      SortOrder(BoundReference(5, BooleanType, nullable = true), Descending),
+      SortOrder(BoundReference(6, ArrayType(ByteType), nullable = true),
+        Ascending),
+      SortOrder(BoundReference(7, DoubleType, nullable = true), Ascending),
+      SortOrder(BoundReference(8, IntegerType, nullable = true), Ascending)))
+
+  /** One partition's share of the interactive ADC scan, whose rows are
+    * (group, query, id, sim, b, tombstone, codes, nrm, c_id, candidate,
+    * key): its best candidates per group, the last kept row of each
+    * group it cut, and the rows flagged as keys (one per scanned row of
+    * a batch ≥ 1).
+    */
+  private final case class AdcPart(tops: Array[InternalRow],
+                                   cuts: Array[InternalRow],
+                                   keys: Array[InternalRow])
+
+  private def adcPart(rows: Iterator[InternalRow], n: Int,
+                      ord: Ordering[InternalRow]): AdcPart = {
+    val tops = new GroupTops(n, ord)
+    val keys = Array.newBuilder[InternalRow]
+    rows.foreach { r =>
+      if (r.getBoolean(10)) keys += r.copy()
+      if (r.getBoolean(9)) tops.offer(r)
+    }
+    AdcPart(tops.rows, tops.cuts, keys.result())
+  }
+
   /** The best `n` rows of each group (column 0) under `ord`: one bounded
     * heap per group, rows copied as kept (scan rows are reused buffers).
+    * `cuts` are the last kept rows of the groups that offered more.
     */
-  private def topPerGroup(rows: Iterator[InternalRow], n: Int,
-                          ord: Ordering[InternalRow]): Iterator[InternalRow] = {
-    val heaps = scala.collection.mutable.HashMap
+  private final class GroupTops(n: Int, ord: Ordering[InternalRow]) {
+    private val heaps = scala.collection.mutable.HashMap
       .empty[Int, java.util.PriorityQueue[InternalRow]]
-    rows.foreach { r =>
+    private val cut = scala.collection.mutable.HashSet.empty[Int]
+    def offer(r: InternalRow): Unit = {
       val h = heaps.getOrElseUpdate(r.getInt(0),
         new java.util.PriorityQueue[InternalRow](ord.reverse))
       if (h.size < n) h.add(r.copy())
-      else if (ord.lt(r, h.peek)) { h.poll(); h.add(r.copy()) }
+      else {
+        cut += r.getInt(0)
+        if (ord.lt(r, h.peek)) { h.poll(); h.add(r.copy()) }
+      }
     }
-    heaps.valuesIterator.flatMap(_.iterator.asScala)
+    def rows: Array[InternalRow] =
+      heaps.valuesIterator.flatMap(_.iterator.asScala).toArray
+    def cuts: Array[InternalRow] = cut.iterator.map(heaps(_).peek).toArray
   }
 
-  /** The driver merge of [[topInternal]]'s per-partition tops: each
-    * group's best `n`, sorted, by ascending group.
+  private def topOf(rows: Iterator[InternalRow], n: Int,
+                    ord: Ordering[InternalRow]): Array[InternalRow] = {
+    val tops = new GroupTops(n, ord)
+    rows.foreach(tops.offer)
+    tops.rows
+  }
+
+  /** The driver merge of per-partition tops: each group's best `n`,
+    * sorted, by ascending group.
     */
-  private def rankPerGroup(rows: Array[InternalRow], n: Int,
+  private def rankPerGroup(rows: Seq[InternalRow], n: Int,
                            ord: Ordering[InternalRow])
       : Seq[(Int, Seq[InternalRow])] =
-    rows.toSeq.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+    rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map { case (g, rs) => g -> rs.sorted(ord).take(n) }
 
   /** Execute `df` as one SQL execution (listeners and the UI see its
-    * plan, like any action) and collect the best `n` rows of each group
-    * under `ord`, kept per partition on the executors.
+    * plan, like any action) and collect `f` of each partition's rows,
+    * computed on the executors.
     */
-  private def topInternal(df: DataFrame, n: Int,
-                          ord: Ordering[InternalRow]): Array[InternalRow] = {
+  private def collectPartitions[T: scala.reflect.ClassTag](df: DataFrame)(
+      f: Iterator[InternalRow] => T): Array[T] = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.toRdd.mapPartitions(topPerGroup(_, n, ord)).collect())
+      qe.toRdd.mapPartitions(rows => Iterator(f(rows))).collect())
   }
 }

@@ -3,10 +3,11 @@ package graft.operators
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{TextOps, VersionedSlots}
 import graft.model.{HashPartition, IndexDef}
@@ -208,12 +209,14 @@ object Retrieval {
     * the batch's own idempotent directory; a winning tombstone resolves
     * the doc as ABSENT (its standing postings stop scoring without being
     * touched — deletion cost ∝ the delete batch, never the index), a
-    * later [[ingestBm25]] of the same doc outranks it. The batch's
-    * postings directory is committed EMPTY so batch listings stay
-    * uniform.
+    * later [[ingestBm25]] of the same doc outranks it. One Spark job.
     *
     * Commit order matches [[writeBatch]]: postings FIRST, doc-stats
-    * LAST. The doc-stats sidecar is the batch-visibility authority
+    * LAST. The batch's postings directory is committed EMPTY — recreated
+    * on the driver through the Hadoop FS API with only a `_SUCCESS`, so
+    * batch listings stay uniform (every read passes the postings schema,
+    * so a file-less batch directory reads as zero rows). The doc-stats
+    * sidecar, written last, is the batch-visibility authority
     * ([[committedBatches]]), so a probe racing this delete — or running
     * after a crash between the two writes — either sees no batch at all
     * (doc-stats not yet committed) or a complete one; it can never see a
@@ -223,15 +226,11 @@ object Retrieval {
                  version: Int = -1, idCol: String = "doc_id"): Unit = {
     VersionedSlots.requireAppend(batchId)
     val v = Versions.pin(dir, version)
-    val nP = loadLayout(dir, v).nPartitions
-    val spark = ids.sparkSession
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("key", StringType),
-        StructField("pos", org.apache.spark.sql.types.IntegerType),
-        StructField("docid", LongType))))
-    IndexStore.write(empty, s"${postingsRoot(dir, v)}/b=$batchId",
-      bm25Def(idCol, nP))
+    val post = new Path(s"${postingsRoot(dir, v)}/b=$batchId")
+    val fs = post.getFileSystem(ids.sparkSession.sessionState.newHadoopConf())
+    fs.delete(post, true)
+    fs.mkdirs(post)
+    fs.create(new Path(post, "_SUCCESS"), true).close()
     ids.select(col(idCol).cast("long").as("docid"),
         lit(null).cast("long").as("dl"))
       .write.mode("overwrite").parquet(s"${docstatsRoot(dir, v)}/b=$batchId")
@@ -261,10 +260,21 @@ object Retrieval {
     VersionedSlots.committedUpTo(docstatsRoot(dir, v), asOfBatch,
       s"version $v")
 
+  /** The stored row schemas (partition columns aside). Every read
+    * passes them, so no read depends on which batch directories hold
+    * data files ([[deleteBm25]] commits file-less postings batches) and
+    * none reads a footer or runs a schema-inference job.
+    */
+  private val PostingsSchema = StructType(Seq(StructField("key", StringType),
+    StructField("pos", IntegerType), StructField("docid", LongType)))
+  private val DocstatsSchema = StructType(Seq(
+    StructField("docid", LongType), StructField("dl", LongType)))
+
   /** The postings rows of the given batches, `b` and `part` as columns. */
   private def postings(spark: SparkSession, dir: String, v: Int,
                        batches: Seq[Long]): DataFrame =
-    graft.plans.StoreReads.batches(spark, postingsRoot(dir, v), batches)
+    graft.plans.StoreReads.batches(spark, postingsRoot(dir, v), batches,
+      schema = Some(PostingsSchema))
 
   /** Postings rows from each doc's WINNING batch only (latest-batch-wins;
     * a tombstoned doc has no live row), joined with the resolved
@@ -283,7 +293,7 @@ object Retrieval {
   private def resolvedDocstats(spark: SparkSession, dir: String, v: Int,
                                batches: Seq[Long]): DataFrame = {
     val ds = graft.plans.StoreReads.batches(spark, docstatsRoot(dir, v),
-      batches)
+      batches, schema = Some(DocstatsSchema))
     val win =
       if (batches.length <= 1)
         ds.withColumn("__wb", lit(batches.head)).drop("b")

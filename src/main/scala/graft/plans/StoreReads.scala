@@ -14,32 +14,37 @@ import org.apache.spark.sql.types.{DataType, StructType}
 object StoreReads {
 
   /** `spark.read.parquet(paths: _*)` (with `basePath` when given, so
-    * partition directories below it become columns) read through
+    * partition directories below it become columns) read with `schema`
+    * when the caller knows the stored row schema, else through
     * [[footerSchema]] when it resolves, else through Spark's inference.
     */
   def parquet(spark: SparkSession, paths: Seq[String],
-              basePath: Option[String] = None): DataFrame = {
+              basePath: Option[String] = None,
+              schema: Option[StructType] = None): DataFrame = {
     val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
-    footerSchema(spark, paths)
+    schema.orElse(footerSchema(spark, paths))
       .fold(reader.parquet(paths: _*))(reader.schema(_).parquet(paths: _*))
   }
 
   /** The batch directories `b=<id>` of one store table under `root`, as
     * one frame — the committed-batch read of every batch-directory
     * store. `withBatch` reads with `root` as the base path, so `b` (and
-    * any partition directories below it) become columns.
+    * any partition directories below it) become columns; `schema` as in
+    * [[parquet]].
     */
   def batches(spark: SparkSession, root: String, ids: Seq[Long],
-              withBatch: Boolean = true): DataFrame =
+              withBatch: Boolean = true,
+              schema: Option[StructType] = None): DataFrame =
     parquet(spark, ids.map(b => s"$root/b=$b"),
-      if (withBatch) Some(root) else None)
+      if (withBatch) Some(root) else None, schema)
 
   /** The data schema `spark.read.parquet(paths: _*)` infers, without the
     * Spark job that inference runs: Spark's row schema from the footer of
     * the file its non-merging inference picks — the first data file in
     * path order among every leaf file under `paths`, partition
     * subdirectories (`b=N/c_id=C/`) included (the store's writers leave
-    * no summary files). Passed to `spark.read.schema`, it reads as the
+    * no summary files; a batch directory holding only `_SUCCESS` adds no
+    * candidate). Passed to `spark.read.schema`, it reads as the
     * inferred one does (both come out nullable; partition columns are
     * still discovered from the paths). None when schema merging is on or
     * that footer lacks Spark's schema key; the caller then lets Spark

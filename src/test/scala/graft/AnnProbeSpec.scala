@@ -172,7 +172,7 @@ class AnnProbeSpec extends SparkSpec {
   }
 
   test("an interactive probe runs <= 2 Spark jobs on a single-batch " +
-      "version and <= 3 on a multi-batch one") {
+      "and on a multi-batch version") {
     val corpus = emb
     val q = localQuery(corpus, 7L)
     val dir = tmp
@@ -185,10 +185,137 @@ class AnnProbeSpec extends SparkSpec {
       batchId = 1L, version = v)
     AnnIndex.delete(corpus.filter(col("vec_id") % 9 === 4).select("vec_id"),
       dir, batchId = 2L, version = v)
-    val multi = jobsOf("multi")(AnnIndex.probe(spark, dir, q, corpus,
-      k = 10, version = v).collect()).size
-    assert(multi <= 3, s"multi-batch probe ran $multi jobs (budget 3)")
-    info(s"jobs per probe: single-batch $single, multi-batch $multi")
+    var multiJobs = 0
+    val executed = executedNodes {
+      multiJobs = jobsOf("multi")(AnnIndex.probe(spark, dir, q, corpus,
+        k = 10, version = v).collect()).size
+    }
+    val multiShuffled = executed.count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+    // 3 while latest-batch-wins ran as a window over a shuffle
+    assert(multiJobs <= 2, s"multi-batch probe ran $multiJobs jobs (budget 2)")
+    assert(multiShuffled == 0, "the multi-batch probe shuffled")
+    info(s"jobs per probe: single-batch $single, multi-batch $multiJobs")
+  }
+
+  test("multi-batch versions whose shadowed rows sit in the partition " +
+      "top lists — ids re-embedded in their own cluster, delete-then-re-add, " +
+      "INT-typed tombstones: interactive ≡ batch") {
+    val dir = tmp
+    val (_, v) = AnnIndex.build(emb, dir, nCentroids = 16)
+    val base = emb.select("vec_id", "embedding")
+    // a third of the corpus nudged: mostly the same cluster, new codes
+    val nudged = base.filter(col("vec_id") % 3 === 0).select(col("vec_id"),
+      transform(col("embedding"), x => (x * 0.97 + 0.002).cast("float"))
+        .as("embedding"))
+    AnnIndex.ingest(nudged, dir, batchId = 1L, version = v)
+    AnnIndex.delete(base.filter(col("vec_id") % 5 === 1).select("vec_id"),
+      dir, batchId = 2L, version = v)
+    // half the deleted ids come back with their build-time vectors
+    AnnIndex.ingest(base.filter(col("vec_id") % 10 === 1), dir,
+      batchId = 3L, version = v)
+    AnnIndex.delete(base.filter(col("vec_id") % 7 === 2)
+      .select(col("vec_id").cast("int").as("vec_id")), dir, batchId = 4L,
+      version = v)
+    val current = base.join(nudged.withColumnRenamed("embedding", "__n"),
+        Seq("vec_id"), "left")
+      .select(col("vec_id"), when(col("__n").isNull ||
+        col("vec_id") % 10 === 1, col("embedding")).otherwise(col("__n"))
+        .as("embedding"))
+      .filter((col("vec_id") % 5 =!= 1 || col("vec_id") % 10 === 1) &&
+        col("vec_id") % 7 =!= 2)
+    val qs = queriesOf(current, 12)
+    // shortlists of 2–6 rows per query: every partition cuts its list
+    assertSame(dir, v, qs, current, k = 3, nprobe = 3, rerank = 2)
+    assertSame(dir, v, qs, current, k = 2, nprobe = 2, rerank = 1)
+    assertSame(dir, v, localQuery(current, 8L), current, k = 4, nprobe = 4,
+      rerank = 1)
+    assertSame(dir, v, qs, current, k = 5, nprobe = 16, rerank = 2)
+    // snapshots inside the mutation history
+    assertSame(dir, v, qs, base, k = 3, nprobe = 3, rerank = 2, asOfBatch = 2L)
+    assertSame(dir, v, qs, current, k = 3, nprobe = 3, rerank = 2,
+      asOfBatch = 3L)
+  }
+
+  test("a version whose probed rows are shadowed but for three forces the " +
+      "second ADC pass: 3 jobs, answers ≡ batch") {
+    val dir = tmp
+    val (_, v) = AnnIndex.build(emb, dir, nCentroids = 16)
+    val q = localQuery(emb, 7L)
+    // the three best answers of two probed clusters stay live; every
+    // other id is tombstoned, so each partition's list of 4 holds at
+    // most 3 live rows and the first pass cannot prove its shortlist
+    val keep = AnnIndex.probe(spark, dir, q, emb, k = 3, nprobe = 2,
+      version = v).collect().map(_.getLong(1)).toSeq
+    assert(keep.length == 3)
+    AnnIndex.delete(emb.filter(!col("vec_id").isin(keep: _*)).select("vec_id"),
+      dir, batchId = 1L, version = v)
+    val live = emb.filter(col("vec_id").isin(keep: _*))
+    assertSame(dir, v, q, live, k = 2, nprobe = 2, rerank = 2)
+    val jobs = jobsOf("second pass")(AnnIndex.probe(spark, dir, q, live,
+      k = 2, nprobe = 2, rerank = 2, version = v).collect()).size
+    assert(jobs == 3, s"the probe ran $jobs jobs (2 ADC passes + re-rank)")
+  }
+
+  test("an id ingested twice in one batch resolves to one deterministic " +
+      "winner: compact, the batch and the interactive probe agree") {
+    val dir = tmp
+    val (_, v) = AnnIndex.build(emb, dir, nCentroids = 16)
+    val base = emb.select("vec_id", "embedding")
+    val twice = base.filter(col("vec_id") < 60).unionByName(
+      base.filter(col("vec_id") < 60).select(col("vec_id"),
+        transform(col("embedding"), x => (x * 0.9 + 0.01).cast("float"))
+          .as("embedding")))
+    AnnIndex.ingest(twice, dir, batchId = 1L, version = v)
+    val folded = AnnIndex.compact(spark, dir, version = v)
+    // the winner is the smaller codes (then nrm, then c_id), in Spark's
+    // array order
+    val encoded = AnnIndex.encodeWith(twice, dir, version = v)
+    val want = encoded
+      .withColumn("__rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
+          .orderBy(col("codes"), col("nrm"), col("c_id"))))
+      .filter(col("__rn") === 1)
+      .select(col("vec_id"), col("codes"), col("nrm"))
+    val kept = spark.read.parquet(s"$dir/v$folded/codes/b=0")
+      .filter(col("vec_id") < 60).select(col("vec_id"), col("codes"), col("nrm"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(encoded.select("vec_id", "codes").distinct().count() > 60,
+      "the two copies must differ in codes for some ids")
+    assert(rows(kept) == rows(want))
+    val qs = queriesOf(base, 8)
+    def probeOf(version: Int, broadcastQ: Boolean) = AnnIndex.probe(spark,
+      dir, qs, base, k = 3, nprobe = 16, rerank = 2, version = version,
+      broadcastQ = broadcastQ).orderBy("q_id", "rank").collect().toSeq
+    val answer = probeOf(folded, broadcastQ = true)
+    for (_ <- 0 until 2) {
+      assert(probeOf(v, broadcastQ = true) == answer)
+      assert(probeOf(v, broadcastQ = false) == answer)
+      assert(probeOf(folded, broadcastQ = false) == answer)
+    }
+    assertSame(dir, v, qs, base, k = 3, nprobe = 3, rerank = 2)
+  }
+
+  test("hybridSearch over a multi-batch ANN version runs one Spark job " +
+      "fewer than through the shuffled latest-wins window") {
+    val bmDir = tmp
+    val bv = graft.operators.Retrieval.buildBm25Index(
+      Tables.documents(spark, sf()).select("doc_id", "text"), bmDir)
+    val annDir = tmp
+    val (_, av) = AnnIndex.build(emb, annDir, nCentroids = 16)
+    AnnIndex.ingest(emb.filter(col("vec_id") % 7 === 0), annDir,
+      batchId = 1L, version = av)
+    AnnIndex.delete(emb.filter(col("vec_id") % 9 === 4).select("vec_id"),
+      annDir, batchId = 2L, version = av)
+    val q = localQuery(emb, 7L)
+    def hybrid() = graft.operators.Retrieval.hybridSearch(spark, bmDir,
+      annDir, Seq("data", "index"), q, emb, k = 5, bm25Version = bv,
+      annVersion = av).collect()
+    hybrid() // warm
+    val jobs = jobsOf("hybrid")(hybrid()).size
+    info(s"hybridSearch over a 3-batch ANN version: $jobs jobs")
+    // 16 while the ANN leg resolved latest-batch-wins in a window
+    assert(jobs <= 15, s"hybridSearch ran $jobs jobs")
   }
 
   test("a Routed batch serves its version's compact fold, and refuses a " +

@@ -177,6 +177,49 @@ class StoreLifecycleSpec extends SparkSpec {
     assert(bm25Jobs <= 11, s"bm25TopKFromIndex ran $bm25Jobs jobs")
   }
 
+  test("deleteBm25 commits in one Spark job, and every BM25 read serves a " +
+      "store holding its file-less postings batch") {
+    val dir = tmp
+    val v = Retrieval.buildBm25Index(docs, dir)
+    Retrieval.ingestBm25(
+      Seq((3L, "the quick brown fox again")).toDF("doc_id", "text"), dir, 1L, v)
+    val deleteJobs = jobsOf("delete")(
+      Retrieval.deleteBm25(Seq(1L).toDF("doc_id"), dir, 2L, v)).size
+    info(s"deleteBm25: $deleteJobs jobs")
+    // 3 while the empty postings batch went through IndexStore.write and
+    // its schema plant
+    assert(deleteJobs <= 1, s"deleteBm25 ran $deleteJobs jobs")
+    val postings = s"$dir/v$v/postings"
+    assert(new java.io.File(s"$postings/b=2").list().toSeq
+      .filterNot(_.startsWith(".")) == Seq("_SUCCESS")) // .crc aside
+    assert(Retrieval.committedBatches(dir, v) == Seq(0L, 1L, 2L))
+    // the file-less batch adds no footer candidate
+    val footer = graft.plans.StoreReads.footerSchema(spark, _: Seq[String])
+    assert(footer(Seq(s"$postings/b=2")).isEmpty)
+    assert(footer(Seq(s"$postings/b=0", s"$postings/b=2")) ==
+      footer(Seq(s"$postings/b=0")))
+    assert(footer(Seq(s"$postings/b=0")).nonEmpty)
+
+    // doc 1 is deleted: only doc 3 answers, phrase-matches, and counts
+    val terms = Seq("quick", "fox")
+    def top(version: Int) = Retrieval.bm25TopKFromIndex(spark, dir, terms,
+      k = 3, version = version).collect().toSeq
+    assert(top(v).map(_.getLong(0)) == Seq(3L))
+    val batched = Retrieval.bm25TopKBatchFromIndex(spark, dir,
+      Seq((7L, terms)).toDF("q_id", "terms"), k = 3, version = v)
+      .drop("q_id").collect().toSeq
+    assert(batched == top(v))
+    assert(Retrieval.phraseMatches(spark, dir, Seq("quick", "brown"),
+      version = v).collect().map(_.getLong(0)).toSeq == Seq(3L))
+    val st = Retrieval.bm25Stats(spark, dir, version = v).head()
+    assert(st.getLong(0) == 2L, st)
+    assert(st.getLong(1) == 14L, st) // 9 + 5 tokens
+    assert(st.getLong(3) == st.getLong(1), st)
+    val folded = Retrieval.compactBm25(spark, dir, version = v)
+    assert(top(folded) == top(v))
+    assert(Retrieval.bm25Stats(spark, dir, version = folded).head() == st)
+  }
+
   test("EpochStore.readAll over committed batches runs no schema-inference " +
       "job") {
     val root = tmp

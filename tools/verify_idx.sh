@@ -22,24 +22,35 @@
 #                  stats, phrase, fusion; the streaming-dedup and
 #                  frontier epoch stores; the link graph; SQL-built
 #                  scalar-index versions)
+#   all            the union of the four sets in one graft.Verify run,
+#                  reported as each set's pass count
 #
 # sfDir defaults to $SPARK_GRAFT_SF_DIR, else $HOME/testdata/sf0.01; outDir
 # to a fresh temporary directory. Exits non-zero unless every query of the
-# set passes.
+# set (of every set, for `all`) passes.
 set -euo pipefail
 
 root="$(cd "$(dirname "$0")/.." && pwd)"
 set_name=idx
-if [[ "${1:-}" == idx || "${1:-}" == ann || "${1:-}" == codec || "${1:-}" == store ]]; then
+if [[ "${1:-}" =~ ^(idx|ann|codec|store|all)$ ]]; then
   set_name="$1"
   shift
 fi
-case "$set_name" in
-  idx) queries=idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup ;;
-  ann) queries=sim_ann_persisted,sim_ann_ingest,sim_ann_upsert,sim_ann_delete,sim_ann_filtered,sim_ann_residual,sim_ann_retrain,sim_ann_stats,sim_ann_stream_maintain,ann_build_sql,text_hybrid_search,text_hybrid_batch,text_hybrid_filtered,text_hybrid_stream,hybrid_search_sql,hybrid_batch_sql,pipeline_multimodal ;;
-  store) queries=text_bm25_indexed,text_bm25_incremental,text_bm25_queries,text_bm25_stats,text_phrase_search,text_rrf_fusion,dedup_streaming_neardup,dedup_streaming_spans,dedup_span_rotate,dedup_semantic_stream,pipeline_frontier_store,pipeline_pagerank,pipeline_pagerank_incremental,idx_build_sql ;;
-  codec) queries=source_warc_gz,source_warc_http,source_warc_zst,pipeline_warc_gz_stream,pipeline_crawl_mixed,text_extract_pdf,pipeline_pretrain_pdf,multimodal_pixels,multimodal_resize,multimodal_tiff,multimodal_webp,multimodal_webp_lossy,multimodal_gif,multimodal_jpeg,multimodal_mp3,multimodal_aac,pipeline_multimodal ;;
-esac
+queries_of() {
+  case "$1" in
+    idx) echo idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup ;;
+    ann) echo sim_ann_persisted,sim_ann_ingest,sim_ann_upsert,sim_ann_delete,sim_ann_filtered,sim_ann_residual,sim_ann_retrain,sim_ann_stats,sim_ann_stream_maintain,ann_build_sql,text_hybrid_search,text_hybrid_batch,text_hybrid_filtered,text_hybrid_stream,hybrid_search_sql,hybrid_batch_sql,pipeline_multimodal ;;
+    store) echo text_bm25_indexed,text_bm25_incremental,text_bm25_queries,text_bm25_stats,text_phrase_search,text_rrf_fusion,dedup_streaming_neardup,dedup_streaming_spans,dedup_span_rotate,dedup_semantic_stream,pipeline_frontier_store,pipeline_pagerank,pipeline_pagerank_incremental,idx_build_sql ;;
+    codec) echo source_warc_gz,source_warc_http,source_warc_zst,pipeline_warc_gz_stream,pipeline_crawl_mixed,text_extract_pdf,pipeline_pretrain_pdf,multimodal_pixels,multimodal_resize,multimodal_tiff,multimodal_webp,multimodal_webp_lossy,multimodal_gif,multimodal_jpeg,multimodal_mp3,multimodal_aac,pipeline_multimodal ;;
+  esac
+}
+if [[ "$set_name" == all ]]; then
+  sets=(idx ann codec store)
+else
+  sets=("$set_name")
+fi
+queries="$(for s in "${sets[@]}"; do queries_of "$s" | tr ',' '\n'; done |
+  awk '!seen[$0]++' | paste -sd, -)"
 sf="${1:-${SPARK_GRAFT_SF_DIR:-$HOME/testdata/sf0.01}}"
 out="${2:-$(mktemp -d -t "verify_$set_name.XXXXXX")}"
 mkdir -p "$out"
@@ -64,7 +75,20 @@ grep -F '[verify]' "$out/verify.log" >&2 || true
 
 report="$(python3 "$root/tools/check_oracle.py" "$sf" "$out")"
 echo "$report"
+status=0
 if ! grep -qx "== $n pass, 0 fail, $n oracled of $n listed" <<<"$report"; then
-  echo "verify_idx: expected $n of $n $set_name queries to pass" >&2
-  exit 1
+  status=1
 fi
+for s in "${sets[@]}"; do
+  total=0 passed=0
+  for q in $(queries_of "$s" | tr ',' ' '); do
+    total=$((total + 1))
+    if grep -q "^PASS $q (" <<<"$report"; then passed=$((passed + 1)); fi
+  done
+  echo "verify_idx: $s $passed/$total"
+  [[ $passed == "$total" ]] || status=1
+done
+if [[ $status != 0 ]]; then
+  echo "verify_idx: expected every query of ${sets[*]} to pass" >&2
+fi
+exit $status
