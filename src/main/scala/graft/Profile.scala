@@ -36,27 +36,15 @@ object Profile {
     Tables.all.foreach(t => Tables(spark, sfDir, t).limit(1).count())
 
     // ablation suffixes -> the conf override each applies; suffixes are
-    // parsed in a LOOP so they combine (`q!nowiden!spcores`), and each
+    // parsed in a LOOP so they combine (`q!noaqe!spcores`), and each
     // override SAVES the session's prior value (set or unset) and
     // restores exactly that — a hard-coded restore would clobber
     // whatever the session had before profiling
     def overrideOf(suffix: String): Option[Seq[(String, String)]] = suffix match {
       case "noaqe" => Some(Seq("spark.sql.adaptive.enabled" -> "false"))
       case "nowsc" => Some(Seq("spark.sql.codegen.wholeStage" -> "false"))
-      case "nowiden" => Some(Seq("spark.graft.scaleout.widen" -> "false"))
       case "spcores" => Some(Seq("spark.graft.stream.statePartitions" ->
         spark.sparkContext.defaultParallelism.toString))
-      // RocksDB state store + join stateFormatVersion 3 (virtual column
-      // families: ONE store per partition instead of 4 for a
-      // stream-stream join) — the A/B for the loadedProviders lock toll
-      case "rocksdb" => Some(Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.join.stateFormatVersion" -> "3"))
-      // restore the default (HDFS-backed) join state store — the A/B
-      // arm against StreamScale.joinStoreConf's RocksDB default
-      case "norocksjoin" => Some(Seq(
-        "spark.graft.stream.rocksdbJoin" -> "false"))
       case _ => None
     }
     val names = if (args.nonEmpty) args.toSeq else Queries.headline

@@ -172,7 +172,7 @@ case class AnnModelExpr(left: Expression, right: Expression)
 /** `graft_ann_gc(dir, keepLast)` / `graft_tok_gc(dir, keepLast)` /
   * `graft_idx_gc(dir, keepLast)` → array<int> of the versions deleted
   * ([[graft.operators.AnnIndex.gcShadowed]] /
-  * [[TokenizerStore.gcShadowed]] /
+  * [[TokenizerStore.Slots]] `gc` /
   * [[graft.operators.IndexStore.gcVersioned]]): the explicit
   * lifecycle sweep, SQL-reachable like the store mutations
   * (`graft_lib_save`, `graft_tok_save`). Stale-claim collection keeps
@@ -207,7 +207,7 @@ case class StoreGcExpr(kind: String, left: Expression, right: Expression)
     }
     val deleted = kind match {
       case "ann" => AnnIndex.gcShadowed(d, keepLast = k)
-      case "tok" => TokenizerStore.gcShadowed(d, keepLast = k)
+      case "tok" => TokenizerStore.Slots.gc(d, keepLast = k)
       case "idx" => graft.operators.IndexStore.gcVersioned(d, keepLast = k)
       case "bm25" => graft.operators.Retrieval.gcShadowed(d, keepLast = k)
       case other => throw new IllegalStateException(s"unknown store kind $other")
@@ -505,10 +505,7 @@ case class AnnMutateExpr(kind: String, children: Seq[Expression])
     val vecCol = if (children.length >= 6)
       children(5).eval(input).asInstanceOf[UTF8String].toString else "embedding"
     AnnSqlExprs.runDdl(s"graft-ann-$kind") { spark =>
-      val v = if (version > 0) version
-        else AnnIndex.latestVersion(dir.toString).getOrElse(
-          throw new NoSuchElementException(
-            s"no ANN index versions under ${dir.toString}"))
+      val v = AnnIndex.Versions.pin(dir.toString, version)
       if (isIngest)
         AnnIndex.ingest(spark.table(table.toString), dir.toString,
           batchId, v, idCol, vecCol)

@@ -1,10 +1,5 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
-
 /** Versioned store for legacy multi-byte ENCODING INDEX artifacts —
   * the load path [[CharsetDecode]]'s header names as debt: the
   * embedded decoder honors only the utf family + windows-1252, and
@@ -15,7 +10,7 @@ import org.json4s.jackson.Serialization
   * into source — it is the same artifact discipline as the
   * public-suffix list ([[PslStore]]) and the language profiles
   * ([[LangProfileStore]]): one immutable JSON per version
-  * ([[VersionedSlots.claimFile]] slots), loaded and PINNED at
+  * ([[Slots]], a [[VersionedSlots.Files]]), loaded and PINNED at
   * expression construction, shipped inside the plan, so a table
   * upgrade can never silently re-key history.
   *
@@ -68,37 +63,17 @@ object EncodingStore {
       indexes: Map[String, Map[String, Int]],
       ranges: Seq[Seq[Int]])
 
-  private implicit val formats: Formats = DefaultFormats
-
-  private val FilePattern = "enc_v([0-9]+)\\.json".r
-
-  private def file(dir: String, version: Int): Path =
-    Paths.get(dir, s"enc_v$version.json")
-
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    })
+  /** The version slots: `enc_v<N>.json`, listing, pinning, GC. */
+  val Slots = VersionedSlots.Files[Artifact]("enc", "encoding artifact")
 
   /** Persist an index set as the NEXT version (atomic, immutable). */
   def save(dir: String, indexes: Map[String, Map[Int, Int]],
            ranges: Seq[(Int, Int)] = Seq.empty): Int =
-    VersionedSlots.claimFile(dir, v => s"enc_v$v.json",
-      versions(dir).lastOption.getOrElse(0) + 1,
-      v => Serialization.write(Artifact(v,
-        indexes.map { case (n, m) =>
-          n -> m.map { case (p, c) => p.toString -> c }
-        },
-        ranges.map(r => Seq(r._1, r._2)))))
-
-  def get(dir: String, version: Int): Option[Artifact] =
-    try Some(Serialization.read[Artifact](
-      Files.readString(file(dir, version))))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-
-  def latest(dir: String): Option[Artifact] =
-    versions(dir).lastOption.flatMap(get(dir, _))
+    Slots.save(dir)(v => Artifact(v,
+      indexes.map { case (n, m) =>
+        n -> m.map { case (p, c) => p.toString -> c }
+      },
+      ranges.map(r => Seq(r._1, r._2))))
 
   // ------------------------------------------------------------------
   // label table — the WHATWG Encoding label table rows for the five
@@ -520,21 +495,11 @@ object EncodingStore {
       singles)
   }
 
-  /** Load + bake a pinned version (negative = latest at construction;
-    * 0 invalid — the stores' shared convention).
+  /** Load + bake a pinned version ([[VersionedSlots.Files.at]]:
+    * negative = latest at construction, 0 invalid).
     */
-  def tablesAt(dir: String, version: Int): LegacyTables = {
-    require(version != 0,
-      "encoding artifact version 0 is invalid (versions are 1-based; " +
-        "pass a negative value to pin to the latest at construction)")
-    val v = if (version > 0) version
-      else versions(dir).lastOption.getOrElse(
-        throw new NoSuchElementException(
-          s"no encoding artifact versions under $dir"))
-    tablesFrom(get(dir, v).getOrElse(
-      throw new NoSuchElementException(
-        s"encoding artifact version $v missing under $dir")))
-  }
+  def tablesAt(dir: String, version: Int): LegacyTables =
+    tablesFrom(Slots.at(dir, version)._2)
 
   // ------------------------------------------------------------------
   // offline snapshot generation — probe the JDK's own public decoders

@@ -1,17 +1,12 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
-
 /** Versioned store for language-identification profiles — the
   * artifact load path [[TextOps.langId]]'s embedded 5-language
   * stop-word vote stands in for: a production curation run loads a
   * REAL multi-language profile set (per-language token weight tables)
   * the same way the tokenizer loads its merges
-  * ([[TokenizerStore]] — one immutable JSON per version,
-  * [[VersionedSlots.claimFile]] slots, construction-time pinning).
+  * ([[TokenizerStore]] — one immutable JSON per version in [[Slots]],
+  * a [[VersionedSlots.Files]], construction-time pinning).
   * Scoring stays deterministic-integer: a document's score for a
   * language is the sum of that language's weights over the document's
   * whitespace tokens; the verdict is the argmax with first-profile
@@ -29,35 +24,15 @@ object LangProfileStore {
       profiles.map(p => p.lang -> p.weights.map(w => (w.token, w.weight)))
   }
 
-  private implicit val formats: Formats = DefaultFormats
-
-  private val FilePattern = "langid_v([0-9]+)\\.json".r
-
-  private def file(dir: String, version: Int): Path =
-    Paths.get(dir, s"langid_v$version.json")
-
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    })
+  /** The version slots: `langid_v<N>.json`, listing, pinning, GC. */
+  val Slots = VersionedSlots.Files[Artifact]("langid", "langid profile")
 
   /** Persist a profile set as the NEXT version (atomic, immutable). */
   def save(dir: String,
            profiles: Seq[(String, Seq[(String, Long)])]): Int =
-    VersionedSlots.claimFile(dir, v => s"langid_v$v.json",
-      versions(dir).lastOption.getOrElse(0) + 1,
-      v => Serialization.write(Artifact(v, profiles.map { case (l, ws) =>
-        LangProfile(l, ws.map { case (t, w) => TokenWeight(t, w) })
-      })))
-
-  def get(dir: String, version: Int): Option[Artifact] =
-    try Some(Serialization.read[Artifact](
-      Files.readString(file(dir, version))))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-
-  def latest(dir: String): Option[Artifact] =
-    versions(dir).lastOption.flatMap(get(dir, _))
+    Slots.save(dir)(v => Artifact(v, profiles.map { case (l, ws) =>
+      LangProfile(l, ws.map { case (t, w) => TokenWeight(t, w) })
+    }))
 }
 
 /** `langid_from(text)` → language name: the weighted-token scoring as

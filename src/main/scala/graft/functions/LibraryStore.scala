@@ -88,48 +88,29 @@ object LibraryStore {
     VersionedSlots.publishReplace(path, Serialization.write(entry))
   }
 
-  /** Version-history subdirectory: every deploy to the primary store
-    * ([[save]] or [[promote]]) also claims the function's next immutable
-    * `<name>_v<N>.json` file slot here ([[VersionedSlots.claimFile]] —
-    * the tokenizer-artifact discipline applied to library code). The
-    * live `<name>.json` stays the what-new-builds-get surface; the
-    * history is what makes an index built against `fn@v2` REPRODUCIBLE
-    * after a later promote rewrites the live entry — the same
-    * pin-never-drifts property every other artifact store in the engine
-    * has. The subdirectory carries no `.json` suffix, so [[list]] never
-    * surfaces it and history can never shadow a deployed entry.
+  /** Version-history directory of the library at `dir`: every deploy
+    * to the primary store ([[save]] or [[promote]]) also claims the
+    * function's next immutable `<name>_v<N>.json` file slot in
+    * `dir/_versions` ([[history]] — the tokenizer-artifact discipline
+    * applied to library code). The live `<name>.json` stays the
+    * what-new-builds-get surface; the history is what makes an index
+    * built against `fn@v2` REPRODUCIBLE after a later promote rewrites
+    * the live entry — the same pin-never-drifts property every other
+    * artifact store in the engine has. The subdirectory carries no
+    * `.json` suffix, so [[list]] never surfaces it and history can
+    * never shadow a deployed entry.
     */
-  private val VersionsDir = "_versions"
+  def historyDir(dir: String): String = Paths.get(dir, "_versions").toString
 
-  private def versionParse(name: String): String => Option[Int] = {
-    val p = (java.util.regex.Pattern.quote(name) + "_v([0-9]+)\\.json").r
-    s => s match {
-      case p(v) => Some(v.toInt)
-      case _ => None
-    }
-  }
-
-  /** Deployed versions of `name`, ascending (1-based; empty if the
-    * function has never been deployed).
+  /** The deploy history of function `name`: one [[VersionedSlots.Files]]
+    * per name under [[historyDir]]. Pins are positive-only — a
+    * reproducible rebuild names the version it was built against.
     */
-  def versionsOf(dir: String, name: String): Seq[Int] =
-    VersionedSlots.versions(Paths.get(dir, VersionsDir).toString,
-      versionParse(name))
+  def history(name: String): VersionedSlots.Files[Entry] =
+    VersionedSlots.Files[Entry](name, s"function '$name'")
 
   private def recordVersion(dir: String, entry: Entry): Int =
-    VersionedSlots.claimFile(Paths.get(dir, VersionsDir).toString,
-      v => s"${entry.name}_v$v.json",
-      versionsOf(dir, entry.name).lastOption.getOrElse(0) + 1,
-      _ => Serialization.write(entry))
-
-  /** Load a PINNED deployed version of `name` (immutable — a later
-    * [[save]]/[[promote]] can never change what this returns).
-    */
-  def getVersion(dir: String, name: String, version: Int): Option[Entry] = {
-    val p = Paths.get(dir, VersionsDir, s"${name}_v$version.json")
-    if (Files.exists(p)) Some(Serialization.read[Entry](Files.readString(p)))
-    else None
-  }
+    history(entry.name).save(historyDir(dir))(_ => entry)
 
   /** Save (upsert) an entry straight to the PRIMARY store; validates
     * expressions parse before storing (`savePrimaryStoreView`,
@@ -248,16 +229,6 @@ object LibraryStore {
     entries.size
   }
 
-  /** Explicit history GC ([[VersionedSlots.gcShadowed]], file-slot
-    * form): keep the newest `keepLast` deployed versions of `name`,
-    * delete the older history files. The LIVE entry is untouched —
-    * only pinned-history reproducibility narrows. Returns the versions
-    * deleted.
-    */
-  def gcVersions(dir: String, name: String, keepLast: Int = 4): Seq[Int] =
-    VersionedSlots.gcShadowed(Paths.get(dir, VersionsDir).toString,
-      versionParse(name), keepLast = keepLast)
-
   /** Load ONE function at a PINNED version into the catalog — what a
     * reproducible rebuild registers: an index built against `fn@v2`
     * rebuilds from v2's expressions even after a later promote moved the
@@ -265,7 +236,7 @@ object LibraryStore {
     */
   def loadInto(dir: String, catalog: FunctionCatalog, name: String,
                version: Int): ExprMapFunction = {
-    val entry = getVersion(dir, name, version).getOrElse(
+    val entry = history(name).get(historyDir(dir), version).getOrElse(
       throw new NoSuchElementException(
         s"function '$name' has no deployed version $version under $dir"))
     val fn = toMapFunction(entry)

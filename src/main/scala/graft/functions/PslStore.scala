@@ -1,17 +1,12 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
-
 /** Versioned store for public-suffix-list artifacts — the load path
   * [[UrlOps]]'s header promised: eTLD+1 against a ~15-entry embedded
   * snapshot mis-keys real multi-label suffixes, which silently
   * distorts domain caps and robots grouping; a deployment loads the
   * FULL list the way the tokenizer loads its artifact
-  * ([[TokenizerStore]] — one immutable JSON per version,
-  * [[VersionedSlots.claimFile]] slots, construction-time pinning).
+  * ([[TokenizerStore]] — one immutable JSON per version in [[Slots]],
+  * a [[VersionedSlots.Files]], construction-time pinning).
   *
   * The artifact is the PSL RULE list in publicsuffix.org's own
   * format, one rule per entry:
@@ -34,32 +29,12 @@ object PslStore {
 
   final case class Artifact(version: Int, rules: Seq[String])
 
-  private implicit val formats: Formats = DefaultFormats
-
-  private val FilePattern = "psl_v([0-9]+)\\.json".r
-
-  private def file(dir: String, version: Int): Path =
-    Paths.get(dir, s"psl_v$version.json")
-
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    })
+  /** The version slots: `psl_v<N>.json`, listing, pinning, GC. */
+  val Slots = VersionedSlots.Files[Artifact]("psl", "PSL")
 
   /** Persist a rule list as the NEXT version (atomic, immutable). */
   def save(dir: String, rules: Seq[String]): Int =
-    VersionedSlots.claimFile(dir, v => s"psl_v$v.json",
-      versions(dir).lastOption.getOrElse(0) + 1,
-      v => Serialization.write(Artifact(v, rules)))
-
-  def get(dir: String, version: Int): Option[Artifact] =
-    try Some(Serialization.read[Artifact](
-      Files.readString(file(dir, version))))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-
-  def latest(dir: String): Option[Artifact] =
-    versions(dir).lastOption.flatMap(get(dir, _))
+    Slots.save(dir)(v => Artifact(v, rules))
 
   /** A parsed, match-ready rule set. Built ONCE at expression
     * construction; matching is O(#host labels) HASH LOOKUPS per row

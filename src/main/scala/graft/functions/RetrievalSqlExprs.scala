@@ -202,10 +202,7 @@ case class Bm25MutateExpr(kind: String, children: Seq[Expression])
         AnnSqlExprs.evalInt(children(3).eval(input), "version")
       else -1
     AnnSqlExprs.runDdl(s"graft-bm25-$kind") { spark =>
-      val v = if (version > 0) version
-        else graft.operators.Retrieval.latestVersion(dir.toString)
-          .getOrElse(throw new NoSuchElementException(
-            s"no BM25 index versions under ${dir.toString}"))
+      val v = graft.operators.Retrieval.Versions.pin(dir.toString, version)
       if (isIngest)
         graft.operators.Retrieval.ingestBm25(
           spark.table(table.toString), dir.toString, batchId, v)

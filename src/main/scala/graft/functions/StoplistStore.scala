@@ -1,18 +1,13 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
-
 /** Versioned store for PER-LANGUAGE stopword lists — the data half of
   * the [[MainContent]] classifier: jusText ships one stoplist per
   * language, and a production pipeline selects the list by each
   * page's detected language. The lists are DATA on the same footing
   * as the tokenizer merges, the PSL and the language-ID profiles
   * ([[TokenizerStore]] / [[PslStore]] / [[LangProfileStore]]
-  * discipline: one immutable JSON per version,
-  * [[VersionedSlots.claimFile]] slots, construction-time pinning) —
+  * discipline: one immutable JSON per version in [[Slots]], a
+  * [[VersionedSlots.Files]], construction-time pinning) —
   * a stoplist edit is an artifact ROLLOUT, not a code change, and two
   * pins of the same corpus diff the classifier's behavior exactly.
   *
@@ -37,18 +32,8 @@ object StoplistStore {
                             charLists: Option[Map[String, Seq[String]]]
                               = None)
 
-  private implicit val formats: Formats = DefaultFormats
-
-  private val FilePattern = "stoplists_v([0-9]+)\\.json".r
-
-  private def file(dir: String, version: Int): Path =
-    Paths.get(dir, s"stoplists_v$version.json")
-
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    })
+  /** The version slots: `stoplists_v<N>.json`, listing, pinning, GC. */
+  val Slots = VersionedSlots.Files[Artifact]("stoplists", "stoplist artifact")
 
   /** Persist per-language lists as the NEXT version (atomic,
     * immutable); words are stored lowercase (matching is
@@ -57,35 +42,17 @@ object StoplistStore {
     */
   def save(dir: String, lists: Map[String, Seq[String]],
            charLists: Map[String, Seq[String]] = Map.empty): Int =
-    VersionedSlots.claimFile(dir, v => s"stoplists_v$v.json",
-      versions(dir).lastOption.getOrElse(0) + 1,
-      v => Serialization.write(Artifact(v,
-        lists.map { case (l, ws) =>
-          l -> ws.map(_.toLowerCase(java.util.Locale.ROOT)) },
-        if (charLists.isEmpty) None else Some(charLists))))
+    Slots.save(dir)(v => Artifact(v,
+      lists.map { case (l, ws) =>
+        l -> ws.map(_.toLowerCase(java.util.Locale.ROOT)) },
+      if (charLists.isEmpty) None else Some(charLists)))
 
-  def get(dir: String, version: Int): Option[Artifact] =
-    try Some(Serialization.read[Artifact](
-      Files.readString(file(dir, version))))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-
-  /** Load a pinned version's lists as match-ready sets (negative =
-    * latest at construction; 0 invalid — the stores' shared
-    * convention).
+  /** Load a pinned version's lists as match-ready sets
+    * ([[VersionedSlots.Files.at]]: negative = latest at construction,
+    * 0 invalid).
     */
-  def listsAt(dir: String, version: Int): Map[String, Set[String]] = {
-    require(version != 0,
-      "stoplist artifact version 0 is invalid (versions are 1-based; " +
-        "pass a negative value to pin to the latest at construction)")
-    val v = if (version > 0) version
-      else versions(dir).lastOption.getOrElse(
-        throw new NoSuchElementException(
-          s"no stoplist artifact versions under $dir"))
-    get(dir, v).getOrElse(
-      throw new NoSuchElementException(
-        s"stoplist artifact version $v missing under $dir"))
-      .lists.map { case (l, ws) => l -> ws.toSet }
-  }
+  def listsAt(dir: String, version: Int): Map[String, Set[String]] =
+    Slots.at(dir, version)._2.lists.map { case (l, ws) => l -> ws.toSet }
 
   /** Load a pinned version's per-character lists (same version
     * resolution as [[listsAt]]); a version saved before the char
@@ -95,19 +62,7 @@ object StoplistStore {
     * filtered HERE so the single-char contract holds for every
     * consumer, not just [[HtmlMainLangExpr]].
     */
-  def charListsAt(dir: String, version: Int)
-      : Map[String, Seq[String]] = {
-    require(version != 0,
-      "stoplist artifact version 0 is invalid (versions are 1-based; " +
-        "pass a negative value to pin to the latest at construction)")
-    val v = if (version > 0) version
-      else versions(dir).lastOption.getOrElse(
-        throw new NoSuchElementException(
-          s"no stoplist artifact versions under $dir"))
-    get(dir, v).getOrElse(
-      throw new NoSuchElementException(
-        s"stoplist artifact version $v missing under $dir"))
-      .charLists.getOrElse(Map.empty)
+  def charListsAt(dir: String, version: Int): Map[String, Seq[String]] =
+    Slots.at(dir, version)._2.charLists.getOrElse(Map.empty)
       .map { case (l, cs) => l -> cs.filter(_.length == 1) }
-  }
 }

@@ -521,23 +521,12 @@ object TextOps {
 
   /** [[langIdFrom]] against a PINNED [[LangProfileStore]] artifact:
     * the profile set loads ONCE at construction on the driver
-    * (negative version = latest at construction; 0 is invalid, the
-    * stores' shared convention) and ships inside the plan.
+    * ([[VersionedSlots.Files.at]]: negative version = latest at
+    * construction, 0 invalid) and ships inside the plan.
     */
   def langIdFromArtifact(text: Column, dir: String,
-                         version: Int = -1): Column = {
-    require(version != 0,
-      "langid version 0 is invalid (versions are 1-based; pass a " +
-        "negative value to pin to the latest at construction)")
-    val v = if (version > 0) version
-      else LangProfileStore.versions(dir).lastOption.getOrElse(
-        throw new NoSuchElementException(
-          s"no langid profile versions under $dir"))
-    val art = LangProfileStore.get(dir, v).getOrElse(
-      throw new NoSuchElementException(
-        s"langid profile version $v missing under $dir"))
-    langIdFrom(text, art.asPairs)
-  }
+                         version: Int = -1): Column =
+    langIdFrom(text, LangProfileStore.Slots.at(dir, version)._2.asPairs)
 
   /** BPE-ish subword tokenization by regex: runs of letters, runs of
     * digits, or runs of other non-space symbols — the cheap deterministic

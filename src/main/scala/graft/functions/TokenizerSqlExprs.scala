@@ -65,7 +65,7 @@ case class TokVersionsExpr(child: Expression)
   override def prettyName: String = "graft_tok_versions"
 
   override protected def nullSafeEval(dir: Any): Any =
-    new GenericArrayData(TokenizerStore.versions(
+    new GenericArrayData(TokenizerStore.Slots.versions(
       dir.asInstanceOf[UTF8String].toString).toArray)
 
   override protected def withNewChildInternal(newChild: Expression): TokVersionsExpr =
@@ -115,7 +115,7 @@ case class TokLatestExpr(child: Expression)
   override def prettyName: String = "graft_tok_latest"
 
   override protected def nullSafeEval(dir: Any): Any =
-    TokenizerStore.latest(dir.asInstanceOf[UTF8String].toString)
+    TokenizerStore.Slots.latest(dir.asInstanceOf[UTF8String].toString)
       .map(TokenizerSqlExprs.toRow).orNull
 
   override protected def withNewChildInternal(newChild: Expression): TokLatestExpr =

@@ -1,10 +1,5 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
-
 /** Versioned store for trained BPE tokenizer artifacts — the production
   * shape of the tokenizer tier: train ONCE on a corpus snapshot, persist
   * (merges + vocabulary + training config), and every later batch or
@@ -17,11 +12,12 @@ import org.json4s.jackson.Serialization
   * the "code" is the merge table and vocabulary, which are data, not
   * closures, so they persist safely across JVMs.
   *
-  * Layout: one JSON file per version, `dir/tokenizer_v<N>.json`.
-  * Versions are immutable — [[save]] always allocates the next free
-  * slot via [[VersionedSlots.claimFile]] (atomic, exclusive, staged
-  * full-bytes publish), so a pinned `get(dir, v)` can never observe
-  * drift or a truncated artifact. The artifact is control-plane-sized (merge rules
+  * Layout: one JSON file per version, `dir/tokenizer_v<N>.json`, kept
+  * by [[Slots]] ([[VersionedSlots.Files]]). Versions are immutable —
+  * [[save]] always allocates the next free slot (atomic, exclusive,
+  * staged full-bytes publish), so a pinned `get(dir, v)` can never
+  * observe drift or a truncated artifact. The artifact is
+  * control-plane-sized (merge rules
   * ≤ steps, vocab ≤ base-symbols + steps — the same bound that lets the
   * encode expressions carry it as literals), so a single JSON file per
   * version is the right durability unit even for a 100 TB corpus's
@@ -57,60 +53,21 @@ object TokenizerStore {
       vocab.map(e => (e.symbol, e.tokenId))
   }
 
-  private implicit val formats: Formats = DefaultFormats
-
-  private val FilePattern = "tokenizer_v([0-9]+)\\.json".r
-
-  private def file(dir: String, version: Int): Path =
-    Paths.get(dir, s"tokenizer_v$version.json")
-
-  /** Versions present in the store, ascending (empty if none). */
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    })
+  /** The version slots: `tokenizer_v<N>.json`, listing, pinning, GC. */
+  val Slots = VersionedSlots.Files[Artifact]("tokenizer", "tokenizer")
 
   /** Persist a trained tokenizer as the NEXT version; returns the
-    * allocated version number. [[VersionedSlots.claimFile]] gives both
-    * race-safety (two concurrent saves cannot share a version — the
-    * loser retries the next number) and crash-safety (full bytes are
-    * staged and linked into the slot name atomically, so a listed
-    * version is never a truncated file).
+    * allocated version number.
     */
   def save(dir: String, steps: Int, minPairCount: Long,
            merges: Seq[MergeRule], vocab: Seq[VocabEntry],
            maxVocab: Option[Int] = None): Int =
-    VersionedSlots.claimFile(dir, v => s"tokenizer_v$v.json",
-      versions(dir).lastOption.getOrElse(0) + 1,
-      v => Serialization.write(
-        Artifact(v, steps, minPairCount, merges, vocab, maxVocab)))
+    Slots.save(dir)(v =>
+      Artifact(v, steps, minPairCount, merges, vocab, maxVocab))
 
   /** Load a pinned version (immutable — repeated gets always agree). */
-  def get(dir: String, version: Int): Option[Artifact] = {
-    val p = file(dir, version)
-    // read-then-catch, not exists-then-read: a concurrent gcShadowed
-    // can delete a shadowed version between the check and the read —
-    // the Option contract says absent, never a thrown race
-    try Some(Serialization.read[Artifact](Files.readString(p)))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-  }
-
-  /** Load the newest version, if any. */
-  def latest(dir: String): Option[Artifact] =
-    versions(dir).lastOption.flatMap(get(dir, _))
-
-  /** Explicit version GC ([[VersionedSlots.gcShadowed]]): delete
-    * artifact files shadowed by the newest `keepLast` versions. File
-    * slots have no uncommitted state (the name only ever appears with
-    * full bytes behind it), so this is purely the shadowed-version
-    * sweep. Returns the versions deleted.
-    */
-  def gcShadowed(dir: String, keepLast: Int = 2): Seq[Int] =
-    VersionedSlots.gcShadowed(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    }, keepLast = keepLast)
+  def get(dir: String, version: Int): Option[Artifact] =
+    Slots.get(dir, version)
 
   /** Train on `docs` ([[TextOps.bpeTrainMergesLocal]] — the capped hybrid
     * trainer — plus [[TextOps.bpeVocab]]) and persist the result; returns

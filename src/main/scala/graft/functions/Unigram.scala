@@ -1,13 +1,9 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
-
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
 
 /** UNIGRAM-LM tokenizer (the SentencePiece family) — the OTHER
   * tokenizer real LLM stacks train beside BPE: instead of learning
@@ -306,7 +302,7 @@ case class UnigramEncodeExpr(child: Expression,
 
 /** Versioned store for trained unigram models — the
   * [[TokenizerStore]] discipline (one immutable JSON per version,
-  * [[VersionedSlots.claimFile]] slots, pinned loads) applied to the
+  * [[VersionedSlots.Files]] slots, pinned loads) applied to the
   * second tokenizer family: train ONCE, persist (entries + OOV cost +
   * training config), and every later encode loads the FROZEN artifact.
   */
@@ -319,31 +315,11 @@ object UnigramStore {
     def model: Unigram.Model = Unigram.Model(entries, oovCost)
   }
 
-  private implicit val formats: Formats = DefaultFormats
-
-  private val FilePattern = "unigram_v([0-9]+)\\.json".r
-
-  private def file(dir: String, version: Int): Path =
-    Paths.get(dir, s"unigram_v$version.json")
-
-  def versions(dir: String): Seq[Int] =
-    VersionedSlots.versions(dir, {
-      case FilePattern(v) => Some(v.toInt)
-      case _ => None
-    })
+  /** The version slots: `unigram_v<N>.json`, listing, pinning, GC. */
+  val Slots = VersionedSlots.Files[Artifact]("unigram", "unigram model")
 
   def save(dir: String, multiVocab: Int, emRounds: Int,
            model: Unigram.Model): Int =
-    VersionedSlots.claimFile(dir, v => s"unigram_v$v.json",
-      versions(dir).lastOption.getOrElse(0) + 1,
-      v => Serialization.write(
-        Artifact(v, multiVocab, emRounds, model.entries, model.oovCost)))
-
-  def get(dir: String, version: Int): Option[Artifact] =
-    try Some(Serialization.read[Artifact](
-      Files.readString(file(dir, version))))
-    catch { case _: java.nio.file.NoSuchFileException => None }
-
-  def latest(dir: String): Option[Artifact] =
-    versions(dir).lastOption.flatMap(get(dir, _))
+    Slots.save(dir)(v =>
+      Artifact(v, multiVocab, emRounds, model.entries, model.oovCost))
 }

@@ -73,22 +73,13 @@ object UrlOps {
 
   /** eTLD+1 against an ARTIFACT-loaded public suffix list
     * ([[PslStore]]) — the full-PSL load path the embedded snapshot
-    * stands in for. The version pins at CONSTRUCTION (negative =
-    * latest at construction; 0 is invalid — the [[graft.operators]]
-    * stores' convention), and the parsed rules ship inside the
-    * expression.
+    * stands in for. The version pins at CONSTRUCTION
+    * ([[VersionedSlots.Files.at]]: negative = latest at construction,
+    * 0 invalid), and the parsed rules ship inside the expression.
     */
   def registrableDomainFrom(host: Column, dir: String,
                             version: Int = -1): Column = {
-    require(version != 0,
-      "psl version 0 is invalid (versions are 1-based; pass a " +
-        "negative value to pin to the latest at construction)")
-    val v = if (version > 0) version
-      else PslStore.versions(dir).lastOption.getOrElse(
-        throw new NoSuchElementException(s"no PSL versions under $dir"))
-    val art = PslStore.get(dir, v).getOrElse(
-      throw new NoSuchElementException(
-        s"PSL version $v missing under $dir"))
+    val (v, art) = PslStore.Slots.at(dir, version)
     org.apache.spark.sql.GraftBridge.column(
       UrlDomainArtifactExpr(
         org.apache.spark.sql.GraftBridge.expression(host),

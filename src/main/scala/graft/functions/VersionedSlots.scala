@@ -1,38 +1,44 @@
 package graft.functions
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, NoSuchFileException, Path, Paths, Files => NioFiles}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** The ONE implementation of immutable version-slot claiming shared by
-  * every versioned artifact store ([[TokenizerStore]],
-  * [[graft.operators.AnnIndex]], [[LibraryStore]], the streaming dedup
-  * store epochs) — so visibility and race semantics cannot drift between
-  * stores. Two slot shapes, one contract each:
+  * every versioned artifact store, so visibility and race semantics
+  * cannot drift between stores. Two slot shapes, one case class each,
+  * and one version-pin rule for both:
   *
-  *  - '''File slots''' ([[claimFile]]): one artifact file per version.
-  *    The content is written COMPLETELY to a hidden temp sibling first
-  *    and then hard-linked into the slot name — `link(2)` is atomic and
-  *    fails when the name exists, so (a) two concurrent saves can never
-  *    share a version (the loser retries the next number), and (b) a
-  *    reader can NEVER observe a truncated artifact: the slot name
-  *    appears only with its full bytes behind it. (A direct `CREATE_NEW`
-  *    write gives (a) but not (b): a crash mid-write leaves a truncated
-  *    file that version listings treat as valid.)
-  *  - '''Directory slots''' ([[claimDir]]): one directory per version,
+  *  - '''File slots''' ([[Files]]): one JSON artifact file per version,
+  *    `<name>_v<N>.json` — the tokenizer, unigram, encoding, stoplist,
+  *    language-profile and PSL stores, and the library's per-function
+  *    deploy history. The content is written COMPLETELY to a hidden
+  *    temp sibling first and then hard-linked into the slot name —
+  *    `link(2)` is atomic and fails when the name exists, so (a) two
+  *    concurrent saves can never share a version (the loser retries
+  *    the next number), and (b) a reader can NEVER observe a truncated
+  *    artifact: the slot name appears only with its full bytes behind
+  *    it. (A direct `CREATE_NEW` write gives (a) but not (b): a crash
+  *    mid-write leaves a truncated file that version listings treat as
+  *    valid.)
+  *  - '''Directory slots''' ([[Dirs]]): one directory per version,
   *    claimed exclusively via `createDirectory`, filled by the caller,
-  *    and made VISIBLE only by the caller's final marker publish
-  *    ([[publishReplace]] of e.g. `model.json`) — so a half-written
-  *    version directory is never listed ([[versions]] takes the
-  *    visibility predicate).
+  *    and made VISIBLE only by the caller's final marker publish — so
+  *    a half-written version directory is never listed. The ANN, BM25,
+  *    scalar-index and epoch stores hold one instance each.
+  *  - '''One pin rule''' ([[pin]]): version 0 is rejected, a negative
+  *    version means the newest visible version NOW, a positive one is
+  *    taken as given.
   *
   * Slot numbers are never reused and never overwritten — a pinned
   * version can never observe drift; deletion is the separate, explicit
-  * lifecycle step [[gcShadowed]] (shadowed versions + stale crashed
-  * claims), never implicit.
+  * lifecycle step `gc` (shadowed versions + stale crashed claims),
+  * never implicit.
   *
   * The batch-directory stores ([[graft.operators.AnnIndex]] codes,
   * [[graft.operators.Retrieval]] postings, [[graft.streaming.EpochStore]]
@@ -47,11 +53,11 @@ object VersionedSlots {
     * visibility — the file-slot contract, where the name only exists
     * complete).
     */
-  def versions(dir: String, parse: String => Option[Int],
-               visible: Path => Boolean = _ => true): Seq[Int] = {
+  private def versions(dir: String, parse: String => Option[Int],
+                       visible: Path => Boolean = _ => true): Seq[Int] = {
     val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val stream = Files.list(d)
+    if (!NioFiles.isDirectory(d)) return Seq.empty
+    val stream = NioFiles.list(d)
     try stream.iterator.asScala
       .flatMap(p => parse(p.getFileName.toString).filter(_ => visible(p)))
       .toSeq.sorted
@@ -70,11 +76,11 @@ object VersionedSlots {
     */
   def committedBatches(root: String): Seq[Long] = {
     val d = Paths.get(root)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val stream = Files.list(d)
+    if (!NioFiles.isDirectory(d)) return Seq.empty
+    val stream = NioFiles.list(d)
     try stream.iterator.asScala
       .flatMap(p => p.getFileName.toString match {
-        case BatchDir(b) if Files.exists(p.resolve("_SUCCESS")) =>
+        case BatchDir(b) if NioFiles.exists(p.resolve("_SUCCESS")) =>
           Some(b.toLong)
         case _ => None
       }).toSeq.sorted
@@ -96,14 +102,14 @@ object VersionedSlots {
     * name. Returns false when the slot was already taken (caller
     * retries another slot). The temp file is always removed.
     */
-  def publishExclusive(target: Path, content: String): Boolean = {
-    val tmp = Files.createTempFile(target.getParent,
+  private def publishExclusive(target: Path, content: String): Boolean = {
+    val tmp = NioFiles.createTempFile(target.getParent,
       "." + target.getFileName.toString, ".tmp")
     try {
-      Files.writeString(tmp, content)
-      try { Files.createLink(target, tmp); true }
+      NioFiles.writeString(tmp, content)
+      try { NioFiles.createLink(target, tmp); true }
       catch { case _: FileAlreadyExistsException => false }
-    } finally Files.deleteIfExists(tmp)
+    } finally NioFiles.deleteIfExists(tmp)
   }
 
   /** Publish `content` at `target` atomically with upsert semantics
@@ -113,23 +119,23 @@ object VersionedSlots {
     * slot visibility markers.
     */
   def publishReplace(target: Path, content: String): Unit = {
-    val tmp = Files.createTempFile(target.getParent,
+    val tmp = NioFiles.createTempFile(target.getParent,
       "." + target.getFileName.toString, ".tmp")
     try {
-      Files.writeString(tmp, content)
-      Files.move(tmp, target,
+      NioFiles.writeString(tmp, content)
+      NioFiles.move(tmp, target,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(tmp)
+    } finally NioFiles.deleteIfExists(tmp)
   }
 
   /** Claim the next free FILE slot at or above `from` and publish
     * `content(v)` into it (content takes the version because artifacts
     * usually embed their own number). Returns the claimed version.
     */
-  def claimFile(dir: String, name: Int => String, from: Int,
-                content: Int => String): Int = {
-    Files.createDirectories(Paths.get(dir))
+  private def claimFile(dir: String, name: Int => String, from: Int,
+                        content: Int => String): Int = {
+    NioFiles.createDirectories(Paths.get(dir))
     var v = math.max(from, 1)
     while (!publishExclusive(Paths.get(dir, name(v)), content(v))) v += 1
     v
@@ -154,8 +160,8 @@ object VersionedSlots {
     */
   def claimFloor(dir: String): Int = {
     val p = Paths.get(dir, FloorFile)
-    if (!Files.exists(p)) 0
-    else scala.util.Try(Files.readString(p).trim.toInt).getOrElse(0)
+    if (!NioFiles.exists(p)) 0
+    else scala.util.Try(NioFiles.readString(p).trim.toInt).getOrElse(0)
   }
 
   /** Raise the store's claim floor to at least `v` (idempotent,
@@ -175,17 +181,103 @@ object VersionedSlots {
     * Returns the claimed version.
     */
   def claimDir(dir: String, name: Int => String, from: Int): Int = {
-    Files.createDirectories(Paths.get(dir))
+    NioFiles.createDirectories(Paths.get(dir))
     var v = math.max(math.max(from, 1), claimFloor(dir))
     while (true) {
       try {
-        Files.createDirectory(Paths.get(dir, name(v)))
+        NioFiles.createDirectory(Paths.get(dir, name(v)))
         raiseFloor(dir, v + 1)
         return v
       }
       catch { case _: FileAlreadyExistsException => v += 1 }
     }
     v // unreachable
+  }
+
+  /** The ONE version-pin rule of every store here: 0 is invalid (slot
+    * numbers are 1-based), a negative version resolves to the newest
+    * visible version NOW (`latest`), a positive one is taken as given.
+    * Throws NoSuchElementException when a negative pin meets an empty
+    * store; `what` names the store in both errors.
+    */
+  private def pin(dir: String, version: Int, latest: => Option[Int],
+                  what: String): Int = {
+    require(version != 0,
+      s"$what version 0 is invalid (versions are 1-based; pass a " +
+        "negative value to pin to the latest at construction)")
+    if (version > 0) version
+    else latest.getOrElse(throw new NoSuchElementException(
+      s"no $what versions under $dir"))
+  }
+
+  /** A FILE-slot store: versions are `<name>_v<N>.json` files under the
+    * store directory, each holding one JSON artifact `A` (json4s
+    * `DefaultFormats`), claimed and published by [[claimFile]] — so
+    * presence is visibility and a listed version is never truncated.
+    * One instance per store kind, so parsing, listing, saving, reading,
+    * pinning and GC are the same code for all of them. `what` names the
+    * store in its errors.
+    */
+  final case class Files[A <: AnyRef](name: String, what: String)(
+      implicit mf: Manifest[A]) {
+    private implicit val formats: Formats = DefaultFormats
+    private val SlotName =
+      (java.util.regex.Pattern.quote(name) + "_v([0-9]+)\\.json").r
+
+    /** The slot number of a file name; None for foreign entries
+      * (including the hidden `.tmp` staging siblings) and for numbers
+      * past Int range — a stray copy must be ignored, not crash every
+      * listing.
+      */
+    def parse(entry: String): Option[Int] = entry match {
+      case SlotName(n) => scala.util.Try(n.toInt).toOption
+      case _ => None
+    }
+
+    private def file(v: Int): String = s"${name}_v$v.json"
+
+    /** Versions present, ascending (empty if none). */
+    def versions(dir: String): Seq[Int] = VersionedSlots.versions(dir, parse)
+
+    /** The newest version's artifact, if any. */
+    def latest(dir: String): Option[A] =
+      versions(dir).lastOption.flatMap(get(dir, _))
+
+    /** Persist `artifact(v)` as the NEXT version (the artifact takes the
+      * version because artifacts usually embed their own number);
+      * returns the claimed version. [[claimFile]] gives both
+      * race-safety (two concurrent saves never share a version) and
+      * crash-safety (a listed version is never a truncated file).
+      */
+    def save(dir: String)(artifact: Int => A): Int =
+      claimFile(dir, file, versions(dir).lastOption.getOrElse(0) + 1,
+        v => Serialization.write(artifact(v)))
+
+    /** Load a version (immutable — repeated gets always agree). */
+    def get(dir: String, v: Int): Option[A] =
+      // read-then-catch, not exists-then-read: a concurrent gc can
+      // delete a shadowed version between the check and the read — the
+      // Option contract says absent, never a thrown race
+      try Some(Serialization.read[A](NioFiles.readString(Paths.get(dir, file(v)))))
+      catch { case _: NoSuchFileException => None }
+
+    /** [[VersionedSlots.pin]] plus the load: the pinned version and its
+      * artifact. A pinned version that is absent throws
+      * NoSuchElementException.
+      */
+    def at(dir: String, version: Int): (Int, A) = {
+      val v = VersionedSlots.pin(dir, version, versions(dir).lastOption, what)
+      v -> get(dir, v).getOrElse(throw new NoSuchElementException(
+        s"$what version $v missing under $dir"))
+    }
+
+    /** [[gcShadowed]] of the file slots: delete the versions shadowed by
+      * the newest `keepLast`. File slots have no uncommitted state (the
+      * name only ever appears with full bytes behind it), so this is
+      * purely the shadowed-version sweep. Returns the versions deleted.
+      */
+    def gc(dir: String, keepLast: Int = 2): Seq[Int] =
+      gcShadowed(dir, parse, keepLast = keepLast)
   }
 
   /** A DIRECTORY-slot store: versions are `<prefix><N>/` directories
@@ -210,7 +302,7 @@ object VersionedSlots {
 
     def path(dir: String, v: Int): Path = Paths.get(dir, s"$prefix$v")
 
-    private def visible(p: Path): Boolean = Files.exists(p.resolve(marker))
+    private def visible(p: Path): Boolean = NioFiles.exists(p.resolve(marker))
 
     /** Visible versions, ascending. */
     def versions(dir: String): Seq[Int] =
@@ -219,29 +311,28 @@ object VersionedSlots {
     /** The newest visible version, if any. */
     def latest(dir: String): Option[Int] = versions(dir).lastOption
 
-    /** The version a reader or writer works on: `version` when > 0,
-      * else the newest visible one NOW — a stream maintainer calls this
-      * once at construction, so a later build cannot retarget it.
-      * Throws NoSuchElementException on an empty store.
+    /** The version a reader or writer works on ([[VersionedSlots.pin]]):
+      * a stream maintainer calls this once at construction, so a later
+      * build cannot retarget it.
       */
     def pin(dir: String, version: Int): Int =
-      if (version > 0) version
-      else latest(dir).getOrElse(throw new NoSuchElementException(
-        s"no $what versions under $dir"))
+      VersionedSlots.pin(dir, version, latest(dir), what)
+
+    /** Every slot directory present, visible or not, ascending. */
+    def claimed(dir: String): Seq[Int] = VersionedSlots.versions(dir, parse)
 
     /** Claim the next slot above every slot directory present, visible
       * or not ([[claimDir]]: exclusive, never below the claim floor).
       */
     def claimNext(dir: String): Int =
-      claimDir(dir, n => s"$prefix$n",
-        VersionedSlots.versions(dir, parse).lastOption.getOrElse(0) + 1)
+      claimDir(dir, n => s"$prefix$n", claimed(dir).lastOption.getOrElse(0) + 1)
 
     /** Publish the marker: the version becomes visible. */
     def publish(dir: String, v: Int, content: String): Unit =
       publishReplace(path(dir, v).resolve(marker), content)
 
     def readMarker(dir: String, v: Int): String =
-      Files.readString(path(dir, v).resolve(marker))
+      NioFiles.readString(path(dir, v).resolve(marker))
 
     /** [[gcShadowed]] with the marker deleted first. */
     def gc(dir: String, keepLast: Int = 2,
@@ -305,25 +396,25 @@ object VersionedSlots {
     // GC run between the listing and this walk must read as "fresh"
     // (skip), not throw out of gcShadowed and abort the whole sweep
     try {
-      val walk = Files.walk(p)
+      val walk = NioFiles.walk(p)
       try walk.iterator.asScala
-        .map(q => Files.getLastModifiedTime(q).toMillis)
+        .map(q => NioFiles.getLastModifiedTime(q).toMillis)
         .foldLeft(0L)(math.max)
       finally walk.close()
     } catch { case _: Exception => Long.MaxValue } // racing writer: fresh
 
-  def gcShadowed(dir: String, parse: String => Option[Int],
-                 visible: Path => Boolean = _ => true,
-                 keepLast: Int = 2,
-                 marker: Option[String] = None,
-                 staleUncommittedMs: Long = 24L * 3600 * 1000,
-                 nowMs: Long = System.currentTimeMillis,
-                 onDeleteFailure: (Int, Exception) => Unit = (v, e) =>
-                   System.err.println(
-                     s"[graft-gc] failed to delete version $v: $e")): Seq[Int] = {
+  private def gcShadowed(dir: String, parse: String => Option[Int],
+                         visible: Path => Boolean = _ => true,
+                         keepLast: Int = 2,
+                         marker: Option[String] = None,
+                         staleUncommittedMs: Long = 24L * 3600 * 1000,
+                         nowMs: Long = System.currentTimeMillis,
+                         onDeleteFailure: (Int, Exception) => Unit = (v, e) =>
+                           System.err.println(
+                             s"[graft-gc] failed to delete version $v: $e")): Seq[Int] = {
     val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val stream = Files.list(d)
+    if (!NioFiles.isDirectory(d)) return Seq.empty
+    val stream = NioFiles.list(d)
     val entries =
       try stream.iterator.asScala
         .flatMap(p => parse(p.getFileName.toString).map(v => (v, p)))
@@ -335,7 +426,7 @@ object VersionedSlots {
       if (keep.contains(v)) false
       // a tombstoned slot is a half-deleted decommission: collect
       // unconditionally (it can never become visible again)
-      else if (Files.exists(p.resolve(Tombstone))) true
+      else if (NioFiles.exists(p.resolve(Tombstone))) true
       else if (visible(p)) true // shadowed committed version
       // subtraction, not addition: the walk-exception fallback is
       // Long.MaxValue ("fresh"), and `MaxValue + staleMs` would wrap
@@ -344,22 +435,22 @@ object VersionedSlots {
       else nowMs - deepestMtimeMs(p) >= staleUncommittedMs
     }.filter { case (v, p) =>
       try {
-        if (Files.isDirectory(p)) {
+        if (NioFiles.isDirectory(p)) {
           // fence the number first: even if every delete below fails,
           // no later claim can take this slot
           raiseFloor(dir, v + 1)
           // tombstone → marker delete → walk (see Scaladoc ordering)
           val tomb = p.resolve(Tombstone)
-          if (!Files.exists(tomb)) Files.writeString(tomb, "")
-          marker.foreach(m => Files.deleteIfExists(p.resolve(m)))
-          val walk = Files.walk(p)
+          if (!NioFiles.exists(tomb)) NioFiles.writeString(tomb, "")
+          marker.foreach(m => NioFiles.deleteIfExists(p.resolve(m)))
+          val walk = NioFiles.walk(p)
           try walk.sorted(java.util.Comparator.reverseOrder())
             .filter(q => q != p && q != tomb)
-            .forEach(q => Files.delete(q))
+            .forEach(q => NioFiles.delete(q))
           finally walk.close()
-          Files.delete(tomb)
-          Files.delete(p)
-        } else Files.deleteIfExists(p)
+          NioFiles.delete(tomb)
+          NioFiles.delete(p)
+        } else NioFiles.deleteIfExists(p)
         true
       } catch { case e: Exception => onDeleteFailure(v, e); false }
     }.map(_._1)

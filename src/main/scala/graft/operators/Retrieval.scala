@@ -724,11 +724,6 @@ object Retrieval {
                          idCol: String = "vec_id",
                          vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // version 0 is not a valid slot number; `Dirs.pin` would read it as
-    // "latest now", which silently repins a caller that meant a slot
-    require(bm25Version != 0 && annVersion != 0,
-      "index version 0 is invalid (versions are 1-based; pass a " +
-        "negative value to pin to the latest at construction)")
     val bv = Versions.pin(bm25Dir, bm25Version)
     val av = AnnIndex.Versions.pin(annDir, annVersion)
     // snapshot ceilings captured at CONSTRUCTION alongside the version

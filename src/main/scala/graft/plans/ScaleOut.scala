@@ -33,13 +33,12 @@ object ScaleOut {
     * retried task reproduces the same placement, and every consumer in
     * this engine is row-order-independent anyway (hash-verified
     * oracles, deterministic tie-breaks).
+    *
+    * There is no kill-switch: at cluster scale the guard already keeps
+    * the plan unwidened, so a conf to force that would only ever
+    * change local-mode plans.
     */
   def widen(df: DataFrame): DataFrame = {
-    // operational kill-switch (also the A/B instrument): widening is a
-    // plan change, and a deployment that wants the unwidened plan back
-    // should not need a rebuild
-    val enabled = df.sparkSession.conf
-      .getOption("spark.graft.scaleout.widen").forall(_.toBoolean)
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // SCAN-ROOT-ONLY, enforced: the partition probe below builds the
     // frame's physical RDD, and under AQE a frame containing an
@@ -48,7 +47,7 @@ object ScaleOut {
     // For a scan-rooted frame (leaf + narrow row ops — every call site)
     // the probe is metadata-only: it reads the file-split count, runs
     // no job. Anything wider skips widening instead of paying that.
-    if (enabled && scanRooted(df) && df.rdd.getNumPartitions * 2 < cores)
+    if (scanRooted(df) && df.rdd.getNumPartitions * 2 < cores)
       df.repartition(cores)
     else df
   }

@@ -984,7 +984,7 @@ private[graft] trait ExtQueriesA extends IndexQueries {
       multiVocab = 24, emRounds = 1)
     val v = graft.functions.UnigramStore.save(dir, multiVocab = 24,
       emRounds = 1, model = m)
-    val pinned = graft.functions.UnigramStore.get(dir, v)
+    val pinned = graft.functions.UnigramStore.Slots.get(dir, v)
       .getOrElse(sys.error(s"unigram v$v vanished from $dir")).model
     docs(s, d)
       .select(col("doc_id"),

@@ -362,9 +362,8 @@ private[graft] trait IndexQueries extends QueryBase {
       .option("pathGlobFilter", "events.parquet").parquet(d)
     s.catalog.dropTempView("graft_events_join_stream")
     // stream-stream join: RocksDB + virtual-column-family state (ONE
-    // store per partition instead of four — StreamScale.joinStoreConf)
-    val q = graft.streaming.StreamScale.runDrainedConf(s,
-      graft.streaming.StreamScale.joinStoreConf(s)) {
+    // store per partition instead of four — StreamScale.runDrained)
+    val q = graft.streaming.StreamScale.runDrained(s, joinState = true) {
       graft.streaming.EventWindows.intervalJoinStream(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("graft_events_join_stream")

@@ -81,7 +81,7 @@ object EpochStore {
     // the initial epoch directly (exclusive createDirectory all the
     // same) — but only when no claim floor fences it (a swept crashed
     // epoch-0 claim must not have its number reused)
-    if (VersionedSlots.versions(root, Epochs.parse).isEmpty &&
+    if (Epochs.claimed(root).isEmpty &&
         VersionedSlots.claimFloor(root) <= 0) {
       try {
         Files.createDirectories(java.nio.file.Paths.get(root))

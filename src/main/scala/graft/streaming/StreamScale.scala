@@ -60,18 +60,18 @@ object StreamScale {
     * is deliberately NOT used: the bench's queries register temp views
     * and reuse the session's conf knobs, and a cloned session would
     * silently detach both.
+    *
+    * `joinState = true` also holds the stream-stream-join state store
+    * ([[JoinStateConf]]) for the same lifetime. That is the only other
+    * conf a drain may hold, so no caller can pin an arbitrary session
+    * conf under legs that [[graft.plans.Overlap]] plans meanwhile.
+    * Each saved value — set or unset — is restored exactly.
     */
-  def runDrained(spark: SparkSession)(body: => StreamingQuery): StreamingQuery =
-    runDrainedConf(spark, Nil)(body)
-
-  /** [[runDrained]] plus extra session confs held with the same
-    * lifetime/restore discipline (each saved value — set or unset — is
-    * restored exactly).
-    */
-  def runDrainedConf(spark: SparkSession, extra: Seq[(String, String)])
-                    (body: => StreamingQuery): StreamingQuery = {
+  def runDrained(spark: SparkSession, joinState: Boolean = false)
+                (body: => StreamingQuery): StreamingQuery = {
     val confs = ("spark.sql.shuffle.partitions" ->
-      statePartitions(spark).toString) +: extra
+      statePartitions(spark).toString) +:
+      (if (joinState) JoinStateConf else Nil)
     val saved = confs.map { case (k, v) =>
       val prev = spark.conf.getOption(k)
       spark.conf.set(k, v)
@@ -98,18 +98,15 @@ object StreamScale {
     * win grows with partition count, i.e. with cluster size. Composes
     * WITH the cores/4 rule, not instead of it.
     *
-    * Kill-switch: `spark.graft.stream.rocksdbJoin=false` restores the
-    * default backend. Applied per stream (the other stateful streams
-    * carry ONE store per partition, where the HDFS backend measured
-    * neutral-to-better — `events_stream_dedup` 1.43 vs 1.83 warm).
+    * No kill-switch: the win grows with cluster size, so there is no
+    * scale at which the default backend is the better join store.
+    * Applied per stream (the other stateful streams carry ONE store per
+    * partition, where the HDFS backend measured neutral-to-better —
+    * `events_stream_dedup` 1.43 vs 1.83 warm).
     */
-  def joinStoreConf(spark: SparkSession): Seq[(String, String)] =
-    if (spark.conf.getOption("spark.graft.stream.rocksdbJoin")
-        .forall(_.toBoolean))
-      Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"),
-        "spark.sql.streaming.join.stateFormatVersion" -> "3")
-    else Nil
+  private val JoinStateConf = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider"),
+    "spark.sql.streaming.join.stateFormatVersion" -> "3")
 }

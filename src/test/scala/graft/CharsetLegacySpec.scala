@@ -162,7 +162,7 @@ class CharsetLegacySpec extends AnyFunSuite {
     val idx = Map("jis0208" -> Map(0 -> 0x3000, 207 -> 0x4E9C),
       "big5" -> Map(5024 -> 0x4E2D))
     val v = EncodingStore.save(dir, idx, Seq((0, 0x80), (39, 0x2000)))
-    val art = EncodingStore.get(dir, v).get
+    val art = EncodingStore.Slots.get(dir, v).get
     assert(art.indexes("jis0208")("207") == 0x4E9C)
     val t = EncodingStore.tablesFrom(art)
     assert(t.jis0208(207) == 0x4E9C && t.jis0208(1) == -1)

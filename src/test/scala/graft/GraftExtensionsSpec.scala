@@ -10,6 +10,13 @@ class GraftExtensionsSpec extends SparkSpec {
 
   GraftExtensions.register(spark)
 
+  test("GraftSession config: AQE, broadcast threshold, SQL functions") {
+    val s = GraftSession.create("local[2]", cores = 2)
+    assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+    assert(s.sql("SELECT vec_dot(array(1.0D), array(3.0D)) AS d")
+      .collect().head.getDouble(0) == 3.0)
+  }
+
   test("vec_dot from SQL") {
     val out = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
@@ -307,7 +314,7 @@ class GraftExtensionsSpec extends SparkSpec {
       "labels outside the pin still reject by name") {
     import graft.functions.EncodingStore
     val dir = EncodingStore.jdkSnapshotDir
-    val v = EncodingStore.versions(dir).last
+    val v = EncodingStore.Slots.versions(dir).last
     import spark.implicits._
     // Shift_JIS 日本語 behind a transport label
     Seq(("93fa967b8cea", "text/html; charset=shift_jis"),

@@ -46,25 +46,24 @@ class LibraryStoreSpec extends SparkSpec {
     LibraryStore.saveTemp(dir, Entry("bal", Seq("c_acctbal * 2")))
     LibraryStore.promote(dir, "bal")
     assert(LibraryStore.save(dir, Entry("bal", Seq("c_acctbal * 3"))) == 3)
-    assert(LibraryStore.versionsOf(dir, "bal") == Seq(1, 2, 3))
+    val (bal, hist) = (LibraryStore.history("bal"), LibraryStore.historyDir(dir))
+    assert(bal.versions(hist) == Seq(1, 2, 3))
     // the live surface moved on; every pinned version still reads as
     // deployed — an index built against bal@v2 is reproducible forever
     assert(LibraryStore.get(dir, "bal").get.exprs == Seq("c_acctbal * 3"))
-    assert(LibraryStore.getVersion(dir, "bal", 1).get.exprs
-      == Seq("c_acctbal"))
-    assert(LibraryStore.getVersion(dir, "bal", 2).get.exprs
-      == Seq("c_acctbal * 2"))
+    assert(bal.get(hist, 1).get.exprs == Seq("c_acctbal"))
+    assert(bal.get(hist, 2).get.exprs == Seq("c_acctbal * 2"))
     // histories are per-name: another function starts at v1
     assert(LibraryStore.save(dir, Entry("seg", Seq("c_mktsegment"))) == 1)
-    assert(LibraryStore.versionsOf(dir, "bal") == Seq(1, 2, 3))
+    assert(bal.versions(hist) == Seq(1, 2, 3))
     // drafts alone never claim a version — only deploys do
     LibraryStore.saveTemp(dir, Entry("bal", Seq("c_acctbal * 9")))
-    assert(LibraryStore.versionsOf(dir, "bal") == Seq(1, 2, 3))
+    assert(bal.versions(hist) == Seq(1, 2, 3))
     // history GC: keeps the newest versions of THIS name only; the
     // live entry and other functions' histories are untouched
-    assert(LibraryStore.gcVersions(dir, "bal", keepLast = 2) == Seq(1))
-    assert(LibraryStore.versionsOf(dir, "bal") == Seq(2, 3))
-    assert(LibraryStore.versionsOf(dir, "seg") == Seq(1))
+    assert(bal.gc(hist, keepLast = 2) == Seq(1))
+    assert(bal.versions(hist) == Seq(2, 3))
+    assert(LibraryStore.history("seg").versions(hist) == Seq(1))
     assert(LibraryStore.get(dir, "bal").get.exprs == Seq("c_acctbal * 3"))
     // numbering stays monotonic past the swept history
     assert(LibraryStore.save(dir, Entry("bal", Seq("c_acctbal * 4"))) == 4)

@@ -55,17 +55,17 @@ class PslStoreSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("versioned lifecycle: save allocates, get pins, latest follows") {
     val dir = java.nio.file.Files
       .createTempDirectory("psl_spec").toString
-    assert(PslStore.versions(dir).isEmpty)
+    assert(PslStore.Slots.versions(dir).isEmpty)
     assert(PslStore.save(dir, Seq("com")) == 1)
     assert(PslStore.save(dir, Seq("com", "co.uk")) == 2)
-    assert(PslStore.versions(dir) == Seq(1, 2))
-    assert(PslStore.get(dir, 1).get.rules == Seq("com"))
-    assert(PslStore.latest(dir).get.version == 2)
-    assert(PslStore.get(dir, 3).isEmpty)
+    assert(PslStore.Slots.versions(dir) == Seq(1, 2))
+    assert(PslStore.Slots.get(dir, 1).get.rules == Seq("com"))
+    assert(PslStore.Slots.latest(dir).get.version == 2)
+    assert(PslStore.Slots.get(dir, 3).isEmpty)
     // the two versions resolve the SAME host differently — the whole
     // point of pinning
-    val v1 = PslStore.parseRules(PslStore.get(dir, 1).get.rules)
-    val v2 = PslStore.parseRules(PslStore.get(dir, 2).get.rules)
+    val v1 = PslStore.parseRules(PslStore.Slots.get(dir, 1).get.rules)
+    val v2 = PslStore.parseRules(PslStore.Slots.get(dir, 2).get.rules)
     assert(v1.registrable("shop.example.co.uk") == "co.uk")
     assert(v2.registrable("shop.example.co.uk") == "example.co.uk")
   }

@@ -25,18 +25,18 @@ class TokenizerStoreSpec extends SparkSpec {
 
   test("save allocates monotone versions; a pinned version never drifts") {
     val dir = tmp
-    assert(TokenizerStore.versions(dir).isEmpty &&
-      TokenizerStore.latest(dir).isEmpty)
+    assert(TokenizerStore.Slots.versions(dir).isEmpty &&
+      TokenizerStore.Slots.latest(dir).isEmpty)
     val v1 = TokenizerStore.trainAndSave(dir, corpus, steps = 3)
     val art1 = TokenizerStore.get(dir, v1).get
     val v2 = TokenizerStore.trainAndSave(dir, corpus, steps = 6)
     assert(v1 == 1 && v2 == 2)
-    assert(TokenizerStore.versions(dir) == Seq(1, 2))
+    assert(TokenizerStore.Slots.versions(dir) == Seq(1, 2))
     // the pin: v1 re-read AFTER v2 landed is byte-for-byte the same
     // artifact (merges, vocab, config), and latest() is v2
     assert(TokenizerStore.get(dir, v1).get == art1)
     assert(art1.steps == 3 && art1.merges.length <= 3)
-    val art2 = TokenizerStore.latest(dir).get
+    val art2 = TokenizerStore.Slots.latest(dir).get
     assert(art2.version == v2 && art2.steps == 6)
     // more steps extend, never rewrite, the earlier merge prefix
     assert(art2.mergePairs.take(art1.mergePairs.length) == art1.mergePairs)

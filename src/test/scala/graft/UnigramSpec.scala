@@ -82,8 +82,8 @@ class UnigramSpec extends SparkSpec {
     assert(out(1).getSeq[String](1) == Seq.empty)
     val dir = Scratch.dir("graft_unigram_spec")
     val v = UnigramStore.save(dir, multiVocab = 2, emRounds = 1, m)
-    val back = UnigramStore.get(dir, v).get
+    val back = UnigramStore.Slots.get(dir, v).get
     assert(back.model == m && back.multiVocab == 2 && back.emRounds == 1)
-    assert(UnigramStore.get(dir, v + 1).isEmpty)
+    assert(UnigramStore.Slots.get(dir, v + 1).isEmpty)
   }
 }

@@ -142,8 +142,8 @@ class VersionGcSpec extends SparkSpec {
     val v1 = TokenizerStore.trainAndSave(dir, docs, steps = 2)
     val v2 = TokenizerStore.trainAndSave(dir, docs, steps = 3)
     val v3 = TokenizerStore.trainAndSave(dir, docs, steps = 4)
-    assert(TokenizerStore.gcShadowed(dir, keepLast = 2) == Seq(v1))
-    assert(TokenizerStore.versions(dir) == Seq(v2, v3))
+    assert(TokenizerStore.Slots.gc(dir, keepLast = 2) == Seq(v1))
+    assert(TokenizerStore.Slots.versions(dir) == Seq(v2, v3))
     // pinned survivors load; the swept one is gone, not corrupted
     assert(TokenizerStore.get(dir, v2).exists(_.steps == 3))
     assert(TokenizerStore.get(dir, v1).isEmpty)
@@ -169,7 +169,7 @@ class VersionGcSpec extends SparkSpec {
     TokenizerStore.trainAndSave(tokDir, docs, steps = 2)
     assert(spark.sql(s"SELECT graft_tok_gc('$tokDir', 1)")
       .as[Seq[Int]].head() == Seq(1, 2))
-    assert(TokenizerStore.versions(tokDir) == Seq(3))
+    assert(TokenizerStore.Slots.versions(tokDir) == Seq(3))
     // type errors fail analysis, like the rest of the wire surface
     val e = intercept[Exception](
       spark.sql(s"SELECT graft_ann_gc('$dir', 'two')").collect())
@@ -178,14 +178,90 @@ class VersionGcSpec extends SparkSpec {
 
   test("gcShadowed always keeps at least one visible version") {
     val dir = tmp
-    Files.createDirectories(Paths.get(dir))
-    VersionedSlots.claimFile(dir, v => s"a_v$v.json", 1, _ => "{}")
-    val parse: String => Option[Int] = {
-      case s if s.startsWith("a_v") && s.endsWith(".json") =>
-        Some(s.stripPrefix("a_v").stripSuffix(".json").toInt)
-      case _ => None
-    }
-    assert(VersionedSlots.gcShadowed(dir, parse, keepLast = 0) == Seq.empty)
-    assert(VersionedSlots.versions(dir, parse) == Seq(1))
+    val slots = VersionedSlots.Files[Map[String, Int]]("a", "test artifact")
+    slots.save(dir)(v => Map("v" -> v))
+    assert(slots.gc(dir, keepLast = 0) == Seq.empty)
+    assert(slots.versions(dir) == Seq(1))
   }
+
+  import VersionGcSpec.FileStore
+
+  private val fileStores: Seq[FileStore[_ <: AnyRef]] = {
+    import graft.functions._
+    Seq(
+      FileStore[TokenizerStore.Artifact](TokenizerStore.Slots, identity,
+        (d, i) => TokenizerStore.save(d, steps = i, minPairCount = 1L,
+          merges = Seq.empty, vocab = Seq.empty), _.steps),
+      FileStore[EncodingStore.Artifact](EncodingStore.Slots, identity,
+        (d, i) => EncodingStore.save(d, Map("jis0208" -> Map(0 -> i))),
+        _.indexes("jis0208")("0")),
+      FileStore[UnigramStore.Artifact](UnigramStore.Slots, identity,
+        (d, i) => UnigramStore.save(d, multiVocab = i, emRounds = 1,
+          Unigram.Model(Seq.empty, 1L)), _.multiVocab),
+      FileStore[StoplistStore.Artifact](StoplistStore.Slots, identity,
+        (d, i) => StoplistStore.save(d, Map("en" -> Seq(s"w$i"))),
+        _.lists("en").head.stripPrefix("w").toInt),
+      FileStore[LangProfileStore.Artifact](LangProfileStore.Slots, identity,
+        (d, i) => LangProfileStore.save(d, Seq("en" -> Seq("a" -> i.toLong))),
+        _.profiles.head.weights.head.weight.toInt),
+      FileStore[PslStore.Artifact](PslStore.Slots, identity,
+        (d, i) => PslStore.save(d, Seq(s"r$i")),
+        _.rules.head.stripPrefix("r").toInt),
+      FileStore[LibraryStore.Entry](LibraryStore.history("fn"),
+        LibraryStore.historyDir,
+        (d, i) => LibraryStore.save(d, LibraryStore.Entry("fn", Seq(s"$i"))),
+        _.exprs.head.toInt))
+  }
+
+  test("every file-slot store: save, pin, reject version 0, ignore " +
+    "foreign names through save and gc") {
+    def check[A <: AnyRef](st: FileStore[A]): Unit = {
+      val root = tmp
+      val dir = st.slotDir(root)
+      val what = st.slots.what
+      val empty = intercept[NoSuchElementException](st.slots.at(dir, -1))
+      assert(empty.getMessage.contains(s"no $what versions"), what)
+      assert(st.save(root, 1) == 1 && st.save(root, 2) == 2, what)
+      assert(st.slots.versions(dir) == Seq(1, 2), what)
+      val (v, latest) = st.slots.at(dir, -1)
+      assert(v == 2 && st.mark(latest) == 2, what)
+      assert(st.mark(st.slots.at(dir, 1)._2) == 1, what)
+      val zero = intercept[IllegalArgumentException](st.slots.at(dir, 0))
+      assert(zero.getMessage.contains("version 0"), what)
+      // a slot number past Int range and a staging sibling are foreign
+      val name = st.slots.name
+      val huge = Paths.get(dir, s"${name}_v99999999999.json")
+      val staging = Paths.get(dir, s".${name}_v3.json123.tmp")
+      Files.writeString(huge, "{}")
+      Files.writeString(staging, "{}")
+      assert(st.slots.versions(dir) == Seq(1, 2), what)
+      assert(st.save(root, 3) == 3, what)
+      assert(st.slots.gc(dir, keepLast = 1) == Seq(1, 2), what)
+      assert(st.slots.versions(dir) == Seq(3), what)
+      assert(Files.exists(huge) && Files.exists(staging), what)
+      assert(st.slots.get(dir, 1).isEmpty, what)
+    }
+    fileStores.foreach(st => check(st))
+  }
+
+  test("Dirs.pin rejects version 0; negative pins the newest visible") {
+    val dir = tmp
+    val slots = VersionedSlots.Dirs("m.json", "test index")
+    val v = slots.claimNext(dir)
+    slots.publish(dir, v, "{}")
+    val e = intercept[IllegalArgumentException](slots.pin(dir, 0))
+    assert(e.getMessage.contains("version 0"))
+    assert(slots.pin(dir, -1) == v && slots.pin(dir, 7) == 7)
+  }
+}
+
+object VersionGcSpec {
+
+  /** One row per file-slot store: its slots, the directory they live in
+    * under a store root, a save of artifact number `i`, and the number
+    * read back from a loaded artifact.
+    */
+  final case class FileStore[A <: AnyRef](
+      slots: VersionedSlots.Files[A], slotDir: String => String,
+      save: (String, Int) => Int, mark: A => Int)
 }

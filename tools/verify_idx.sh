@@ -22,7 +22,11 @@
 #                  stats, phrase, fusion; the streaming-dedup and
 #                  frontier epoch stores; the link graph; SQL-built
 #                  scalar-index versions)
-#   all            the union of the four sets in one graft.Verify run,
+#   artifact       the queries over the file-slot artifact stores
+#                  (tokenizer and unigram encodes, language profiles, the
+#                  PSL, legacy encoding tables, main-content stoplists,
+#                  and the pretraining funnels that load them)
+#   all            the union of the five sets in one graft.Verify run,
 #                  reported as each set's pass count
 #
 # sfDir defaults to $SPARK_GRAFT_SF_DIR, else $HOME/testdata/sf0.01; outDir
@@ -32,7 +36,7 @@ set -euo pipefail
 
 root="$(cd "$(dirname "$0")/.." && pwd)"
 set_name=idx
-if [[ "${1:-}" =~ ^(idx|ann|codec|store|all)$ ]]; then
+if [[ "${1:-}" =~ ^(idx|ann|codec|store|artifact|all)$ ]]; then
   set_name="$1"
   shift
 fi
@@ -41,11 +45,12 @@ queries_of() {
     idx) echo idx_merge_upserts,idx_retain_deleted,idx_scan_consistency,idx_streaming_maintain,idx_catchup ;;
     ann) echo sim_ann_persisted,sim_ann_ingest,sim_ann_upsert,sim_ann_delete,sim_ann_filtered,sim_ann_residual,sim_ann_retrain,sim_ann_stats,sim_ann_stream_maintain,ann_build_sql,text_hybrid_search,text_hybrid_batch,text_hybrid_filtered,text_hybrid_stream,hybrid_search_sql,hybrid_batch_sql,pipeline_multimodal ;;
     store) echo text_bm25_indexed,text_bm25_incremental,text_bm25_queries,text_bm25_stats,text_phrase_search,text_rrf_fusion,dedup_streaming_neardup,dedup_streaming_spans,dedup_span_rotate,dedup_semantic_stream,pipeline_frontier_store,pipeline_pagerank,pipeline_pagerank_incremental,idx_build_sql ;;
+    artifact) echo tokenize_from_artifact,tokenize_streaming,text_bpe_ids,text_unigram_encode,text_unigram_artifact,text_langid_artifact,text_url_domain_artifact,text_charset_legacy,text_extract_main_artifact,text_extract_main_cjk,text_extract_main_thai,text_extract_main_ruar,pipeline_pretrain_sjis,pipeline_pretrain_detect ;;
     codec) echo source_warc_gz,source_warc_http,source_warc_zst,pipeline_warc_gz_stream,pipeline_crawl_mixed,text_extract_pdf,pipeline_pretrain_pdf,multimodal_pixels,multimodal_resize,multimodal_tiff,multimodal_webp,multimodal_webp_lossy,multimodal_gif,multimodal_jpeg,multimodal_mp3,multimodal_aac,pipeline_multimodal ;;
   esac
 }
 if [[ "$set_name" == all ]]; then
-  sets=(idx ann codec store)
+  sets=(idx ann codec store artifact)
 else
   sets=("$set_name")
 fi
